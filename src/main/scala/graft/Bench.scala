@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.operators.Catalog
+import graft.operators.{Artifacts, Catalog, Drain}
 
 /** Headline benchmark: runs the bench-marked catalog queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Each query is forced
@@ -129,16 +129,12 @@ object Bench {
     val latency: Option[(Double, Double, Int)] =
       if (only.nonEmpty) None
       else try {
-        val ckpt = java.nio.file.Files.createTempDirectory("benchlat").toString
-        val sq = spark.readStream.format("graft-eth").option("dataset", "logs")
-          .option("startBlock", "0").option("head", "1999")
-          .option("maxBlocksPerTrigger", "100")
-          .load()
-          .writeStream.format("noop")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
+        val sq = Drain.run("benchlat", Artifacts.newDir("benchlat"),
+          spark.readStream.format("graft-eth").option("dataset", "logs")
+            .option("startBlock", "0").option("head", "1999")
+            .option("maxBlocksPerTrigger", "100")
+            .load()
+            .writeStream.format("noop"))
         val durs = sq.recentProgress.toSeq
           .filter(_.numInputRows > 0)
           .map(_.durationMs.get("triggerExecution").toDouble).sorted

@@ -1,9 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{HexToDecimal, HexToLong, SimHash64, WordNgrams, WordShingles}
 
 /** `SparkSessionExtensions` entry point: makes graft's native expressions
   * available to ANY session — including pure-SQL users — via
@@ -26,30 +23,7 @@ object GraftExtensions {
 
 final class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("hex_to_long"),
-      new ExpressionInfo(classOf[HexToLong].getName, "hex_to_long"),
-      (children: Seq[Expression]) => HexToLong(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("hex_to_decimal"),
-      new ExpressionInfo(classOf[HexToDecimal].getName, "hex_to_decimal"),
-      (children: Seq[Expression]) => HexToDecimal(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (children: Seq[Expression]) =>
-        WordShingles(children.head,
-          graft.functions.GraftFunctions.intArg("word_shingles", 2, children(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (children: Seq[Expression]) =>
-        WordNgrams(children.head,
-          graft.functions.GraftFunctions.intArg("word_ngrams", 2, children(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) => SimHash64(children.head)))
+    graft.functions.GraftFunctions.kernels.foreach(k => ext.injectFunction((k.id, k.info, k.build)))
     // topic0 predicates → connector option (SURVEY §4 optional rule):
     // operator-optimization rules run while the relation is still a
     // DataSourceV2Relation, before the V2 scan-pushdown batch.

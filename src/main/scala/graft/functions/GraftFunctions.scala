@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{AnalysisException, Column, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{call_function, lit, typedlit}
@@ -46,33 +47,47 @@ object GraftFunctions {
     }
   }
 
-  /** Idempotently register all graft functions on a session. */
+  /** One SQL kernel: its name, expression class and builder. */
+  final case class Kernel(name: String, cls: Class[_ <: Expression],
+      build: Seq[Expression] => Expression) {
+    def id: FunctionIdentifier = FunctionIdentifier(name)
+    def info: ExpressionInfo = new ExpressionInfo(cls.getName, name)
+  }
+
+  /** Every native kernel graft exposes to SQL. The one list behind both
+    * [[register]] and `GraftExtensions`.
+    */
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("hex_to_long", classOf[HexToLong], e => HexToLong(e.head)),
+    Kernel("hex_to_decimal", classOf[HexToDecimal], e => HexToDecimal(e.head)),
+    Kernel("word_shingles", classOf[WordShingles],
+      e => WordShingles(e.head, intArg("word_shingles", 2, e(1)))),
+    Kernel("word_ngrams", classOf[WordNgrams],
+      e => WordNgrams(e.head, intArg("word_ngrams", 2, e(1)))),
+    Kernel("simhash64", classOf[SimHash64], e => SimHash64(e.head)),
+    Kernel("minhash_signature", classOf[MinHashSignature],
+      e => MinHashSignature(e.head,
+        intArg("minhash_signature", 2, e(1)), intArg("minhash_signature", 3, e(2)))),
+    Kernel("scaled_dot", classOf[ScaledDot], e => ScaledDot(e.head, e(1))),
+    Kernel("scaled_l2", classOf[ScaledL2], e => ScaledL2(e.head, e(1))),
+    Kernel("hyperplane_bucket", classOf[HyperplaneBucket],
+      e => HyperplaneBucket(e.head, intArg("hyperplane_bucket", 2, e(1)))),
+    Kernel("word_set_counts", classOf[WordSetCounts],
+      e => WordSetCounts(e.head, stringSetsArg("word_set_counts", 2, e(1)))),
+    Kernel("token_fingerprint", classOf[TokenFingerprint], e => TokenFingerprint(e.head)),
+    Kernel("doc_pairs", classOf[DocPairs], e => DocPairs(e.head)))
+
+  /** Register every graft function the session lacks. A no-op on a session
+    * that already has them (registered earlier, or injected by
+    * `GraftExtensions`), so callers may invoke it on every table read.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("hex_to_long", exprs => HexToLong(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("hex_to_decimal", exprs => HexToDecimal(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("word_shingles",
-      exprs => WordShingles(exprs.head, intArg("word_shingles", 2, exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("word_ngrams",
-      exprs => WordNgrams(exprs.head, intArg("word_ngrams", 2, exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("simhash64", exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      exprs => MinHashSignature(exprs.head,
-        intArg("minhash_signature", 2, exprs(1)),
-        intArg("minhash_signature", 3, exprs(2))), "built-in")
-    reg.createOrReplaceTempFunction("scaled_dot",
-      exprs => ScaledDot(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("scaled_l2",
-      exprs => ScaledL2(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("hyperplane_bucket",
-      exprs => HyperplaneBucket(exprs.head, intArg("hyperplane_bucket", 2, exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("word_set_counts",
-      exprs => WordSetCounts(exprs.head, stringSetsArg("word_set_counts", 2, exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("token_fingerprint",
-      exprs => TokenFingerprint(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("doc_pairs",
-      exprs => DocPairs(exprs.head), "built-in")
-    spark.udf.register("sum_of_squares", SumOfSquaresLong.udaf)
+    reg.synchronized {
+      kernels.foreach(k => if (!reg.functionExists(k.id)) reg.registerFunction(k.id, k.info, k.build))
+      if (!reg.functionExists(FunctionIdentifier("sum_of_squares")))
+        spark.udf.register("sum_of_squares", SumOfSquaresLong.udaf)
+    }
   }
 
   // Column-API wrappers (require register() to have been called on the session).

@@ -663,12 +663,14 @@ object PairKernels extends Serializable {
   * a whole-stage-codegen kernel call does not.
   */
 case class DocPairs(child: Expression) extends UnaryExpression {
+  // the kernel reads every element as a struct: an array that may hold a
+  // NULL element is rejected here, not met as an NPE at run time
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(s: StructType, _)
+    case ArrayType(s: StructType, false)
         if s.length == 2 && s(0).dataType == LongType && s(1).dataType == IntegerType =>
       TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"doc_pairs expects ARRAY<STRUCT<BIGINT, INT>>, got ${other.sql}")
+      s"doc_pairs expects ARRAY<STRUCT<BIGINT, INT>> with no NULL elements, got ${other.sql}")
   }
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("da", LongType, nullable = false),

@@ -15,9 +15,6 @@ object EngineOps {
   /** Two deterministic topic0 values from the synthetic chain's pool (lowest
     * two by sort order) — shared by the e04 query and its oracle SQL.
     */
-  // unique memory-sink names so repeated builds in one session never collide
-  private val streamId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private lazy val topicPair: Seq[String] = {
     val rpc = new graft.sources.SyntheticRpc(42L, 10000L)
     (0L until 50L)
@@ -44,10 +41,13 @@ object EngineOps {
       SparkSession.clearDefaultSession()
       SparkSession.clearActiveSession()
       try {
-        val s2 = SparkSession.builder()
+        val b = SparkSession.builder()
           .config("spark.sql.shuffle.partitions", s.conf.get("spark.sql.shuffle.partitions"))
-          .withExtensions(new graft.GraftExtensions()(_))
-          .getOrCreate()
+        // a context whose static conf already lists the extensions applies
+        // them itself; adding them again injects every function twice
+        val listed = s.sparkContext.getConf.get("spark.sql.extensions", "")
+          .split(",").map(_.trim).contains(classOf[graft.GraftExtensions].getName)
+        val s2 = (if (listed) b else b.withExtensions(new graft.GraftExtensions()(_))).getOrCreate()
         f(s2)
       } finally {
         prevDefault.foreach(SparkSession.setDefaultSession)
@@ -204,19 +204,12 @@ object EngineOps {
     // oracle over the direct chain dump.
     Q("e05_eth_stream_scan",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"e05_mem_${streamId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("e05ckpt").toString
-        val sq = s.readStream.format("graft-eth").option("dataset", "logs")
+        val counts = s.readStream.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("head", "2999")
           .option("maxBlocksPerTrigger", "1000")
           .load()
           .groupBy(col("address")).agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName(name).outputMode("complete")
-          .trigger(Trigger.AvailableNow()).option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        s.table(name).orderBy("address")
+        Drain.memory("e05", counts, "complete").orderBy("address")
       },
       Some(s"""SELECT address, CAST(COUNT(*) AS BIGINT) AS n
                FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
@@ -286,7 +279,7 @@ object EngineOps {
             when(size(col("topics")) === 1, lit(null).cast(ArrayType(StringType)))
               .otherwise(col("topics")).as("topics_or_null"))
           .repartition(4)
-        val dir = java.nio.file.Files.createTempDirectory("e06arrow").toString
+        val dir = Artifacts.newDir("e06arrow")
         ArrowEdge.writeIpc(src, dir, batchSize = 256)
         val rows = ArrowEdge.readIpc(dir)
           .map(vs => org.apache.spark.sql.Row.fromSeq(vs))
@@ -689,7 +682,7 @@ object EngineOps {
         // list as parquet (the sim11 persisted-artifact convention) and
         // re-apply its defining predicate: a small file relation with a
         // selective non-join-column filter is exactly the prunable shape.
-        val dimDir = java.nio.file.Files.createTempDirectory("e19dim").toString
+        val dimDir = Artifacts.newDir("e19dim")
         logs.where(sigCol === rare)
           .select(col("blockNumber").as("bn"), sigCol.as("sig"))
           .write.mode("overwrite").parquet(dimDir)

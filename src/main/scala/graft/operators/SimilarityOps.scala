@@ -2769,7 +2769,7 @@ object SimilarityOps {
         val dels = withNorm(s, d).where(docHash(col("vec_id"), 20) === 0)
           .select("vec_id").localCheckpoint()
         val idx = s.table(s"$db.corpus_ivf")
-        val compDir = java.nio.file.Files.createTempDirectory("sim42idx").toString
+        val compDir = Artifacts.newDir("sim42idx")
         idx.join(broadcast(dels), Seq("vec_id"), "left_anti")
           .write.mode("overwrite").partitionBy("cell").parquet(compDir)
         val comp = s.read.parquet(compDir)

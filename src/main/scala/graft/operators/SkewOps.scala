@@ -182,7 +182,7 @@ object SkewOps {
     Q("k06_compaction_apply",
       (s, d) => {
         val target = 65536L
-        val out = java.nio.file.Files.createTempDirectory("k06layout").toString
+        val out = Artifacts.newDir("k06layout")
         val sized = t(s, d, "documents")
           .select(col("doc_id"), col("source"), col("text"),
             octet_length(col("text")).cast(LongType).as("bytes"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Catalog._
@@ -14,15 +15,6 @@ object StreamShape {
 
   private val fmtSec = "yyyy-MM-dd HH:mm:ss"
 
-  // unique memory-sink names so repeated builds in one session never collide
-  private val memId = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Force every file under `laterDir` to an mtime strictly past any file
-    * under `earlierDir`: FileStreamSource orders pending files by
-    * modification time with no tiebreak, and coarse-mtime filesystems can
-    * stamp two writes identically — staged feeds whose delivery order is
-    * load-bearing (x31/x36/d24) must pin it explicitly.
-    */
   /** Latest value stored at a batch id STRICTLY BEFORE `batchId` in a
     * batchId-keyed state map (x33/d24/x38's cross-batch chains). An empty
     * micro-batch writes nothing under its id, so a plain get(batchId - 1)
@@ -39,17 +31,22 @@ object StreamShape {
     best
   }
 
-  private def forceDeliveryOrder(earlierDir: String, laterDir: String): Unit = {
-    def listDir(dir: String): Array[java.nio.file.Path] = {
-      val st = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      try st.toArray.map(_.asInstanceOf[java.nio.file.Path]) finally st.close()
-    }
-    val maxEarlier = listDir(earlierDir)
-      .map(p => java.nio.file.Files.getLastModifiedTime(p).toMillis).max
-    listDir(laterDir).foreach { p =>
-      java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(maxEarlier + 60000))
-    }
+  /** Every value stored at a batch id before `batchId` (x47-x49's edge stores). */
+  private def priorDirs(
+      m: java.util.concurrent.ConcurrentHashMap[Long, String], batchId: Long): Seq[String] = {
+    val b = Seq.newBuilder[String]
+    m.forEach((k, v) => if (k < batchId) b += v)
+    b.result()
+  }
+
+  /** Run `body` on the RocksDB state store provider, then restore the
+    * session's own provider.
+    */
+  private def onRocksDb[A](s: SparkSession)(body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
 
   /** x10's chain head — ONE constant shared by the engine build (trigger
@@ -107,30 +104,14 @@ object StreamShape {
     // gate (same oracle as x01), not only in specs.
     Q("x04_stream_tumbling",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val name = s"x04_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x04ckpt").toString
-        // the file-stream source lists a DIRECTORY; the driver's table is a
-        // single parquet file → stage it into a temp dir (one tiny copy,
-        // Verify-only — a production stream would already read a directory)
-        val srcDir = java.nio.file.Files.createTempDirectory("x04src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          srcDir.resolve("events.parquet"))
-        val sq = s.readStream.schema(schema).parquet(srcDir.toString)
+        val agg = Drain.copies(s, "x04", s"$d/events.parquet")
           .transform(normalizeEventTs)
           .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
           .select(date_format(col("win.start"), fmtSec).as("win_start"),
             col("event_type"), col("n"), col("total"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        s.table(name).orderBy("win_start", "event_type")
+        Drain.memory("x04", agg, "complete").orderBy("win_start", "event_type")
       },
       Some(s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS win_start,
                       event_type, COUNT(*) AS n, ${sqlDsum("value")} AS total
@@ -173,29 +154,13 @@ object StreamShape {
     // bounded drain exact.
     Q("x05_stream_dedup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val name = s"x05_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x05ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x05src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          srcDir.resolve("delivery1.parquet"))
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          srcDir.resolve("delivery2.parquet"))
-        val sq = s.readStream.schema(schema).parquet(srcDir.toString)
+        val deduped = Drain.copies(s, "x05", s"$d/events.parquet", s"$d/events.parquet")
           .transform(normalizeEventTs)
           .withWatermark("ts", "3650 days")
           .dropDuplicatesWithinWatermark("event_id")
           .select("event_id", "user_id", "event_type", "value", "props")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        s.table(name).orderBy("event_id")
+        Drain.memory("x05", deduped, "append").orderBy("event_id")
       },
       Some("""SELECT event_id, user_id, event_type, value, props
               FROM events ORDER BY event_id"""),
@@ -212,21 +177,13 @@ object StreamShape {
     // SyntheticRpc chain dump.
     Q("x06_stream_stream_join",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x06_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x06ckpt").toString
         def src(dataset: String) = s.readStream.format("graft-eth")
           .option("dataset", dataset).option("startBlock", "0")
           .option("head", "999").option("maxBlocksPerTrigger", "500").load()
         val joined = graft.streaming.StreamOps
           .logsWithBlocks(src("logs"), src("blocks"), "1000 hours")
           .select(col("blockNumber"), col("logIndex"), col("address"), col("gasUsed"))
-        val sq = joined.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        s.table(name).orderBy("blockNumber", "logIndex")
+        Drain.memory("x06", joined, "append").orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT l.blockNumber, l.logIndex, l.address, b.gasUsed
                FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet' l
@@ -245,20 +202,11 @@ object StreamShape {
     // min/max/count over the direct chain dump.
     Q("x07_stateful_sessions",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x07_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x07ckpt").toString
         val logs = s.readStream.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("head", "999")
           .option("maxBlocksPerTrigger", "1000").load()
-        val sq = graft.streaming.StreamOps.addressActivity(logs)
-          .toDF()
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        s.table(name).orderBy("address")
+        Drain.memory("x07", graft.streaming.StreamOps.addressActivity(logs).toDF(), "update")
+          .orderBy("address")
       },
       Some(s"""SELECT address,
                       MIN(blockNumber) AS firstBlock,
@@ -278,17 +226,9 @@ object StreamShape {
     // the identical filter+count over the batch table.
     Q("x08_stream_curation",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         graft.functions.GraftFunctions.register(s)
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        val name = s"x08_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x08ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x08src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/documents.parquet"),
-          srcDir.resolve("documents.parquet"))
         val toks = split(trim(col("text")), "\\s+")
-        val sq = s.readStream.schema(schema).parquet(srcDir.toString)
+        val counts = Drain.copies(s, "x08", s"$d/documents.parquet")
           .withColumn("n_tokens", size(toks))
           .withColumn("n_stop", TextOps.countIn(col("text"), TextOps.stopwords))
           .withColumn("avg_token_len",
@@ -298,12 +238,7 @@ object StreamShape {
             col("avg_token_len").between(2.0, 12.0) &&
             col("stop_ratio") <= 0.6)
           .groupBy("lang").agg(count(lit(1)).as("n_docs"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        s.table(name).orderBy("lang")
+        Drain.memory("x08", counts, "complete").orderBy("lang")
       },
       Some(s"""SELECT lang, COUNT(*) AS n_docs
                FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)
@@ -321,39 +256,21 @@ object StreamShape {
     // pinned to the identical result in the hash gate.
     Q("x10_transform_with_state",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x10_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x10ckpt").toString
-        val providerConf = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerConf)
-        s.conf.set(providerConf,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         // trigger size derived from head so the whole chain drains in ONE
         // micro-batch by construction; the ORACLE interpolates the same
         // constant, so engine and oracle cannot drift apart
         val head = X10Head
-        try {
+        val sink = onRocksDb(s) {
           val logs = s.readStream.format("graft-eth").option("dataset", "logs")
             .option("startBlock", "0").option("head", head.toString)
             .option("maxBlocksPerTrigger", (head + 1).toString).load()
-          val sq = graft.streaming.StreamOps.addressActivityTws(logs)
-            .toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("update").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          sq.awaitTermination()
-        } finally {
-          prev match {
-            case Some(p) => s.conf.set(providerConf, p)
-            case None => s.conf.unset(providerConf)
-          }
+          Drain.memory("x10", graft.streaming.StreamOps.addressActivityTws(logs).toDF(), "update")
         }
         // the Update-mode memory sink APPENDS each batch's updated rows; if
         // the drain ever splits into >1 batch, keep only the LAST update per
         // address (n is the per-address row count, strictly increasing
         // across updates — max(n) identifies the final state)
-        s.table(name)
+        sink
           .groupBy("address")
           .agg(max(struct(col("n"), col("firstBlock"), col("lastBlock"))).as("__last"))
           .select(col("address"), col("__last.firstBlock").as("firstBlock"),
@@ -381,18 +298,7 @@ object StreamShape {
     // distinct content of the single-delivery table.
     Q("x11_stream_content_dedup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        val name = s"x11_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x11ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x11src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/documents.parquet"),
-          srcDir.resolve("delivery1.parquet"))
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/documents.parquet"),
-          srcDir.resolve("delivery2.parquet"))
-        val sq = s.readStream.schema(schema).parquet(srcDir.toString)
+        val kept = Drain.copies(s, "x11", s"$d/documents.parquet", s"$d/documents.parquet")
           // epoch-offset the synthetic event time: a row AT the
           // clamped-to-zero watermark boundary counts as expired state
           // and silently vanishes (doc 0 did)
@@ -401,12 +307,7 @@ object StreamShape {
           .withWatermark("event_time", "3650 days")
           .dropDuplicatesWithinWatermark("text")
           .select(md5(col("text").cast(BinaryType)).as("content_md5"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        s.table(name).orderBy("content_md5")
+        Drain.memory("x11", kept, "append").orderBy("content_md5")
       },
       Some("""SELECT DISTINCT md5(text) AS content_md5
               FROM documents ORDER BY content_md5"""),
@@ -421,26 +322,15 @@ object StreamShape {
     // two-iteration training and assignment in SQL (the a2 CTE).
     Q("x12_stream_index_append",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val cents = SimilarityOps.trainedCentroids(s, d, iters = 2)
-        val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-        val ckpt = java.nio.file.Files.createTempDirectory("x12ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x12src")
-        val out = java.nio.file.Files.createTempDirectory("x12out").toString
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/embeddings.parquet"),
-          srcDir.resolve("embeddings.parquet"))
+        val out = Artifacts.newDir("x12out")
         // assignCells is a pure projection, so the batch assignment path
         // IS the streaming one — one implementation, one tie-break
-        val sq = SimilarityOps
-          .assignCells(s.readStream.schema(schema).parquet(srcDir.toString), cents)
+        Drain.run("x12", Artifacts.newDir("x12ckpt"), SimilarityOps
+          .assignCells(Drain.copies(s, "x12", s"$d/embeddings.parquet"), cents)
           .select("vec_id", "cell")
           .writeStream.format("parquet").partitionBy("cell")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
+          .option("path", out))
         s.read.parquet(out).select("vec_id", "cell").orderBy("vec_id")
       },
       Some(s"""WITH ${SimilarityOps.sqlTrainedAssignCtes}
@@ -457,22 +347,16 @@ object StreamShape {
     // dump, so exactly-once-across-restart is what the oracle checks.
     Q("x09_stream_restart",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x09ckpt").toString
-        val out = java.nio.file.Files.createTempDirectory("x09out").toString
-        def life(head: Long): Unit = {
-          val sq = s.readStream.format("graft-eth")
+        val ckpt = Artifacts.newDir("x09ckpt")
+        val out = Artifacts.newDir("x09out")
+        def life(head: Long): Unit =
+          Drain.run("x09", ckpt, s.readStream.format("graft-eth")
             .option("dataset", "logs").option("startBlock", "0")
             .option("head", head.toString).option("maxBlocksPerTrigger", "200")
             .load()
             .select("blockNumber", "logIndex", "address")
             .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          sq.awaitTermination()
-        }
+            .option("path", out))
         life(head = 499)
         life(head = 999)
         s.read.parquet(out).orderBy("blockNumber", "logIndex")
@@ -494,31 +378,18 @@ object StreamShape {
     // the identical report.
     Q("x13_stream_decontaminate",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         graft.functions.GraftFunctions.register(s)
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        val name = s"x13_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x13ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x13src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/documents.parquet"),
-          srcDir.resolve("documents.parquet"))
         // static side: the frozen benchmark shingle set (batch read) —
         // the shared DedupOps definition
         val benchShingles = DedupOps.benchShingles8(s, d)
-        val sq = s.readStream.schema(schema).parquet(srcDir.toString)
+        val hits = Drain.copies(s, "x13", s"$d/documents.parquet")
           .where(col("source") =!= "src0")
           .select(col("doc_id"),
             explode(graft.functions.GraftFunctions.word_shingles(col("text"), 8)).as("shingle"))
           .join(broadcast(benchShingles), "shingle")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_hits"), min(col("shingle")).as("example_shingle"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        s.table(name).orderBy("doc_id")
+        Drain.memory("x13", hits, "complete").orderBy("doc_id")
       },
       Some(s"""WITH ${DedupOps.sqlDecontCtes}
                SELECT doc_id, COUNT(*) AS n_hits, MIN(shingle) AS example_shingle
@@ -537,11 +408,7 @@ object StreamShape {
     // identical session set.
     Q("x14_stream_session_window",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val name = s"x14_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x14ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x14src").toString
         // stage the fixture as TWO files split by event_id parity (time-
         // interleaved), so with maxFilesPerTrigger=1 the drain takes two
         // micro-batches and batch 2's events must MERGE INTO (and fuse)
@@ -549,30 +416,17 @@ object StreamShape {
         // batch path this operator exists to pin; a single staged file
         // would build every session within one batch and never exercise it
         val ev = s.read.parquet(s"$d/events.parquet")
-        ev.where(col("event_id") % 2 === 0).coalesce(1)
-          .write.parquet(s"$srcDir/f0")
-        ev.where(col("event_id") % 2 === 1).coalesce(1)
-          .write.parquet(s"$srcDir/f1")
-        val schema = ev.schema
-        val sq = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
+        val sessions = Drain.feed(s, "x14",
+            ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
           .transform(normalizeEventTs)
           .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
           .select(col("user_id"),
             date_format(col("session_window.start"), fmtSec).as("session_start"),
             col("n"), col("total"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x14 drained in $fedBatches micro-batch(es) — the cross-batch session merge was not exercised")
-        s.table(name).orderBy("user_id", "session_start")
+        Drain.memory("x14", sessions, "complete", 2,
+            "the cross-batch session merge was not exercised")
+          .orderBy("user_id", "session_start")
       },
       Some(s"""WITH marked AS (
                  SELECT user_id, ts, value,
@@ -601,27 +455,21 @@ object StreamShape {
     // dump — exactly-once across the whole stream→Arrow→client loop.
     Q("x15_stream_arrow_sink",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         import graft.arrow.ArrowEdge
-        val outRoot = java.nio.file.Files.createTempDirectory("x15arrow").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("x15ckpt").toString
+        val outRoot = Artifacts.newDir("x15arrow")
         // schema captured from the equivalent batch read — the stream
         // emits the same connector schema
         val schema = s.read.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("endBlock", "0").load()
           .select("blockNumber", "logIndex", "address").schema
-        val sq = s.readStream.format("graft-eth").option("dataset", "logs")
+        val logs = s.readStream.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("head", "999")
           .option("maxBlocksPerTrigger", "250").load()
           .select("blockNumber", "logIndex", "address")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        Drain.run("x15", Artifacts.newDir("x15ckpt"),
+          logs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
             ArrowEdge.writeIpc(batch, s"$outRoot/batch-$id", batchSize = 128)
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
+          })
         val dirs = Option(new java.io.File(outRoot).listFiles())
           .getOrElse(Array.empty).filter(_.isDirectory).sortBy(_.getName)
         require(dirs.length >= 4, s"expected >= 4 micro-batch dirs, got ${dirs.length}")
@@ -653,25 +501,15 @@ object StreamShape {
     // zero, replacements and everything else survive.
     Q("x16_reorg_removal",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x16_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x16ckpt").toString
-        val sq = s.readStream.format("graft-eth").option("dataset", "logs")
+        val logs = s.readStream.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("head", graft.Verify.ReorgHead.toString)
           .option("reorgAt", graft.Verify.ReorgAt.toString)
           .option("reorgDepth", graft.Verify.ReorgDepth.toString)
           .option("maxBlocksPerTrigger", "25")
           .load()
           .select("blockNumber", "logIndex", "address", "data", "removed")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 3,
-          s"x16 drained in $fedBatches micro-batch(es) — the cross-batch retraction was not exercised")
-        val delivered = s.table(name)
+        val delivered = Drain.memory("x16", logs, "append", 3,
+          "the cross-batch retraction was not exercised")
         require(delivered.where(col("removed")).count() > 0,
           "x16 stream delivered no removed=true retraction rows")
         delivered
@@ -707,31 +545,14 @@ object StreamShape {
     // the query path.
     Q("x17_stream_ann_serve",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x17ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x17src").toString
-        val out = java.nio.file.Files.createTempDirectory("x17out").toString
+        val out = Artifacts.newDir("x17out")
         SimilarityOps.ensureIvfIndex(s, d)
         val q = s.read.parquet(s"$d/embeddings.parquet").where(col("vec_id") < 10)
-        q.where(col("vec_id") < 5).coalesce(1).write.parquet(s"$srcDir/f0")
-        q.where(col("vec_id") >= 5).coalesce(1).write.parquet(s"$srcDir/f1")
-        val sq = s.readStream.schema(q.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty)
-              SimilarityOps.serveIvfIndexed(s, d, SimilarityOps.withNormOf(batch), nProbes = 10)
-                .write.mode("append").parquet(out)
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x17 served in $fedBatches micro-batch(es) — the per-batch serve path was not exercised")
+        val feed = Drain.feed(s, "x17", q.where(col("vec_id") < 5), q.where(col("vec_id") >= 5))
+        Drain.batches("x17", feed, 2, "the per-batch serve path was not exercised") { (batch, _) =>
+          SimilarityOps.serveIvfIndexed(s, d, SimilarityOps.withNormOf(batch), nProbes = 10)
+            .write.mode("append").parquet(out)
+        }
         s.read.parquet(out).orderBy("qid", "rk")
       },
       Some(SimilarityOps.sqlTrainedSearchSql),
@@ -761,43 +582,24 @@ object StreamShape {
     // and both watermarks carry random microseconds.
     Q("x18_stream_late_data",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val name = s"x18_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x18ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x18src").toString
         val ev = s.read.parquet(s"$d/events.parquet")
           .transform(normalizeEventTs)
         // the watermark carrier: THE row holding the global max ts
         // (min event_id on ties) — a 1-row bounded driver lookup
         val maxId = ev.orderBy(col("ts").desc, col("event_id")).limit(1)
           .head().getAs[Long]("event_id")
-        ev.where(col("event_id") % 2 === 0 && col("event_id") =!= maxId)
-          .coalesce(1).write.parquet(s"$srcDir/f0")
-        ev.where(col("event_id") === maxId).coalesce(1).write.parquet(s"$srcDir/f1")
-        ev.where(col("event_id") % 2 === 1 && col("event_id") =!= maxId)
-          .coalesce(1).write.parquet(s"$srcDir/f2")
-        val now = System.currentTimeMillis()
-        def touch(sub: String, t: Long): Unit =
-          new java.io.File(s"$srcDir/$sub").listFiles().foreach(_.setLastModified(t))
-        touch("f0", now - 240000L); touch("f1", now - 120000L); touch("f2", now)
-        val sq = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
+        val windows = Drain.feed(s, "x18",
+            ev.where(col("event_id") % 2 === 0 && col("event_id") =!= maxId),
+            ev.where(col("event_id") === maxId),
+            ev.where(col("event_id") % 2 === 1 && col("event_id") =!= maxId))
           .withWatermark("ts", "30 minutes")
           .groupBy(window(col("ts"), "1 hour"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
           .select(date_format(col("window.start"), fmtSec).as("win_start"),
             col("n"), col("total"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 3,
-          s"x18 drained in $fedBatches micro-batch(es) — the two-commit late-arrival path was not exercised")
+        val (out, sq) = Drain.memoryQuery("x18", windows, "append", 3,
+          "the two-commit late-arrival path was not exercised")
         // exact late-drop accounting: batch 3 filters against the PREVIOUS
         // trigger's watermark = (ms-truncated) max on-time ts − 30 min;
         // a late window GROUP is dropped iff its window end has passed it
@@ -811,7 +613,7 @@ object StreamShape {
         require(dropped == expectedDrops,
           s"watermark dropped $dropped window groups; staged semantics predict $expectedDrops")
         require(dropped > 0, "nothing was dropped by the watermark — late path not exercised")
-        s.table(name).orderBy("win_start")
+        out.orderBy("win_start")
       },
       Some(s"""WITH am AS (SELECT event_id FROM events ORDER BY ts DESC, event_id LIMIT 1),
                  wm1 AS (SELECT MAX(ts) - INTERVAL 30 MINUTE AS w FROM events
@@ -844,31 +646,14 @@ object StreamShape {
     // associatively from any number of executors or days.
     Q("x19_stream_cms_merge",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val ckpt = java.nio.file.Files.createTempDirectory("x19ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x19src").toString
-        val store = java.nio.file.Files.createTempDirectory("x19sketch").toString
+        val store = Artifacts.newDir("x19sketch")
         val ev = s.read.parquet(s"$d/events.parquet").select("event_id", "user_id")
-        ev.where(col("event_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/f0")
-        ev.where(col("event_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/f1")
-        val sq = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty)
-              StockOps.cmsSketch(batch.select("user_id"))
-                .write.mode("append").parquet(store)
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x19 drained in $fedBatches micro-batch(es) — the sketch merge was not exercised")
+        val feed = Drain.feed(s, "x19",
+          ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
+        Drain.batches("x19", feed, 2, "the sketch merge was not exercised") { (batch, _) =>
+          StockOps.cmsSketch(batch.select("user_id")).write.mode("append").parquet(store)
+        }
         val merged = s.read.parquet(store)
           .groupBy("r", "bucket").agg(sum("cnt").as("cnt"))
         StockOps.cmsCompare(Catalog.t(s, d, "events"), merged)
@@ -888,36 +673,24 @@ object StreamShape {
     // micro-batches; oracle = the same join over the chain dumps.
     Q("x20_stream_static_enrich",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x20ckpt").toString
-        val out = java.nio.file.Files.createTempDirectory("x20out").toString
+        val out = Artifacts.newDir("x20out")
         val dim = s.read.format("graft-eth").option("dataset", "blocks")
           .option("startBlock", "0").option("endBlock", "999").load()
           .select(col("number"), col("gasUsed"))
         val logs = s.readStream.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("head", "999")
           .option("maxBlocksPerTrigger", "500").load()
-        val sq = logs.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty) {
-              val enriched = batch.join(broadcast(dim), batch("blockNumber") === dim("number"))
-                .select(batch("blockNumber"), col("logIndex"), col("address"),
-                  expr("gasUsed div 4194304").as("gas_tier"))
-              val plan = enriched.queryExecution.executedPlan.toString
-              require(plan.contains("BroadcastHashJoin"),
-                s"static dim was not broadcast in the micro-batch plan:\n$plan")
-              require(!plan.contains("StateStore"),
-                s"stream-static join must be stateless, found state operators:\n$plan")
-              enriched.write.mode("append").parquet(out)
-            }
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x20 drained in $fedBatches micro-batch(es) — per-batch enrichment was not exercised")
+        Drain.batches("x20", logs, 2, "per-batch enrichment was not exercised") { (batch, _) =>
+          val enriched = batch.join(broadcast(dim), batch("blockNumber") === dim("number"))
+            .select(batch("blockNumber"), col("logIndex"), col("address"),
+              expr("gasUsed div 4194304").as("gas_tier"))
+          val plan = enriched.queryExecution.executedPlan.toString
+          require(plan.contains("BroadcastHashJoin"),
+            s"static dim was not broadcast in the micro-batch plan:\n$plan")
+          require(!plan.contains("StateStore"),
+            s"stream-static join must be stateless, found state operators:\n$plan")
+          enriched.write.mode("append").parquet(out)
+        }
         s.read.parquet(out).orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT l.blockNumber, l.logIndex, l.address,
@@ -944,9 +717,8 @@ object StreamShape {
     // row (the outer path actually fired).
     Q("x21_stream_outer_join",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x21ckpt").toString
-        val out = java.nio.file.Files.createTempDirectory("x21out").toString
+        val ckpt = Artifacts.newDir("x21ckpt")
+        val out = Artifacts.newDir("x21out")
         // The pinned deterministic region: blocks strictly below the first
         // drain's head. CRITICAL: this filter must NOT appear inside the
         // streaming plan — Catalyst pushes it (and its constraint-derived
@@ -956,7 +728,7 @@ object StreamShape {
         // nulls then never evict. The region is selected on the SINK
         // output instead.
         val Head = X21Head
-        def drain(head: Long): org.apache.spark.sql.streaming.StreamingQuery = {
+        def drain(head: Long, minFed: Int): Unit = {
           def src(dataset: String) = s.readStream.format("graft-eth")
             .option("dataset", dataset).option("startBlock", "0")
             .option("head", head.toString).option("maxBlocksPerTrigger", "500").load()
@@ -970,17 +742,10 @@ object StreamShape {
               b("number") === l("blockNumber") && b("b_time") === l("l_time"),
               "left_outer")
             .select(col("number"), col("gasUsed"), col("logIndex"), col("address"))
-          val sq = j.writeStream.format("parquet").option("path", out)
-            .outputMode("append").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          sq.awaitTermination()
-          sq
+          Drain.run("x21", ckpt, j.writeStream.format("parquet").option("path", out)
+            .outputMode("append"), minFed, "join state never crossed a batch boundary")
         }
-        val sq1 = drain(Head)
-        val fedBatches = sq1.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x21 drained in $fedBatches micro-batch(es) — join state never crossed a batch boundary")
+        drain(Head, 2)
         // Watermark-advancing catch-up drains (same checkpoint, +50 then
         // +51 blocks = +600 s of event time): the watermark applied to
         // state eviction lags the newest processed event by one batch, so
@@ -990,8 +755,8 @@ object StreamShape {
         // or eviction strictness. Rows beyond the region (matched or
         // null) are deterministic-irrelevant: the post-drain region cut
         // below removes them.
-        drain(Head + 50)
-        drain(Head + 51)
+        drain(Head + 50, 0)
+        drain(Head + 51, 0)
         val res = s.read.parquet(out).where(col("number") < Head)
         require(res.where(col("logIndex").isNull).limit(1).count() == 1,
           "x21 emitted no null-padded rows — the outer-join eviction path never fired")
@@ -1015,30 +780,14 @@ object StreamShape {
     // reconciles overlapping partials.
     Q("x22_stream_kmv_merge",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val ckpt = java.nio.file.Files.createTempDirectory("x22ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x22src").toString
-        val store = java.nio.file.Files.createTempDirectory("x22sketch").toString
+        val store = Artifacts.newDir("x22sketch")
         val ev = s.read.parquet(s"$d/events.parquet").select("event_id", "event_type", "user_id")
-        ev.where(col("user_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/f0")
-        ev.where(col("user_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/f1")
-        val sq = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty)
-              StockOps.kmvPartial(batch.toDF()).write.mode("append").parquet(store)
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x22 drained in $fedBatches micro-batch(es) — the sketch merge was not exercised")
+        val feed = Drain.feed(s, "x22",
+          ev.where(col("user_id") % 2 === 0), ev.where(col("user_id") % 2 === 1))
+        Drain.batches("x22", feed, 2, "the sketch merge was not exercised") { (batch, _) =>
+          StockOps.kmvPartial(batch).write.mode("append").parquet(store)
+        }
         val merged = StockOps.perKeyTopK(
           s.read.parquet(store).distinct(),
           Seq("event_type"), Seq(col("h")), StockOps.KmvK)
@@ -1062,28 +811,12 @@ object StreamShape {
     // the sink genuinely appends across commits.
     Q("x23_stream_partitioned_sink",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x23ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x23src").toString
-        val out = java.nio.file.Files.createTempDirectory("x23out").toString
+        val out = Artifacts.newDir("x23out")
         val docs = s.read.parquet(s"$d/documents.parquet")
-        docs.where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/f0")
-        docs.where(col("doc_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/f1")
-        val sq = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream.format("parquet")
-          .partitionBy("lang")
-          .option("path", out)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x23 drained in $fedBatches micro-batch(es) — the sink never appended across commits")
+        Drain.run("x23", Artifacts.newDir("x23ckpt"),
+          Drain.feed(s, "x23", docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1))
+            .writeStream.format("parquet").partitionBy("lang").option("path", out).outputMode("append"),
+          2, "the sink never appended across commits")
         val langDirs = new java.io.File(out).listFiles().toSeq
           .count(f => f.isDirectory && f.getName.startsWith("lang="))
         val nLangs = docs.select("lang").distinct().count()
@@ -1112,32 +845,15 @@ object StreamShape {
     // order, engine-exact.
     Q("x24_stream_topk",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x24ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x24src").toString
-        val store = java.nio.file.Files.createTempDirectory("x24top").toString
+        val store = Artifacts.newDir("x24top")
         val ev = s.read.parquet(s"$d/events.parquet").select("event_id", "event_type", "value")
-        ev.where(col("event_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/f0")
-        ev.where(col("event_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/f1")
-        val sq = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty)
-              StockOps.perKeyTopK(batch.toDF(),
-                  Seq("event_type"), Seq(desc("value"), col("event_id")), 5)
-                .select("event_type", "event_id", "value")
-                .write.mode("append").parquet(store)
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x24 drained in $fedBatches micro-batch(es) — the top-k merge was not exercised")
+        val feed = Drain.feed(s, "x24",
+          ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
+        Drain.batches("x24", feed, 2, "the top-k merge was not exercised") { (batch, _) =>
+          StockOps.perKeyTopK(batch, Seq("event_type"), Seq(desc("value"), col("event_id")), 5)
+            .select("event_type", "event_id", "value")
+            .write.mode("append").parquet(store)
+        }
         StockOps.perKeyTopK(s.read.parquet(store).distinct(),
             Seq("event_type"), Seq(desc("value"), col("event_id")), 5)
           .select("event_type", "rk", "event_id", "value")
@@ -1162,36 +878,20 @@ object StreamShape {
     // winners across batch boundaries, not within one.
     Q("x25_stream_cdc_upsert",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x25ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x25src").toString
-        val store = java.nio.file.Files.createTempDirectory("x25snap").toString
+        val store = Artifacts.newDir("x25snap")
         val ev = t(s, d, "events")
           .select(col("user_id"), col("event_id"), col("event_type"),
             unix_micros(col("ts")).as("us"))
-        ev.where(col("event_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/f0")
-        ev.where(col("event_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/f1")
-        def reduceBatch(df: org.apache.spark.sql.DataFrame) =
+        def reduceBatch(df: DataFrame) =
           df.groupBy("user_id")
             .agg(max(struct(col("us"), col("event_id"), col("event_type"))).as("m"))
             .select(col("user_id"), col("m.us").as("us"),
               col("m.event_id").as("event_id"), col("m.event_type").as("event_type"))
-        val sq = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty)
-              reduceBatch(batch.toDF()).write.mode("append").parquet(store)
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x25 drained in $fedBatches micro-batch(es) — the snapshot merge was not exercised")
+        val feed = Drain.feed(s, "x25",
+          ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
+        Drain.batches("x25", feed, 2, "the snapshot merge was not exercised") { (batch, _) =>
+          reduceBatch(batch).write.mode("append").parquet(store)
+        }
         reduceBatch(s.read.parquet(store).distinct())
           .select(col("user_id"), col("event_id").as("last_event_id"),
             col("event_type").as("state"))
@@ -1221,32 +921,16 @@ object StreamShape {
     // boundaries.
     Q("x26_stream_ohlc",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x26ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x26src").toString
-        val store = java.nio.file.Files.createTempDirectory("x26bars").toString
+        val store = Artifacts.newDir("x26bars")
         val ev = t(s, d, "events")
           .select(col("event_type"), unix_micros(col("ts")).as("us"),
             col("event_id"), col("value"))
           .withColumn("bucket", expr(s"us div ${TemporalOps.OhlcHourUs}"))
-        ev.where(col("event_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/f0")
-        ev.where(col("event_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/f1")
-        val sq = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty)
-              TemporalOps.ohlcPartials(batch.toDF()).write.mode("append").parquet(store)
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x26 drained in $fedBatches micro-batch(es) — the bar merge was not exercised")
+        val feed = Drain.feed(s, "x26",
+          ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
+        Drain.batches("x26", feed, 2, "the bar merge was not exercised") { (batch, _) =>
+          TemporalOps.ohlcPartials(batch).write.mode("append").parquet(store)
+        }
         TemporalOps.ohlcMerge(s.read.parquet(store))
           .orderBy("event_type", "bucket")
       },
@@ -1264,30 +948,14 @@ object StreamShape {
     // O(batch) partials, merge O(sketch domain), read-out O(sketch).
     Q("x27_stream_hist_merge",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x27ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x27src").toString
-        val store = java.nio.file.Files.createTempDirectory("x27sketch").toString
+        val store = Artifacts.newDir("x27sketch")
         val ord = s.read.parquet(s"$d/orders.parquet")
           .select("o_orderkey", "o_totalprice")
-        ord.where(col("o_orderkey") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/f0")
-        ord.where(col("o_orderkey") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/f1")
-        val sq = s.readStream.schema(ord.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty)
-              StockOps.histPartial(batch.toDF()).write.mode("append").parquet(store)
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x27 drained in $fedBatches micro-batch(es) — the sketch merge was not exercised")
+        val feed = Drain.feed(s, "x27",
+          ord.where(col("o_orderkey") % 2 === 0), ord.where(col("o_orderkey") % 2 === 1))
+        Drain.batches("x27", feed, 2, "the sketch merge was not exercised") { (batch, _) =>
+          StockOps.histPartial(batch).write.mode("append").parquet(store)
+        }
         val merged = s.read.parquet(store)
           .groupBy("bucket").agg(sum("c").as("c"))
         StockOps.histQuantiles(s, merged)
@@ -1309,48 +977,31 @@ object StreamShape {
     // a corpus rescan.
     Q("x28_stream_lsh_neardup",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         // must pre-date stream start: the stream's session clone snapshots
         // the function registry, and bandBuckets' minhash kernel resolves
         // against that clone (caught by an isolated-session Verify worker —
         // every other kernel-using stream already registered first)
         graft.functions.GraftFunctions.register(s)
-        val ckpt = java.nio.file.Files.createTempDirectory("x28ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x28src").toString
-        val sigStore = java.nio.file.Files.createTempDirectory("x28sigs").toString
-        val pairStore = java.nio.file.Files.createTempDirectory("x28pairs").toString
+        val sigStore = Artifacts.newDir("x28sigs")
+        val pairStore = Artifacts.newDir("x28pairs")
         val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
-        docs.where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/f0")
-        docs.where(col("doc_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/f1")
-        val sq = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty) {
-              val bb = DedupOps.bandBuckets(batch.toDF())
-              bb.write.mode("append").parquet(sigStore)
-              // store-so-far INCLUDES this batch — within-batch pairs are
-              // found here too; least/greatest canonicalizes direction
-              val store = s.read.parquet(sigStore)
-              bb.select(col("doc_id").as("da"), col("band"), col("sig"))
-                .join(store.select(col("doc_id").as("db"), col("band"), col("sig")),
-                  Seq("band", "sig"))
-                .where(col("da") =!= col("db"))
-                .select(least(col("da"), col("db")).as("da"),
-                  greatest(col("da"), col("db")).as("db"))
-                .distinct()
-                .write.mode("append").parquet(pairStore)
-            }
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x28 drained in $fedBatches micro-batch(es) — incremental discovery was not exercised")
+        val feed = Drain.feed(s, "x28",
+          docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1))
+        Drain.batches("x28", feed, 2, "incremental discovery was not exercised") { (batch, _) =>
+          val bb = DedupOps.bandBuckets(batch)
+          bb.write.mode("append").parquet(sigStore)
+          // store-so-far INCLUDES this batch — within-batch pairs are
+          // found here too; least/greatest canonicalizes direction
+          val store = s.read.parquet(sigStore)
+          bb.select(col("doc_id").as("da"), col("band"), col("sig"))
+            .join(store.select(col("doc_id").as("db"), col("band"), col("sig")),
+              Seq("band", "sig"))
+            .where(col("da") =!= col("db"))
+            .select(least(col("da"), col("db")).as("da"),
+              greatest(col("da"), col("db")).as("db"))
+            .distinct()
+            .write.mode("append").parquet(pairStore)
+        }
         // explicit schema: a corpus with zero bucket collisions leaves the
         // pair store empty, which schema inference would reject
         val pairSchema = StructType(Seq(
@@ -1378,26 +1029,20 @@ object StreamShape {
     // the FSM the reference hand-codes, subsumed by offset arithmetic.
     Q("x29_backfill_handoff",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val boundary = 400L
-        val root = java.nio.file.Files.createTempDirectory("x29out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("x29ckpt").toString
+        val root = Artifacts.newDir("x29out")
         s.read.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("endBlock", (boundary - 1).toString).load()
           .select("blockNumber", "logIndex", "address", "data")
           .write.mode("overwrite").parquet(s"$root/backfill")
-        val sq = s.readStream.format("graft-eth").option("dataset", "logs")
-          .option("startBlock", boundary.toString).option("head", "999")
-          .option("maxBlocksPerTrigger", "200").load()
-          .select("blockNumber", "logIndex", "address", "data")
-          .writeStream.format("parquet").option("path", s"$root/live")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"x29 live phase drained in $fed micro-batch(es) — the multi-batch live path was not exercised")
+        Drain.run("x29", Artifacts.newDir("x29ckpt"), s.readStream.format("graft-eth")
+            .option("dataset", "logs")
+            .option("startBlock", boundary.toString).option("head", "999")
+            .option("maxBlocksPerTrigger", "200").load()
+            .select("blockNumber", "logIndex", "address", "data")
+            .writeStream.format("parquet").option("path", s"$root/live")
+            .outputMode("append"),
+          2, "the multi-batch live path was not exercised")
         val back = s.read.parquet(s"$root/backfill")
         val live = s.read.parquet(s"$root/live")
         val maxBack = back.agg(max("blockNumber")).first().getLong(0)
@@ -1424,32 +1069,20 @@ object StreamShape {
     // |active addresses| rows, never the log history.
     Q("x30_stream_address_activity",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val partStore = java.nio.file.Files.createTempDirectory("x30part").toString
-        val txStore = java.nio.file.Files.createTempDirectory("x30tx").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("x30ckpt").toString
-        val sq = s.readStream.format("graft-eth").option("dataset", "logs")
+        val partStore = Artifacts.newDir("x30part")
+        val txStore = Artifacts.newDir("x30tx")
+        val logs = s.readStream.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("head", "999")
           .option("maxBlocksPerTrigger", "250").load()
           .select("address", "blockNumber", "transactionHash")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty) {
-              batch.groupBy("address")
-                .agg(count(lit(1)).as("n"), min("blockNumber").as("fb"),
-                  max("blockNumber").as("lb"))
-                .write.mode("append").parquet(partStore)
-              batch.select("address", "transactionHash").distinct()
-                .write.mode("append").parquet(txStore)
-            }
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 3,
-          s"x30 drained in $fed micro-batch(es) — partial merging was not exercised")
+        Drain.batches("x30", logs, 3, "partial merging was not exercised") { (batch, _) =>
+          batch.groupBy("address")
+            .agg(count(lit(1)).as("n"), min("blockNumber").as("fb"),
+              max("blockNumber").as("lb"))
+            .write.mode("append").parquet(partStore)
+          batch.select("address", "transactionHash").distinct()
+            .write.mode("append").parquet(txStore)
+        }
         val merged = s.read.parquet(partStore)
           .groupBy("address")
           .agg(sum("n").as("n_logs"), min("fb").as("first_block"),
@@ -1481,10 +1114,6 @@ object StreamShape {
     // the stateful handoff is broken.
     Q("x31_stream_locf",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x31_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x31ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x31src").toString
         val base = t(s, d, "events")
           .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
             when(pmod(col("event_id"), lit(5L)) =!= 0L, col("value")).as("v"))
@@ -1492,38 +1121,14 @@ object StreamShape {
           case r => Array(r.getLong(0), r.getLong(1))
         }
         val mid = lo + (hi - lo) / 2
-        base.where(col("us") < mid).coalesce(1).write.parquet(s"$srcDir/b0")
-        base.where(col("us") >= mid).coalesce(1).write.parquet(s"$srcDir/b1")
-        // delivery order is LOAD-BEARING here (unlike the commutative
-        // x19/x22 merges): FileStreamSource orders pending files by
-        // modification time with no tiebreak, and coarse-mtime filesystems
-        // can stamp both writes identically — force b1 strictly later
-        forceDeliveryOrder(s"$srcDir/b0", s"$srcDir/b1")
-        val providerConf = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerConf)
-        s.conf.set(providerConf,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        // delivery order is LOAD-BEARING here: the feed pins b1 strictly
+        // after b0
+        val sink = onRocksDb(s) {
           import s.implicits._
-          val in = s.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(srcDir)
+          val in = Drain.feed(s, "x31", base.where(col("us") < mid), base.where(col("us") >= mid))
             .as[graft.streaming.StreamOps.LocfEvent]
-          val sq = graft.streaming.StreamOps.locfStream(in).toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          sq.awaitTermination()
-          val fed = sq.recentProgress.count(_.numInputRows > 0)
-          require(fed >= 2,
-            s"x31 drained in $fed micro-batch(es) — the cross-batch fill was not exercised")
-        } finally {
-          prev match {
-            case Some(p) => s.conf.set(providerConf, p)
-            case None => s.conf.unset(providerConf)
-          }
+          Drain.memory("x31", graft.streaming.StreamOps.locfStream(in).toDF(), "append", 2,
+            "the cross-batch fill was not exercised")
         }
         // cross-batch handoff is genuinely exercised: some user's first
         // batch-2 reading is NULL (its fill can only come from batch-1
@@ -1537,7 +1142,7 @@ object StreamShape {
           .where(col("v").isNull).count()
         require(nullFirst > 0,
           "no user opens batch 2 with a NULL reading — the stateful fill path is vacuous")
-        s.table(name).select("event_id", "user_id", "filled").orderBy("event_id")
+        sink.select("event_id", "user_id", "filled").orderBy("event_id")
       },
       Some("""WITH base AS (
                  SELECT event_id, user_id, epoch_ns(ts) // 1000 AS us,
@@ -1563,25 +1168,15 @@ object StreamShape {
     // independent chain dump over the subscribed range.
     Q("x32_stream_ticket_serve",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x32_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x32ckpt").toString
         val ticket = """{"dataset": "logs", "startBlock": "300", "batch_size": "250"}"""
         val req = graft.api.RequestRouter.parseTicket(ticket)
         require(req.endBlock.isEmpty && req.batchSize.contains(250L),
           s"ticket parsed wrong: $req")
         val live = graft.api.RequestRouter.route(s, req, Map("head" -> "999"))
         require(live.isStreaming, "(start, null) ticket must route to a stream")
-        val sq = live.select("blockNumber", "logIndex", "address", "data")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 3,
-          s"x32 drained in $fed micro-batch(es) — batch_size admission was not exercised")
-        s.table(name).orderBy("blockNumber", "logIndex")
+        Drain.memory("x32", live.select("blockNumber", "logIndex", "address", "data"), "append",
+            3, "batch_size admission was not exercised")
+          .orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT blockNumber, logIndex, address, data
                FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
@@ -1602,8 +1197,7 @@ object StreamShape {
     // independent chain dump — missing boundary pairs cannot hide.
     Q("x33_stream_cadence",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val gapStore = java.nio.file.Files.createTempDirectory("x33gaps").toString
+        val gapStore = Artifacts.newDir("x33gaps")
         // carried state keyed BY BATCH ID, and the sink append keyed by
         // batch id too (overwrite of its own directory): a micro-batch
         // retry then recomputes from batch N-1's unchanged carry and
@@ -1613,45 +1207,33 @@ object StreamShape {
         // the x31 convention); a driver-side map is the AvailableNow
         // single-run equivalent.
         val carry = new java.util.concurrent.ConcurrentHashMap[Long, (Long, Long, Long)]()
-        val ckpt = java.nio.file.Files.createTempDirectory("x33ckpt").toString
-        val sq = s.readStream.format("graft-eth").option("dataset", "blocks")
+        val blocks = s.readStream.format("graft-eth").option("dataset", "blocks")
           .option("startBlock", "0").option("head", "999")
           .option("maxBlocksPerTrigger", "250").load()
           .select(col("number"), col("timestamp"),
             size(col("transactions")).cast(LongType).as("n_tx"))
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!batch.isEmpty) {
-              val cur = batch.select("number", "timestamp", "n_tx")
-              val prev = cur.select((col("number") + 1).as("number"),
-                col("timestamp").as("prev_ts"))
-              val within = cur.join(prev, "number")
-                .select(col("number"), (col("timestamp") - col("prev_ts")).as("gap"),
-                  col("n_tx"))
-              // stitch the boundary pair against the latest PRIOR batch's
-              // carried last block (stable under retry of this batch;
-              // empty batches leave no entry, so `latest before` not -1)
-              val first = cur.orderBy("number").limit(1).collect()(0)
-              val boundary = latestBefore(carry, batchId).toSeq
-                .filter { case (n, _, _) => n + 1 == first.getLong(0) }
-                .map { case (_, ts, _) =>
-                  (first.getLong(0), first.getLong(1) - ts, first.getLong(2))
-                }
-              import batch.sparkSession.implicits._
-              within.unionByName(boundary.toDF("number", "gap", "n_tx"))
-                .write.mode("overwrite").parquet(s"$gapStore/b$batchId")
-              val last = cur.orderBy(desc("number")).limit(1).collect()(0)
-              carry.put(batchId, (last.getLong(0), last.getLong(1), last.getLong(2)))
-              ()
+        Drain.batches("x33", blocks, 3, "the boundary stitch was not exercised") { (batch, batchId) =>
+          val cur = batch.select("number", "timestamp", "n_tx")
+          val prev = cur.select((col("number") + 1).as("number"),
+            col("timestamp").as("prev_ts"))
+          val within = cur.join(prev, "number")
+            .select(col("number"), (col("timestamp") - col("prev_ts")).as("gap"),
+              col("n_tx"))
+          // stitch the boundary pair against the latest PRIOR batch's
+          // carried last block (stable under retry of this batch;
+          // empty batches leave no entry, so `latest before` not -1)
+          val first = cur.orderBy("number").limit(1).collect()(0)
+          val boundary = latestBefore(carry, batchId).toSeq
+            .filter { case (n, _, _) => n + 1 == first.getLong(0) }
+            .map { case (_, ts, _) =>
+              (first.getLong(0), first.getLong(1) - ts, first.getLong(2))
             }
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 3,
-          s"x33 drained in $fed micro-batch(es) — the boundary stitch was not exercised")
+          import batch.sparkSession.implicits._
+          within.unionByName(boundary.toDF("number", "gap", "n_tx"))
+            .write.mode("overwrite").parquet(s"$gapStore/b$batchId")
+          val last = cur.orderBy(desc("number")).limit(1).collect()(0)
+          carry.put(batchId, (last.getLong(0), last.getLong(1), last.getLong(2)))
+        }
         s.read.option("recursiveFileLookup", "true").parquet(gapStore)
           .select(expr("number div 100").as("epoch"), col("gap"), col("n_tx"))
           .groupBy("epoch")
@@ -1685,20 +1267,16 @@ object StreamShape {
     // dump over (500, 999].
     Q("x34_stream_live_tail",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x34ckpt").toString
-        val outDir = java.nio.file.Files.createTempDirectory("x34out").toString
+        val ckpt = Artifacts.newDir("x34ckpt")
+        val outDir = Artifacts.newDir("x34out")
         val req = graft.api.RequestRouter.parseTicket("""{"dataset": "logs"}""")
         require(req.startBlock.isEmpty && req.endBlock.isEmpty,
           s"(null, null) ticket parsed wrong: $req")
         def life(head: Long): Unit = {
           val live = graft.api.RequestRouter.route(s, req,
             Map("head" -> head.toString, "maxBlocksPerTrigger" -> "200"))
-          val q = live.select("blockNumber", "logIndex", "address", "data")
-            .writeStream.format("parquet").option("path", outDir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
+          Drain.run("x34", ckpt, live.select("blockNumber", "logIndex", "address", "data")
+            .writeStream.format("parquet").option("path", outDir).outputMode("append"))
         }
         life(500)
         // the sink may commit an EMPTY part file for the no-data batch —
@@ -1728,44 +1306,27 @@ object StreamShape {
     // counter row; nothing about the history is retained.
     Q("x35_stream_quarantine",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val store = java.nio.file.Files.createTempDirectory("x35ctr").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("x35ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x35src").toString
+        val store = Artifacts.newDir("x35ctr")
         val ev = t(s, d, "events").select("event_id", "ts", "value", "props")
-        ev.where(col("event_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/f0")
-        ev.where(col("event_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/f1")
-        val sq = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty) {
-              batch.toDF()
-                .select(
-                  (col("value") > 150.0).as("r_cap"),
-                  (get_json_object(col("props"), "$.k").cast(LongType) > 90L).as("r_k"),
-                  (col("ts") < lit("2024-01-01").cast(TimestampType) ||
-                    col("ts") >= lit("2024-03-01").cast(TimestampType)).as("r_ts"))
-                .agg(
-                  sum(when(col("r_cap"), 1L).otherwise(0L)).as("n_value_above_cap"),
-                  sum(when(col("r_k"), 1L).otherwise(0L)).as("n_k_out_of_range"),
-                  sum(when(col("r_ts"), 1L).otherwise(0L)).as("n_ts_out_of_window"),
-                  sum(when(col("r_cap") || col("r_k") || col("r_ts"), 1L).otherwise(0L))
-                    .as("n_quarantined"),
-                  sum(when(!(col("r_cap") || col("r_k") || col("r_ts")), 1L).otherwise(0L))
-                    .as("n_passed"))
-                .write.mode("append").parquet(store)
-            }
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"x35 drained in $fed micro-batch(es) — counter merging was not exercised")
+        val feed = Drain.feed(s, "x35",
+          ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
+        Drain.batches("x35", feed, 2, "counter merging was not exercised") { (batch, _) =>
+          batch
+            .select(
+              (col("value") > 150.0).as("r_cap"),
+              (get_json_object(col("props"), "$.k").cast(LongType) > 90L).as("r_k"),
+              (col("ts") < lit("2024-01-01").cast(TimestampType) ||
+                col("ts") >= lit("2024-03-01").cast(TimestampType)).as("r_ts"))
+            .agg(
+              sum(when(col("r_cap"), 1L).otherwise(0L)).as("n_value_above_cap"),
+              sum(when(col("r_k"), 1L).otherwise(0L)).as("n_k_out_of_range"),
+              sum(when(col("r_ts"), 1L).otherwise(0L)).as("n_ts_out_of_window"),
+              sum(when(col("r_cap") || col("r_k") || col("r_ts"), 1L).otherwise(0L))
+                .as("n_quarantined"),
+              sum(when(!(col("r_cap") || col("r_k") || col("r_ts")), 1L).otherwise(0L))
+                .as("n_passed"))
+            .write.mode("append").parquet(store)
+        }
         s.read.parquet(store).agg(
           sum("n_value_above_cap").as("n_value_above_cap"),
           sum("n_k_out_of_range").as("n_k_out_of_range"),
@@ -1800,10 +1361,6 @@ object StreamShape {
     // oracle, pinned verbatim).
     Q("x36_stream_scd2",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x36_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x36ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x36src").toString
         val base = t(s, d, "events")
           .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
             col("event_type").as("state"))
@@ -1811,10 +1368,6 @@ object StreamShape {
           case r => Array(r.getLong(0), r.getLong(1))
         }
         val mid = lo + (hi - lo) / 2
-        base.where(col("us") < mid).coalesce(1).write.parquet(s"$srcDir/b0")
-        base.where(col("us") >= mid).coalesce(1).write.parquet(s"$srcDir/b1")
-        // delivery order is load-bearing (the x31 lesson)
-        forceDeliveryOrder(s"$srcDir/b0", s"$srcDir/b1")
         // the boundary laws must be exercised, not just possible: per-user
         // last batch-1 state vs first batch-2 state
         val lastB1 = base.where(col("us") < mid)
@@ -1830,34 +1383,16 @@ object StreamShape {
           "no user changes state across the batch boundary — the carried close is vacuous")
         require(boundary.where(col("s1") === col("s2")).count() > 0,
           "no user holds state across the batch boundary — the spurious-version trap is vacuous")
-        val providerConf = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerConf)
-        s.conf.set(providerConf,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        val sink = onRocksDb(s) {
           import s.implicits._
-          val in = s.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(srcDir)
+          // delivery order is load-bearing (the x31 lesson)
+          val in = Drain.feed(s, "x36", base.where(col("us") < mid), base.where(col("us") >= mid))
             .as[graft.streaming.StreamOps.Scd2Event]
-          val sq = graft.streaming.StreamOps.scd2Stream(in).toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          sq.awaitTermination()
-          val fed = sq.recentProgress.count(_.numInputRows > 0)
-          require(fed >= 2,
-            s"x36 drained in $fed micro-batch(es) — cross-batch maintenance was not exercised")
-        } finally {
-          prev match {
-            case Some(p) => s.conf.set(providerConf, p)
-            case None => s.conf.unset(providerConf)
-          }
+          Drain.memory("x36", graft.streaming.StreamOps.scd2Stream(in).toDF(), "append", 2,
+            "cross-batch maintenance was not exercised")
         }
         // collapse (open, close) emissions: the close carries to_us
-        s.table(name)
+        sink
           .groupBy("user_id", "version")
           .agg(max(col("state")).as("state"), min(col("from_us")).as("from_us"),
             max(col("to_us")).as("to_us"))
@@ -1892,11 +1427,8 @@ object StreamShape {
     // batch oracle verbatim.
     Q("d24_incremental_clusters",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("d24ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("d24src").toString
-        val sigStore = java.nio.file.Files.createTempDirectory("d24sigs").toString
-        val labelRoot = java.nio.file.Files.createTempDirectory("d24labels").toString
+        val sigStore = Artifacts.newDir("d24sigs")
+        val labelRoot = Artifacts.newDir("d24labels")
         val labelDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val relabels = new java.util.concurrent.atomic.AtomicLong(0)
         val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
@@ -1904,76 +1436,55 @@ object StreamShape {
         val canon = DedupOps.all.find(_.name == "d06_dedup_clusters").get.build(s, d)
           .groupBy("cluster").agg(count(lit(1)).as("n")).where(col("n") >= 2)
           .select(col("cluster").as("doc_id"))
-        docs.join(canon, Seq("doc_id"), "left_anti").coalesce(1).write.parquet(s"$srcDir/b0")
-        docs.join(canon, Seq("doc_id"), "left_semi").coalesce(1).write.parquet(s"$srcDir/b1")
-        forceDeliveryOrder(s"$srcDir/b0", s"$srcDir/b1")
-        val sq = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!batch.isEmpty) {
-              val bb = DedupOps.bandBuckets(batch.toDF())
-              // per-batch-id sink dirs: a micro-batch retry overwrites its
-              // own partials instead of double-appending (the x33 contract)
-              bb.write.mode("overwrite").parquet(s"$sigStore/b$batchId")
-              val store = s.read.option("recursiveFileLookup", "true").parquet(sigStore)
-              val cands = bb.select(col("doc_id").as("da"), col("band"), col("sig"))
-                .join(store.select(col("doc_id").as("db"), col("band"), col("sig")),
-                  Seq("band", "sig"))
-                .where(col("da") =!= col("db"))
-                .select(least(col("da"), col("db")).as("da"),
-                  greatest(col("da"), col("db")).as("db"))
-                .distinct()
-              val verified = DedupOps.jaccardVerified(s, d, cands).select("da", "db")
-              val prevLabels = latestBefore(labelDirs, batchId)
-                .map(p => s.read.parquet(p))
-                .getOrElse {
-                  import s.implicits._
-                  Seq.empty[(Long, Long)].toDF("doc_id", "label")
-                }
-              val nodes = verified.select(col("da").as("doc_id"))
-                .union(verified.select(col("db").as("doc_id"))).distinct()
-              val withLab = nodes.join(prevLabels, Seq("doc_id"), "left")
-                .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
-              // contract pair edges to the label graph and merge it
-              val lg = verified
-                .join(withLab.select(col("doc_id").as("da"), col("label").as("la")), Seq("da"))
-                .join(withLab.select(col("doc_id").as("db"), col("label").as("lb")), Seq("db"))
-                .select(col("la").as("da"), col("lb").as("db"))
-                .where(col("da") =!= col("db")).distinct()
-              val mapping = DedupOps.connectedComponents(lg, maxIter = 20)
-                .select(col("id").as("old_label"), col("label").as("new_label"))
-                .where(col("old_label") =!= col("new_label"))
-                .localCheckpoint()
-              relabels.addAndGet(
-                mapping.join(prevLabels.select(col("label").as("old_label")).distinct(),
-                  Seq("old_label"), "left_semi").count())
-              val allNodes = prevLabels.unionByName(
-                withLab.join(prevLabels.select("doc_id"), Seq("doc_id"), "left_anti"))
-              allNodes.join(mapping, col("label") === col("old_label"), "left")
-                .select(col("doc_id"), coalesce(col("new_label"), col("label")).as("label"))
-                .write.mode("overwrite").parquet(s"$labelRoot/b$batchId")
-              labelDirs.put(batchId, s"$labelRoot/b$batchId")
-              ()
+        val feed = Drain.feed(s, "d24",
+          docs.join(canon, Seq("doc_id"), "left_anti"), docs.join(canon, Seq("doc_id"), "left_semi"))
+        Drain.batches("d24", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
+          val bb = DedupOps.bandBuckets(batch)
+          // per-batch-id sink dirs: a micro-batch retry overwrites its
+          // own partials instead of double-appending (the x33 contract)
+          bb.write.mode("overwrite").parquet(s"$sigStore/b$batchId")
+          val store = s.read.option("recursiveFileLookup", "true").parquet(sigStore)
+          val cands = bb.select(col("doc_id").as("da"), col("band"), col("sig"))
+            .join(store.select(col("doc_id").as("db"), col("band"), col("sig")),
+              Seq("band", "sig"))
+            .where(col("da") =!= col("db"))
+            .select(least(col("da"), col("db")).as("da"),
+              greatest(col("da"), col("db")).as("db"))
+            .distinct()
+          val verified = DedupOps.jaccardVerified(s, d, cands).select("da", "db")
+          val prevLabels = latestBefore(labelDirs, batchId)
+            .map(p => s.read.parquet(p))
+            .getOrElse {
+              import s.implicits._
+              Seq.empty[(Long, Long)].toDF("doc_id", "label")
             }
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"d24 drained in $fed micro-batch(es) — incremental maintenance was not exercised")
+          val nodes = verified.select(col("da").as("doc_id"))
+            .union(verified.select(col("db").as("doc_id"))).distinct()
+          val withLab = nodes.join(prevLabels, Seq("doc_id"), "left")
+            .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
+          // contract pair edges to the label graph and merge it
+          val lg = verified
+            .join(withLab.select(col("doc_id").as("da"), col("label").as("la")), Seq("da"))
+            .join(withLab.select(col("doc_id").as("db"), col("label").as("lb")), Seq("db"))
+            .select(col("la").as("da"), col("lb").as("db"))
+            .where(col("da") =!= col("db")).distinct()
+          val mapping = DedupOps.connectedComponents(lg, maxIter = 20)
+            .select(col("id").as("old_label"), col("label").as("new_label"))
+            .where(col("old_label") =!= col("new_label"))
+            .localCheckpoint()
+          relabels.addAndGet(
+            mapping.join(prevLabels.select(col("label").as("old_label")).distinct(),
+              Seq("old_label"), "left_semi").count())
+          val allNodes = prevLabels.unionByName(
+            withLab.join(prevLabels.select("doc_id"), Seq("doc_id"), "left_anti"))
+          allNodes.join(mapping, col("label") === col("old_label"), "left")
+            .select(col("doc_id"), coalesce(col("new_label"), col("label")).as("label"))
+            .write.mode("overwrite").parquet(s"$labelRoot/b$batchId")
+          labelDirs.put(batchId, s"$labelRoot/b$batchId")
+        }
         require(relabels.get() > 0,
           "no existing cluster was relabeled by a later batch — the mapping-update path was vacuous")
-        val finalDir = {
-          var maxId = Long.MinValue
-          labelDirs.forEach((k, _) => if (k > maxId) maxId = k)
-          labelDirs.get(maxId)
-        }
-        s.read.parquet(finalDir)
+        s.read.parquet(latestBefore(labelDirs, Long.MaxValue).get)
           .select(col("doc_id"), col("label").as("cluster"))
           .orderBy("doc_id")
       },
@@ -1992,31 +1503,14 @@ object StreamShape {
     // registers, not just concatenate.
     Q("x37_stream_hll_merge",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val ckpt = java.nio.file.Files.createTempDirectory("x37ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x37src").toString
-        val store = java.nio.file.Files.createTempDirectory("x37sketch").toString
+        val store = Artifacts.newDir("x37sketch")
         val ev = s.read.parquet(s"$d/events.parquet").select("event_id", "event_type", "user_id")
-        ev.where(col("user_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/f0")
-        ev.where(col("user_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/f1")
-        val sq = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!batch.isEmpty)
-              StockOps.hllPartial(batch.toDF())
-                .write.mode("overwrite").parquet(s"$store/b$batchId")
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fedBatches = sq.recentProgress.count(_.numInputRows > 0)
-        require(fedBatches >= 2,
-          s"x37 drained in $fedBatches micro-batch(es) — the register merge was not exercised")
+        val feed = Drain.feed(s, "x37",
+          ev.where(col("user_id") % 2 === 0), ev.where(col("user_id") % 2 === 1))
+        Drain.batches("x37", feed, 2, "the register merge was not exercised") { (batch, batchId) =>
+          StockOps.hllPartial(batch).write.mode("overwrite").parquet(s"$store/b$batchId")
+        }
         val merged = s.read.option("recursiveFileLookup", "true").parquet(store)
           .groupBy("event_type", "reg").agg(max(col("mj")).as("mj"))
         val tru = t(s, d, "events").groupBy("event_type")
@@ -2043,65 +1537,44 @@ object StreamShape {
     // graph pinned to sim36's batch oracle verbatim.
     Q("x38_stream_knn_maintain",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x38ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x38src").toString
-        val vecStore = java.nio.file.Files.createTempDirectory("x38vecs").toString
-        val edgeRoot = java.nio.file.Files.createTempDirectory("x38edges").toString
+        val vecStore = Artifacts.newDir("x38vecs")
+        val edgeRoot = Artifacts.newDir("x38edges")
         val edgeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val cents = SimilarityOps.trainedCentroids(s, d, iters = 2)
         val vecs = s.read.parquet(s"$d/embeddings.parquet").select("vec_id", "embedding")
-        vecs.where(col("vec_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/b0")
-        vecs.where(col("vec_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/b1")
-        forceDeliveryOrder(s"$srcDir/b0", s"$srcDir/b1")
-        val sq = s.readStream.schema(vecs.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!batch.isEmpty) {
-              val assigned = SimilarityOps.assignCells(
-                SimilarityOps.withNormOf(batch.toDF()), cents)
-                .select("cell", "vec_id", "embedding", "norm2")
-              assigned.write.mode("overwrite").parquet(s"$vecStore/b$batchId")
-              val store = s.read.option("recursiveFileLookup", "true").parquet(vecStore)
-              val a = assigned.select(col("cell"), col("vec_id").as("na"),
-                col("embedding").as("ea"), col("norm2").as("nna"))
-              val b = store.select(col("cell"), col("vec_id").as("nb"),
-                col("embedding").as("eb"), col("norm2").as("nnb"))
-              val scored = a.join(b, Seq("cell")).where(col("na") =!= col("nb"))
-                .withColumn("cos_sim", SimilarityOps.cosine(
-                  SimilarityOps.scaledDot(col("ea"), col("eb")), col("nna"), col("nnb")))
-              // both directions: the new vector's own list AND its entry
-              // into existing lists (same exact cosine either way)
-              val newEdges = scored.select(col("na").as("u"), col("nb").as("v"), col("cos_sim"))
-                .unionByName(scored.select(col("nb").as("u"), col("na").as("v"), col("cos_sim")))
-                .distinct()
-              val prev = latestBefore(edgeDirs, batchId)
-                .map(p => s.read.parquet(p))
-                .getOrElse {
-                  import s.implicits._
-                  Seq.empty[(Long, Long, Double)].toDF("u", "v", "cos_sim")
-                }
-              StockOps.perKeyTopK(prev.unionByName(newEdges).distinct(),
-                  Seq("u"), Seq(desc("cos_sim"), col("v")), SimilarityOps.KnnK)
-                .select("u", "v", "cos_sim")
-                .write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
-              edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
-              ()
+        val feed = Drain.feed(s, "x38",
+          vecs.where(col("vec_id") % 2 === 0), vecs.where(col("vec_id") % 2 === 1))
+        Drain.batches("x38", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
+          val assigned = SimilarityOps.assignCells(
+            SimilarityOps.withNormOf(batch), cents)
+            .select("cell", "vec_id", "embedding", "norm2")
+          assigned.write.mode("overwrite").parquet(s"$vecStore/b$batchId")
+          val store = s.read.option("recursiveFileLookup", "true").parquet(vecStore)
+          val a = assigned.select(col("cell"), col("vec_id").as("na"),
+            col("embedding").as("ea"), col("norm2").as("nna"))
+          val b = store.select(col("cell"), col("vec_id").as("nb"),
+            col("embedding").as("eb"), col("norm2").as("nnb"))
+          val scored = a.join(b, Seq("cell")).where(col("na") =!= col("nb"))
+            .withColumn("cos_sim", SimilarityOps.cosine(
+              SimilarityOps.scaledDot(col("ea"), col("eb")), col("nna"), col("nnb")))
+          // both directions: the new vector's own list AND its entry
+          // into existing lists (same exact cosine either way)
+          val newEdges = scored.select(col("na").as("u"), col("nb").as("v"), col("cos_sim"))
+            .unionByName(scored.select(col("nb").as("u"), col("na").as("v"), col("cos_sim")))
+            .distinct()
+          val prev = latestBefore(edgeDirs, batchId)
+            .map(p => s.read.parquet(p))
+            .getOrElse {
+              import s.implicits._
+              Seq.empty[(Long, Long, Double)].toDF("u", "v", "cos_sim")
             }
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"x38 drained in $fed micro-batch(es) — incremental maintenance was not exercised")
-        var maxId = Long.MinValue
-        edgeDirs.forEach((k, _) => if (k > maxId) maxId = k)
-        val finalEdges = s.read.parquet(edgeDirs.get(maxId))
+          StockOps.perKeyTopK(prev.unionByName(newEdges).distinct(),
+              Seq("u"), Seq(desc("cos_sim"), col("v")), SimilarityOps.KnnK)
+            .select("u", "v", "cos_sim")
+            .write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
+          edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
+        }
+        val finalEdges = s.read.parquet(latestBefore(edgeDirs, Long.MaxValue).get)
         val firstEdges = s.read.parquet(edgeDirs.get(0L))
         // maintenance laws: a later (odd) vector entered an existing
         // (even) node's list, and displaced one of its batch-1 edges
@@ -2132,19 +1605,12 @@ object StreamShape {
     // pinned to t20's batch oracle verbatim.
     Q("x39_stream_packing",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x39_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x39ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x39src").toString
         val nt = t(s, d, "documents")
           .select(col("doc_id"), col("source"),
             size(TextOps.tokens(col("text"))).cast(LongType).as("n_toks"))
         val mid = nt.agg(min("doc_id"), max("doc_id")).head() match {
           case r => r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
         }
-        nt.where(col("doc_id") < mid).coalesce(1).write.parquet(s"$srcDir/b0")
-        nt.where(col("doc_id") >= mid).coalesce(1).write.parquet(s"$srcDir/b1")
-        forceDeliveryOrder(s"$srcDir/b0", s"$srcDir/b1")
         // the restart bug must be catchable: some source's batch-1 total
         // ends mid-chunk (continuation offset not a multiple of 128)
         val midChunk = nt.where(col("doc_id") < mid)
@@ -2152,33 +1618,14 @@ object StreamShape {
           .where(pmod(col("tot"), lit(128L)) =!= 0L).count()
         require(midChunk > 0,
           "every source's batch-1 total is chunk-aligned — the carried-offset law is vacuous")
-        val providerConf = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerConf)
-        s.conf.set(providerConf,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        val sink = onRocksDb(s) {
           import s.implicits._
-          val in = s.readStream.schema(nt.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(srcDir)
+          val in = Drain.feed(s, "x39", nt.where(col("doc_id") < mid), nt.where(col("doc_id") >= mid))
             .as[graft.streaming.StreamOps.PackDoc]
-          val sq = graft.streaming.StreamOps.packStream(in).toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          sq.awaitTermination()
-          val fed = sq.recentProgress.count(_.numInputRows > 0)
-          require(fed >= 2,
-            s"x39 drained in $fed micro-batch(es) — the carried offset was not exercised")
-        } finally {
-          prev match {
-            case Some(p) => s.conf.set(providerConf, p)
-            case None => s.conf.unset(providerConf)
-          }
+          Drain.memory("x39", graft.streaming.StreamOps.packStream(in).toDF(), "append", 2,
+            "the carried offset was not exercised")
         }
-        s.table(name)
+        sink
           .withColumn("start_tok", col("end_tok") - col("n_toks"))
           .withColumn("first_chunk", expr("start_tok div 128"))
           .withColumn("last_chunk", expr("(end_tok - 1) div 128"))
@@ -2216,10 +1663,7 @@ object StreamShape {
     // replay over d06's cluster CTEs.
     Q("x40_stream_deletions",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x40ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x40src").toString
-        val storeRoot = java.nio.file.Files.createTempDirectory("x40store").toString
+        val storeRoot = Artifacts.newDir("x40store")
         val storeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val waveStats = new java.util.concurrent.ConcurrentHashMap[Long, (Long, Long)]()
         val clusters = DedupOps.all.find(_.name == "d06_dedup_clusters").get.build(s, d)
@@ -2237,55 +1681,36 @@ object StreamShape {
           .groupBy("cluster").agg(min("doc_id").as("doc_id"))
           .select(lit("del").as("kind"), col("doc_id"),
             lit(null).cast(LongType).as("cluster"))
-        adds.coalesce(1).write.parquet(s"$srcDir/b0")
-        wave1.coalesce(1).write.parquet(s"$srcDir/b1")
-        wave2.coalesce(1).write.parquet(s"$srcDir/b2")
-        forceDeliveryOrder(s"$srcDir/b0", s"$srcDir/b1")
-        forceDeliveryOrder(s"$srcDir/b1", s"$srcDir/b2")
-        val sq = s.readStream.schema(adds.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!batch.isEmpty) {
-              val newMembers = batch.where(col("kind") === "add").select("doc_id", "cluster")
-              val delIds = batch.where(col("kind") === "del").select("doc_id")
-              val prev = latestBefore(storeDirs, batchId)
-                .map(p => s.read.parquet(p))
-                .getOrElse {
-                  import s.implicits._
-                  Seq.empty[(Long, Long)].toDF("doc_id", "cluster")
-                }
-              val members = prev.unionByName(newMembers)
-              // re-election work is bounded by the deletion batch: only
-              // clusters a deleted id belongs to are touched
-              val affected = members.join(broadcast(delIds), Seq("doc_id"), "left_semi")
-                .select("cluster").distinct().localCheckpoint()
-              val oldReps = members.join(broadcast(affected), Seq("cluster"), "left_semi")
-                .groupBy("cluster").agg(min("doc_id").as("old_rep"))
-              val survivors = members.join(broadcast(delIds), Seq("doc_id"), "left_anti")
-                .localCheckpoint()
-              val newReps = survivors.join(broadcast(affected), Seq("cluster"), "left_semi")
-                .groupBy("cluster").agg(min("doc_id").as("new_rep"))
-              val reelected = newReps.join(oldReps, Seq("cluster"))
-                .where(col("new_rep") =!= col("old_rep")).count()
-              val died = affected.count() - newReps.count()
-              waveStats.put(batchId, (reelected, died))
-              // per-batch-id store dirs: a retry overwrites its own
-              // partials instead of double-applying (the x33/d24 contract)
-              survivors.write.mode("overwrite").parquet(s"$storeRoot/b$batchId")
-              storeDirs.put(batchId, s"$storeRoot/b$batchId")
-              ()
+        val feed = Drain.feed(s, "x40", adds, wave1, wave2)
+        Drain.batches("x40", feed, 3, "the two deletion waves were not separate") { (batch, batchId) =>
+          val newMembers = batch.where(col("kind") === "add").select("doc_id", "cluster")
+          val delIds = batch.where(col("kind") === "del").select("doc_id")
+          val prev = latestBefore(storeDirs, batchId)
+            .map(p => s.read.parquet(p))
+            .getOrElse {
+              import s.implicits._
+              Seq.empty[(Long, Long)].toDF("doc_id", "cluster")
             }
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 3,
-          s"x40 drained in $fed micro-batch(es) — the two deletion waves were not separate")
+          val members = prev.unionByName(newMembers)
+          // re-election work is bounded by the deletion batch: only
+          // clusters a deleted id belongs to are touched
+          val affected = members.join(broadcast(delIds), Seq("doc_id"), "left_semi")
+            .select("cluster").distinct().localCheckpoint()
+          val oldReps = members.join(broadcast(affected), Seq("cluster"), "left_semi")
+            .groupBy("cluster").agg(min("doc_id").as("old_rep"))
+          val survivors = members.join(broadcast(delIds), Seq("doc_id"), "left_anti")
+            .localCheckpoint()
+          val newReps = survivors.join(broadcast(affected), Seq("cluster"), "left_semi")
+            .groupBy("cluster").agg(min("doc_id").as("new_rep"))
+          val reelected = newReps.join(oldReps, Seq("cluster"))
+            .where(col("new_rep") =!= col("old_rep")).count()
+          val died = affected.count() - newReps.count()
+          waveStats.put(batchId, (reelected, died))
+          // per-batch-id store dirs: a retry overwrites its own
+          // partials instead of double-applying (the x33/d24 contract)
+          survivors.write.mode("overwrite").parquet(s"$storeRoot/b$batchId")
+          storeDirs.put(batchId, s"$storeRoot/b$batchId")
+        }
         val ks = waveStats.keySet().toArray.map(_.asInstanceOf[Long]).sorted
         val (r1, d1) = waveStats.get(ks(ks.length - 2))
         val (r2, d2) = waveStats.get(ks.last)
@@ -2339,11 +1764,8 @@ object StreamShape {
     // replay itself, so the pick rule is cross-engine-pinned too.
     Q("x41_stream_tombstone_serve",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x41ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x41src").toString
-        val tombRoot = java.nio.file.Files.createTempDirectory("x41tomb").toString
-        val outRoot = java.nio.file.Files.createTempDirectory("x41out").toString
+        val tombRoot = Artifacts.newDir("x41tomb")
+        val outRoot = Artifacts.newDir("x41out")
         val tombDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val outDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val corpus = SimilarityOps.withNorm(s, d)
@@ -2356,41 +1778,24 @@ object StreamShape {
           tombstones = Some(w0)).localCheckpoint()
         val minQid = ph0.agg(min("qid")).head().getLong(0)
         val w1 = ph0.where(col("qid") === minQid && col("rk") === 1).select("vec_id")
-        w0.coalesce(1).write.parquet(s"$srcDir/b0")
-        w1.coalesce(1).write.parquet(s"$srcDir/b1")
-        forceDeliveryOrder(s"$srcDir/b0", s"$srcDir/b1")
-        val sq = s.readStream.schema(w0.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!batch.isEmpty) {
-              val prev = latestBefore(tombDirs, batchId)
-                .map(p => s.read.parquet(p))
-                .getOrElse {
-                  import s.implicits._
-                  Seq.empty[Long].toDF("vec_id")
-                }
-              prev.unionByName(batch.toDF().select("vec_id")).distinct()
-                .write.mode("overwrite").parquet(s"$tombRoot/b$batchId")
-              tombDirs.put(batchId, s"$tombRoot/b$batchId")
-              val cum = s.read.parquet(s"$tombRoot/b$batchId")
-              SimilarityOps.serveIvfIndexed(s, d, corpus, nProbes = 10,
-                  tombstones = Some(cum))
-                .withColumn("phase", lit(batchId).cast(IntegerType))
-                .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
-              outDirs.put(batchId, s"$outRoot/b$batchId")
-              ()
+        val feed = Drain.feed(s, "x41", w0, w1)
+        Drain.batches("x41", feed, 2, "the cumulative tombstone store was not exercised") { (batch, batchId) =>
+          val prev = latestBefore(tombDirs, batchId)
+            .map(p => s.read.parquet(p))
+            .getOrElse {
+              import s.implicits._
+              Seq.empty[Long].toDF("vec_id")
             }
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"x41 drained in $fed micro-batch(es) — the cumulative tombstone store was not exercised")
+          prev.unionByName(batch.select("vec_id")).distinct()
+            .write.mode("overwrite").parquet(s"$tombRoot/b$batchId")
+          tombDirs.put(batchId, s"$tombRoot/b$batchId")
+          val cum = s.read.parquet(s"$tombRoot/b$batchId")
+          SimilarityOps.serveIvfIndexed(s, d, corpus, nProbes = 10,
+              tombstones = Some(cum))
+            .withColumn("phase", lit(batchId).cast(IntegerType))
+            .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
+          outDirs.put(batchId, s"$outRoot/b$batchId")
+        }
         val out = s.read.option("recursiveFileLookup", "true").parquet(outRoot)
         val p0 = out.where(col("phase") === 0).select("qid", "vec_id", "rk")
         val p1 = out.where(col("phase") === 1).select("qid", "vec_id", "rk")
@@ -2435,27 +1840,17 @@ object StreamShape {
     // drained sink is exact — the oracle is the plain batch interval join.
     Q("x42_stream_interval_join",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val name = s"x42_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x42ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x42src").toString
         val ev = s.read.parquet(s"$d/events.parquet").transform(normalizeEventTs)
           .select("event_id", "ts", "user_id", "event_type")
         val us = unix_micros(col("ts"))
         val bounds = ev.agg(min(us).as("lo"), max(us).as("hi")).head()
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-        ev.where(us < t1).coalesce(1).write.parquet(s"$srcDir/b0")
-        ev.where(us >= t1 && us < t2).coalesce(1).write.parquet(s"$srcDir/b1")
-        ev.where(us >= t2).coalesce(1).write.parquet(s"$srcDir/b2")
-        forceDeliveryOrder(s"$srcDir/b0", s"$srcDir/b1")
-        forceDeliveryOrder(s"$srcDir/b1", s"$srcDir/b2")
+        val feedDir = Drain.stage("x42", ev.where(us < t1), ev.where(us >= t1 && us < t2),
+          ev.where(us >= t2))
         def side(et: String, idAs: String, tsAs: String, uidAs: String) =
-          s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(srcDir)
+          Drain.read(s, feedDir, ev.schema)
             .where(col("event_type") === et)
             .select(col("event_id").as(idAs), col("ts").as(tsAs),
               col("user_id").as(uidAs))
@@ -2469,19 +1864,13 @@ object StreamShape {
           .select(col("user_id"), col("view_id"), col("purchase_id"),
             unix_micros(col("vts")).as("view_us"),
             unix_micros(col("pts")).as("purchase_us"))
-        val sq = joined.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 3,
-          s"x42 drained in $fed micro-batch(es) — the multi-batch eviction path was not exercised")
+        val (out, sq) = Drain.memoryQuery("x42", joined, "append", 3,
+          "the multi-batch eviction path was not exercised")
         val removed = sq.recentProgress
           .flatMap(_.stateOperators.map(_.numRowsRemoved)).sum
         require(removed > 0,
           "no join state was evicted — the interval bound never capped the buffers")
-        s.table(name).orderBy("user_id", "view_id", "purchase_id")
+        out.orderBy("user_id", "view_id", "purchase_id")
       },
       Some("""SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
                      epoch_ns(v.ts) // 1000 AS view_us,
@@ -2508,44 +1897,27 @@ object StreamShape {
     // batchId-keyed overwrites (x33's retry-idempotence lesson).
     Q("x43_stream_data_card",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         graft.functions.GraftFunctions.register(s)
-        val scalarStore = java.nio.file.Files.createTempDirectory("x43sc").toString
-        val tkeyStore = java.nio.file.Files.createTempDirectory("x43tk").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("x43ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x43src").toString
+        val scalarStore = Artifacts.newDir("x43sc")
+        val tkeyStore = Artifacts.newDir("x43tk")
         val docs = s.read.parquet(s"$d/documents.parquet")
-        (0 until 3).foreach(i => docs.where(pmod(col("doc_id"), lit(3L)) === i)
-          .coalesce(1).write.parquet(s"$srcDir/b$i"))
+        val feed = Drain.feed(s, "x43",
+          (0 until 3).map(i => docs.where(pmod(col("doc_id"), lit(3L)) === i)): _*)
         val cont = DedupOps.contaminatedIds(s, d)
           .withColumn("is_cont", lit(true)).localCheckpoint()
-        val sq = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!batch.isEmpty) {
-              TextOps.dataCardDocFlags(batch)
-                .join(broadcast(cont), Seq("doc_id"), "left")
-                .groupBy("source")
-                .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"),
-                  count_if(coalesce(col("is_cont"), lit(false))).as("n_contaminated"),
-                  count_if(col("q_ok")).as("n_quality"))
-                .write.mode("overwrite").parquet(s"$scalarStore/b$batchId")
-              batch.groupBy(col("source"), md5(col("text")).as("tkey"))
-                .agg(count(lit(1)).as("n"))
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite").parquet(s"$tkeyStore/b$batchId")
-            }
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 3,
-          s"x43 drained in $fed micro-batch(es) — partial merging was not exercised")
+        Drain.batches("x43", feed, 3, "partial merging was not exercised") { (batch, batchId) =>
+          TextOps.dataCardDocFlags(batch)
+            .join(broadcast(cont), Seq("doc_id"), "left")
+            .groupBy("source")
+            .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"),
+              count_if(coalesce(col("is_cont"), lit(false))).as("n_contaminated"),
+              count_if(col("q_ok")).as("n_quality"))
+            .write.mode("overwrite").parquet(s"$scalarStore/b$batchId")
+          batch.groupBy(col("source"), md5(col("text")).as("tkey"))
+            .agg(count(lit(1)).as("n"))
+            .withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite").parquet(s"$tkeyStore/b$batchId")
+        }
         def store(dir: String) =
           s.read.option("recursiveFileLookup", "true").parquet(dir)
         val sc = store(scalarStore).groupBy("source")
@@ -2593,47 +1965,21 @@ object StreamShape {
     // Oracle: the batch per-user top-3 under the same total order.
     Q("x44_stream_liststate_topk",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x44_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x44ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x44src").toString
         val base = t(s, d, "events").where(col("event_type") === "purchase")
           .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
             col("value")).localCheckpoint()
         val bounds = base.agg(min("us"), max("us")).head()
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-        base.where(col("us") < t1).coalesce(1).write.parquet(s"$srcDir/b0")
-        base.where(col("us") >= t1 && col("us") < t2).coalesce(1).write.parquet(s"$srcDir/b1")
-        base.where(col("us") >= t2).coalesce(1).write.parquet(s"$srcDir/b2")
-        val providerConf = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerConf)
-        s.conf.set(providerConf,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        val sink = onRocksDb(s) {
           import s.implicits._
-          val in = s.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(srcDir)
+          val in = Drain.feed(s, "x44", base.where(col("us") < t1),
+              base.where(col("us") >= t1 && col("us") < t2), base.where(col("us") >= t2))
             .select("user_id", "event_id", "value")
             .as[graft.streaming.StreamOps.TopEvent]
-          val sq = graft.streaming.StreamOps.topKStream(in, 3).toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          sq.awaitTermination()
-          val fed = sq.recentProgress.count(_.numInputRows > 0)
-          require(fed >= 3,
-            s"x44 drained in $fed micro-batch(es) — the cross-batch list merge was not exercised")
-        } finally {
-          prev match {
-            case Some(p) => s.conf.set(providerConf, p)
-            case None => s.conf.unset(providerConf)
-          }
+          Drain.memory("x44", graft.streaming.StreamOps.topKStream(in, 3).toDF(), "append", 3,
+            "the cross-batch list merge was not exercised")
         }
-        val sink = s.table(name)
         val latest = sink
           .join(sink.groupBy(col("user_id").as("u2")).agg(max("n_seen").as("mx")),
             col("user_id") === col("u2") && col("n_seen") === col("mx"))
@@ -2677,47 +2023,21 @@ object StreamShape {
     // batch). Oracle: the batch per-(user, type) counts.
     Q("x45_stream_mapstate_counts",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x45_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x45ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x45src").toString
         val base = t(s, d, "events")
           .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
           .localCheckpoint()
         val bounds = base.agg(min("us"), max("us")).head()
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-        base.where(col("us") < t1).coalesce(1).write.parquet(s"$srcDir/b0")
-        base.where(col("us") >= t1 && col("us") < t2).coalesce(1).write.parquet(s"$srcDir/b1")
-        base.where(col("us") >= t2).coalesce(1).write.parquet(s"$srcDir/b2")
-        val providerConf = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerConf)
-        s.conf.set(providerConf,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        val sink = onRocksDb(s) {
           import s.implicits._
-          val in = s.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(srcDir)
+          val in = Drain.feed(s, "x45", base.where(col("us") < t1),
+              base.where(col("us") >= t1 && col("us") < t2), base.where(col("us") >= t2))
             .select("user_id", "event_type")
             .as[graft.streaming.StreamOps.TypedEvent]
-          val sq = graft.streaming.StreamOps.typeCountStream(in).toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          sq.awaitTermination()
-          val fed = sq.recentProgress.count(_.numInputRows > 0)
-          require(fed >= 3,
-            s"x45 drained in $fed micro-batch(es) — cross-batch map accumulation was not exercised")
-        } finally {
-          prev match {
-            case Some(p) => s.conf.set(providerConf, p)
-            case None => s.conf.unset(providerConf)
-          }
+          Drain.memory("x45", graft.streaming.StreamOps.typeCountStream(in).toDF(), "append", 3,
+            "cross-batch map accumulation was not exercised")
         }
-        val sink = s.table(name)
         val accumulated = sink.groupBy("user_id", "event_type")
           .agg(countDistinct(col("cnt")).as("n_emissions"))
           .where(col("n_emissions") >= 2).count()
@@ -2751,51 +2071,23 @@ object StreamShape {
     // and need no wm3.
     Q("x46_stream_timer_snapshot",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = s"x46_mem_${memId.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("x46ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x46src").toString
         val base = t(s, d, "events")
           .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
             col("ts")).localCheckpoint()
         val bounds = base.agg(min("us"), max("us")).head()
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
         val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-        base.where(col("us") < t1).coalesce(1).write.parquet(s"$srcDir/b0")
-        base.where(col("us") >= t1 && col("us") < t2).coalesce(1).write.parquet(s"$srcDir/b1")
-        base.where(col("us") >= t2).coalesce(1).write.parquet(s"$srcDir/b2")
-        // delivery order is load-bearing (watermark advancement feeds the
-        // timers) — force strict mtime order across the thirds
-        forceDeliveryOrder(s"$srcDir/b0", s"$srcDir/b1")
-        forceDeliveryOrder(s"$srcDir/b1", s"$srcDir/b2")
-        val providerConf = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerConf)
-        s.conf.set(providerConf,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        val sink = onRocksDb(s) {
           import s.implicits._
-          val in = s.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(srcDir)
+          // delivery order is load-bearing (watermark advancement feeds the
+          // timers): the feed pins the thirds in order
+          val in = Drain.feed(s, "x46", base.where(col("us") < t1),
+              base.where(col("us") >= t1 && col("us") < t2), base.where(col("us") >= t2))
             .withWatermark("ts", "1 second")
             .as[graft.streaming.StreamOps.SnapEvent]
-          val sq = graft.streaming.StreamOps.snapshotStream(in, SnapHorizonMs).toDF()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          sq.awaitTermination()
-          val fed = sq.recentProgress.count(_.numInputRows > 0)
-          require(fed >= 3,
-            s"x46 drained in $fed micro-batch(es) — the watermark never advanced mid-stream")
-        } finally {
-          prev match {
-            case Some(p) => s.conf.set(providerConf, p)
-            case None => s.conf.unset(providerConf)
-          }
-        }
-        val sink = s.table(name).localCheckpoint()
+          Drain.memory("x46", graft.streaming.StreamOps.snapshotStream(in, SnapHorizonMs).toDF(),
+            "append", 3, "the watermark never advanced mid-stream")
+        }.localCheckpoint()
         require(sink.count() > 0, "no timer ever fired — the event-time timer path is vacuous")
         val totals = base.groupBy("user_id").agg(count(lit(1)).as("n_total"))
         val midFires = sink.join(totals, "user_id")
@@ -2852,113 +2144,82 @@ object StreamShape {
     // work than recompute).
     Q("x47_stream_pagerank",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         import GraphOps.{BaseMass, DampNum, OutDeg, Scale}
-        val ckpt = java.nio.file.Files.createTempDirectory("x47ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x47src").toString
-        val edgeRoot = java.nio.file.Files.createTempDirectory("x47edges").toString
-        val cRoot = java.nio.file.Files.createTempDirectory("x47c").toString
+        val edgeRoot = Artifacts.newDir("x47edges")
+        val cRoot = Artifacts.newDir("x47c")
         val edgeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val cDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val corrections = new java.util.concurrent.atomic.AtomicLong(0)
         val properSubset = new java.util.concurrent.atomic.AtomicBoolean(false)
         val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id")
         val edges = GraphOps.linkEdgesShared(s, d)
-        (0 to 2).foreach { r =>
-          edges.where(pmod(col("src"), lit(3)) === r)
-            .coalesce(1).write.parquet(s"$srcDir/f$r")
-        }
-        def priorDirs(m: java.util.concurrent.ConcurrentHashMap[Long, String],
-            batchId: Long): Seq[String] = {
-          val b = Seq.newBuilder[String]
-          m.forEach((k, v) => if (k < batchId) b += v)
-          b.result()
-        }
-        val sq = s.readStream.schema(edges.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!batch.isEmpty) {
-              val dE = batch.toDF().groupBy("src", "dst").agg(count(lit(1)).as("w"))
-                .localCheckpoint()
-              dE.write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
-              val oldEdgeDirs = priorDirs(edgeDirs, batchId)
-              val oldEdges =
-                if (oldEdgeDirs.isEmpty) None else Some(s.read.parquet(oldEdgeDirs: _*))
-              val prevCDir = latestBefore(cDirs, batchId)
-              def prevC(k: Int): Option[org.apache.spark.sql.DataFrame] =
-                prevCDir.map(p => s.read.parquet(s"$p/c$k"))
-              def emptyC = {
-                import s.implicits._
-                Seq.empty[(Long, Long)].toDF("doc_id", "c")
-              }
-              // merge a (doc_id, dc) delta into a C table
-              def merge(prev: org.apache.spark.sql.DataFrame,
-                  delta: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-                prev.join(delta, Seq("doc_id"), "full_outer")
-                  .select(col("doc_id"),
-                    (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c"))
-              val newDir = s"$cRoot/b$batchId"
-              // ——— level 1: upstream mass is the CONSTANT m0 = Scale ———
-              val dC1 = dE.groupBy(col("dst").as("doc_id"))
-                .agg(sum(col("w") * lit(Scale / OutDeg)).as("dc"))
-              merge(prevC(1).getOrElse(emptyC), dC1)
-                .write.mode("overwrite").parquet(s"$newDir/c1")
-              // ——— levels 2..3: delta-propagate through the mass change ———
-              (2 to 3).foreach { k =>
-                val newUp = s.read.parquet(s"$newDir/c${k - 1}")
-                val oldUp = prevC(k - 1).getOrElse(emptyC)
-                // nodes whose upstream mass changed, with both masses
-                val changed = newUp.select(col("doc_id"), col("c").as("cn"))
-                  .join(oldUp.select(col("doc_id"), col("c").as("co")),
-                    Seq("doc_id"), "full_outer")
-                  .select(col("doc_id").as("src"),
-                    (lit(BaseMass) + expr(s"$DampNum * coalesce(cn, 0L) div 100")).as("mn"),
-                    (lit(BaseMass) + expr(s"$DampNum * coalesce(co, 0L) div 100")).as("mo"))
-                  .where(col("mn") =!= col("mo"))
-                  .localCheckpoint()
-                val corr = oldEdges.map { oe =>
-                  val c = oe.join(changed, "src")
-                    .select(col("dst"),
-                      (col("w") * (expr(s"mn div $OutDeg") - expr(s"mo div $OutDeg"))).as("dc"))
-                    .localCheckpoint()
-                  val touched = c.count()
-                  corrections.addAndGet(touched)
-                  if (k == 2 && touched < oe.count()) properSubset.set(true)
-                  c
-                }
-                val add = dE.join(
-                    newUp.select(col("doc_id").as("src"), col("c")), Seq("src"), "left")
-                  .select(col("dst"),
-                    (col("w") * expr(s"(($BaseMass + $DampNum * coalesce(c, 0L) div 100)) div $OutDeg")).as("dc"))
-                val dCk = corr.map(_.unionByName(add)).getOrElse(add)
-                  .groupBy(col("dst").as("doc_id")).agg(sum("dc").as("dc"))
-                merge(prevC(k).getOrElse(emptyC), dCk)
-                  .write.mode("overwrite").parquet(s"$newDir/c$k")
-              }
-              cDirs.put(batchId, newDir)
-              edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
-              ()
-            }
+        val feed = Drain.feed(s, "x47", (0 to 2).map(r => edges.where(pmod(col("src"), lit(3)) === r)): _*)
+        Drain.batches("x47", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
+          val dE = batch.groupBy("src", "dst").agg(count(lit(1)).as("w"))
+            .localCheckpoint()
+          dE.write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
+          val oldEdgeDirs = priorDirs(edgeDirs, batchId)
+          val oldEdges =
+            if (oldEdgeDirs.isEmpty) None else Some(s.read.parquet(oldEdgeDirs: _*))
+          val prevCDir = latestBefore(cDirs, batchId)
+          def prevC(k: Int): Option[org.apache.spark.sql.DataFrame] =
+            prevCDir.map(p => s.read.parquet(s"$p/c$k"))
+          def emptyC = {
+            import s.implicits._
+            Seq.empty[(Long, Long)].toDF("doc_id", "c")
           }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"x47 drained in $fed micro-batch(es) — incremental maintenance was not exercised")
+          // merge a (doc_id, dc) delta into a C table
+          def merge(prev: org.apache.spark.sql.DataFrame,
+              delta: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+            prev.join(delta, Seq("doc_id"), "full_outer")
+              .select(col("doc_id"),
+                (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c"))
+          val newDir = s"$cRoot/b$batchId"
+          // ——— level 1: upstream mass is the CONSTANT m0 = Scale ———
+          val dC1 = dE.groupBy(col("dst").as("doc_id"))
+            .agg(sum(col("w") * lit(Scale / OutDeg)).as("dc"))
+          merge(prevC(1).getOrElse(emptyC), dC1)
+            .write.mode("overwrite").parquet(s"$newDir/c1")
+          // ——— levels 2..3: delta-propagate through the mass change ———
+          (2 to 3).foreach { k =>
+            val newUp = s.read.parquet(s"$newDir/c${k - 1}")
+            val oldUp = prevC(k - 1).getOrElse(emptyC)
+            // nodes whose upstream mass changed, with both masses
+            val changed = newUp.select(col("doc_id"), col("c").as("cn"))
+              .join(oldUp.select(col("doc_id"), col("c").as("co")),
+                Seq("doc_id"), "full_outer")
+              .select(col("doc_id").as("src"),
+                (lit(BaseMass) + expr(s"$DampNum * coalesce(cn, 0L) div 100")).as("mn"),
+                (lit(BaseMass) + expr(s"$DampNum * coalesce(co, 0L) div 100")).as("mo"))
+              .where(col("mn") =!= col("mo"))
+              .localCheckpoint()
+            val corr = oldEdges.map { oe =>
+              val c = oe.join(changed, "src")
+                .select(col("dst"),
+                  (col("w") * (expr(s"mn div $OutDeg") - expr(s"mo div $OutDeg"))).as("dc"))
+                .localCheckpoint()
+              val touched = c.count()
+              corrections.addAndGet(touched)
+              if (k == 2 && touched < oe.count()) properSubset.set(true)
+              c
+            }
+            val add = dE.join(
+                newUp.select(col("doc_id").as("src"), col("c")), Seq("src"), "left")
+              .select(col("dst"),
+                (col("w") * expr(s"(($BaseMass + $DampNum * coalesce(c, 0L) div 100)) div $OutDeg")).as("dc"))
+            val dCk = corr.map(_.unionByName(add)).getOrElse(add)
+              .groupBy(col("dst").as("doc_id")).agg(sum("dc").as("dc"))
+            merge(prevC(k).getOrElse(emptyC), dCk)
+              .write.mode("overwrite").parquet(s"$newDir/c$k")
+          }
+          cDirs.put(batchId, newDir)
+          edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
+        }
         require(corrections.get() > 0,
           "no earlier batch's edges were ever re-priced — the correction path was vacuous")
         require(properSubset.get(),
           "every batch touched the WHOLE old-edge store — delta propagation never pruned")
-        val finalDir = {
-          var maxId = Long.MinValue
-          cDirs.forEach((k, _) => if (k > maxId) maxId = k)
-          cDirs.get(maxId)
-        }
+        val finalDir = latestBefore(cDirs, Long.MaxValue).get
         docs.join(s.read.parquet(s"$finalDir/c3"), Seq("doc_id"), "left")
           .select(col("doc_id"),
             (lit(BaseMass) + expr(s"$DampNum * coalesce(c, 0L) div 100"))
@@ -2996,11 +2257,8 @@ object StreamShape {
     // require()d non-vacuous.
     Q("x48_stream_triangles",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x48ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x48src").toString
-        val edgeRoot = java.nio.file.Files.createTempDirectory("x48edges").toString
-        val partRoot = java.nio.file.Files.createTempDirectory("x48parts").toString
+        val edgeRoot = Artifacts.newDir("x48edges")
+        val partRoot = Artifacts.newDir("x48parts")
         val edgeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val oneNew = new java.util.concurrent.atomic.AtomicLong(0)
         val multiNew = new java.util.concurrent.atomic.AtomicLong(0)
@@ -3008,70 +2266,49 @@ object StreamShape {
           .select(least(col("src"), col("dst")).as("u"),
             greatest(col("src"), col("dst")).as("v"))
           .distinct()
-        (0 to 2).foreach { r =>
-          und.where(pmod(col("u") + col("v"), lit(3)) === r)
-            .coalesce(1).write.parquet(s"$srcDir/f$r")
-        }
-        def sym(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+        val feed = Drain.feed(s, "x48",
+          (0 to 2).map(r => und.where(pmod(col("u") + col("v"), lit(3)) === r)): _*)
+        def sym(e: DataFrame): DataFrame =
           e.select(col("u").as("a"), col("v").as("b"))
             .unionByName(e.select(col("v").as("a"), col("u").as("b")))
-        val sq = s.readStream.schema(und.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!batch.isEmpty) {
-              val dE = batch.toDF().localCheckpoint() // canonical u < v
-              dE.write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
-              val oldDirs = {
-                val b = Seq.newBuilder[String]
-                edgeDirs.forEach((k, p) => if (k < batchId) b += p)
-                b.result()
-              }
-              val old = if (oldDirs.isEmpty) None else Some(s.read.parquet(oldDirs: _*))
-              val dSym = sym(dE)
-              // T1: the new edge is the triangle's LAST — both closing
-              // edges already in the store
-              val t1 = old.map { oe =>
-                val os = sym(oe)
-                dE.join(os.select(col("a").as("u"), col("b").as("w")), Seq("u"))
-                  .join(os.select(col("a").as("v"), col("b").as("w")), Seq("v", "w"), "left_semi")
-                  .select(col("u"), col("v"), col("w"))
-              }
-              // T2: two new edges wedge at w, closed by one store edge
-              val t2 = old.map { oe =>
-                dSym.select(col("a").as("w"), col("b").as("u"))
-                  .join(dSym.select(col("a").as("w"), col("b").as("v")), Seq("w"))
-                  .where(col("u") < col("v"))
-                  .join(oe, Seq("u", "v"), "left_semi")
-                  .select(col("u"), col("v"), col("w"))
-              }
-              // T3: all three edges in this delta (a<b<c canonical)
-              val t3 = dE.as("ab")
-                .join(dE.as("bc"), col("ab.v") === col("bc.u"))
-                .join(dE.select(col("u").as("xa"), col("v").as("xc")),
-                  col("ab.u") === col("xa") && col("bc.v") === col("xc"), "left_semi")
-                .select(col("ab.u").as("u"), col("ab.v").as("v"), col("bc.v").as("w"))
-              val newTris = (t1.toSeq ++ t2.toSeq :+ t3)
-                .reduce(_ unionByName _).localCheckpoint()
-              oneNew.addAndGet(t1.map(_.count()).getOrElse(0L))
-              multiNew.addAndGet(t2.map(_.count()).getOrElse(0L) + t3.count())
-              newTris
-                .select(explode(array(col("u"), col("v"), col("w"))).as("doc_id"))
-                .groupBy("doc_id").agg(count(lit(1)).as("c"))
-                .write.mode("overwrite").parquet(s"$partRoot/b$batchId")
-              edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
-              ()
-            }
+        Drain.batches("x48", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
+          val dE = batch.localCheckpoint() // canonical u < v
+          dE.write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
+          val oldDirs = priorDirs(edgeDirs, batchId)
+          val old = if (oldDirs.isEmpty) None else Some(s.read.parquet(oldDirs: _*))
+          val dSym = sym(dE)
+          // T1: the new edge is the triangle's LAST — both closing
+          // edges already in the store
+          val t1 = old.map { oe =>
+            val os = sym(oe)
+            dE.join(os.select(col("a").as("u"), col("b").as("w")), Seq("u"))
+              .join(os.select(col("a").as("v"), col("b").as("w")), Seq("v", "w"), "left_semi")
+              .select(col("u"), col("v"), col("w"))
           }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"x48 drained in $fed micro-batch(es) — incremental maintenance was not exercised")
+          // T2: two new edges wedge at w, closed by one store edge
+          val t2 = old.map { oe =>
+            dSym.select(col("a").as("w"), col("b").as("u"))
+              .join(dSym.select(col("a").as("w"), col("b").as("v")), Seq("w"))
+              .where(col("u") < col("v"))
+              .join(oe, Seq("u", "v"), "left_semi")
+              .select(col("u"), col("v"), col("w"))
+          }
+          // T3: all three edges in this delta (a<b<c canonical)
+          val t3 = dE.as("ab")
+            .join(dE.as("bc"), col("ab.v") === col("bc.u"))
+            .join(dE.select(col("u").as("xa"), col("v").as("xc")),
+              col("ab.u") === col("xa") && col("bc.v") === col("xc"), "left_semi")
+            .select(col("ab.u").as("u"), col("ab.v").as("v"), col("bc.v").as("w"))
+          val newTris = (t1.toSeq ++ t2.toSeq :+ t3)
+            .reduce(_ unionByName _).localCheckpoint()
+          oneNew.addAndGet(t1.map(_.count()).getOrElse(0L))
+          multiNew.addAndGet(t2.map(_.count()).getOrElse(0L) + t3.count())
+          newTris
+            .select(explode(array(col("u"), col("v"), col("w"))).as("doc_id"))
+            .groupBy("doc_id").agg(count(lit(1)).as("c"))
+            .write.mode("overwrite").parquet(s"$partRoot/b$batchId")
+          edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
+        }
         require(oneNew.get() > 0,
           "no triangle was ever closed through the edge store — the T1 probe path was vacuous")
         require(multiNew.get() > 0,
@@ -3114,12 +2351,9 @@ object StreamShape {
     // batch oracle. Correction path require()d non-vacuous.
     Q("x49_stream_assortativity",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("x49ckpt").toString
-        val srcDir = java.nio.file.Files.createTempDirectory("x49src").toString
-        val edgeRoot = java.nio.file.Files.createTempDirectory("x49edges").toString
-        val degRoot = java.nio.file.Files.createTempDirectory("x49deg").toString
-        val sxyRoot = java.nio.file.Files.createTempDirectory("x49sxy").toString
+        val edgeRoot = Artifacts.newDir("x49edges")
+        val degRoot = Artifacts.newDir("x49deg")
+        val sxyRoot = Artifacts.newDir("x49sxy")
         val edgeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val degDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val sxyDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
@@ -3128,90 +2362,61 @@ object StreamShape {
           .select(least(col("src"), col("dst")).as("u"),
             greatest(col("src"), col("dst")).as("v"))
           .distinct()
-        (0 to 2).foreach { r =>
-          und.where(pmod(col("u") + col("v"), lit(3)) === r)
-            .coalesce(1).write.parquet(s"$srcDir/f$r")
-        }
-        def sym(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+        val feed = Drain.feed(s, "x49",
+          (0 to 2).map(r => und.where(pmod(col("u") + col("v"), lit(3)) === r)): _*)
+        def sym(e: DataFrame): DataFrame =
           e.select(col("u").as("a"), col("v").as("b"))
             .unionByName(e.select(col("v").as("a"), col("u").as("b")))
-        val sq = s.readStream.schema(und.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("recursiveFileLookup", "true")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            if (!batch.isEmpty) {
-              import s.implicits._
-              val dE = batch.toDF().localCheckpoint()
-              dE.write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
-              val oldDirs = {
-                val b = Seq.newBuilder[String]
-                edgeDirs.forEach((k, p) => if (k < batchId) b += p)
-                b.result()
-              }
-              val oldDeg = latestBefore(degDirs, batchId)
-                .map(p => s.read.parquet(p))
-                .getOrElse(Seq.empty[(Long, Long)].toDF("node", "dg"))
-              val prevSxy = latestBefore(sxyDirs, batchId)
-                .map(p => s.read.parquet(p).head().getLong(0)).getOrElse(0L)
-              // degree delta of this batch's vertices, merged degree table
-              val dd = sym(dE).groupBy(col("a").as("node"))
-                .agg(count(lit(1)).as("delta")).localCheckpoint()
-              val newDeg = oldDeg.join(dd, Seq("node"), "full_outer")
-                .select(col("node"),
-                  (coalesce(col("dg"), lit(0L)) + coalesce(col("delta"), lit(0L))).as("dg"))
-              newDeg.write.mode("overwrite").parquet(s"$degRoot/b$batchId")
-              val ndg = s.read.parquet(s"$degRoot/b$batchId")
-              // sxy correction on OLD edges: three inner joins vs Δd
-              val corr: Long = if (oldDirs.isEmpty) 0L else {
-                val oa = sym(s.read.parquet(oldDirs: _*))
-                def j(left: org.apache.spark.sql.DataFrame, la: String,
-                      right: org.apache.spark.sql.DataFrame, rb: String): Long = {
-                  val r = oa
-                    .join(left.select(col("node").as("a"), col(la).as("xa")), Seq("a"))
-                    .join(right.select(col("node").as("b"), col(rb).as("xb")), Seq("b"))
-                  corrections.addAndGet(r.count())
-                  // coalesce: the Δd×Δd term is legitimately empty when no
-                  // old edge has BOTH endpoints in this delta's vertex set
-                  r.agg(coalesce(sum(col("xa") * col("xb")), lit(0L))).head().getLong(0)
-                }
-                j(dd.withColumnRenamed("delta", "x"), "x", oldDeg.withColumnRenamed("dg", "x"), "x") +
-                  j(oldDeg.withColumnRenamed("dg", "x"), "x", dd.withColumnRenamed("delta", "x"), "x") +
-                  j(dd.withColumnRenamed("delta", "x"), "x", dd.withColumnRenamed("delta", "x"), "x")
-              }
-              // new edges priced at the NEW degrees (both orientations)
-              val add = sym(dE)
-                .join(ndg.select(col("node").as("a"), col("dg").as("da")), Seq("a"))
-                .join(ndg.select(col("node").as("b"), col("dg").as("db")), Seq("b"))
-                .agg(sum(col("da") * col("db"))).head().getLong(0)
-              Seq(prevSxy + corr + add).toDF("sxy")
-                .coalesce(1).write.mode("overwrite").parquet(s"$sxyRoot/b$batchId")
-              edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
-              degDirs.put(batchId, s"$degRoot/b$batchId")
-              sxyDirs.put(batchId, s"$sxyRoot/b$batchId")
-              ()
+        Drain.batches("x49", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
+          import s.implicits._
+          val dE = batch.localCheckpoint()
+          dE.write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
+          val oldDirs = priorDirs(edgeDirs, batchId)
+          val oldDeg = latestBefore(degDirs, batchId)
+            .map(p => s.read.parquet(p))
+            .getOrElse(Seq.empty[(Long, Long)].toDF("node", "dg"))
+          val prevSxy = latestBefore(sxyDirs, batchId)
+            .map(p => s.read.parquet(p).head().getLong(0)).getOrElse(0L)
+          // degree delta of this batch's vertices, merged degree table
+          val dd = sym(dE).groupBy(col("a").as("node"))
+            .agg(count(lit(1)).as("delta")).localCheckpoint()
+          val newDeg = oldDeg.join(dd, Seq("node"), "full_outer")
+            .select(col("node"),
+              (coalesce(col("dg"), lit(0L)) + coalesce(col("delta"), lit(0L))).as("dg"))
+          newDeg.write.mode("overwrite").parquet(s"$degRoot/b$batchId")
+          val ndg = s.read.parquet(s"$degRoot/b$batchId")
+          // sxy correction on OLD edges: three inner joins vs Δd
+          val corr: Long = if (oldDirs.isEmpty) 0L else {
+            val oa = sym(s.read.parquet(oldDirs: _*))
+            def j(left: org.apache.spark.sql.DataFrame, la: String,
+                  right: org.apache.spark.sql.DataFrame, rb: String): Long = {
+              val r = oa
+                .join(left.select(col("node").as("a"), col(la).as("xa")), Seq("a"))
+                .join(right.select(col("node").as("b"), col(rb).as("xb")), Seq("b"))
+              corrections.addAndGet(r.count())
+              // coalesce: the Δd×Δd term is legitimately empty when no
+              // old edge has BOTH endpoints in this delta's vertex set
+              r.agg(coalesce(sum(col("xa") * col("xb")), lit(0L))).head().getLong(0)
             }
+            j(dd.withColumnRenamed("delta", "x"), "x", oldDeg.withColumnRenamed("dg", "x"), "x") +
+              j(oldDeg.withColumnRenamed("dg", "x"), "x", dd.withColumnRenamed("delta", "x"), "x") +
+              j(dd.withColumnRenamed("delta", "x"), "x", dd.withColumnRenamed("delta", "x"), "x")
           }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        sq.awaitTermination()
-        val fed = sq.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"x49 drained in $fed micro-batch(es) — incremental maintenance was not exercised")
+          // new edges priced at the NEW degrees (both orientations)
+          val add = sym(dE)
+            .join(ndg.select(col("node").as("a"), col("dg").as("da")), Seq("a"))
+            .join(ndg.select(col("node").as("b"), col("dg").as("db")), Seq("b"))
+            .agg(sum(col("da") * col("db"))).head().getLong(0)
+          Seq(prevSxy + corr + add).toDF("sxy")
+            .coalesce(1).write.mode("overwrite").parquet(s"$sxyRoot/b$batchId")
+          edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
+          degDirs.put(batchId, s"$degRoot/b$batchId")
+          sxyDirs.put(batchId, s"$sxyRoot/b$batchId")
+        }
         require(corrections.get() > 0,
           "no old edge was ever re-priced for a degree change — the correction path was vacuous")
-        val finalDeg = {
-          var maxId = Long.MinValue
-          degDirs.forEach((k, _) => if (k > maxId) maxId = k)
-          s.read.parquet(degDirs.get(maxId))
-        }
-        val sxy = {
-          var maxId = Long.MinValue
-          sxyDirs.forEach((k, _) => if (k > maxId) maxId = k)
-          s.read.parquet(sxyDirs.get(maxId)).head().getLong(0)
-        }
+        val finalDeg = s.read.parquet(latestBefore(degDirs, Long.MaxValue).get)
+        val sxy = s.read.parquet(latestBefore(sxyDirs, Long.MaxValue).get).head().getLong(0)
         finalDeg.agg(sum("dg").as("m"), sum(col("dg") * col("dg")).as("sx"),
             sum(col("dg") * col("dg") * col("dg")).as("sxx"))
           .select(col("m"), col("sx"), lit(sxy).as("sxy"),

@@ -464,17 +464,4 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
   }
-
-  /** Run any of the above to a named in-memory sink until all currently
-    * available blocks are processed (Trigger.AvailableNow), returning the
-    * sink table. Test/dev helper.
-    */
-  def drainToMemory(df: DataFrame, name: String, outputMode: OutputMode): DataFrame = {
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(outputMode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(300000L)
-    df.sparkSession.table(name)
-  }
 }

@@ -196,4 +196,17 @@ class TextExpressionsSpec extends SparkSpec {
       Array(Array(1.0, 2.0), Array(3.0, 9.0)), Array(5L, 25L))
     assert(a != c, "different centroid matrices must not compare equal")
   }
+
+  test("doc_pairs rejects a posting list that may hold a NULL element at analysis") {
+    GraftFunctions.register(spark)
+    val pair = spark.sql("""SELECT doc_pairs(array(named_struct('id', 1L, 'sz', 1),
+                                                  named_struct('id', 2L, 'sz', 3))) AS p""")
+      .head().getSeq[org.apache.spark.sql.Row](0)
+    assert(pair.map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3))) ===
+      Seq((1L, 1, 2L, 3)))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT doc_pairs(array(named_struct('id', 1L, 'sz', 1), NULL)) AS p").collect()
+    }
+    assert(e.getMessage.contains("doc_pairs"), e.getMessage)
+  }
 }

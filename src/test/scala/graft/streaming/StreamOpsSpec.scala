@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.Drain
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Stream/batch parity: the same logical program over the same synthetic
   * chain must produce identical results in micro-batch streaming (many
@@ -20,11 +20,11 @@ class StreamOpsSpec extends SparkSpec {
     .option("head", head).load()
 
   test("windowed signature counts: streaming == batch") {
-    val streamed = StreamOps.drainToMemory(
+    val streamed = Drain.memory("sig_counts_stream",
       StreamOps.signatureCountsPerWindow(
         StreamOps.logsStream(spark, 0, 200, Map("head" -> head, "maxBlockRange" -> "100")),
         "1 hour", "1 minute"),
-      "sig_counts_stream", OutputMode.Append())
+      "append")
 
     val batch = StreamOps.signatureCountsPerWindow(batchLogs, "1 hour", "0 seconds")
 
@@ -49,11 +49,11 @@ class StreamOpsSpec extends SparkSpec {
     val someAddr = all.head.address
     val someTopic = all.find(_.topics.nonEmpty).get.topics.head
 
-    val filtered = StreamOps.drainToMemory(
+    val filtered = Drain.memory("client_filter_stream",
       StreamOps.clientFilter(
         StreamOps.logsStream(spark, 0, 500, Map("head" -> head)),
         Seq(someAddr.toUpperCase), Seq(someTopic)),
-      "client_filter_stream", OutputMode.Append())
+      "append")
 
     val expected = all.filter(l =>
       l.address.equalsIgnoreCase(someAddr) &&
@@ -62,10 +62,10 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("streaming dedup passes each (block, logIndex) exactly once") {
-    val deduped = StreamOps.drainToMemory(
+    val deduped = Drain.memory("dedup_stream",
       StreamOps.dedupStream(
         StreamOps.logsStream(spark, 0, 300, Map("head" -> "900")), "1 hour"),
-      "dedup_stream", OutputMode.Append())
+      "append")
     val keys = deduped.select("blockNumber", "logIndex").collect()
       .map(r => (r.getLong(0), r.getInt(1)))
     assert(keys.length === keys.distinct.length, "duplicates leaked through dedup")
@@ -78,9 +78,9 @@ class StreamOpsSpec extends SparkSpec {
     val blocks = spark.readStream.format("graft-eth")
       .option("dataset", "blocks").option("startBlock", "0")
       .option("head", "600").option("maxBlocksPerTrigger", "300").load()
-    val joined = StreamOps.drainToMemory(
+    val joined = Drain.memory("ss_join_stream",
       StreamOps.logsWithBlocks(logs, blocks, "1 hour"),
-      "ss_join_stream", OutputMode.Append())
+      "append")
     val rpc = new graft.sources.SyntheticRpc(42, 600)
     val expectedLogs = rpc.getLogs(0, 600, Seq.empty, Seq.empty)
     assert(joined.count() === expectedLogs.size, "every log must find its block header")
@@ -89,10 +89,10 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("typed mapGroupsWithState address activity matches batch aggregate") {
-    val sessions = StreamOps.drainToMemory(
+    val sessions = Drain.memory("addr_activity_stream",
       StreamOps.addressActivity(
         StreamOps.logsStream(spark, 0, 400, Map("head" -> "800")).toDF()).toDF(),
-      "addr_activity_stream", OutputMode.Update())
+      "update")
 
     // update-mode memory sink keeps every update; the last row per address
     // is the final state. Compare against the batch groupBy.
