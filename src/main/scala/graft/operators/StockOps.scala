@@ -1468,7 +1468,9 @@ object StockOps {
           .localCheckpoint()
         // Value at rank ⌈n/2⌉ per key WITHOUT ranking every row (r09; the
         // r08 form ran groupedRunningTotal — a full-data window — per pass
-        // plus a separate COUNT pass for n). Range-partition by (key, ord);
+        // plus a separate COUNT pass for n). Range-partition by (key, ord)
+        // into the session's shuffle-partition count of chunks (the picked
+        // value does not depend on that count);
         // one map-side-combined COUNT per (chunk, key) — subtotal rows, not
         // data; offsets AND the per-key total n come from windows over that
         // tiny table (≤ parts rows/key, folding the old n aggregate into
@@ -1478,7 +1480,8 @@ object StockOps {
         // identical to the old full ranking; ties at the rank boundary
         // share the value, so row_number's tie order is immaterial.
         def atMedianRank(df: DataFrame, ord: String, out: String): DataFrame = {
-          val ranged = df.repartitionByRange(32, col("event_type"), col(ord))
+          val ranged = df.repartitionByRange(s.sessionState.conf.numShufflePartitions,
+              col("event_type"), col(ord))
             .withColumn("__pid", spark_partition_id())
             .localCheckpoint()
           val counts = ranged.groupBy("__pid", "event_type")

@@ -119,24 +119,27 @@ final class EthLogsReader(
     if (skippedBlocks > 0) logWarning(s"graft-eth: partition $partition skipped $skippedBlocks blocks")
 }
 
-/** Per-block header fetch. The reference does these strictly sequentially on
-  * one thread (BlocksService.java:145-150); here every partition runs its
-  * own loop in parallel across the cluster.
+/** Per-block header fetch, in block order. The reference waits out one
+  * round trip per header on one thread (BlocksService.java:145-150); here
+  * partitions run in parallel across the cluster, and within one the RPC
+  * may keep several calls in flight ([[HttpRpc.getBlocks]]).
   */
 final class EthBlocksReader(
     schema: StructType,
     partition: BlockRangePartition,
     rpc: EthRpc) extends PartitionReader[InternalRow] {
 
-  private val iter: Iterator[EthBlock] =
-    (partition.start to partition.end).iterator.flatMap(rpc.getBlock)
+  private val iter: Iterator[EthBlock] = rpc.getBlocks(partition.start, partition.end)
 
   private var current: EthBlock = _
   override def next(): Boolean = {
     if (iter.hasNext) { current = iter.next(); true } else false
   }
   override def get(): InternalRow = EthRowEncoder.blockRow(schema, current)
-  override def close(): Unit = ()
+  override def close(): Unit = iter match {
+    case pending: AutoCloseable => pending.close()
+    case _ =>
+  }
 }
 
 /** Case-class → InternalRow projection honoring column pruning: only the

@@ -70,6 +70,12 @@ trait EthRpc extends Serializable {
     * (reference: BlocksService.java:146-148).
     */
   def getBlock(n: Long): Option[EthBlock]
+
+  /** The headers of blocks `start..end`, in block order, unknown blocks
+    * dropped. The default fetches them one [[getBlock]] at a time.
+    */
+  def getBlocks(start: Long, end: Long): Iterator[EthBlock] =
+    (start to end).iterator.flatMap(getBlock)
 }
 
 /** Deterministic in-memory chain for tests and benchmarks: every value is a
@@ -208,6 +214,16 @@ final class SyntheticRpc(
   * each request (LogsService.java:558-563; docker-compose.yml:29).
   * Untested against a live node in this environment; the transport carries
   * no engine semantics — those live in the synthetic-backed tests.
+  *
+  * All instances in a JVM share one `HttpClient`, so every partition and
+  * micro-batch reuses the same selector thread and pooled connections.
+  * [[getBlocks]] keeps up to [[HttpRpc.Window]] `getBlock` calls in flight
+  * (the reference waits out one round trip per header,
+  * BlocksService.java:145-150). Each call is the ordinary synchronous
+  * `getBlock`, so retry, status handling and cap mapping are the same on
+  * both paths. `fetchDelayMs` bounds how close together request starts may
+  * be: concurrent calls on one instance take turns waiting it out, so its
+  * starts stay at least `fetchDelayMs` apart, as in a sequential loop.
   */
 final class HttpRpc(
     url: String,
@@ -215,9 +231,12 @@ final class HttpRpc(
     maxRetries: Int = 3,
     initialBackoffMs: Long = 3000L) extends EthRpc {
 
-  @transient private lazy val client = java.net.http.HttpClient.newHttpClient()
+  import HttpRpc.client
+
   @transient private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val reqId = new java.util.concurrent.atomic.AtomicLong(0)
+  // fair, so waiting calls start in the order they were submitted
+  private val startTurn = new java.util.concurrent.locks.ReentrantLock(true)
 
   /** Node-side result-cap detection. Matches every cap phrasing the
     * reference handles (LogsService.java:592-606): "query returned more than
@@ -231,7 +250,10 @@ final class HttpRpc(
   }
 
   private def call(method: String, params: com.fasterxml.jackson.databind.JsonNode): com.fasterxml.jackson.databind.JsonNode = {
-    if (fetchDelayMs > 0) Thread.sleep(fetchDelayMs)
+    if (fetchDelayMs > 0) {
+      startTurn.lockInterruptibly()
+      try Thread.sleep(fetchDelayMs) finally startTurn.unlock()
+    }
     // Jackson-serialized body: option-derived strings can never break the
     // JSON framing (they arrive escaped), unlike string interpolation.
     val root = mapper.createObjectNode()
@@ -337,6 +359,78 @@ final class HttpRpc(
         timestamp = lng("timestamp"),
         transactions = arr("transactions"), uncles = arr("uncles"), sealFields = arr("sealFields")))
     }
+  }
+
+  /** Up to [[HttpRpc.Window]] `getBlock` calls in flight on the shared pool,
+    * consumed in block order. A failed call rethrows its own exception and
+    * cancels the rest; `close()` cancels whatever is still pending.
+    */
+  override def getBlocks(start: Long, end: Long): Iterator[EthBlock] =
+    new Iterator[EthBlock] with AutoCloseable {
+      import java.util.concurrent.{Callable, ExecutionException, Future}
+      private val pending = new java.util.ArrayDeque[Future[Option[EthBlock]]]()
+      private var unsent = start
+      private var ready: Option[EthBlock] = None
+
+      override def hasNext: Boolean = {
+        while (ready.isEmpty && (unsent <= end || !pending.isEmpty)) {
+          while (pending.size < HttpRpc.Window && unsent <= end) {
+            val n = unsent
+            val call: Callable[Option[EthBlock]] = () => getBlock(n)
+            pending.add(HttpRpc.pool.submit(call))
+            unsent += 1
+          }
+          ready = await(pending.poll())
+        }
+        ready.isDefined
+      }
+
+      override def next(): EthBlock = {
+        if (!hasNext) Iterator.empty.next()
+        val b = ready.get
+        ready = None
+        b
+      }
+
+      // Future.get, not join: a killed task's interrupt ends the wait
+      private def await(f: Future[Option[EthBlock]]): Option[EthBlock] =
+        try f.get()
+        catch {
+          case e: ExecutionException => close(); throw e.getCause
+          case e: InterruptedException => close(); throw e
+        }
+
+      override def close(): Unit = {
+        pending.forEach(_.cancel(true))
+        pending.clear()
+        unsent = end + 1
+      }
+    }
+}
+
+object HttpRpc {
+  /** `getBlock` calls one [[HttpRpc.getBlocks]] keeps in flight. Eight
+    * reach the ceiling of a node serving four calls at a time.
+    */
+  val Window = 8
+
+  private lazy val client = java.net.http.HttpClient.newHttpClient()
+
+  /** Daemon threads running windowed `getBlock` calls: one full window per
+    * core (a core runs one reader at a time), released after a minute idle.
+    */
+  private lazy val pool = {
+    import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+    val threads = Window * Runtime.getRuntime.availableProcessors
+    val made = new java.util.concurrent.atomic.AtomicLong
+    val p = new ThreadPoolExecutor(threads, threads, 60L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"graft-http-rpc-${made.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
   }
 }
 

@@ -33,9 +33,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Scale design: each `maxBlockRange` chunk is one InputPartition, so a
   * 1000-executor cluster fans the RPC fetches out in parallel (the reference
-  * is strictly sequential — LogsService.java:509-521); `fetchDelayMs`
-  * throttles per-task for node politeness; data-dependent range bisection
-  * runs inside the reader on node result caps.
+  * is strictly sequential — LogsService.java:509-521). Over `rpc=http` a
+  * blocks partition also keeps a window of header calls in flight, and all
+  * tasks in a JVM share one HTTP client; `fetchDelayMs` keeps each task's
+  * request starts that far apart for node politeness. Data-dependent range
+  * bisection runs inside the reader on node result caps.
   */
 final class EthSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-eth"

@@ -382,4 +382,51 @@ class EthSourceSpec extends SparkSpec {
       }
     }
   }
+
+  test("blocks over rpc=http equal the synthetic read row for row, in order") {
+    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    // a JSON-RPC node serving SyntheticRpc(42)'s headers
+    val chain = new SyntheticRpc(42, 10000)
+    val mapper = new ObjectMapper()
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val handlers = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.setExecutor(handlers)
+    server.createContext("/", (ex: HttpExchange) => {
+      calls.incrementAndGet()
+      val req = mapper.readTree(ex.getRequestBody)
+      val n = java.lang.Long.parseLong(req.get("params").get(0).asText.stripPrefix("0x"), 16)
+      val resp = mapper.createObjectNode().put("jsonrpc", "2.0")
+      resp.set[JsonNode]("id", req.get("id"))
+      chain.getBlock(n) match {
+        case Some(b) =>
+          val o = resp.putObject("result")
+          b.productElementNames.zip(b.productIterator).foreach {
+            case (k, v: Long) => o.put(k, "0x" + v.toHexString)
+            case (k, v: String) => o.put(k, v)
+            case (k, vs: Seq[_]) => val a = o.putArray(k); vs.foreach(v => a.add(v.toString))
+          }
+        case None => resp.putNull("result")
+      }
+      val bytes = mapper.writeValueAsBytes(resp)
+      ex.sendResponseHeaders(200, bytes.length)
+      ex.getResponseBody.write(bytes)
+      ex.close()
+    })
+    server.start()
+    def read(rpc: (String, String)*) = rpc.foldLeft(spark.read.format("graft-eth")
+      .option("dataset", "blocks").option("startBlock", "0").option("endBlock", "1199")
+      .option("maxBlockRange", "500")) { case (r, (k, v)) => r.option(k, v) }.load()
+    try {
+      val http = read("rpc" -> "http", "url" -> s"http://127.0.0.1:${server.getAddress.getPort}/")
+      assert(http.rdd.getNumPartitions === 3)
+      val got = http.collect().toSeq
+      assert(calls.get === 1200)
+      assert(got === read("rpc" -> "synthetic", "seed" -> "42").collect().toSeq)
+    } finally {
+      server.stop(0)
+      handlers.shutdownNow()
+    }
+  }
 }

@@ -2,18 +2,24 @@ package graft.sources
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** HttpRpc against an in-process JSON-RPC stub: request encoding, response
   * decoding, node-cap error mapping (→ TooManyResultsException, the
   * bisection trigger), and transport retry — the testable core of the
-  * reference's resilience envelope (LogsService.java:567-606,646-662).
+  * reference's resilience envelope (LogsService.java:567-606,646-662) —
+  * and the windowed `getBlocks` over the same path.
   */
-class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits {
 
   private var server: HttpServer = _
   private var url: String = _
@@ -21,12 +27,35 @@ class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val serverErrorsToInject = new AtomicInteger(0)
   @volatile private var badRequestOnce = false
   @volatile private var lastBody: String = ""
+  // Paths of their own for the window tests, so calls a cancelled window
+  // already sent to `/` cannot reach their counts. `/window` serves each
+  // call in 20 ms and counts the calls inside that time (before the response
+  // goes out, so a call the client saw answered is never still counted);
+  // `/polite` records arrival times (ns).
+  private val active, peakActive = new AtomicInteger(0)
+  private val politeArrivals = new ConcurrentLinkedQueue[java.lang.Long]()
+  private val handlers = Executors.newCachedThreadPool()
+  private val blockParam = """"params":\["(0x[0-9a-f]+)"""".r.unanchored
+
+  private def takeBadRequest(): Boolean = synchronized {
+    val bad = badRequestOnce
+    badRequestOnce = false
+    bad
+  }
 
   override def beforeAll(): Unit = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.setExecutor(handlers)
     server.createContext("/", (ex: HttpExchange) => {
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       lastBody = body
+      ex.getRequestURI.getPath match {
+        case "/window" =>
+          peakActive.accumulateAndGet(active.incrementAndGet(), (a, b) => math.max(a, b))
+          try Thread.sleep(20) finally active.decrementAndGet()
+        case "/polite" => politeArrivals.add(System.nanoTime())
+        case _ =>
+      }
       if (failuresToInject.getAndUpdate(n => math.max(0, n - 1)) > 0) {
         ex.close() // slam the connection → IOException client-side
       } else if (serverErrorsToInject.getAndUpdate(n => math.max(0, n - 1)) > 0) {
@@ -34,8 +63,7 @@ class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll {
         ex.sendResponseHeaders(503, bytes.length)
         ex.getResponseBody.write(bytes)
         ex.close()
-      } else if (badRequestOnce) {
-        badRequestOnce = false
+      } else if (takeBadRequest()) {
         val bytes = "<html>bad request</html>".getBytes(StandardCharsets.UTF_8)
         ex.sendResponseHeaders(400, bytes.length)
         ex.getResponseBody.write(bytes)
@@ -47,7 +75,7 @@ class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll {
             """{"jsonrpc":"2.0","id":1,"error":{"code":-32005,"message":"query returned more than 10000 results"}}"""
           else if (body.contains("\"fromBlock\":\"0x20\"")) // range [32..n] → size cap, reference wording
             """{"jsonrpc":"2.0","id":1,"error":{"code":-32008,"message":"response is too big"}}"""
-          else if (body.contains("\"0x7b\"")) // block 123 → unknown block
+          else if (body.contains("\"0x7b\"") || body.contains("\"0x2d\"")) // block 123 or 45 → unknown block
             """{"jsonrpc":"2.0","id":1,"result":null}"""
           else if (body.contains("\"0x7c\"")) // block 124 → minimal header, optionals absent
             """{"jsonrpc":"2.0","id":1,"result":{"number":"0x7c","hash":"0xh"}}"""
@@ -56,14 +84,16 @@ class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll {
                  {"address":"0xABCD","data":"0x00","topics":["0x11","0x22"],
                   "blockNumber":"0x2a","transactionHash":"0xth","transactionIndex":"0x1",
                   "blockHash":"0xbh","logIndex":"0x0","removed":false}]}"""
-          else if (body.contains("eth_getBlockByNumber"))
-            """{"jsonrpc":"2.0","id":1,"result":{
-                 "number":"0x2a","hash":"0xh","parentHash":"0xp","nonce":"0xn",
+          else if (body.contains("eth_getBlockByNumber")) {
+            val number = body match { case blockParam(n) => n } // echoed back
+            s"""{"jsonrpc":"2.0","id":1,"result":{
+                 "number":"$number","hash":"0xh","parentHash":"0xp","nonce":"0xn",
                  "sha3Uncles":"0xu","logsBloom":"0xb","transactionsRoot":"0xtr",
                  "stateRoot":"0xsr","receiptsRoot":"0xrr","miner":"0xMINER",
                  "mixHash":"0xm","difficulty":"0x10","totalDifficulty":"0xc70d815d562d3cfa955",
                  "extraData":"0xe","size":"0x1f4","gasLimit":"0x1c9c380","gasUsed":"0x5208",
                  "timestamp":"0x65600000","transactions":["0xt1","0xt2"],"uncles":[]}}"""
+          }
           else """{"jsonrpc":"2.0","id":1,"error":{"message":"unknown method"}}"""
         val bytes = resp.getBytes(StandardCharsets.UTF_8)
         ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -76,7 +106,7 @@ class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll {
     url = s"http://127.0.0.1:${server.getAddress.getPort}/"
   }
 
-  override def afterAll(): Unit = server.stop(0)
+  override def afterAll(): Unit = { server.stop(0); handlers.shutdownNow() }
 
   private def rpc = new HttpRpc(url, fetchDelayMs = 0, maxRetries = 3, initialBackoffMs = 10)
 
@@ -144,5 +174,47 @@ class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = intercept[RuntimeException](rpc.blockNumber())
     assert(e.getMessage.contains("400"))
     assert(rpc.blockNumber() === 100L) // flag consumed exactly once → no retry happened
+  }
+
+  private val knownBlocks = (40L to 50L).filter(_ != 45L) // the stub answers null for 45
+
+  test("getBlocks returns the range in block order, dropping unknown blocks") {
+    assert(rpc.getBlocks(40, 50).map(_.number).toSeq === knownBlocks)
+  }
+
+  test("getBlocks retries slammed connections inside the window and completes") {
+    failuresToInject.set(2)
+    assert(rpc.getBlocks(40, 50).map(_.number).toSeq === knownBlocks)
+    assert(failuresToInject.get === 0)
+  }
+
+  test("getBlocks fails with getBlock's own non-2xx error, without hanging") {
+    implicit val signaler: Signaler = ThreadSignaler
+    badRequestOnce = true
+    val e = failAfter(Span(30, Seconds)) {
+      intercept[RuntimeException](rpc.getBlocks(40, 50).toList)
+    }
+    assert(e.getClass === classOf[RuntimeException])
+    assert(e.getMessage.startsWith("rpc http 400"))
+  }
+
+  test("getBlocks keeps more than one call in flight, never more than the window") {
+    val windowed = new HttpRpc(url + "window", fetchDelayMs = 0, maxRetries = 3, initialBackoffMs = 10)
+    assert(windowed.getBlocks(40, 79).size === 39)
+    assert(peakActive.get > 1 && peakActive.get <= HttpRpc.Window, s"peak ${peakActive.get}")
+  }
+
+  test("getBlocks keeps request starts fetchDelayMs apart") {
+    val polite = new HttpRpc(url + "polite", fetchDelayMs = 50, maxRetries = 3, initialBackoffMs = 10)
+    // a first call opens the connection the window's calls then reuse, so
+    // connection set-up does not shift one arrival against the next
+    assert(polite.getBlock(39).isDefined)
+    politeArrivals.clear()
+    assert(polite.getBlocks(40, 44).size === 5)
+    val gapsMs = politeArrivals.asScala.toSeq.map(_.longValue).sorted
+      .sliding(2).map { case Seq(a, b) => (b - a) / 1e6 }.toSeq
+    assert(gapsMs.size === 4)
+    // arrivals carry the host's scheduling jitter; unpaced calls arrive < 1 ms apart
+    assert(gapsMs.forall(_ >= 40), s"arrival gaps (ms): $gapsMs")
   }
 }
