@@ -6,22 +6,27 @@ import java.nio.channels.Channels
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.ListVector
+import org.apache.arrow.vector.VectorSchemaRoot
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.arrow.ArrowWriter
 import org.apache.spark.sql.types._
 
 /** Arrow IPC edge (SURVEY M5 — reference S16/S17/S21): the columnar output
   * surface. The reference hand-populates Arrow vectors per dataset with a
-  * two-pass pre-size-then-fill loop (Converter.java:126-293); here one
-  * generic schema-driven writer covers every DataFrame, executed
-  * partition-parallel: each task writes its partition as an independent
-  * Arrow IPC stream file (the unit a Flight `do_get` endpoint would serve).
+  * two-pass pre-size-then-fill loop (Converter.java:126-293); here each
+  * task hands its partition's `InternalRow`s straight to Spark's own
+  * `ArrowWriter`, over a `VectorSchemaRoot` built from graft's schema
+  * ([[toArrowSchema]]), and writes them as an independent Arrow IPC
+  * stream file (the unit a Flight `do_get` endpoint would serve). No
+  * external `Row` is built: strings go into the vectors as `UTF8String`
+  * bytes, and vector capacity is reused from batch to batch.
   *
   * Supported Spark types: the reference schemas' closure — string, long,
-  * int, boolean, double, binary, array<string>.
+  * int, boolean, double, binary, array<string>. Any other type is
+  * rejected on the driver, before a job runs.
   */
 object ArrowEdge {
 
@@ -49,72 +54,33 @@ object ArrowEdge {
     new ArrowSchema(fields.toList.asJava)
   }
 
-  private def fill(root: VectorSchemaRoot, schema: StructType, rows: Seq[Row]): Unit = {
-    root.allocateNew()
-    rows.zipWithIndex.foreach { case (row, i) =>
-      schema.fields.zipWithIndex.foreach { case (f, c) =>
-        val vec = root.getVector(c)
-        if (row.isNullAt(c)) {
-          vec match {
-            case v: ListVector => v.setNull(i)
-            case v: BaseFixedWidthVector => v.setNull(i)
-            case v: BaseVariableWidthVector => v.setNull(i)
-            case _ => throw new IllegalStateException(s"unhandled null vector ${vec.getClass}")
-          }
-        } else f.dataType match {
-          case StringType =>
-            vec.asInstanceOf[VarCharVector].setSafe(i, row.getString(c).getBytes("UTF-8"))
-          case LongType => vec.asInstanceOf[BigIntVector].setSafe(i, row.getLong(c))
-          case IntegerType => vec.asInstanceOf[IntVector].setSafe(i, row.getInt(c))
-          case BooleanType =>
-            vec.asInstanceOf[BitVector].setSafe(i, if (row.getBoolean(c)) 1 else 0)
-          case DoubleType => vec.asInstanceOf[Float8Vector].setSafe(i, row.getDouble(c))
-          case BinaryType =>
-            vec.asInstanceOf[VarBinaryVector].setSafe(i, row.getAs[Array[Byte]](c))
-          case ArrayType(StringType, _) =>
-            val lv = vec.asInstanceOf[ListVector]
-            val writer = lv.getWriter
-            writer.setPosition(i)
-            writer.startList()
-            row.getSeq[String](c).foreach { s =>
-              val bytes = s.getBytes("UTF-8")
-              val buf = lv.getAllocator.buffer(bytes.length)
-              try {
-                buf.writeBytes(bytes)
-                writer.varChar().writeVarChar(0, bytes.length, buf)
-              } finally buf.close()
-            }
-            writer.endList()
-          case other => throw new IllegalArgumentException(s"unsupported ${other.sql}")
-        }
-      }
-    }
-    root.setRowCount(rows.size)
-  }
-
   /** Write a DataFrame as Arrow IPC stream files, one per partition,
     * batching `batchSize` rows per Arrow record batch (the `batch_size`
     * the reference documents but never implemented — README.md:26,
-    * SURVEY §8.1). Runs on executors; no driver collect.
+    * SURVEY §8.1). Runs on executors; no driver collect. A partition with
+    * no rows still writes a stream: the schema and no batches.
     */
   def writeIpc(df: DataFrame, dir: String, batchSize: Int = 4096): Unit = {
     val schema = df.schema
-    val arrowSchemaJson = schema.json // ship the Spark schema, rebuild per task
-    df.rdd.foreachPartition { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val sparkSchema = DataType.fromJson(arrowSchemaJson).asInstanceOf[StructType]
+    require(batchSize > 0, s"ArrowEdge: batchSize must be positive, got $batchSize")
+    toArrowSchema(schema) // reject unsupported types before any job runs
+    df.queryExecution.toRdd.foreachPartition { rows =>
+      val pid = TaskContext.getPartitionId()
       val allocator = new RootAllocator()
-      val root = VectorSchemaRoot.create(toArrowSchema(sparkSchema), allocator)
+      val root = VectorSchemaRoot.create(toArrowSchema(schema), allocator)
       val out = new File(dir)
       out.mkdirs()
       val fos = new FileOutputStream(new File(out, f"part-$pid%05d.arrow"))
       val writer = new ArrowStreamWriter(root, null, Channels.newChannel(fos))
       try {
+        val rowWriter = ArrowWriter.create(root)
         writer.start()
-        it.grouped(batchSize).foreach { batch =>
-          root.clear()
-          fill(root, sparkSchema, batch)
+        while (rows.hasNext) {
+          var n = 0
+          while (n < batchSize && rows.hasNext) { rowWriter.write(rows.next()); n += 1 }
+          rowWriter.finish()
           writer.writeBatch()
+          rowWriter.reset()
         }
         writer.end()
       } finally {

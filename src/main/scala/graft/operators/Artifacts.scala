@@ -21,7 +21,7 @@ import java.nio.file.{Files, Path, Paths}
   * Streaming staging uses the same reaped root: every StreamShape feed,
   * checkpoint and sink dir comes from [[newDir]] (through [[Drain]]), as
   * do the e05/e06/e19/k06/sim42 and Bench latency scratch dirs, so
-  * `GRAFT_ARTIFACT_DIR` places all of them. No main source calls
+  * `GRAFT_ARTIFACT_DIR` places all of them. No main or test source calls
   * `createTempDirectory` outside this object (DrainSpec lints it).
   * Failure: [[build]] deletes a partially-written dir and rethrows, so a
   * memo's computeIfAbsent stays unpopulated and the NEXT reader retries a

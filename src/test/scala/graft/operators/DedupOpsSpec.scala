@@ -134,7 +134,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("active hot-shingle cap is prune-only AND metric-exact on survivors") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hotshingle").toString
+    val dir = Artifacts.newDir("graft_hotshingle")
     // docs 1/2: near-dups via COLD shingles; docs 10-19: share ONLY the hot
     // shingle "x y z" (df > cap 3), each padded with unique junk;
     // docs 20/21: 3-token docs whose single shingle is the hot one — the

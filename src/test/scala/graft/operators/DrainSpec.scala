@@ -4,7 +4,7 @@ import graft.SparkSpec
 
 /** The shared streaming drain: memory sinks leave no view behind, the
   * fed-batch check still fails a drain that is too short, and no staging
-  * dir in the main sources bypasses the [[Artifacts]] reaper.
+  * dir in the main or test sources bypasses the [[Artifacts]] reaper.
   */
 class DrainSpec extends SparkSpec {
 
@@ -35,16 +35,18 @@ class DrainSpec extends SparkSpec {
     assert(memViews().isEmpty, s"a failed drain left its view behind: ${memViews()}")
   }
 
-  test("no main source creates a temp dir outside Artifacts") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root not found")
-    val walk = java.nio.file.Files.walk(root)
-    val offenders =
+  test("no main or test source creates a temp dir outside Artifacts") {
+    val own = Set("Artifacts.scala", "DrainSpec.scala") // the reaper and this lint
+    val offenders = Seq("src/main/scala", "src/test/scala").flatMap { dir =>
+      val root = java.nio.file.Paths.get(dir)
+      assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root not found")
+      val walk = java.nio.file.Files.walk(root)
       try walk.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Artifacts.scala")
+        .filter(p => p.toString.endsWith(".scala") && !own(p.getFileName.toString))
         .filter(p => java.nio.file.Files.readString(p).contains("createTempDirectory"))
         .map(_.toString).toSeq
       finally walk.close()
+    }
     assert(offenders.isEmpty,
       s"staging dirs must come from Artifacts.newDir (reaped at exit): $offenders")
   }

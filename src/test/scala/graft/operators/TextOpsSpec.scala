@@ -520,7 +520,7 @@ class TextOpsSpec extends SparkSpec {
     //  {3, 60}  same text, member 60 deleted   → rep 3 unchanged, no re-election
     //  {40}     singleton, deleted             → cluster disappears, no re-election
     //  {1}, {2} untouched singletons           → carried through
-    val dir = java.nio.file.Files.createTempDirectory("graft_p12").toString
+    val dir = Artifacts.newDir("graft_p12")
     Seq((1L, "x"), (2L, "y"), (3L, "z"), (60L, "z"), (20L, "dup text"),
       (21L, "dup text"), (40L, "solo"))
       .toDF("doc_id", "text")

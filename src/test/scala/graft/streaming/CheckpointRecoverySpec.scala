@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
+import graft.operators.Artifacts
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -15,8 +14,8 @@ import org.apache.spark.sql.streaming.Trigger
 class CheckpointRecoverySpec extends SparkSpec {
 
   test("stream resumes from checkpoint with no loss and no duplicates") {
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
-    val out = Files.createTempDirectory("graft_ckpt_out").toString
+    val ckpt = Artifacts.newDir("graft_ckpt")
+    val out = Artifacts.newDir("graft_ckpt_out")
 
     def runOnce(head: Long): Unit = {
       val df = spark.readStream.format("graft-eth")
@@ -50,9 +49,9 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   test("LOCF ValueState survives a restart: life 2 fills from life 1's state") {
     import spark.implicits._
-    val ckpt = Files.createTempDirectory("locf_ckpt").toString
-    val srcDir = Files.createTempDirectory("locf_src").toString
-    val outDir = Files.createTempDirectory("locf_out").toString
+    val ckpt = Artifacts.newDir("locf_ckpt")
+    val srcDir = Artifacts.newDir("locf_src")
+    val outDir = Artifacts.newDir("locf_out")
     // two lives over a 2-user feed: life 1 delivers each user's last real
     // reading; life 2 delivers ONLY NULL readings, so every life-2 fill
     // must come from state recovered off the checkpoint

@@ -19,7 +19,7 @@ class StreamShapeStreamingSpec extends SparkSpec {
     // Catalog.normalizeEventTs owns the mapping to TimestampType)
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
     // the file stream source wants a directory — stage the fixture file
-    val dir = java.nio.file.Files.createTempDirectory("graft_events_stream")
+    val dir = java.nio.file.Paths.get(graft.operators.Artifacts.newDir("graft_events_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("events.parquet"))

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
+import graft.operators.Artifacts
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -20,8 +19,8 @@ class TimerBoundarySpec extends SparkSpec {
   test("event-time timer at exactly the watermark FIRES (non-strict <=)") {
     val s = spark
     import s.implicits._
-    val srcDir = Files.createTempDirectory("timer_src").toString
-    val ckpt = Files.createTempDirectory("timer_ckpt").toString
+    val srcDir = Artifacts.newDir("timer_src")
+    val ckpt = Artifacts.newDir("timer_ckpt")
     // user 1: first event at 10,000 ms → timer at 15,000 ms (= horizon 5 s)
     // user 2: first event at 5,000 ms → timer at 10,000 ms (control, < wm)
     // carrier: max event time 15,000 ms, delay 0 s → final wm = 15,000 ms
