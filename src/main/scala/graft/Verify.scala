@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.operators.Catalog
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -82,19 +83,19 @@ object Verify {
     import graft.verify.PureSig
     import spark.implicits._
     Seq("documents", "embeddings").foreach { tbl =>
-      val n = spark.read.parquet(s"$sfDir/$tbl.parquet").count()
+      val n = Catalog.parquet(spark, s"$sfDir/$tbl.parquet").count()
       require(n <= SigDumpMaxRows,
         s"dumpSignatures is a TEST-SCALE oracle aid: it materializes $tbl on the driver " +
           s"($n rows > $SigDumpMaxRows). Run Verify against a verification-scale sfDir.")
     }
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Catalog.parquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     docs.toSeq.map { case (id, txt) =>
       (id, PureSig.simhash64(txt), PureSig.minhashSignature(txt, 3, 64).toSeq)
     }.toDF("doc_id", "simhash", "sig")
       .coalesce(1).write.mode("overwrite").parquet(s"$SigDumpDir/doc_sigs.parquet")
-    val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val embs = Catalog.parquet(spark, s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     embs.toSeq.map { case (id, v) => (id, PureSig.hyperplaneBucket(v, 60)) }

@@ -15,14 +15,64 @@ final case class Q(
     bench: Boolean = true)
 
 object Catalog {
-  /** Load one driver-provided parquet table. The read is a plain
-    * DataSource scan so Catalyst pushes filters/pruning into parquet.
+  /** Load one fixture parquet table through [[parquet]]: a
+    * DataSource scan, so Catalyst pushes filters and pruning into parquet,
+    * with the table's schema inferred on its first read only. `events`
+    * comes back with [[normalizeEventTs]] applied.
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark) // idempotent
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
+  }
+
+  /** Read an immutable parquet input (a fixture table or an
+    * [[Artifacts.build]] dir), inferring its schema once per JVM. A plain
+    * `read.parquet` infers the schema on every call, and Spark 4 does that
+    * with a one-task job; here only the first read of a path runs it, and
+    * later reads hand the memoized `StructType` to the reader, which plans
+    * the same scan with no job. Files are still listed on every read. The
+    * memo holds schemas only, keyed by the path, its modification time
+    * and every conf that changes parquet schema inference, so a rewritten
+    * path or a flipped conf (`nanosAsLong`, which [[t]] sets) re-infers.
+    * Dirs written and read back within one query run (stream sinks,
+    * [[Drain.stage]] feeds, per-batch stores) keep a plain `read.parquet`.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path) // missing path: Spark's own error
+      case Some(key) => schemas.get(key) match {
+        case null =>
+          val df = spark.read.parquet(path)
+          schemas.putIfAbsent(key, df.schema)
+          df
+        case schema => spark.read.schema(schema).parquet(path)
+      }
+    }
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[ParquetKey, StructType]()
+
+  private final case class ParquetKey(path: String, mtime: Long, confs: Seq[Option[String]])
+
+  // every conf Spark 4.1's ParquetToSparkSchemaConverter and
+  // ParquetUtils.inferSchema read
+  private val SchemaConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive", "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded", "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles", "spark.sql.files.ignoreCorruptFiles")
+
+  private def schemaKey(spark: SparkSession, path: String): Option[ParquetKey] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try {
+      val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p).getModificationTime
+      Some(ParquetKey(path, mtime, SchemaConfs.map(spark.conf.getOption)))
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Normalize `events.ts` to a session-UTC TimestampType column carrying

@@ -215,7 +215,7 @@ object DedupOps {
     */
   private val lshPairDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def lshPairsShared(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(lshPairDirs.computeIfAbsent(d, _ => Artifacts.build("graft_lshpairs") { dir =>
+    Catalog.parquet(s, lshPairDirs.computeIfAbsent(d, _ => Artifacts.build("graft_lshpairs") { dir =>
       val buckets = bandBuckets(t(s, d, "documents"))
         // both sides of the band self-join — one signature pass
         .localCheckpoint()
@@ -233,7 +233,7 @@ object DedupOps {
     */
   private val lshClusterDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def lshClustersShared(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(lshClusterDirs.computeIfAbsent(d, _ => Artifacts.build("graft_lshclusters") { dir =>
+    Catalog.parquet(s, lshClusterDirs.computeIfAbsent(d, _ => Artifacts.build("graft_lshclusters") { dir =>
       connectedComponents(lshPairsShared(s, d).select("da", "db"), maxIter = 20)
         .select(col("id").as("doc_id"), col("label").as("cluster"))
         .write.mode("overwrite").parquet(dir)
@@ -420,7 +420,7 @@ object DedupOps {
   private val pairGraphDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def pairGraphShared(s: SparkSession, d: String, dfCap: Int): DataFrame =
     if (dfCap != HotShingleDfCap) shinglePairGraph(s, d, dfCap)
-    else s.read.parquet(pairGraphDirs.computeIfAbsent(d, _ => Artifacts.build("graft_pairgraph") { dir =>
+    else Catalog.parquet(s, pairGraphDirs.computeIfAbsent(d, _ => Artifacts.build("graft_pairgraph") { dir =>
       shinglePairGraph(s, d, HotShingleDfCap)
         .write.mode("overwrite").parquet(dir)
     }))

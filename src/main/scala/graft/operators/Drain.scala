@@ -38,7 +38,7 @@ object Drain {
     files.zipWithIndex.foreach { case (f, i) =>
       Files.copy(Paths.get(f), dir.resolve(s"f$i.parquet"))
     }
-    read(s, dir.toString, s.read.parquet(files.head).schema)
+    read(s, dir.toString, Catalog.parquet(s, files.head).schema)
   }
 
   /** A staged feed dir as a stream: one file per micro-batch. */

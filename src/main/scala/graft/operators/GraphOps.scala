@@ -131,7 +131,7 @@ object GraphOps {
   private val linkEdgeDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   def linkEdgesShared(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(linkEdgeDirs.computeIfAbsent(d, _ => Artifacts.build("graft_linkedges") { dir =>
+    Catalog.parquet(s, linkEdgeDirs.computeIfAbsent(d, _ => Artifacts.build("graft_linkedges") { dir =>
       linkEdges(t(s, d, "documents"), nodeCount(s, d))
         .write.mode("overwrite").parquet(dir)
     }))

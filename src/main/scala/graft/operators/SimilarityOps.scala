@@ -102,7 +102,7 @@ object SimilarityOps {
   def probePairsShared(s: SparkSession, d: String, nProbes: Int): DataFrame = {
     require(nProbes <= ProbePairsMax,
       s"probePairsShared: nProbes=$nProbes exceeds ProbePairsMax=$ProbePairsMax")
-    val df = s.read.parquet(ensureProbePairs(s, d))
+    val df = Catalog.parquet(s, ensureProbePairs(s, d))
     if (nProbes == ProbePairsMax) df else df.where(col("qid") < nProbes)
   }
 
@@ -736,7 +736,7 @@ object SimilarityOps {
     */
   private val pqAdcDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def pqAdcScores(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(pqAdcDirs.computeIfAbsent(d, _ => Artifacts.build("graft_pqadc") { dir =>
+    Catalog.parquet(s, pqAdcDirs.computeIfAbsent(d, _ => Artifacts.build("graft_pqadc") { dir =>
       pqEncoded(s, d).select("vec_id", "subspace", "code")
         .join(broadcast(pqAdcLut(s, d)), Seq("subspace", "code"))
         .where(col("vec_id") =!= col("qid"))
@@ -751,7 +751,7 @@ object SimilarityOps {
   def pqL2Truth(s: SparkSession, d: String): DataFrame =
     // memoized per (JVM, sfDir): FIVE recall queries (sim17/19/21/27/28)
     // grade against this same exact-L2 truth — one brute-force pass
-    s.read.parquet(pqTruthDirs.computeIfAbsent(d, _ => Artifacts.build("graft_pqtruth") { dir =>
+    Catalog.parquet(s, pqTruthDirs.computeIfAbsent(d, _ => Artifacts.build("graft_pqtruth") { dir =>
       val emb = t(s, d, "embeddings")
       val probes = emb.where(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))

@@ -415,7 +415,7 @@ object StreamShape {
         // sessions opened by batch 1 inside the state store — the cross-
         // batch path this operator exists to pin; a single staged file
         // would build every session within one batch and never exercise it
-        val ev = s.read.parquet(s"$d/events.parquet")
+        val ev = Catalog.parquet(s, s"$d/events.parquet")
         val sessions = Drain.feed(s, "x14",
             ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
           .transform(normalizeEventTs)
@@ -547,7 +547,7 @@ object StreamShape {
       (s, d) => {
         val out = Artifacts.newDir("x17out")
         SimilarityOps.ensureIvfIndex(s, d)
-        val q = s.read.parquet(s"$d/embeddings.parquet").where(col("vec_id") < 10)
+        val q = Catalog.parquet(s, s"$d/embeddings.parquet").where(col("vec_id") < 10)
         val feed = Drain.feed(s, "x17", q.where(col("vec_id") < 5), q.where(col("vec_id") >= 5))
         Drain.batches("x17", feed, 2, "the per-batch serve path was not exercised") { (batch, _) =>
           SimilarityOps.serveIvfIndexed(s, d, SimilarityOps.withNormOf(batch), nProbes = 10)
@@ -583,7 +583,7 @@ object StreamShape {
     Q("x18_stream_late_data",
       (s, d) => {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val ev = s.read.parquet(s"$d/events.parquet")
+        val ev = Catalog.parquet(s, s"$d/events.parquet")
           .transform(normalizeEventTs)
         // the watermark carrier: THE row holding the global max ts
         // (min event_id on ties) — a 1-row bounded driver lookup
@@ -648,7 +648,7 @@ object StreamShape {
       (s, d) => {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val store = Artifacts.newDir("x19sketch")
-        val ev = s.read.parquet(s"$d/events.parquet").select("event_id", "user_id")
+        val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "user_id")
         val feed = Drain.feed(s, "x19",
           ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
         Drain.batches("x19", feed, 2, "the sketch merge was not exercised") { (batch, _) =>
@@ -782,7 +782,7 @@ object StreamShape {
       (s, d) => {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val store = Artifacts.newDir("x22sketch")
-        val ev = s.read.parquet(s"$d/events.parquet").select("event_id", "event_type", "user_id")
+        val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "event_type", "user_id")
         val feed = Drain.feed(s, "x22",
           ev.where(col("user_id") % 2 === 0), ev.where(col("user_id") % 2 === 1))
         Drain.batches("x22", feed, 2, "the sketch merge was not exercised") { (batch, _) =>
@@ -812,7 +812,7 @@ object StreamShape {
     Q("x23_stream_partitioned_sink",
       (s, d) => {
         val out = Artifacts.newDir("x23out")
-        val docs = s.read.parquet(s"$d/documents.parquet")
+        val docs = Catalog.parquet(s, s"$d/documents.parquet")
         Drain.run("x23", Artifacts.newDir("x23ckpt"),
           Drain.feed(s, "x23", docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1))
             .writeStream.format("parquet").partitionBy("lang").option("path", out).outputMode("append"),
@@ -846,7 +846,7 @@ object StreamShape {
     Q("x24_stream_topk",
       (s, d) => {
         val store = Artifacts.newDir("x24top")
-        val ev = s.read.parquet(s"$d/events.parquet").select("event_id", "event_type", "value")
+        val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "event_type", "value")
         val feed = Drain.feed(s, "x24",
           ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
         Drain.batches("x24", feed, 2, "the top-k merge was not exercised") { (batch, _) =>
@@ -949,7 +949,7 @@ object StreamShape {
     Q("x27_stream_hist_merge",
       (s, d) => {
         val store = Artifacts.newDir("x27sketch")
-        val ord = s.read.parquet(s"$d/orders.parquet")
+        val ord = Catalog.parquet(s, s"$d/orders.parquet")
           .select("o_orderkey", "o_totalprice")
         val feed = Drain.feed(s, "x27",
           ord.where(col("o_orderkey") % 2 === 0), ord.where(col("o_orderkey") % 2 === 1))
@@ -984,7 +984,7 @@ object StreamShape {
         graft.functions.GraftFunctions.register(s)
         val sigStore = Artifacts.newDir("x28sigs")
         val pairStore = Artifacts.newDir("x28pairs")
-        val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
+        val docs = Catalog.parquet(s, s"$d/documents.parquet").select("doc_id", "text")
         val feed = Drain.feed(s, "x28",
           docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1))
         Drain.batches("x28", feed, 2, "incremental discovery was not exercised") { (batch, _) =>
@@ -1431,7 +1431,7 @@ object StreamShape {
         val labelRoot = Artifacts.newDir("d24labels")
         val labelDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val relabels = new java.util.concurrent.atomic.AtomicLong(0)
-        val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
+        val docs = Catalog.parquet(s, s"$d/documents.parquet").select("doc_id", "text")
         // canonical (min-id) members of multi-member clusters arrive LAST
         val canon = DedupOps.all.find(_.name == "d06_dedup_clusters").get.build(s, d)
           .groupBy("cluster").agg(count(lit(1)).as("n")).where(col("n") >= 2)
@@ -1505,7 +1505,7 @@ object StreamShape {
       (s, d) => {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val store = Artifacts.newDir("x37sketch")
-        val ev = s.read.parquet(s"$d/events.parquet").select("event_id", "event_type", "user_id")
+        val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "event_type", "user_id")
         val feed = Drain.feed(s, "x37",
           ev.where(col("user_id") % 2 === 0), ev.where(col("user_id") % 2 === 1))
         Drain.batches("x37", feed, 2, "the register merge was not exercised") { (batch, batchId) =>
@@ -1541,7 +1541,7 @@ object StreamShape {
         val edgeRoot = Artifacts.newDir("x38edges")
         val edgeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val cents = SimilarityOps.trainedCentroids(s, d, iters = 2)
-        val vecs = s.read.parquet(s"$d/embeddings.parquet").select("vec_id", "embedding")
+        val vecs = Catalog.parquet(s, s"$d/embeddings.parquet").select("vec_id", "embedding")
         val feed = Drain.feed(s, "x38",
           vecs.where(col("vec_id") % 2 === 0), vecs.where(col("vec_id") % 2 === 1))
         Drain.batches("x38", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
@@ -1841,7 +1841,7 @@ object StreamShape {
     Q("x42_stream_interval_join",
       (s, d) => {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val ev = s.read.parquet(s"$d/events.parquet").transform(normalizeEventTs)
+        val ev = Catalog.parquet(s, s"$d/events.parquet").transform(normalizeEventTs)
           .select("event_id", "ts", "user_id", "event_type")
         val us = unix_micros(col("ts"))
         val bounds = ev.agg(min(us).as("lo"), max(us).as("hi")).head()
@@ -1900,7 +1900,7 @@ object StreamShape {
         graft.functions.GraftFunctions.register(s)
         val scalarStore = Artifacts.newDir("x43sc")
         val tkeyStore = Artifacts.newDir("x43tk")
-        val docs = s.read.parquet(s"$d/documents.parquet")
+        val docs = Catalog.parquet(s, s"$d/documents.parquet")
         val feed = Drain.feed(s, "x43",
           (0 until 3).map(i => docs.where(pmod(col("doc_id"), lit(3L)) === i)): _*)
         val cont = DedupOps.contaminatedIds(s, d)
@@ -2151,7 +2151,7 @@ object StreamShape {
         val cDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
         val corrections = new java.util.concurrent.atomic.AtomicLong(0)
         val properSubset = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id")
+        val docs = Catalog.parquet(s, s"$d/documents.parquet").select("doc_id")
         val edges = GraphOps.linkEdgesShared(s, d)
         val feed = Drain.feed(s, "x47", (0 to 2).map(r => edges.where(pmod(col("src"), lit(3)) === r)): _*)
         Drain.batches("x47", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>

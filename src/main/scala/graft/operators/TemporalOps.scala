@@ -135,7 +135,7 @@ object TemporalOps {
       // second full groupedRunningTotal (range exchange + checkpoint +
       // window) over obs to recompute it; reading the just-written idx
       // parquet back and filtering is value-identical and one pass cheaper.
-      s.read.parquet(s"$dir/idx").where(col("is_obs") === 1L)
+      Catalog.parquet(s, s"$dir/idx").where(col("is_obs") === 1L)
         .select(col("user_id"), col("day"), col("obs_val"),
           col("obs_idx").as("rk"))
         .write.mode("overwrite").parquet(s"$dir/ranked")
@@ -310,8 +310,8 @@ object TemporalOps {
         // at an observed grid row equals that observation's rank, so the
         // two sides meet on (user, obs_idx) exactly.
         val gridDir = ensureDayGrid(s, d)
-        val idx = s.read.parquet(s"$gridDir/idx")
-        val src = s.read.parquet(s"$gridDir/ranked")
+        val idx = Catalog.parquet(s, s"$gridDir/idx")
+        val src = Catalog.parquet(s, s"$gridDir/ranked")
           .select(col("user_id"), col("rk").as("obs_idx"), col("obs_val").as("filled"))
         idx.join(src, Seq("user_id", "obs_idx"))
           .select(col("user_id"), col("day"), col("obs_val"), col("filled"),
@@ -606,8 +606,8 @@ object TemporalOps {
         // derivable in closed form. Both join sides read the parquet
         // artifact, so branching cannot re-run the pass (the p05 lesson).
         val gridDir = ensureDayGrid(s, d)
-        val idx = s.read.parquet(s"$gridDir/idx")
-        val ranked = s.read.parquet(s"$gridDir/ranked")
+        val idx = Catalog.parquet(s, s"$gridDir/idx")
+        val ranked = Catalog.parquet(s, s"$gridDir/ranked")
         val prevSrc = ranked.select(col("user_id"), col("rk").as("obs_idx"),
           col("day").as("day0"), col("obs_val").as("v0"))
         val nextSrc = ranked.select(col("user_id"), col("rk").as("nrk"),

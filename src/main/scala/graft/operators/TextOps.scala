@@ -212,6 +212,22 @@ object TextOps {
                CAST(COUNT(*) FILTER (q_ok) AS BIGINT) AS n_quality
         FROM flags GROUP BY source ORDER BY source"""
 
+  /** Every corpus bigram (doc_id, w1, w2) with its model counts: c2, the
+    * count of (w1, w2), and c1 = Σ_w2 c2(w1, w2), the count of w1 as a
+    * history (t30, t38). The (w1, w2) pairs are hash-partitioned by w1
+    * once: the c2 aggregate and the c1 window both run on that
+    * partitioning, so the rollup adds no exchange of its own, and c2 is
+    * planned once instead of once per join.
+    */
+  private def bigramModel(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val bg = bigramsShared(s, d)
+    val counts = bg.select("w1", "w2").repartition(col("w1"))
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+      .withColumn("c1", sum(col("c2")).over(Window.partitionBy("w1")))
+    bg.join(counts, Seq("w1", "w2"))
+  }
+
   /** The corpus bigram table (doc_id, w1, w2), memoized per (JVM, sfDir)
     * — the ensureDayGrid convention. t30 (fluency) and t38 (surprisal)
     * derive ALL their statistics from this one positional-bigram explode,
@@ -221,7 +237,7 @@ object TextOps {
     */
   private val bigramDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def bigramsShared(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(bigramDirs.computeIfAbsent(d, _ => Artifacts.build("graft_bigrams") { dir =>
+    Catalog.parquet(s, bigramDirs.computeIfAbsent(d, _ => Artifacts.build("graft_bigrams") { dir =>
       val dt = t(s, d, "documents")
         .select(col("doc_id"),
           filter(tokens(col("text")), x => length(x) > 0).as("toks"))
@@ -1272,19 +1288,15 @@ object TextOps {
     // is the mean conditional probability over its bigrams in integer ppm
     // (floor at both steps — no log/exp, the rational-idf convention:
     // libm ulp skew would break cross-engine hashing; monotone in the
-    // geometric-mean ranking's place for filtering). Scale shape: two
-    // map-side-combined count aggregates build the model; scoring is two
-    // equi-joins on the bigram/history keys — the frequent-bigram skew on
-    // the c₂ join is the k01 salting candidate if a real corpus ever
-    // hot-spots one pair. Docs need ≥ 2 tokens to have a bigram at all.
+    // geometric-mean ranking's place for filtering). Scale shape: one
+    // w1-partitioned count aggregate and window build the model
+    // ([[bigramModel]]); scoring is one equi-join on the bigram key — the
+    // frequent-history skew of the w1 partitioning is the k01 salting
+    // candidate if a real corpus ever hot-spots one word. Docs need ≥ 2
+    // tokens to have a bigram at all.
     Q("t30_bigram_lm",
       (s, d) => {
-        val bg = bigramsShared(s, d)
-        val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-        // c1(w1) = Σ_w2 c2(w1, w2) exactly — roll the SMALL count table up
-        // instead of re-scanning/re-shuffling the full bigram table (r09)
-        val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
-        bg.join(c2, Seq("w1", "w2")).join(c1, Seq("w1"))
+        bigramModel(s, d)
           .groupBy("doc_id").agg(count(lit(1)).as("n_bigrams"),
             sum(expr("c2 * 1000000L div c1")).as("s"))
           .select(col("doc_id"), col("n_bigrams"),
@@ -2132,15 +2144,11 @@ object TextOps {
     // threshold documents, and bit-for-bit reproducible (both engines'
     // bin() render minimal binary, no padding — pinned here). Emitted
     // per-doc: bigram count, total surprisal bits, centibits/bigram (the
-    // rank key). Same two count aggregates + two equi-joins as t30 — the
-    // model build is O(vocab²) bounded, scoring is linear in corpus size.
+    // rank key). Same bigram model and join as t30 — the model build is
+    // O(vocab²) bounded, scoring is linear in corpus size.
     Q("t38_bigram_surprisal",
       (s, d) => {
-        val bg = bigramsShared(s, d)
-        val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-        // c1 rolled up from c2 (see t30) — one fewer full bigram pass
-        val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
-        bg.join(c2, Seq("w1", "w2")).join(c1, Seq("w1"))
+        bigramModel(s, d)
           .groupBy("doc_id").agg(count(lit(1)).as("n_bigrams"),
             sum((length(bin(col("c1"))) - length(bin(col("c2")))).cast(LongType))
               .as("total_bits"))

@@ -246,7 +246,7 @@ class PlanAuditSpec extends SparkSpec {
     "g04_hits" -> 11, // 2 rounds × (edge⋈mass + agg) + two left joins back
     "d20_line_dedup" -> 3, // first-occurrence agg + line join + per-doc rebuild
     "t29_gopher_rules" -> 1, // map-only signal battery + final sort
-    "t30_bigram_lm" -> 4, // bigram aggs (c1, c2) + per-doc agg + sort
+    "t30_bigram_lm" -> 3, // w1 repartition (c2 agg + c1 window ride it) + per-doc agg + sort
     "sim22_filtered_ann" -> 4, // label pre-filter + probe cells + perKeyTopK + sort
     // round 8: pairs now read from the shared probe-pair artifact, whose
     // accurate (small) stats flip the label join's build side — the
@@ -360,7 +360,7 @@ class PlanAuditSpec extends SparkSpec {
     "sim44_rng_prune" -> 3, // edges/npair/kept checkpoint on build; emitted edges⋈kept join (both sides shuffle at spec SF) + sort
     "sim45_pruned_walk_recall" -> 0, // prune/walk/recall counts run on build; emitted report is one local row
     "c63_filter_clause" -> 3, // one expand-based distinct+filter agg (partial/final) + sort
-    "t38_bigram_surprisal" -> 4, // bigram aggs (c1, c2) + per-doc agg + sort (t30's shape)
+    "t38_bigram_surprisal" -> 3, // w1 repartition + per-doc agg + sort (t30's shape)
     "g13_modularity" -> 6, // und/labels checkpoint on build; degree agg + member/intra joins + community aggs + sort
     "sim46_residual_pq_search" -> 6, // residual checkpoint on build; encode argmin + cand join + ADC agg + perKeyTopK + sort
     "sim47_residual_pq_recall" -> 11, // composes sim46's full chain (encode argmin + ADC + topk, the sim21=12 pattern) + truth perKeyTopK + hit agg + sort
