@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Dev-only local mirror of the driver's correctness gate: for each query
 dumped by graft.Verify, run its oracle SQL in DuckDB over the same parquet
-tables and compare (row count, column names, values sorted by column name).
+tables and compare (column names, integer-vs-float kind per column, row
+count, values sorted by column name).
 Not part of the shipped library.
 
 Usage: python3 dev/check_oracle.py <sfDir> <verifyOutDir>
@@ -17,6 +18,12 @@ def norm(v):
             return "nan"
         return f"{v:.10g}"
     return str(v)
+
+def kind(col):
+    """'int' or 'float' for a numeric pandas column, else None. DuckDB hands
+    pandas an integer column with NULLs, or a HUGEINT one, as float64."""
+    k = col.dtype.kind
+    return "int" if k in "iu" else "float" if k == "f" else None
 
 def main(sf_dir, out_dir):
     con = duckdb.connect()
@@ -43,6 +50,13 @@ def main(sf_dir, out_dir):
         ref = ref.reindex(sorted(ref.columns), axis=1)
         if list(ours.columns) != list(ref.columns):
             results[name] = f"SCHEMA_MISMATCH ours={list(ours.columns)} ref={list(ref.columns)}"
+            continue
+        # integer vs float per column, before norm() formats 742.0 as "742":
+        # a hash over the raw cells tells the two apart
+        kinds = [(c, kind(ours[c]), kind(ref[c])) for c in ours.columns]
+        bad_kind = [f"{c}: ours={a} ref={b}" for c, a, b in kinds if a and b and a != b]
+        if bad_kind:
+            results[name] = f"TYPE_MISMATCH {'; '.join(bad_kind)}"
             continue
         if len(ours) != len(ref):
             results[name] = f"ROWCOUNT_MISMATCH ours={len(ours)} ref={len(ref)}"

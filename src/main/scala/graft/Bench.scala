@@ -26,6 +26,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.streaming.LocalCheckpointFileManager.install(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     // dev aid: GRAFT_BENCH_ONLY=q1,q2 restricts the run for iteration
@@ -129,7 +130,7 @@ object Bench {
     val latency: Option[(Double, Double, Int)] =
       if (only.nonEmpty) None
       else try {
-        val sq = Drain.run("benchlat", Artifacts.newDir("benchlat"),
+        val sq = Drain.run(spark, "benchlat", Artifacts.newDir("benchlat"),
           spark.readStream.format("graft-eth").option("dataset", "logs")
             .option("startBlock", "0").option("head", "1999")
             .option("maxBlocksPerTrigger", "100")

@@ -4,11 +4,15 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.streaming.LocalCheckpointFileManager
 
 /** The bounded streaming drain every StreamShape query runs: stage a feed,
   * run the writer to completion under `Trigger.AvailableNow`, read the
   * result back. Feeds and checkpoints live in [[Artifacts.newDir]] dirs, so
-  * the JVM's shutdown reaper deletes them. `q` is the query's short id
+  * the JVM's shutdown reaper deletes them. Checkpoints are committed
+  * through [[graft.streaming.LocalCheckpointFileManager]], so a local
+  * offset-, commit-log or state-store write forks no `chmod`/`readlink`
+  * process (see [[run]]). `q` is the query's short id
   * (x04, d24, …): it prefixes those dirs and the fed-batch failure message.
   */
 object Drain {
@@ -48,11 +52,15 @@ object Drain {
       .option("recursiveFileLookup", "true")
       .parquet(dir)
 
-  /** Run `w` to completion under AvailableNow on checkpoint `ckpt`, and
-    * require at least `minFed` micro-batches that read input.
+  /** Run `w`, a writer of a stream in session `s`, to completion under
+    * AvailableNow on checkpoint `ckpt`, and require at least `minFed`
+    * micro-batches that read input. The checkpoint (offset and commit logs,
+    * state-store files) is written through [[LocalCheckpointFileManager]]
+    * unless `s` already names a checkpoint file manager.
     */
-  def run(q: String, ckpt: String, w: DataStreamWriter[_], minFed: Int,
+  def run(s: SparkSession, q: String, ckpt: String, w: DataStreamWriter[_], minFed: Int,
       reason: String): StreamingQuery = {
+    LocalCheckpointFileManager.install(s)
     val sq = w.trigger(Trigger.AvailableNow()).option("checkpointLocation", ckpt).start()
     sq.awaitTermination()
     val fed = sq.recentProgress.count(_.numInputRows > 0)
@@ -60,8 +68,8 @@ object Drain {
     sq
   }
 
-  def run(q: String, ckpt: String, w: DataStreamWriter[_]): StreamingQuery =
-    run(q, ckpt, w, 0, "")
+  def run(s: SparkSession, q: String, ckpt: String, w: DataStreamWriter[_]): StreamingQuery =
+    run(s, q, ckpt, w, 0, "")
 
   /** Drain `df` into a memory sink and return its rows with the finished
     * query. The sink's view is dropped: the returned plan keeps its own
@@ -72,7 +80,7 @@ object Drain {
     val s = df.sparkSession
     val name = s"${q}_mem_${memId.incrementAndGet()}"
     try {
-      val sq = run(q, Artifacts.newDir(s"${q}ckpt"),
+      val sq = run(s, q, Artifacts.newDir(s"${q}ckpt"),
         df.writeStream.format("memory").queryName(name).outputMode(mode), minFed, reason)
       (s.table(name), sq)
     } finally s.catalog.dropTempView(name)
@@ -88,7 +96,7 @@ object Drain {
     */
   def batches(q: String, df: DataFrame, minFed: Int, reason: String)(
       f: (DataFrame, Long) => Unit): Unit =
-    run(q, Artifacts.newDir(s"${q}ckpt"),
+    run(df.sparkSession, q, Artifacts.newDir(s"${q}ckpt"),
       df.writeStream.foreachBatch { (b: DataFrame, id: Long) => if (!b.isEmpty) f(b, id) },
       minFed, reason)
 

@@ -13,6 +13,9 @@ import Catalog._
   */
 object StockOps {
 
+  private def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.sessionState.conf.numShufflePartitions
+
   /** Distribution ranks (ntile / percent_rank / cume_dist) over a TOTAL
     * ordering WITHOUT the single-task global window (`Window.orderBy` with
     * no partitionBy funnels the whole table through ONE task — fine at
@@ -24,7 +27,7 @@ object StockOps {
     *     action and the final query see identical partitioning (one bounded
     *     materialization — the price of consistency, paid instead of a
     *     global sort through one task).
-    *  2. Per-partition window (hash exchange on the 32-value `__pid` — no
+    *  2. Per-partition window (hash exchange on the `parts`-value `__pid` — no
     *     global funnel) for local row_number / rank / peer count, then the
     *     per-partition counts (collected ONCE, `parts` rows) become
     *     broadcast prefix-sum offsets: global rank = offset + local rank.
@@ -32,13 +35,21 @@ object StockOps {
     * Output = input columns + `ntile`, `percent_rank`, `cume_dist`,
     * bit-identical to the single-window formulation (exact integer rank
     * composition; the ntile fill rule — first n%k buckets one row larger —
-    * is reproduced from the global row number in closed form).
+    * is reproduced from the global row number in closed form). `parts`
+    * defaults to the session's shuffle-partition count; the result does not
+    * depend on it.
     */
   def globalDistributionRanks(
       df: org.apache.spark.sql.DataFrame,
       orderCols: Seq[org.apache.spark.sql.Column],
+      nTiles: Int): org.apache.spark.sql.DataFrame =
+    globalDistributionRanks(df, orderCols, nTiles, shufflePartitions(df))
+
+  def globalDistributionRanks(
+      df: org.apache.spark.sql.DataFrame,
+      orderCols: Seq[org.apache.spark.sql.Column],
       nTiles: Int,
-      parts: Int = 32): org.apache.spark.sql.DataFrame = {
+      parts: Int): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val ranged = df.repartitionByRange(parts, orderCols: _*)
@@ -99,15 +110,24 @@ object StockOps {
     *     global running total = offset + local running sum.
     *
     * Exact integer composition → bit-identical to the single-window
-    * formulation (spec-pinned in StockOpsSpec).
+    * formulation (spec-pinned in StockOpsSpec), whatever `parts` is; it
+    * defaults to the session's shuffle-partition count.
     */
   def groupedRunningTotal(
       df: org.apache.spark.sql.DataFrame,
       keyCol: String,
       orderCol: String,
       valCol: String,
+      outCol: String): org.apache.spark.sql.DataFrame =
+    groupedRunningTotal(df, keyCol, orderCol, valCol, outCol, shufflePartitions(df))
+
+  def groupedRunningTotal(
+      df: org.apache.spark.sql.DataFrame,
+      keyCol: String,
+      orderCol: String,
+      valCol: String,
       outCol: String,
-      parts: Int = 32): org.apache.spark.sql.DataFrame = {
+      parts: Int): org.apache.spark.sql.DataFrame = {
     val ranged = df.repartitionByRange(parts, col(keyCol), col(orderCol))
       .withColumn("__pid", spark_partition_id())
       .localCheckpoint()
@@ -2097,7 +2117,7 @@ object StockOps {
       Some("""SELECT event_type,
                      bool_and(value >= 0) AS all_nonneg,
                      bool_or(value > 95) AS any_high,
-                     count_if(value > 50) AS n_over_half,
+                     CAST(count_if(value > 50) AS BIGINT) AS n_over_half,
                      bool_and(CASE WHEN event_id % 7 = 0 THEN NULL
                                    ELSE value < 1000 END) AS all_bounded_skipnull
               FROM events GROUP BY event_type ORDER BY event_type"""))

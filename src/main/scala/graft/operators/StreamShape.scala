@@ -326,7 +326,7 @@ object StreamShape {
         val out = Artifacts.newDir("x12out")
         // assignCells is a pure projection, so the batch assignment path
         // IS the streaming one — one implementation, one tie-break
-        Drain.run("x12", Artifacts.newDir("x12ckpt"), SimilarityOps
+        Drain.run(s, "x12", Artifacts.newDir("x12ckpt"), SimilarityOps
           .assignCells(Drain.copies(s, "x12", s"$d/embeddings.parquet"), cents)
           .select("vec_id", "cell")
           .writeStream.format("parquet").partitionBy("cell")
@@ -350,7 +350,7 @@ object StreamShape {
         val ckpt = Artifacts.newDir("x09ckpt")
         val out = Artifacts.newDir("x09out")
         def life(head: Long): Unit =
-          Drain.run("x09", ckpt, s.readStream.format("graft-eth")
+          Drain.run(s, "x09", ckpt, s.readStream.format("graft-eth")
             .option("dataset", "logs").option("startBlock", "0")
             .option("head", head.toString).option("maxBlocksPerTrigger", "200")
             .load()
@@ -466,7 +466,7 @@ object StreamShape {
           .option("startBlock", "0").option("head", "999")
           .option("maxBlocksPerTrigger", "250").load()
           .select("blockNumber", "logIndex", "address")
-        Drain.run("x15", Artifacts.newDir("x15ckpt"),
+        Drain.run(s, "x15", Artifacts.newDir("x15ckpt"),
           logs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
             ArrowEdge.writeIpc(batch, s"$outRoot/batch-$id", batchSize = 128)
           })
@@ -742,7 +742,7 @@ object StreamShape {
               b("number") === l("blockNumber") && b("b_time") === l("l_time"),
               "left_outer")
             .select(col("number"), col("gasUsed"), col("logIndex"), col("address"))
-          Drain.run("x21", ckpt, j.writeStream.format("parquet").option("path", out)
+          Drain.run(s, "x21", ckpt, j.writeStream.format("parquet").option("path", out)
             .outputMode("append"), minFed, "join state never crossed a batch boundary")
         }
         drain(Head, 2)
@@ -813,7 +813,7 @@ object StreamShape {
       (s, d) => {
         val out = Artifacts.newDir("x23out")
         val docs = Catalog.parquet(s, s"$d/documents.parquet")
-        Drain.run("x23", Artifacts.newDir("x23ckpt"),
+        Drain.run(s, "x23", Artifacts.newDir("x23ckpt"),
           Drain.feed(s, "x23", docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1))
             .writeStream.format("parquet").partitionBy("lang").option("path", out).outputMode("append"),
           2, "the sink never appended across commits")
@@ -1035,7 +1035,7 @@ object StreamShape {
           .option("startBlock", "0").option("endBlock", (boundary - 1).toString).load()
           .select("blockNumber", "logIndex", "address", "data")
           .write.mode("overwrite").parquet(s"$root/backfill")
-        Drain.run("x29", Artifacts.newDir("x29ckpt"), s.readStream.format("graft-eth")
+        Drain.run(s, "x29", Artifacts.newDir("x29ckpt"), s.readStream.format("graft-eth")
             .option("dataset", "logs")
             .option("startBlock", boundary.toString).option("head", "999")
             .option("maxBlocksPerTrigger", "200").load()
@@ -1275,7 +1275,7 @@ object StreamShape {
         def life(head: Long): Unit = {
           val live = graft.api.RequestRouter.route(s, req,
             Map("head" -> head.toString, "maxBlocksPerTrigger" -> "200"))
-          Drain.run("x34", ckpt, live.select("blockNumber", "logIndex", "address", "data")
+          Drain.run(s, "x34", ckpt, live.select("blockNumber", "logIndex", "address", "data")
             .writeStream.format("parquet").option("path", outDir).outputMode("append"))
         }
         life(500)

@@ -17,6 +17,14 @@ final case class BlockOffset(block: Long) extends Offset {
   override def json(): String = block.toString
 }
 
+/** The `graft-eth` micro-batch source. A live trigger polls the chain head
+  * once (`eth_blockNumber` in [[latestOffset]]; [[reportLatestOffset]]
+  * reuses that answer) and reads the new blocks as one range per
+  * `maxBlockRange` chunk, so a live batch of a few blocks is one partition.
+  * The rest of a trigger's fixed cost is Spark's: the offset-log write
+  * before the batch and the commit-log write after it, which graft's
+  * sessions send through [[graft.streaming.LocalCheckpointFileManager]].
+  */
 final class EthMicroBatchStream(
     dataset: String,
     schema: StructType,
@@ -36,6 +44,9 @@ final class EthMicroBatchStream(
     */
   @volatile private var availableNowTarget: Option[Long] = None
 
+  /** Chain head as of the last poll in [[latestOffset]]. */
+  @volatile private var lastHead: Option[Long] = None
+
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowTarget = Some(rpc.blockNumber())
 
@@ -54,14 +65,23 @@ final class EthMicroBatchStream(
     * during deep backfill.
     */
   override def latestOffset(startOffset: Offset, limit: ReadLimit): Offset = {
-    val head = availableNowTarget.getOrElse(rpc.blockNumber())
+    val head = availableNowTarget.getOrElse {
+      val h = rpc.blockNumber()
+      lastHead = Some(h)
+      h
+    }
     val last = startOffset.asInstanceOf[BlockOffset].block
     BlockOffset(math.min(head, last + maxBlocksPerTrigger))
   }
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
-  override def reportLatestOffset(): Offset = BlockOffset(rpc.blockNumber())
+  /** The head the last [[latestOffset]] polled, unclamped (Spark calls this
+    * right after it, for progress reporting), as Kafka's source does; a
+    * fresh poll only before any head was read.
+    */
+  override def reportLatestOffset(): Offset =
+    BlockOffset(lastHead.orElse(availableNowTarget).getOrElse(rpc.blockNumber()))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[BlockOffset].block + 1

@@ -31,8 +31,8 @@ class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits {
   // already sent to `/` cannot reach their counts. `/window` serves each
   // call in 20 ms and counts the calls inside that time (before the response
   // goes out, so a call the client saw answered is never still counted);
-  // `/polite` records arrival times (ns).
-  private val active, peakActive = new AtomicInteger(0)
+  // `/polite` records arrival times (ns); `/head` counts eth_blockNumber calls.
+  private val active, peakActive, headCalls = new AtomicInteger(0)
   private val politeArrivals = new ConcurrentLinkedQueue[java.lang.Long]()
   private val handlers = Executors.newCachedThreadPool()
   private val blockParam = """"params":\["(0x[0-9a-f]+)"""".r.unanchored
@@ -54,6 +54,7 @@ class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits {
           peakActive.accumulateAndGet(active.incrementAndGet(), (a, b) => math.max(a, b))
           try Thread.sleep(20) finally active.decrementAndGet()
         case "/polite" => politeArrivals.add(System.nanoTime())
+        case "/head" if body.contains("eth_blockNumber") => headCalls.incrementAndGet()
         case _ =>
       }
       if (failuresToInject.getAndUpdate(n => math.max(0, n - 1)) > 0) {
@@ -216,5 +217,21 @@ class HttpRpcSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits {
     assert(gapsMs.size === 4)
     // arrivals carry the host's scheduling jitter; unpaced calls arrive < 1 ms apart
     assert(gapsMs.forall(_ >= 40), s"arrival gaps (ms): $gapsMs")
+  }
+
+  test("a live trigger polls the head once: N triggers make at most N + 1 head calls") {
+    val stream = new EthMicroBatchStream("logs", EthSchemas.logs, 0L, Nil, Nil,
+      maxBlockRange = 1000L, maxBlocksPerTrigger = 10L,
+      EthRpcSpec("http", url + "head", 0L, 0L, Int.MaxValue, fetchDelayMs = 0L))
+    val n = 20
+    // Spark's order per trigger: latestOffset, then reportLatestOffset for progress
+    var start = stream.initialOffset()
+    (1 to n).foreach { _ =>
+      val end = stream.latestOffset(start, stream.getDefaultReadLimit)
+      assert(stream.reportLatestOffset() === BlockOffset(100L)) // the stub's head, unclamped
+      start = end
+    }
+    assert(start === BlockOffset(100L))
+    assert(headCalls.get <= n + 1, s"${headCalls.get} head calls for $n triggers")
   }
 }

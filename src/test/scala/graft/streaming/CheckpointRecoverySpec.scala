@@ -5,6 +5,8 @@ import graft.operators.Artifacts
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import scala.jdk.CollectionConverters._
+
 /** Checkpointed resume: stop a streaming query mid-backfill, restart it
   * against a LONGER chain, and require exactly-once block coverage across
   * the two runs. This is durability the reference does not have at all —
@@ -13,29 +15,25 @@ import org.apache.spark.sql.streaming.Trigger
   */
 class CheckpointRecoverySpec extends SparkSpec {
 
-  test("stream resumes from checkpoint with no loss and no duplicates") {
-    val ckpt = Artifacts.newDir("graft_ckpt")
-    val out = Artifacts.newDir("graft_ckpt_out")
+  /** One life of the logs stream over a chain whose head is `head`. */
+  private def runOnce(ckpt: String, out: String, head: Long): Unit = {
+    val df = spark.readStream.format("graft-eth")
+      .option("dataset", "logs")
+      .option("startBlock", "0")
+      .option("head", head.toString)
+      .option("maxBlocksPerTrigger", "200")
+      .load()
+      .select("blockNumber", "logIndex", "address")
+    val q = df.writeStream.format("parquet")
+      .option("path", out)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(180000L)
+  }
 
-    def runOnce(head: Long): Unit = {
-      val df = spark.readStream.format("graft-eth")
-        .option("dataset", "logs")
-        .option("startBlock", "0")
-        .option("head", head.toString)
-        .option("maxBlocksPerTrigger", "200")
-        .load()
-        .select("blockNumber", "logIndex", "address")
-      val q = df.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(180000L)
-    }
-
-    runOnce(head = 1000)  // first life: blocks 0..1000
-    runOnce(head = 2500)  // second life: must resume at 1001, not 0
-
+  /** Every log of blocks 0..2500 in `out` exactly once. */
+  private def assertExactlyOnce(out: String): Unit = {
     val got = spark.read.parquet(out)
     val expected = new graft.sources.SyntheticRpc(42, 2500).getLogs(0, 2500, Seq.empty, Seq.empty)
     assert(got.count() === expected.size, "row count after resume")
@@ -45,6 +43,31 @@ class CheckpointRecoverySpec extends SparkSpec {
     val blocks = got.select("blockNumber").distinct().count()
     val expectedBlocks = (0L to 2500L).count(b => new graft.sources.SyntheticRpc(42, 2500).logsInBlock(b) > 0)
     assert(blocks === expectedBlocks, "block coverage after resume")
+  }
+
+  test("stream resumes from checkpoint with no loss and no duplicates") {
+    val ckpt = Artifacts.newDir("graft_ckpt")
+    val out = Artifacts.newDir("graft_ckpt_out")
+    runOnce(ckpt, out, head = 1000)  // first life: blocks 0..1000
+    runOnce(ckpt, out, head = 2500)  // second life: must resume at 1001, not 0
+    assertExactlyOnce(out)
+  }
+
+  test("a checkpoint begun by Spark's default manager resumes under graft's") {
+    val ckpt = Artifacts.newDir("graft_ckpt_mixed")
+    val out = Artifacts.newDir("graft_ckpt_mixed_out")
+    def crcs(): Int = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+      try walk.iterator.asScala.count(_.getFileName.toString.endsWith(".crc")) finally walk.close()
+    }
+    spark.conf.unset(LocalCheckpointFileManager.Key)
+    try runOnce(ckpt, out, head = 1000) // life 1 writes .crc files next to its logs
+    finally LocalCheckpointFileManager.install(spark)
+    val life1Crcs = crcs()
+    assert(life1Crcs > 0, "Spark's default manager wrote no .crc")
+    runOnce(ckpt, out, head = 2500) // life 2 reads them, writes none
+    assert(crcs() === life1Crcs)
+    assertExactlyOnce(out)
   }
 
   test("LOCF ValueState survives a restart: life 2 fills from life 1's state") {
