@@ -42,7 +42,7 @@ object Artifacts {
     dirs.forEach(p => deleteRecursively(p))
   }, "graft-artifact-reaper"))
 
-  private def deleteRecursively(dir: Path): Unit = try {
+  private[operators] def deleteRecursively(dir: Path): Unit = try {
     val walk = Files.walk(dir)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.deleteIfExists(p))

@@ -37,7 +37,7 @@ object Catalog {
     * and every conf that changes parquet schema inference, so a rewritten
     * path or a flipped conf (`nanosAsLong`, which [[t]] sets) re-infers.
     * Dirs written and read back within one query run (stream sinks,
-    * [[Drain.stage]] feeds, per-batch stores) keep a plain `read.parquet`.
+    * [[Drain.stage]] feeds, [[Drain.Store]] entries) keep a plain `read.parquet`.
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
     schemaKey(spark, path) match {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.streaming.LocalCheckpointFileManager
@@ -14,6 +14,7 @@ import graft.streaming.LocalCheckpointFileManager
   * offset-, commit-log or state-store write forks no `chmod`/`readlink`
   * process (see [[run]]). `q` is the query's short id
   * (x04, d24, …): it prefixes those dirs and the fed-batch failure message.
+  * A [[batches]] body keeps its cross-batch state in a [[Store]].
   */
 object Drain {
 
@@ -100,19 +101,64 @@ object Drain {
       df.writeStream.foreachBatch { (b: DataFrame, id: Long) => if (!b.isEmpty) f(b, id) },
       minFed, reason)
 
+  /** The cross-batch state of a [[batches]] query: micro-batch `id`'s entry
+    * is the dir `b<id>` under `root`. [[put]] replaces the entry, so a
+    * retried batch overwrites its first attempt instead of adding to it
+    * (the idempotent sink keyed by batch id that exactly-once
+    * foreachBatch output needs). The entries are found by listing `root`,
+    * not through a driver-side index: a query restarted from its
+    * checkpoint, in a new JVM or with a new `Store` on the same root, sees
+    * every entry its earlier lives wrote. An empty micro-batch writes no
+    * entry, so a batch chains from [[latestBefore]], never from `id - 1`.
+    */
+  final class Store(val root: String) {
+
+    /** Delete `b<batchId>` if an earlier attempt left it, then `write` the
+      * entry into that dir; returns the dir.
+      */
+    def put(batchId: Long)(write: String => Unit): String = {
+      val dir = Paths.get(root, s"b$batchId")
+      Artifacts.deleteRecursively(dir)
+      write(dir.toString)
+      dir.toString
+    }
+
+    /** The newest entry of a batch before `batchId`. */
+    def latestBefore(batchId: Long): Option[String] = allBefore(batchId).lastOption
+
+    /** Every entry of a batch before `batchId`, in batch order. */
+    def allBefore(batchId: Long): Seq[String] =
+      listDir(root).toSeq.map(_.getFileName.toString)
+        .collect { case Store.Entry(id) => id.toLong }.filter(_ < batchId).sorted
+        .map(id => s"$root/b$id")
+
+    /** Every entry's rows, read through `r`. */
+    def read(r: DataFrameReader): DataFrame = r.option("recursiveFileLookup", "true").parquet(root)
+
+    def read(s: SparkSession): DataFrame = read(s.read)
+  }
+
+  object Store {
+    private val Entry = "b(\\d+)".r
+
+    /** A store in a fresh [[Artifacts.newDir]] dir prefixed `q`. */
+    def apply(q: String): Store = new Store(Artifacts.newDir(q))
+  }
+
   /** Force every file under `laterDir` to an mtime strictly past any file
     * under `earlierDir`: FileStreamSource orders pending files by
     * modification time with no tiebreak, so [[stage]] pins the argument
     * order this way.
     */
   private def forceDeliveryOrder(earlierDir: String, laterDir: String): Unit = {
-    def listDir(dir: String): Array[java.nio.file.Path] = {
-      val st = Files.list(Paths.get(dir))
-      try st.toArray.map(_.asInstanceOf[java.nio.file.Path]) finally st.close()
-    }
     val maxEarlier = listDir(earlierDir).map(p => Files.getLastModifiedTime(p).toMillis).max
     listDir(laterDir).foreach { p =>
       Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(maxEarlier + 60000))
     }
+  }
+
+  private def listDir(dir: String): Array[java.nio.file.Path] = {
+    val st = Files.list(Paths.get(dir))
+    try st.toArray.map(_.asInstanceOf[java.nio.file.Path]) finally st.close()
   }
 }

@@ -15,30 +15,6 @@ object StreamShape {
 
   private val fmtSec = "yyyy-MM-dd HH:mm:ss"
 
-  /** Latest value stored at a batch id STRICTLY BEFORE `batchId` in a
-    * batchId-keyed state map (x33/d24/x38's cross-batch chains). An empty
-    * micro-batch writes nothing under its id, so a plain get(batchId - 1)
-    * would silently continue from EMPTY state — dropping x33's boundary
-    * row or discarding d24/x38's whole accumulated store (review finding,
-    * round 7). Retry-idempotence is preserved: a retry of batch N still
-    * reads only ids < N, which the retry cannot have changed.
-    */
-  private def latestBefore[V](
-      m: java.util.concurrent.ConcurrentHashMap[Long, V], batchId: Long): Option[V] = {
-    var bestK = Long.MinValue
-    var best: Option[V] = None
-    m.forEach((k, v) => if (k < batchId && k > bestK) { bestK = k; best = Some(v) })
-    best
-  }
-
-  /** Every value stored at a batch id before `batchId` (x47-x49's edge stores). */
-  private def priorDirs(
-      m: java.util.concurrent.ConcurrentHashMap[Long, String], batchId: Long): Seq[String] = {
-    val b = Seq.newBuilder[String]
-    m.forEach((k, v) => if (k < batchId) b += v)
-    b.result()
-  }
-
   /** Run `body` on the RocksDB state store provider, then restore the
     * session's own provider.
     */
@@ -545,15 +521,15 @@ object StreamShape {
     // the query path.
     Q("x17_stream_ann_serve",
       (s, d) => {
-        val out = Artifacts.newDir("x17out")
+        val out = Drain.Store("x17out")
         SimilarityOps.ensureIvfIndex(s, d)
         val q = Catalog.parquet(s, s"$d/embeddings.parquet").where(col("vec_id") < 10)
         val feed = Drain.feed(s, "x17", q.where(col("vec_id") < 5), q.where(col("vec_id") >= 5))
-        Drain.batches("x17", feed, 2, "the per-batch serve path was not exercised") { (batch, _) =>
-          SimilarityOps.serveIvfIndexed(s, d, SimilarityOps.withNormOf(batch), nProbes = 10)
-            .write.mode("append").parquet(out)
+        Drain.batches("x17", feed, 2, "the per-batch serve path was not exercised") { (batch, id) =>
+          out.put(id)(SimilarityOps.serveIvfIndexed(s, d, SimilarityOps.withNormOf(batch),
+            nProbes = 10).write.parquet(_))
         }
-        s.read.parquet(out).orderBy("qid", "rk")
+        out.read(s).orderBy("qid", "rk")
       },
       Some(SimilarityOps.sqlTrainedSearchSql),
       bench = false),
@@ -647,14 +623,14 @@ object StreamShape {
     Q("x19_stream_cms_merge",
       (s, d) => {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val store = Artifacts.newDir("x19sketch")
+        val store = Drain.Store("x19sketch")
         val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "user_id")
         val feed = Drain.feed(s, "x19",
           ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-        Drain.batches("x19", feed, 2, "the sketch merge was not exercised") { (batch, _) =>
-          StockOps.cmsSketch(batch.select("user_id")).write.mode("append").parquet(store)
+        Drain.batches("x19", feed, 2, "the sketch merge was not exercised") { (batch, id) =>
+          store.put(id)(StockOps.cmsSketch(batch.select("user_id")).write.parquet(_))
         }
-        val merged = s.read.parquet(store)
+        val merged = store.read(s)
           .groupBy("r", "bucket").agg(sum("cnt").as("cnt"))
         StockOps.cmsCompare(Catalog.t(s, d, "events"), merged)
       },
@@ -673,14 +649,14 @@ object StreamShape {
     // micro-batches; oracle = the same join over the chain dumps.
     Q("x20_stream_static_enrich",
       (s, d) => {
-        val out = Artifacts.newDir("x20out")
+        val out = Drain.Store("x20out")
         val dim = s.read.format("graft-eth").option("dataset", "blocks")
           .option("startBlock", "0").option("endBlock", "999").load()
           .select(col("number"), col("gasUsed"))
         val logs = s.readStream.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("head", "999")
           .option("maxBlocksPerTrigger", "500").load()
-        Drain.batches("x20", logs, 2, "per-batch enrichment was not exercised") { (batch, _) =>
+        Drain.batches("x20", logs, 2, "per-batch enrichment was not exercised") { (batch, id) =>
           val enriched = batch.join(broadcast(dim), batch("blockNumber") === dim("number"))
             .select(batch("blockNumber"), col("logIndex"), col("address"),
               expr("gasUsed div 4194304").as("gas_tier"))
@@ -689,9 +665,9 @@ object StreamShape {
             s"static dim was not broadcast in the micro-batch plan:\n$plan")
           require(!plan.contains("StateStore"),
             s"stream-static join must be stateless, found state operators:\n$plan")
-          enriched.write.mode("append").parquet(out)
+          out.put(id)(enriched.write.parquet(_))
         }
-        s.read.parquet(out).orderBy("blockNumber", "logIndex")
+        out.read(s).orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT l.blockNumber, l.logIndex, l.address,
                       b.gasUsed // 4194304 AS gas_tier
@@ -781,15 +757,15 @@ object StreamShape {
     Q("x22_stream_kmv_merge",
       (s, d) => {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val store = Artifacts.newDir("x22sketch")
+        val store = Drain.Store("x22sketch")
         val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "event_type", "user_id")
         val feed = Drain.feed(s, "x22",
           ev.where(col("user_id") % 2 === 0), ev.where(col("user_id") % 2 === 1))
-        Drain.batches("x22", feed, 2, "the sketch merge was not exercised") { (batch, _) =>
-          StockOps.kmvPartial(batch).write.mode("append").parquet(store)
+        Drain.batches("x22", feed, 2, "the sketch merge was not exercised") { (batch, id) =>
+          store.put(id)(StockOps.kmvPartial(batch).write.parquet(_))
         }
         val merged = StockOps.perKeyTopK(
-          s.read.parquet(store).distinct(),
+          store.read(s).distinct(),
           Seq("event_type"), Seq(col("h")), StockOps.KmvK)
         val tru = t(s, d, "events").groupBy("event_type")
           .agg(count_distinct(col("user_id")).as("true_distinct"))
@@ -845,16 +821,16 @@ object StreamShape {
     // order, engine-exact.
     Q("x24_stream_topk",
       (s, d) => {
-        val store = Artifacts.newDir("x24top")
+        val store = Drain.Store("x24top")
         val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "event_type", "value")
         val feed = Drain.feed(s, "x24",
           ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-        Drain.batches("x24", feed, 2, "the top-k merge was not exercised") { (batch, _) =>
-          StockOps.perKeyTopK(batch, Seq("event_type"), Seq(desc("value"), col("event_id")), 5)
-            .select("event_type", "event_id", "value")
-            .write.mode("append").parquet(store)
+        Drain.batches("x24", feed, 2, "the top-k merge was not exercised") { (batch, id) =>
+          store.put(id)(StockOps.perKeyTopK(batch, Seq("event_type"),
+              Seq(desc("value"), col("event_id")), 5)
+            .select("event_type", "event_id", "value").write.parquet(_))
         }
-        StockOps.perKeyTopK(s.read.parquet(store).distinct(),
+        StockOps.perKeyTopK(store.read(s).distinct(),
             Seq("event_type"), Seq(desc("value"), col("event_id")), 5)
           .select("event_type", "rk", "event_id", "value")
           .orderBy("event_type", "rk")
@@ -878,7 +854,7 @@ object StreamShape {
     // winners across batch boundaries, not within one.
     Q("x25_stream_cdc_upsert",
       (s, d) => {
-        val store = Artifacts.newDir("x25snap")
+        val store = Drain.Store("x25snap")
         val ev = t(s, d, "events")
           .select(col("user_id"), col("event_id"), col("event_type"),
             unix_micros(col("ts")).as("us"))
@@ -889,10 +865,10 @@ object StreamShape {
               col("m.event_id").as("event_id"), col("m.event_type").as("event_type"))
         val feed = Drain.feed(s, "x25",
           ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-        Drain.batches("x25", feed, 2, "the snapshot merge was not exercised") { (batch, _) =>
-          reduceBatch(batch).write.mode("append").parquet(store)
+        Drain.batches("x25", feed, 2, "the snapshot merge was not exercised") { (batch, id) =>
+          store.put(id)(reduceBatch(batch).write.parquet(_))
         }
-        reduceBatch(s.read.parquet(store).distinct())
+        reduceBatch(store.read(s).distinct())
           .select(col("user_id"), col("event_id").as("last_event_id"),
             col("event_type").as("state"))
           .orderBy("user_id")
@@ -921,17 +897,17 @@ object StreamShape {
     // boundaries.
     Q("x26_stream_ohlc",
       (s, d) => {
-        val store = Artifacts.newDir("x26bars")
+        val store = Drain.Store("x26bars")
         val ev = t(s, d, "events")
           .select(col("event_type"), unix_micros(col("ts")).as("us"),
             col("event_id"), col("value"))
           .withColumn("bucket", expr(s"us div ${TemporalOps.OhlcHourUs}"))
         val feed = Drain.feed(s, "x26",
           ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-        Drain.batches("x26", feed, 2, "the bar merge was not exercised") { (batch, _) =>
-          TemporalOps.ohlcPartials(batch).write.mode("append").parquet(store)
+        Drain.batches("x26", feed, 2, "the bar merge was not exercised") { (batch, id) =>
+          store.put(id)(TemporalOps.ohlcPartials(batch).write.parquet(_))
         }
-        TemporalOps.ohlcMerge(s.read.parquet(store))
+        TemporalOps.ohlcMerge(store.read(s))
           .orderBy("event_type", "bucket")
       },
       Some(TemporalOps.sqlOhlc),
@@ -948,15 +924,15 @@ object StreamShape {
     // O(batch) partials, merge O(sketch domain), read-out O(sketch).
     Q("x27_stream_hist_merge",
       (s, d) => {
-        val store = Artifacts.newDir("x27sketch")
+        val store = Drain.Store("x27sketch")
         val ord = Catalog.parquet(s, s"$d/orders.parquet")
           .select("o_orderkey", "o_totalprice")
         val feed = Drain.feed(s, "x27",
           ord.where(col("o_orderkey") % 2 === 0), ord.where(col("o_orderkey") % 2 === 1))
-        Drain.batches("x27", feed, 2, "the sketch merge was not exercised") { (batch, _) =>
-          StockOps.histPartial(batch).write.mode("append").parquet(store)
+        Drain.batches("x27", feed, 2, "the sketch merge was not exercised") { (batch, id) =>
+          store.put(id)(StockOps.histPartial(batch).write.parquet(_))
         }
-        val merged = s.read.parquet(store)
+        val merged = store.read(s)
           .groupBy("bucket").agg(sum("c").as("c"))
         StockOps.histQuantiles(s, merged)
       },
@@ -982,31 +958,31 @@ object StreamShape {
         // against that clone (caught by an isolated-session Verify worker —
         // every other kernel-using stream already registered first)
         graft.functions.GraftFunctions.register(s)
-        val sigStore = Artifacts.newDir("x28sigs")
-        val pairStore = Artifacts.newDir("x28pairs")
+        val sigStore = Drain.Store("x28sigs")
+        val pairStore = Drain.Store("x28pairs")
         val docs = Catalog.parquet(s, s"$d/documents.parquet").select("doc_id", "text")
         val feed = Drain.feed(s, "x28",
           docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1))
-        Drain.batches("x28", feed, 2, "incremental discovery was not exercised") { (batch, _) =>
+        Drain.batches("x28", feed, 2, "incremental discovery was not exercised") { (batch, id) =>
           val bb = DedupOps.bandBuckets(batch)
-          bb.write.mode("append").parquet(sigStore)
+          sigStore.put(id)(bb.write.parquet(_))
           // store-so-far INCLUDES this batch — within-batch pairs are
           // found here too; least/greatest canonicalizes direction
-          val store = s.read.parquet(sigStore)
-          bb.select(col("doc_id").as("da"), col("band"), col("sig"))
+          val store = sigStore.read(s)
+          pairStore.put(id)(bb.select(col("doc_id").as("da"), col("band"), col("sig"))
             .join(store.select(col("doc_id").as("db"), col("band"), col("sig")),
               Seq("band", "sig"))
             .where(col("da") =!= col("db"))
             .select(least(col("da"), col("db")).as("da"),
               greatest(col("da"), col("db")).as("db"))
             .distinct()
-            .write.mode("append").parquet(pairStore)
+            .write.parquet(_))
         }
         // explicit schema: a corpus with zero bucket collisions leaves the
         // pair store empty, which schema inference would reject
         val pairSchema = StructType(Seq(
           StructField("da", LongType), StructField("db", LongType)))
-        val candidates = s.read.schema(pairSchema).parquet(pairStore).distinct()
+        val candidates = pairStore.read(s.read.schema(pairSchema)).distinct()
         DedupOps.jaccardVerified(s, d, candidates)
           .orderBy("da", "db")
       },
@@ -1069,25 +1045,24 @@ object StreamShape {
     // |active addresses| rows, never the log history.
     Q("x30_stream_address_activity",
       (s, d) => {
-        val partStore = Artifacts.newDir("x30part")
-        val txStore = Artifacts.newDir("x30tx")
+        val partStore = Drain.Store("x30part")
+        val txStore = Drain.Store("x30tx")
         val logs = s.readStream.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("head", "999")
           .option("maxBlocksPerTrigger", "250").load()
           .select("address", "blockNumber", "transactionHash")
-        Drain.batches("x30", logs, 3, "partial merging was not exercised") { (batch, _) =>
-          batch.groupBy("address")
+        Drain.batches("x30", logs, 3, "partial merging was not exercised") { (batch, id) =>
+          partStore.put(id)(batch.groupBy("address")
             .agg(count(lit(1)).as("n"), min("blockNumber").as("fb"),
               max("blockNumber").as("lb"))
-            .write.mode("append").parquet(partStore)
-          batch.select("address", "transactionHash").distinct()
-            .write.mode("append").parquet(txStore)
+            .write.parquet(_))
+          txStore.put(id)(batch.select("address", "transactionHash").distinct().write.parquet(_))
         }
-        val merged = s.read.parquet(partStore)
+        val merged = partStore.read(s)
           .groupBy("address")
           .agg(sum("n").as("n_logs"), min("fb").as("first_block"),
             max("lb").as("last_block"))
-        val txs = s.read.parquet(txStore).distinct()
+        val txs = txStore.read(s).distinct()
           .groupBy("address").agg(count(lit(1)).as("n_txs"))
         merged.join(txs, "address")
           .select("address", "n_logs", "first_block", "last_block", "n_txs")
@@ -1197,16 +1172,11 @@ object StreamShape {
     // independent chain dump — missing boundary pairs cannot hide.
     Q("x33_stream_cadence",
       (s, d) => {
-        val gapStore = Artifacts.newDir("x33gaps")
-        // carried state keyed BY BATCH ID, and the sink append keyed by
-        // batch id too (overwrite of its own directory): a micro-batch
-        // retry then recomputes from batch N-1's unchanged carry and
-        // overwrites its own partial output instead of double-appending —
-        // the foreachBatch idempotence contract. In a multi-run deployment
-        // the carry map lives in checkpointed state (transformWithState,
-        // the x31 convention); a driver-side map is the AvailableNow
-        // single-run equivalent.
-        val carry = new java.util.concurrent.ConcurrentHashMap[Long, (Long, Long, Long)]()
+        val gaps = Drain.Store("x33gaps")
+        // the carried state: each batch's last block, one row per entry —
+        // a retry of batch N recomputes from the prior batch's unchanged
+        // entry and replaces its own gap partials
+        val lasts = Drain.Store("x33last")
         val blocks = s.readStream.format("graft-eth").option("dataset", "blocks")
           .option("startBlock", "0").option("head", "999")
           .option("maxBlocksPerTrigger", "250").load()
@@ -1223,18 +1193,15 @@ object StreamShape {
           // carried last block (stable under retry of this batch;
           // empty batches leave no entry, so `latest before` not -1)
           val first = cur.orderBy("number").limit(1).collect()(0)
-          val boundary = latestBefore(carry, batchId).toSeq
-            .filter { case (n, _, _) => n + 1 == first.getLong(0) }
-            .map { case (_, ts, _) =>
-              (first.getLong(0), first.getLong(1) - ts, first.getLong(2))
-            }
+          val boundary = lasts.latestBefore(batchId).map(s.read.parquet(_).head()).toSeq
+            .filter(last => last.getLong(0) + 1 == first.getLong(0))
+            .map(last => (first.getLong(0), first.getLong(1) - last.getLong(1), first.getLong(2)))
           import batch.sparkSession.implicits._
-          within.unionByName(boundary.toDF("number", "gap", "n_tx"))
-            .write.mode("overwrite").parquet(s"$gapStore/b$batchId")
-          val last = cur.orderBy(desc("number")).limit(1).collect()(0)
-          carry.put(batchId, (last.getLong(0), last.getLong(1), last.getLong(2)))
+          gaps.put(batchId)(
+            within.unionByName(boundary.toDF("number", "gap", "n_tx")).write.parquet(_))
+          lasts.put(batchId)(cur.orderBy(desc("number")).limit(1).write.parquet(_))
         }
-        s.read.option("recursiveFileLookup", "true").parquet(gapStore)
+        gaps.read(s)
           .select(expr("number div 100").as("epoch"), col("gap"), col("n_tx"))
           .groupBy("epoch")
           .agg(count(lit(1)).as("n_gaps"), sum("gap").as("gap_total"),
@@ -1306,12 +1273,12 @@ object StreamShape {
     // counter row; nothing about the history is retained.
     Q("x35_stream_quarantine",
       (s, d) => {
-        val store = Artifacts.newDir("x35ctr")
+        val store = Drain.Store("x35ctr")
         val ev = t(s, d, "events").select("event_id", "ts", "value", "props")
         val feed = Drain.feed(s, "x35",
           ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-        Drain.batches("x35", feed, 2, "counter merging was not exercised") { (batch, _) =>
-          batch
+        Drain.batches("x35", feed, 2, "counter merging was not exercised") { (batch, id) =>
+          store.put(id)(batch
             .select(
               (col("value") > 150.0).as("r_cap"),
               (get_json_object(col("props"), "$.k").cast(LongType) > 90L).as("r_k"),
@@ -1325,9 +1292,9 @@ object StreamShape {
                 .as("n_quarantined"),
               sum(when(!(col("r_cap") || col("r_k") || col("r_ts")), 1L).otherwise(0L))
                 .as("n_passed"))
-            .write.mode("append").parquet(store)
+            .write.parquet(_))
         }
-        s.read.parquet(store).agg(
+        store.read(s).agg(
           sum("n_value_above_cap").as("n_value_above_cap"),
           sum("n_k_out_of_range").as("n_k_out_of_range"),
           sum("n_ts_out_of_window").as("n_ts_out_of_window"),
@@ -1427,9 +1394,8 @@ object StreamShape {
     // batch oracle verbatim.
     Q("d24_incremental_clusters",
       (s, d) => {
-        val sigStore = Artifacts.newDir("d24sigs")
-        val labelRoot = Artifacts.newDir("d24labels")
-        val labelDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+        val sigStore = Drain.Store("d24sigs")
+        val labels = Drain.Store("d24labels")
         val relabels = new java.util.concurrent.atomic.AtomicLong(0)
         val docs = Catalog.parquet(s, s"$d/documents.parquet").select("doc_id", "text")
         // canonical (min-id) members of multi-member clusters arrive LAST
@@ -1440,10 +1406,8 @@ object StreamShape {
           docs.join(canon, Seq("doc_id"), "left_anti"), docs.join(canon, Seq("doc_id"), "left_semi"))
         Drain.batches("d24", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
           val bb = DedupOps.bandBuckets(batch)
-          // per-batch-id sink dirs: a micro-batch retry overwrites its
-          // own partials instead of double-appending (the x33 contract)
-          bb.write.mode("overwrite").parquet(s"$sigStore/b$batchId")
-          val store = s.read.option("recursiveFileLookup", "true").parquet(sigStore)
+          sigStore.put(batchId)(bb.write.parquet(_))
+          val store = sigStore.read(s)
           val cands = bb.select(col("doc_id").as("da"), col("band"), col("sig"))
             .join(store.select(col("doc_id").as("db"), col("band"), col("sig")),
               Seq("band", "sig"))
@@ -1452,7 +1416,7 @@ object StreamShape {
               greatest(col("da"), col("db")).as("db"))
             .distinct()
           val verified = DedupOps.jaccardVerified(s, d, cands).select("da", "db")
-          val prevLabels = latestBefore(labelDirs, batchId)
+          val prevLabels = labels.latestBefore(batchId)
             .map(p => s.read.parquet(p))
             .getOrElse {
               import s.implicits._
@@ -1477,14 +1441,13 @@ object StreamShape {
               Seq("old_label"), "left_semi").count())
           val allNodes = prevLabels.unionByName(
             withLab.join(prevLabels.select("doc_id"), Seq("doc_id"), "left_anti"))
-          allNodes.join(mapping, col("label") === col("old_label"), "left")
+          labels.put(batchId)(allNodes.join(mapping, col("label") === col("old_label"), "left")
             .select(col("doc_id"), coalesce(col("new_label"), col("label")).as("label"))
-            .write.mode("overwrite").parquet(s"$labelRoot/b$batchId")
-          labelDirs.put(batchId, s"$labelRoot/b$batchId")
+            .write.parquet(_))
         }
         require(relabels.get() > 0,
           "no existing cluster was relabeled by a later batch — the mapping-update path was vacuous")
-        s.read.parquet(latestBefore(labelDirs, Long.MaxValue).get)
+        s.read.parquet(labels.latestBefore(Long.MaxValue).get)
           .select(col("doc_id"), col("label").as("cluster"))
           .orderBy("doc_id")
       },
@@ -1504,14 +1467,14 @@ object StreamShape {
     Q("x37_stream_hll_merge",
       (s, d) => {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val store = Artifacts.newDir("x37sketch")
+        val store = Drain.Store("x37sketch")
         val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "event_type", "user_id")
         val feed = Drain.feed(s, "x37",
           ev.where(col("user_id") % 2 === 0), ev.where(col("user_id") % 2 === 1))
-        Drain.batches("x37", feed, 2, "the register merge was not exercised") { (batch, batchId) =>
-          StockOps.hllPartial(batch).write.mode("overwrite").parquet(s"$store/b$batchId")
+        Drain.batches("x37", feed, 2, "the register merge was not exercised") { (batch, id) =>
+          store.put(id)(StockOps.hllPartial(batch).write.parquet(_))
         }
-        val merged = s.read.option("recursiveFileLookup", "true").parquet(store)
+        val merged = store.read(s)
           .groupBy("event_type", "reg").agg(max(col("mj")).as("mj"))
         val tru = t(s, d, "events").groupBy("event_type")
           .agg(count_distinct(col("user_id")).as("true_distinct"))
@@ -1537,9 +1500,8 @@ object StreamShape {
     // graph pinned to sim36's batch oracle verbatim.
     Q("x38_stream_knn_maintain",
       (s, d) => {
-        val vecStore = Artifacts.newDir("x38vecs")
-        val edgeRoot = Artifacts.newDir("x38edges")
-        val edgeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+        val vecStore = Drain.Store("x38vecs")
+        val edges = Drain.Store("x38edges")
         val cents = SimilarityOps.trainedCentroids(s, d, iters = 2)
         val vecs = Catalog.parquet(s, s"$d/embeddings.parquet").select("vec_id", "embedding")
         val feed = Drain.feed(s, "x38",
@@ -1548,8 +1510,8 @@ object StreamShape {
           val assigned = SimilarityOps.assignCells(
             SimilarityOps.withNormOf(batch), cents)
             .select("cell", "vec_id", "embedding", "norm2")
-          assigned.write.mode("overwrite").parquet(s"$vecStore/b$batchId")
-          val store = s.read.option("recursiveFileLookup", "true").parquet(vecStore)
+          vecStore.put(batchId)(assigned.write.parquet(_))
+          val store = vecStore.read(s)
           val a = assigned.select(col("cell"), col("vec_id").as("na"),
             col("embedding").as("ea"), col("norm2").as("nna"))
           val b = store.select(col("cell"), col("vec_id").as("nb"),
@@ -1562,20 +1524,20 @@ object StreamShape {
           val newEdges = scored.select(col("na").as("u"), col("nb").as("v"), col("cos_sim"))
             .unionByName(scored.select(col("nb").as("u"), col("na").as("v"), col("cos_sim")))
             .distinct()
-          val prev = latestBefore(edgeDirs, batchId)
+          val prev = edges.latestBefore(batchId)
             .map(p => s.read.parquet(p))
             .getOrElse {
               import s.implicits._
               Seq.empty[(Long, Long, Double)].toDF("u", "v", "cos_sim")
             }
-          StockOps.perKeyTopK(prev.unionByName(newEdges).distinct(),
+          edges.put(batchId)(StockOps.perKeyTopK(prev.unionByName(newEdges).distinct(),
               Seq("u"), Seq(desc("cos_sim"), col("v")), SimilarityOps.KnnK)
             .select("u", "v", "cos_sim")
-            .write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
-          edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
+            .write.parquet(_))
         }
-        val finalEdges = s.read.parquet(latestBefore(edgeDirs, Long.MaxValue).get)
-        val firstEdges = s.read.parquet(edgeDirs.get(0L))
+        val entries = edges.allBefore(Long.MaxValue)
+        val finalEdges = s.read.parquet(entries.last)
+        val firstEdges = s.read.parquet(entries.head)
         // maintenance laws: a later (odd) vector entered an existing
         // (even) node's list, and displaced one of its batch-1 edges
         require(finalEdges.where(col("u") % 2 === 0 && col("v") % 2 === 1).count() > 0,
@@ -1649,10 +1611,11 @@ object StreamShape {
     // STREAMING DELETION PROPAGATION — p12's right-to-be-forgotten sweep
     // as a continuous process over the near-dup cluster space (exact-digest
     // duplicates don't exist below sf0.1; LSH clusters exist at every SF).
-    // Deletion requests arrive in waves and the cluster membership store +
-    // keep-list are maintained incrementally: per deletion batch, only the
-    // AFFECTED clusters (deletions ⋈ store — bounded by the batch, never a
-    // corpus rescan) re-elect their representative (min surviving doc_id).
+    // Deletion requests arrive in waves and the cluster membership store is
+    // maintained incrementally: each deletion batch anti-joins the prior
+    // entry (bounded by the batch, never a corpus rescan), and a cluster's
+    // representative is its min surviving doc_id, so a wave's re-elections
+    // and deaths read off the entries before and after it.
     // The staging makes every maintenance path load-bearing: wave 1
     // deletes every cluster's CURRENT representative (all must re-elect,
     // none may die — every cluster has ≥2 members), wave 2 deletes the
@@ -1663,9 +1626,7 @@ object StreamShape {
     // replay over d06's cluster CTEs.
     Q("x40_stream_deletions",
       (s, d) => {
-        val storeRoot = Artifacts.newDir("x40store")
-        val storeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-        val waveStats = new java.util.concurrent.ConcurrentHashMap[Long, (Long, Long)]()
+        val store = Drain.Store("x40store")
         val clusters = DedupOps.all.find(_.name == "d06_dedup_clusters").get.build(s, d)
           .localCheckpoint() // (doc_id, cluster); every cluster has ≥ 2 members
         val sizes = clusters.groupBy("cluster")
@@ -1685,42 +1646,34 @@ object StreamShape {
         Drain.batches("x40", feed, 3, "the two deletion waves were not separate") { (batch, batchId) =>
           val newMembers = batch.where(col("kind") === "add").select("doc_id", "cluster")
           val delIds = batch.where(col("kind") === "del").select("doc_id")
-          val prev = latestBefore(storeDirs, batchId)
+          val prev = store.latestBefore(batchId)
             .map(p => s.read.parquet(p))
             .getOrElse {
               import s.implicits._
               Seq.empty[(Long, Long)].toDF("doc_id", "cluster")
             }
-          val members = prev.unionByName(newMembers)
-          // re-election work is bounded by the deletion batch: only
-          // clusters a deleted id belongs to are touched
-          val affected = members.join(broadcast(delIds), Seq("doc_id"), "left_semi")
-            .select("cluster").distinct().localCheckpoint()
-          val oldReps = members.join(broadcast(affected), Seq("cluster"), "left_semi")
-            .groupBy("cluster").agg(min("doc_id").as("old_rep"))
-          val survivors = members.join(broadcast(delIds), Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-          val newReps = survivors.join(broadcast(affected), Seq("cluster"), "left_semi")
-            .groupBy("cluster").agg(min("doc_id").as("new_rep"))
-          val reelected = newReps.join(oldReps, Seq("cluster"))
-            .where(col("new_rep") =!= col("old_rep")).count()
-          val died = affected.count() - newReps.count()
-          waveStats.put(batchId, (reelected, died))
-          // per-batch-id store dirs: a retry overwrites its own
-          // partials instead of double-applying (the x33/d24 contract)
-          survivors.write.mode("overwrite").parquet(s"$storeRoot/b$batchId")
-          storeDirs.put(batchId, s"$storeRoot/b$batchId")
+          store.put(batchId)(prev.unionByName(newMembers)
+            .join(broadcast(delIds), Seq("doc_id"), "left_anti").write.parquet(_))
         }
-        val ks = waveStats.keySet().toArray.map(_.asInstanceOf[Long]).sorted
-        val (r1, d1) = waveStats.get(ks(ks.length - 2))
-        val (r2, d2) = waveStats.get(ks.last)
+        // a wave's laws, read off the entries before and after it: a
+        // cluster re-elected iff its min(doc_id) changed, died iff it
+        // vanished
+        def reps(p: String) = s.read.parquet(p).groupBy("cluster").agg(min("doc_id").as("rep"))
+        def wave(before: String, after: String): (Long, Long) = {
+          val (b, a) = (reps(before), reps(after).withColumnRenamed("rep", "rep_after"))
+          (b.join(a, "cluster").where(col("rep") =!= col("rep_after")).count(),
+            b.join(a, Seq("cluster"), "left_anti").count())
+        }
+        val Seq(added, afterWave1, afterWave2) = store.allBefore(Long.MaxValue).takeRight(3)
+        val (r1, d1) = wave(added, afterWave1)
+        val (r2, d2) = wave(afterWave1, afterWave2)
         require(r1 > 0, "wave 1 deleted every representative yet re-elected none")
         require(d1 == 0, "wave 1 killed a cluster — impossible, every cluster has ≥ 2 members")
         require(d2 > 0, "wave 2 killed no pair cluster")
         if (sizes.where(col("n_before") >= 3).count() > 0)
           require(r2 > 0,
             "a ≥3-member cluster lost its second representative without a second re-election")
-        val finalStore = s.read.parquet(storeDirs.get(ks.last))
+        val finalStore = s.read.parquet(afterWave2)
         val after = finalStore.groupBy("cluster")
           .agg(count(lit(1)).as("n_after"), min("doc_id").as("rep_after"))
         sizes.join(after, Seq("cluster"), "left")
@@ -1750,8 +1703,8 @@ object StreamShape {
 
     // STREAMING TOMBSTONE SERVE — sim41's deletion-aware ANN serve under a
     // LIVE deletion feed: tombstone waves arrive as micro-batches, the
-    // cumulative tombstone store is maintained across batches (per-batch-id
-    // parquet, the d24 idempotence contract), and the SAME static probe set
+    // cumulative tombstone store is maintained across batches (one
+    // Drain.Store entry per batch), and the SAME static probe set
     // is re-served after each wave through serveIvfIndexed — the answer a
     // user gets depends on every deletion seen so far, which a per-batch
     // rebuild that forgets wave 0's store cannot reproduce. Wave 0 is half
@@ -1764,10 +1717,8 @@ object StreamShape {
     // replay itself, so the pick rule is cross-engine-pinned too.
     Q("x41_stream_tombstone_serve",
       (s, d) => {
-        val tombRoot = Artifacts.newDir("x41tomb")
-        val outRoot = Artifacts.newDir("x41out")
-        val tombDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-        val outDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+        val tombs = Drain.Store("x41tomb")
+        val served = Drain.Store("x41out")
         val corpus = SimilarityOps.withNorm(s, d)
         val w0 = corpus.where(docHash(col("vec_id"), 40) === 0).select("vec_id")
           .localCheckpoint()
@@ -1780,23 +1731,20 @@ object StreamShape {
         val w1 = ph0.where(col("qid") === minQid && col("rk") === 1).select("vec_id")
         val feed = Drain.feed(s, "x41", w0, w1)
         Drain.batches("x41", feed, 2, "the cumulative tombstone store was not exercised") { (batch, batchId) =>
-          val prev = latestBefore(tombDirs, batchId)
+          val prev = tombs.latestBefore(batchId)
             .map(p => s.read.parquet(p))
             .getOrElse {
               import s.implicits._
               Seq.empty[Long].toDF("vec_id")
             }
-          prev.unionByName(batch.select("vec_id")).distinct()
-            .write.mode("overwrite").parquet(s"$tombRoot/b$batchId")
-          tombDirs.put(batchId, s"$tombRoot/b$batchId")
-          val cum = s.read.parquet(s"$tombRoot/b$batchId")
-          SimilarityOps.serveIvfIndexed(s, d, corpus, nProbes = 10,
+          val cum = s.read.parquet(tombs.put(batchId)(
+            prev.unionByName(batch.select("vec_id")).distinct().write.parquet(_)))
+          served.put(batchId)(SimilarityOps.serveIvfIndexed(s, d, corpus, nProbes = 10,
               tombstones = Some(cum))
             .withColumn("phase", lit(batchId).cast(IntegerType))
-            .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
-          outDirs.put(batchId, s"$outRoot/b$batchId")
+            .write.parquet(_))
         }
-        val out = s.read.option("recursiveFileLookup", "true").parquet(outRoot)
+        val out = served.read(s)
         val p0 = out.where(col("phase") === 0).select("qid", "vec_id", "rk")
         val p1 = out.where(col("phase") === 1).select("qid", "vec_id", "rk")
         require(p1.exceptAll(p0).count() > 0,
@@ -1893,38 +1841,36 @@ object StreamShape {
     // flag can know. It is carried as (source, text-digest, n) partial
     // counts: additive rows whose post-drain GROUP BY text-digest
     // recovers the global copy counts (the KMV/CMS mergeable-sketch
-    // discipline applied to a governance report). Partial writes are
-    // batchId-keyed overwrites (x33's retry-idempotence lesson).
+    // discipline applied to a governance report). Partials are Drain.Store
+    // entries, replaced on retry.
     Q("x43_stream_data_card",
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val scalarStore = Artifacts.newDir("x43sc")
-        val tkeyStore = Artifacts.newDir("x43tk")
+        val scalarStore = Drain.Store("x43sc")
+        val tkeyStore = Drain.Store("x43tk")
         val docs = Catalog.parquet(s, s"$d/documents.parquet")
         val feed = Drain.feed(s, "x43",
           (0 until 3).map(i => docs.where(pmod(col("doc_id"), lit(3L)) === i)): _*)
         val cont = DedupOps.contaminatedIds(s, d)
           .withColumn("is_cont", lit(true)).localCheckpoint()
         Drain.batches("x43", feed, 3, "partial merging was not exercised") { (batch, batchId) =>
-          TextOps.dataCardDocFlags(batch)
+          scalarStore.put(batchId)(TextOps.dataCardDocFlags(batch)
             .join(broadcast(cont), Seq("doc_id"), "left")
             .groupBy("source")
             .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"),
               count_if(coalesce(col("is_cont"), lit(false))).as("n_contaminated"),
               count_if(col("q_ok")).as("n_quality"))
-            .write.mode("overwrite").parquet(s"$scalarStore/b$batchId")
-          batch.groupBy(col("source"), md5(col("text")).as("tkey"))
+            .write.parquet(_))
+          tkeyStore.put(batchId)(batch.groupBy(col("source"), md5(col("text")).as("tkey"))
             .agg(count(lit(1)).as("n"))
             .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$tkeyStore/b$batchId")
+            .write.parquet(_))
         }
-        def store(dir: String) =
-          s.read.option("recursiveFileLookup", "true").parquet(dir)
-        val sc = store(scalarStore).groupBy("source")
+        val sc = scalarStore.read(s).groupBy("source")
           .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
             sum("n_contaminated").as("n_contaminated"),
             sum("n_quality").as("n_quality"))
-        val tk = store(tkeyStore).localCheckpoint()
+        val tk = tkeyStore.read(s).localCheckpoint()
         val bySrc = tk.groupBy("source", "tkey").agg(sum("n").as("n_in_source"))
         val tot = bySrc.groupBy("tkey").agg(sum("n_in_source").as("n_total"))
           .where(col("n_total") > 1).localCheckpoint()
@@ -2134,8 +2080,8 @@ object StreamShape {
     //     (w·(m_new div 3 − m_old div 3)), i.e. work ∝ |ΔE| + out-edges of
     //     changed nodes — at 100 TB the edge store would be bucketed by
     //     src so the changed-src probe prunes instead of scans.
-    // Levels materialize per batch into per-batch-id dirs (the x33 retry
-    // contract); correctness is ORDER-INDEPENDENT (each level's invariant
+    // Levels materialize per batch into one Drain.Store entry;
+    // correctness is ORDER-INDEPENDENT (each level's invariant
     // is restored exactly per batch), and the drained C_3 read-out must
     // land bit-for-bit on g01's replayed-3-iteration oracle. Two laws are
     // require()d in-flight: the correction path fired (a later batch
@@ -2145,10 +2091,8 @@ object StreamShape {
     Q("x47_stream_pagerank",
       (s, d) => {
         import GraphOps.{BaseMass, DampNum, OutDeg, Scale}
-        val edgeRoot = Artifacts.newDir("x47edges")
-        val cRoot = Artifacts.newDir("x47c")
-        val edgeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-        val cDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+        val edgeStore = Drain.Store("x47edges")
+        val cStore = Drain.Store("x47c")
         val corrections = new java.util.concurrent.atomic.AtomicLong(0)
         val properSubset = new java.util.concurrent.atomic.AtomicBoolean(false)
         val docs = Catalog.parquet(s, s"$d/documents.parquet").select("doc_id")
@@ -2157,11 +2101,11 @@ object StreamShape {
         Drain.batches("x47", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
           val dE = batch.groupBy("src", "dst").agg(count(lit(1)).as("w"))
             .localCheckpoint()
-          dE.write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
-          val oldEdgeDirs = priorDirs(edgeDirs, batchId)
+          edgeStore.put(batchId)(dE.write.parquet(_))
+          val oldEdgeDirs = edgeStore.allBefore(batchId)
           val oldEdges =
             if (oldEdgeDirs.isEmpty) None else Some(s.read.parquet(oldEdgeDirs: _*))
-          val prevCDir = latestBefore(cDirs, batchId)
+          val prevCDir = cStore.latestBefore(batchId)
           def prevC(k: Int): Option[org.apache.spark.sql.DataFrame] =
             prevCDir.map(p => s.read.parquet(s"$p/c$k"))
           def emptyC = {
@@ -2174,52 +2118,51 @@ object StreamShape {
             prev.join(delta, Seq("doc_id"), "full_outer")
               .select(col("doc_id"),
                 (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c"))
-          val newDir = s"$cRoot/b$batchId"
-          // ——— level 1: upstream mass is the CONSTANT m0 = Scale ———
-          val dC1 = dE.groupBy(col("dst").as("doc_id"))
-            .agg(sum(col("w") * lit(Scale / OutDeg)).as("dc"))
-          merge(prevC(1).getOrElse(emptyC), dC1)
-            .write.mode("overwrite").parquet(s"$newDir/c1")
-          // ——— levels 2..3: delta-propagate through the mass change ———
-          (2 to 3).foreach { k =>
-            val newUp = s.read.parquet(s"$newDir/c${k - 1}")
-            val oldUp = prevC(k - 1).getOrElse(emptyC)
-            // nodes whose upstream mass changed, with both masses
-            val changed = newUp.select(col("doc_id"), col("c").as("cn"))
-              .join(oldUp.select(col("doc_id"), col("c").as("co")),
-                Seq("doc_id"), "full_outer")
-              .select(col("doc_id").as("src"),
-                (lit(BaseMass) + expr(s"$DampNum * coalesce(cn, 0L) div 100")).as("mn"),
-                (lit(BaseMass) + expr(s"$DampNum * coalesce(co, 0L) div 100")).as("mo"))
-              .where(col("mn") =!= col("mo"))
-              .localCheckpoint()
-            val corr = oldEdges.map { oe =>
-              val c = oe.join(changed, "src")
-                .select(col("dst"),
-                  (col("w") * (expr(s"mn div $OutDeg") - expr(s"mo div $OutDeg"))).as("dc"))
+          cStore.put(batchId) { newDir =>
+            // ——— level 1: upstream mass is the CONSTANT m0 = Scale ———
+            val dC1 = dE.groupBy(col("dst").as("doc_id"))
+              .agg(sum(col("w") * lit(Scale / OutDeg)).as("dc"))
+            merge(prevC(1).getOrElse(emptyC), dC1)
+              .write.parquet(s"$newDir/c1")
+            // ——— levels 2..3: delta-propagate through the mass change ———
+            (2 to 3).foreach { k =>
+              val newUp = s.read.parquet(s"$newDir/c${k - 1}")
+              val oldUp = prevC(k - 1).getOrElse(emptyC)
+              // nodes whose upstream mass changed, with both masses
+              val changed = newUp.select(col("doc_id"), col("c").as("cn"))
+                .join(oldUp.select(col("doc_id"), col("c").as("co")),
+                  Seq("doc_id"), "full_outer")
+                .select(col("doc_id").as("src"),
+                  (lit(BaseMass) + expr(s"$DampNum * coalesce(cn, 0L) div 100")).as("mn"),
+                  (lit(BaseMass) + expr(s"$DampNum * coalesce(co, 0L) div 100")).as("mo"))
+                .where(col("mn") =!= col("mo"))
                 .localCheckpoint()
-              val touched = c.count()
-              corrections.addAndGet(touched)
-              if (k == 2 && touched < oe.count()) properSubset.set(true)
-              c
+              val corr = oldEdges.map { oe =>
+                val c = oe.join(changed, "src")
+                  .select(col("dst"),
+                    (col("w") * (expr(s"mn div $OutDeg") - expr(s"mo div $OutDeg"))).as("dc"))
+                  .localCheckpoint()
+                val touched = c.count()
+                corrections.addAndGet(touched)
+                if (k == 2 && touched < oe.count()) properSubset.set(true)
+                c
+              }
+              val add = dE.join(
+                  newUp.select(col("doc_id").as("src"), col("c")), Seq("src"), "left")
+                .select(col("dst"),
+                  (col("w") * expr(s"(($BaseMass + $DampNum * coalesce(c, 0L) div 100)) div $OutDeg")).as("dc"))
+              val dCk = corr.map(_.unionByName(add)).getOrElse(add)
+                .groupBy(col("dst").as("doc_id")).agg(sum("dc").as("dc"))
+              merge(prevC(k).getOrElse(emptyC), dCk)
+                .write.parquet(s"$newDir/c$k")
             }
-            val add = dE.join(
-                newUp.select(col("doc_id").as("src"), col("c")), Seq("src"), "left")
-              .select(col("dst"),
-                (col("w") * expr(s"(($BaseMass + $DampNum * coalesce(c, 0L) div 100)) div $OutDeg")).as("dc"))
-            val dCk = corr.map(_.unionByName(add)).getOrElse(add)
-              .groupBy(col("dst").as("doc_id")).agg(sum("dc").as("dc"))
-            merge(prevC(k).getOrElse(emptyC), dCk)
-              .write.mode("overwrite").parquet(s"$newDir/c$k")
           }
-          cDirs.put(batchId, newDir)
-          edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
         }
         require(corrections.get() > 0,
           "no earlier batch's edges were ever re-priced — the correction path was vacuous")
         require(properSubset.get(),
           "every batch touched the WHOLE old-edge store — delta propagation never pruned")
-        val finalDir = latestBefore(cDirs, Long.MaxValue).get
+        val finalDir = cStore.latestBefore(Long.MaxValue).get
         docs.join(s.read.parquet(s"$finalDir/c3"), Seq("doc_id"), "left")
           .select(col("doc_id"),
             (lit(BaseMass) + expr(s"$DampNum * coalesce(c, 0L) div 100"))
@@ -2257,9 +2200,8 @@ object StreamShape {
     // require()d non-vacuous.
     Q("x48_stream_triangles",
       (s, d) => {
-        val edgeRoot = Artifacts.newDir("x48edges")
-        val partRoot = Artifacts.newDir("x48parts")
-        val edgeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+        val edgeStore = Drain.Store("x48edges")
+        val parts = Drain.Store("x48parts")
         val oneNew = new java.util.concurrent.atomic.AtomicLong(0)
         val multiNew = new java.util.concurrent.atomic.AtomicLong(0)
         val und = GraphOps.linkEdgesShared(s, d).where(col("src") =!= col("dst"))
@@ -2273,8 +2215,8 @@ object StreamShape {
             .unionByName(e.select(col("v").as("a"), col("u").as("b")))
         Drain.batches("x48", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
           val dE = batch.localCheckpoint() // canonical u < v
-          dE.write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
-          val oldDirs = priorDirs(edgeDirs, batchId)
+          edgeStore.put(batchId)(dE.write.parquet(_))
+          val oldDirs = edgeStore.allBefore(batchId)
           val old = if (oldDirs.isEmpty) None else Some(s.read.parquet(oldDirs: _*))
           val dSym = sym(dE)
           // T1: the new edge is the triangle's LAST — both closing
@@ -2303,17 +2245,16 @@ object StreamShape {
             .reduce(_ unionByName _).localCheckpoint()
           oneNew.addAndGet(t1.map(_.count()).getOrElse(0L))
           multiNew.addAndGet(t2.map(_.count()).getOrElse(0L) + t3.count())
-          newTris
+          parts.put(batchId)(newTris
             .select(explode(array(col("u"), col("v"), col("w"))).as("doc_id"))
             .groupBy("doc_id").agg(count(lit(1)).as("c"))
-            .write.mode("overwrite").parquet(s"$partRoot/b$batchId")
-          edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
+            .write.parquet(_))
         }
         require(oneNew.get() > 0,
           "no triangle was ever closed through the edge store — the T1 probe path was vacuous")
         require(multiNew.get() > 0,
           "no triangle ever had 2+ edges in one delta — the T2/T3 paths were vacuous")
-        s.read.option("recursiveFileLookup", "true").parquet(partRoot)
+        parts.read(s)
           .groupBy("doc_id").agg(sum("c").as("n_tri"))
           .orderBy("doc_id")
       },
@@ -2351,12 +2292,9 @@ object StreamShape {
     // batch oracle. Correction path require()d non-vacuous.
     Q("x49_stream_assortativity",
       (s, d) => {
-        val edgeRoot = Artifacts.newDir("x49edges")
-        val degRoot = Artifacts.newDir("x49deg")
-        val sxyRoot = Artifacts.newDir("x49sxy")
-        val edgeDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-        val degDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-        val sxyDirs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+        val edgeStore = Drain.Store("x49edges")
+        val degs = Drain.Store("x49deg")
+        val sxys = Drain.Store("x49sxy")
         val corrections = new java.util.concurrent.atomic.AtomicLong(0)
         val und = GraphOps.linkEdgesShared(s, d).where(col("src") =!= col("dst"))
           .select(least(col("src"), col("dst")).as("u"),
@@ -2370,12 +2308,12 @@ object StreamShape {
         Drain.batches("x49", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
           import s.implicits._
           val dE = batch.localCheckpoint()
-          dE.write.mode("overwrite").parquet(s"$edgeRoot/b$batchId")
-          val oldDirs = priorDirs(edgeDirs, batchId)
-          val oldDeg = latestBefore(degDirs, batchId)
+          edgeStore.put(batchId)(dE.write.parquet(_))
+          val oldDirs = edgeStore.allBefore(batchId)
+          val oldDeg = degs.latestBefore(batchId)
             .map(p => s.read.parquet(p))
             .getOrElse(Seq.empty[(Long, Long)].toDF("node", "dg"))
-          val prevSxy = latestBefore(sxyDirs, batchId)
+          val prevSxy = sxys.latestBefore(batchId)
             .map(p => s.read.parquet(p).head().getLong(0)).getOrElse(0L)
           // degree delta of this batch's vertices, merged degree table
           val dd = sym(dE).groupBy(col("a").as("node"))
@@ -2383,8 +2321,7 @@ object StreamShape {
           val newDeg = oldDeg.join(dd, Seq("node"), "full_outer")
             .select(col("node"),
               (coalesce(col("dg"), lit(0L)) + coalesce(col("delta"), lit(0L))).as("dg"))
-          newDeg.write.mode("overwrite").parquet(s"$degRoot/b$batchId")
-          val ndg = s.read.parquet(s"$degRoot/b$batchId")
+          val ndg = s.read.parquet(degs.put(batchId)(newDeg.write.parquet(_)))
           // sxy correction on OLD edges: three inner joins vs Δd
           val corr: Long = if (oldDirs.isEmpty) 0L else {
             val oa = sym(s.read.parquet(oldDirs: _*))
@@ -2407,16 +2344,12 @@ object StreamShape {
             .join(ndg.select(col("node").as("a"), col("dg").as("da")), Seq("a"))
             .join(ndg.select(col("node").as("b"), col("dg").as("db")), Seq("b"))
             .agg(sum(col("da") * col("db"))).head().getLong(0)
-          Seq(prevSxy + corr + add).toDF("sxy")
-            .coalesce(1).write.mode("overwrite").parquet(s"$sxyRoot/b$batchId")
-          edgeDirs.put(batchId, s"$edgeRoot/b$batchId")
-          degDirs.put(batchId, s"$degRoot/b$batchId")
-          sxyDirs.put(batchId, s"$sxyRoot/b$batchId")
+          sxys.put(batchId)(Seq(prevSxy + corr + add).toDF("sxy").coalesce(1).write.parquet(_))
         }
         require(corrections.get() > 0,
           "no old edge was ever re-priced for a degree change — the correction path was vacuous")
-        val finalDeg = s.read.parquet(latestBefore(degDirs, Long.MaxValue).get)
-        val sxy = s.read.parquet(latestBefore(sxyDirs, Long.MaxValue).get).head().getLong(0)
+        val finalDeg = s.read.parquet(degs.latestBefore(Long.MaxValue).get)
+        val sxy = s.read.parquet(sxys.latestBefore(Long.MaxValue).get).head().getLong(0)
         finalDeg.agg(sum("dg").as("m"), sum(col("dg") * col("dg")).as("sx"),
             sum(col("dg") * col("dg") * col("dg")).as("sxx"))
           .select(col("m"), col("sx"), lit(sxy).as("sxy"),

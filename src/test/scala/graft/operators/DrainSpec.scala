@@ -1,10 +1,13 @@
 package graft.operators
 
+import java.nio.file.{Files, Path, Paths}
+
 import graft.SparkSpec
 
 /** The shared streaming drain: memory sinks leave no view behind, the
-  * fed-batch check still fails a drain that is too short, and no staging
-  * dir in the main or test sources bypasses the [[Artifacts]] reaper.
+  * fed-batch check still fails a drain that is too short, a [[Drain.Store]]
+  * keeps one replaceable entry per batch, found by listing, and no staging
+  * dir or cross-batch store in the main or test sources bypasses them.
   */
 class DrainSpec extends SparkSpec {
 
@@ -35,19 +38,56 @@ class DrainSpec extends SparkSpec {
     assert(memViews().isEmpty, s"a failed drain left its view behind: ${memViews()}")
   }
 
+  test("a Store entry is replaced on retry and found by listing, in batch order") {
+    import spark.implicits._
+    val store = Drain.Store("drainspec")
+    def put(id: Long, xs: Int*): String = store.put(id)(xs.toDF("x").write.parquet(_))
+    def entry(id: Long) = s"${store.root}/b$id"
+    put(0, 1, 2)
+    assert(put(0, 3) === entry(0)) // a retried batch 0
+    assert(rows(spark.read.parquet(entry(0))) === Seq("3"), "the retry must replace, not add")
+    put(2, 4) // batch 1 was empty and wrote no entry
+    assert(store.latestBefore(2) === Some(entry(0)))
+    assert(store.latestBefore(0) === None)
+    put(10, 5) // b10 sorts before b2 by name
+    assert(store.allBefore(Long.MaxValue) === Seq(entry(0), entry(2), entry(10)))
+    assert(store.allBefore(10) === Seq(entry(0), entry(2)))
+    assert(rows(store.read(spark)) === Seq("3", "4", "5"))
+    // a restarted query holds a new Store on the same root
+    val restarted = new Drain.Store(store.root)
+    assert(restarted.allBefore(Long.MaxValue) === store.allBefore(Long.MaxValue))
+    assert(rows(restarted.read(spark)) === Seq("3", "4", "5"))
+  }
+
+  private def scalaSources(dir: String): Seq[Path] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root), s"run from the repo root: $root not found")
+    val walk = Files.walk(root)
+    try walk.toArray.map(_.asInstanceOf[Path]).filter(_.toString.endsWith(".scala")).toSeq
+    finally walk.close()
+  }
+
   test("no main or test source creates a temp dir outside Artifacts") {
     val own = Set("Artifacts.scala", "DrainSpec.scala") // the reaper and this lint
-    val offenders = Seq("src/main/scala", "src/test/scala").flatMap { dir =>
-      val root = java.nio.file.Paths.get(dir)
-      assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root not found")
-      val walk = java.nio.file.Files.walk(root)
-      try walk.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(p => p.toString.endsWith(".scala") && !own(p.getFileName.toString))
-        .filter(p => java.nio.file.Files.readString(p).contains("createTempDirectory"))
-        .map(_.toString).toSeq
-      finally walk.close()
-    }
+    val offenders = (scalaSources("src/main/scala") ++ scalaSources("src/test/scala"))
+      .filter(p => !own(p.getFileName.toString))
+      .filter(p => Files.readString(p).contains("createTempDirectory"))
+      .map(_.toString)
     assert(offenders.isEmpty,
       s"staging dirs must come from Artifacts.newDir (reaped at exit): $offenders")
+  }
+
+  test("StreamShape keeps its cross-batch state in Drain.Store") {
+    // an append store doubles a retried batch, and a driver-side index
+    // forgets every entry on restart
+    val shape = Files.readString(Paths.get("src/main/scala/graft/operators/StreamShape.scala"))
+    val banned = Seq("ConcurrentHashMap[Long", "def latestBefore", "def priorDirs",
+      "mode(\"append\")", "recursiveFileLookup")
+    assert(banned.filter(shape.contains).isEmpty, "StreamShape must use Drain.Store")
+    // a recursive read of per-batch dirs belongs to Drain (its feed and Store.read)
+    val recursive = scalaSources("src/main/scala")
+      .filter(p => Files.readString(p).contains("recursiveFileLookup"))
+      .map(_.getFileName.toString)
+    assert(recursive === Seq("Drain.scala"))
   }
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.Artifacts
+import graft.operators.{Artifacts, Drain}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -11,7 +12,9 @@ import scala.jdk.CollectionConverters._
   * against a LONGER chain, and require exactly-once block coverage across
   * the two runs. This is durability the reference does not have at all —
   * its subscriptions restart from scratch on reconnect (SURVEY §3.2) —
-  * and it closes the §8.3 duplicate window.
+  * and it closes the §8.3 duplicate window. The same holds for a
+  * foreachBatch query's [[Drain.Store]]: a restarted or re-executed batch
+  * chains from the entries its earlier lives wrote.
   */
 class CheckpointRecoverySpec extends SparkSpec {
 
@@ -68,6 +71,42 @@ class CheckpointRecoverySpec extends SparkSpec {
     runOnce(ckpt, out, head = 2500) // life 2 reads them, writes none
     assert(crcs() === life1Crcs)
     assertExactlyOnce(out)
+  }
+
+  test("a Drain.Store running total survives a restart and a re-executed batch") {
+    import spark.implicits._
+    val parts = Seq((1L to 5L).toDF("x"), (6L to 9L).toDF("x"))
+    /** One life: each batch stores its rows with the running total so far.
+      * Returns the store's rows and the ids of the batches this life fed.
+      */
+    def life(feedDir: String, ckpt: String, store: Drain.Store): (Seq[String], Seq[Long]) = {
+      val feed = Drain.read(spark, feedDir, parts.head.schema)
+      val sq = Drain.run(spark, "ckptstore", ckpt, feed.writeStream.foreachBatch {
+        (b: DataFrame, id: Long) =>
+          val prev = store.latestBefore(id)
+            .map(spark.read.parquet(_).agg(max("total")).head().getLong(0)).getOrElse(0L)
+          val total = prev + b.agg(sum("x")).head().getLong(0)
+          store.put(id)(b.withColumn("total", lit(total)).write.parquet(_))
+          ()
+      })
+      (store.read(spark).collect().map(_.mkString("|")).toSeq.sorted,
+        sq.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq)
+    }
+    val (single, _) = life(Drain.stage("ckptstore", parts: _*),
+      Artifacts.newDir("ckptstore_ckpt"), Drain.Store("ckptstore"))
+    assert(single === ((1 to 5).map(x => s"$x|15") ++ (6 to 9).map(x => s"$x|45")).sorted)
+
+    val feedDir = Drain.stage("ckptstore", parts.head)
+    val ckpt = Artifacts.newDir("ckptstore_ckpt")
+    val root = Drain.Store("ckptstore").root
+    assert(life(feedDir, ckpt, new Drain.Store(root)) === (single.filter(_.endsWith("|15")), Seq(0L)))
+    parts(1).coalesce(1).write.parquet(s"$feedDir/b1")
+    // life 2: a new Store object, as a restarted JVM would hold
+    assert(life(feedDir, ckpt, new Drain.Store(root)) === (single, Seq(1L)))
+    // batch 1 ran but its commit was lost: it re-executes and replaces b1
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "1"))
+    assert(life(feedDir, ckpt, new Drain.Store(root)) === (single, Seq(1L)))
+    assert(new Drain.Store(root).allBefore(Long.MaxValue).map(_.split('/').last) === Seq("b0", "b1"))
   }
 
   test("LOCF ValueState survives a restart: life 2 fills from life 1's state") {
