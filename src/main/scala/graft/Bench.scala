@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.{Artifacts, Catalog, Drain}
 
 /** Headline benchmark: runs the bench-marked catalog queries on
@@ -18,16 +17,7 @@ import graft.operators.{Artifacts, Catalog, Drain}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.streaming.LocalCheckpointFileManager.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(defaultCpus = 32)
 
     // dev aid: GRAFT_BENCH_ONLY=q1,q2 restricts the run for iteration
     // an empty/blank value means "no filter", not "match nothing"

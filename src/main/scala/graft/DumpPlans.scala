@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.Catalog
 
 /** Dev tooling: regenerate PLANS.md — formatted physical plans of the
@@ -82,16 +81,9 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(defaultCpus = 32)
     val sb = new StringBuilder
-    sb ++= s"# PLANS — physical plans of headline queries ($sfDir, local[$cpus])\n\n"
+    sb ++= s"# PLANS — physical plans of headline queries ($sfDir, ${spark.sparkContext.master})\n\n"
     sb ++= "Generated by `sbt \"runMain graft.DumpPlans <sfDir> PLANS.md\"` from " +
       "`queryExecution.explainString(FormattedMode)`.\n"
     // GRAFT_PLANS_ONLY accepts ANY catalog query name (not just the

@@ -17,6 +17,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Catalog.byName("a07_group_count").build(spark, "/root/testdata/sf0.001")
 
+  /** The local session Bench, Verify and DumpPlans run on: `local[cpus]`
+    * with `cpus` shuffle partitions, UTC, no UI, WARN logging and the
+    * fork-free [[graft.streaming.LocalCheckpointFileManager]].
+    * `SPARK_GRAFT_CPUS` overrides each main's `defaultCpus`.
+    */
+  def localSession(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    graft.streaming.LocalCheckpointFileManager.install(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Catalog.all.map(q => q.name -> q.build).toMap

@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import graft.operators.Catalog
+import graft.operators.{Artifacts, Catalog}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -162,28 +162,13 @@ object Verify {
           !Seq(ChainDumpDir, SigDumpDir).contains(p.toString) &&
           Files.getLastModifiedTime(p).toMillis < cutoff
       } finally st.close()
-    stale.foreach { root =>
-      try {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      } catch { case _: Throwable => () }
-    }
+    stale.foreach(Artifacts.deleteRecursively)
   } catch { case _: Throwable => () }
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     reapStaleDumps()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.streaming.LocalCheckpointFileManager.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -287,7 +272,7 @@ object Verify {
         val sess = spark.newSession()
         // explicit per-worker confs: newSession starts from the context
         // conf, not the parent session's mutations
-        sess.conf.set("spark.sql.shuffle.partitions", cpus)
+        sess.conf.set("spark.sql.shuffle.partitions", spark.conf.get("spark.sql.shuffle.partitions"))
         sess.conf.set("spark.sql.session.timeZone", "UTC")
         // defensive: a fresh session has an empty graft function registry;
         // queries register what they use, but any future query that forgets

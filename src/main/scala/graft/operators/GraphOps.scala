@@ -111,30 +111,25 @@ object GraphOps {
                        CAST($BaseMass + ($DampNum * COALESCE(g.s, 0)) // 100 AS BIGINT) AS mass
                 FROM documents d LEFT JOIN g$i g USING (doc_id))"""
 
-  /** Node count: one bounded driver-side COUNT (a 1-value artifact, the
-    * trainedCentroids convention) — it parameterizes the edge modulus.
-    * Memoized per (JVM, sfDir): every graph query needs it, and each was
-    * paying its own count() action per build.
+  /** Node count: one bounded driver-side COUNT (a 1-value artifact) — it
+    * parameterizes the edge modulus. An [[Artifacts.memo]]: every graph
+    * query needs it, and each was paying its own count() action per build.
     */
-  private val nodeCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def nodeCount(s: SparkSession, d: String): Long =
-    nodeCounts.computeIfAbsent(d, _ => t(s, d, "documents").count())
+    Artifacts.memo("graft_nodecount", d)(t(s, d, "documents").count())
 
-  /** The derived edge table materialized once per (JVM, sfDir) — the
-    * ensureDayGrid convention. Every graph query (g01–g13, x47–x49's
-    * static sides) starts from the SAME [[linkEdges]] derivation, and each
+  /** The derived edge table, an [[Artifacts.shared]] dir. Every graph
+    * query (g01–g13, x47–x49's static sides) starts from the SAME
+    * [[linkEdges]] derivation, and each
     * previously re-derived it in every plan branch (g03's wedge join
     * planned the md5 edge subplan three times over). One narrow (src, dst)
     * parquet write; readers pay a bounded scan instead of a re-derivation.
     */
-  private val linkEdgeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def linkEdgesShared(s: SparkSession, d: String): DataFrame =
-    Catalog.parquet(s, linkEdgeDirs.computeIfAbsent(d, _ => Artifacts.build("graft_linkedges") { dir =>
+    Catalog.parquet(s, Artifacts.shared("graft_linkedges", d) { dir =>
       linkEdges(t(s, d, "documents"), nodeCount(s, d))
         .write.mode("overwrite").parquet(dir)
-    }))
+    })
 
   /** g08's propagated labels (doc_id, label-or-NULL after [[LpRounds]]
     * min-label rounds from the every-[[LpSeedMod]]-th seeds) — shared by

@@ -79,21 +79,19 @@ object SimilarityOps {
   val ProbePairsMax = 50
 
   /** Shared brute-force pair scores (qid, vec_id, cos_sim) at
-    * [[ProbePairsMax]], memoized per (JVM, sfDir) — the ensureDayGrid /
-    * trainedCentroids convention. ~15 catalog queries (exact baselines,
-    * recall truths, MMR/kNN pools) each re-derived this identical
-    * probe×corpus scan per run; materializing it once replaces those with
-    * one build + bounded parquet reads. Narrow columns only: the artifact
+    * [[ProbePairsMax]], an [[Artifacts.shared]] dir. ~15 catalog queries
+    * (exact baselines, recall truths, MMR/kNN pools) each re-derived this
+    * identical probe×corpus scan per run; materializing it once replaces
+    * those with one build + bounded parquet reads. Narrow columns only: the artifact
     * is O(probes·corpus) rows with no vectors; callers that need
     * embeddings join the base table themselves.
     */
-  private val probePairDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ensureProbePairs(s: SparkSession, d: String): String =
-    probePairDirs.computeIfAbsent(d, _ => Artifacts.build("graft_probepairs") { dir =>
+    Artifacts.shared("graft_probepairs", d) { dir =>
       probePairs(s, d, ProbePairsMax)
         .select("qid", "vec_id", "cos_sim")
         .write.mode("overwrite").parquet(dir)
-    })
+    }
 
   /** [[probePairs]]' (qid, vec_id, cos_sim) slice for any probe block ≤
     * [[ProbePairsMax]], served from the shared artifact; bit-identical to
@@ -222,19 +220,16 @@ object SimilarityOps {
     * silent cell collapse can never ship a wrong-but-plausible result).
     */
   def trainedCentroids(s: SparkSession, d: String, iters: Int): Array[(Array[Double], Long)] =
-    // memoized per (sfDir, iters): one Verify/Bench session builds
-    // sim07/sim08/sim09/sim10/sim11/x12/p03 from the same training —
-    // train once, not once per query (centroids depend only on the data)
-    trainedCache.computeIfAbsent((d, iters), _ => {
+    // one Verify/Bench session builds sim07/sim08/sim09/sim10/sim11/x12/p03
+    // from the same training: train once per (sfDir, iters), not once per
+    // query (centroids depend only on the data)
+    Artifacts.memo("graft_kmeans", (d, iters)) {
       val corpus = withNorm(s, d)
       var cents = ivfCentroids(corpus)
       for (_ <- 1 to iters)
         cents = centroidsFrom(lloydSums(corpus, cents).collect())
       cents
-    })
-
-  private val trainedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Array[(Array[Double], Long)]]()
+    }
 
   /** Lloyd to the assignment FIXPOINT: iterate until the per-(cell, dim)
     * exact sums repeat. The sums determine the centroids and the centroids
@@ -291,15 +286,11 @@ object SimilarityOps {
     * index: a search probing `IvfProbe` cells reads ONLY those
     * directories (static partition pruning — at 100 TB, 4/16ths of the
     * corpus touched per query instead of a full scan, and finer cell
-    * granularity prunes proportionally more). Memoized so repeated builds
-    * (Verify, PlanAudit, specs) write once per JVM.
+    * granularity prunes proportionally more). An [[Artifacts.warehouse]],
+    * so repeated builds (Verify, PlanAudit, specs) write once per JVM.
     */
-  private val ivfDbs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def ensureIvfIndex(s: SparkSession, d: String): String =
-    ivfDbs.computeIfAbsent(d, _ => {
-      val db = s"graft_ivf_${Catalog.pathTag(d)}"
-      val loc = Artifacts.newDir("graft_ivf")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
+    Artifacts.warehouse(s, "graft_ivf", d) { (db, loc) =>
       val cents = trainedCentroids(s, d, iters = 2)
       import s.implicits._
       cents.zipWithIndex
@@ -310,8 +301,7 @@ object SimilarityOps {
       assignCells(withNorm(s, d), cents)
         .write.mode("overwrite").partitionBy("cell")
         .option("path", s"$loc/corpus_ivf").saveAsTable(s"$db.corpus_ivf")
-      db
-    })
+    }
 
   /** Serve a bounded query-vector batch against the PERSISTED trained IVF
     * index: probe cells per query, a statically cell-pruned index scan
@@ -680,12 +670,12 @@ object SimilarityOps {
     * regardless of corpus size) collected and re-broadcast. Mean =
     * floor-scaled integer sum / (n·1e15) in IEEE double (the
     * centroidsFrom convention, mirrored term-for-term in the oracle); a
-    * codeword with no assignees keeps its previous vector. Memoized per
-    * (sfDir, iters).
+    * codeword with no assignees keeps its previous vector. Trained once
+    * per (sfDir, iters).
     */
   def pqTrainedCodebook(s: SparkSession, d: String, iters: Int): DataFrame = {
     import s.implicits._
-    pqTrainedCache.computeIfAbsent((d, iters), _ => {
+    Artifacts.memo("graft_pq_codebook", (d, iters)) {
       var cur: Seq[(Long, Int, Seq[Double])] = pqCodebook(s, d).collect().toSeq
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).map(_.toDouble)))
       for (_ <- 1 to iters) {
@@ -709,10 +699,8 @@ object SimilarityOps {
         }
       }
       cur
-    }).toDF("code", "subspace", "cvec")
+    }.toDF("code", "subspace", "cvec")
   }
-  private val pqTrainedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(Long, Int, Seq[Double])]]()
 
   /** The 10 probes' per-(subspace, codeword) ADC lookup tables under the
     * seed codebook (qid, subspace, code, pdist) — 8×16 integer rows per
@@ -728,30 +716,26 @@ object SimilarityOps {
 
   /** Per-(probe, vector) ADC distances under the seed codebook: the probe
     * 8×16 LUT (broadcast) + the integer lookup-sum over each vector's
-    * codes — shared by sim16 (search) and sim19 (rerank candidates).
+    * codes, an [[Artifacts.shared]] dir: sim16, sim19 and sim28 all start
+    * from this identical encode+LUT join.
     */
-  /** Memoized per (JVM, sfDir) — the ensureDayGrid convention: sim16,
-    * sim19 and sim28 all start from this identical encode+LUT join, and
-    * each previously re-ran it per query.
-    */
-  private val pqAdcDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def pqAdcScores(s: SparkSession, d: String): DataFrame =
-    Catalog.parquet(s, pqAdcDirs.computeIfAbsent(d, _ => Artifacts.build("graft_pqadc") { dir =>
+    Catalog.parquet(s, Artifacts.shared("graft_pqadc", d) { dir =>
       pqEncoded(s, d).select("vec_id", "subspace", "code")
         .join(broadcast(pqAdcLut(s, d)), Seq("subspace", "code"))
         .where(col("vec_id") =!= col("qid"))
         .groupBy("qid", "vec_id")
         .agg(sum(col("pdist")).as("adc_dist"))
         .write.mode("overwrite").parquet(dir)
-    }))
+    })
 
   /** Exact full-vector scaled-L2 top-3 per probe (the sim01 bounded
     * brute-force shape) — the ground truth shared by sim17 and sim19.
     */
   def pqL2Truth(s: SparkSession, d: String): DataFrame =
-    // memoized per (JVM, sfDir): FIVE recall queries (sim17/19/21/27/28)
-    // grade against this same exact-L2 truth — one brute-force pass
-    Catalog.parquet(s, pqTruthDirs.computeIfAbsent(d, _ => Artifacts.build("graft_pqtruth") { dir =>
+    // FIVE recall queries (sim17/19/21/27/28) grade against this same
+    // exact-L2 truth — one brute-force pass
+    Catalog.parquet(s, Artifacts.shared("graft_pqtruth", d) { dir =>
       val emb = t(s, d, "embeddings")
       val probes = emb.where(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -761,8 +745,7 @@ object SimilarityOps {
       StockOps.perKeyTopK(pairs, Seq("qid"), Seq(col("l2"), col("vec_id")), 3)
         .select("qid", "vec_id")
         .write.mode("overwrite").parquet(dir)
-    }))
-  private val pqTruthDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    })
 
   /** Oracle CTEs for the PQ family: codebook (`cb`), subvectors (`sub`),
     * all (vector, subspace, codeword) distances (`scored`), and the argmin

@@ -2232,24 +2232,19 @@ object StockOps {
       .orderBy("user_id")
   }
 
-  /** Per-JVM, per-sfDir bucketed warehouse for c31: lineitem and orders
-    * written `bucketBy(8, l_orderkey)` + in-bucket sorted into a temp-dir
-    * database — the one-time organization cost that buys every subsequent
-    * join on the key a shuffle-free plan. Memoized so repeated builds
-    * (Verify, PlanAudit, specs) write once per JVM.
+  /** Bucketed warehouse for c31: lineitem and orders written
+    * `bucketBy(8, l_orderkey)` + in-bucket sorted into an
+    * [[Artifacts.warehouse]] database — the one-time organization cost that
+    * buys every subsequent join on the key a shuffle-free plan, written
+    * once per JVM however often Verify, PlanAudit and the specs build c31.
     */
-  private val bucketedDbs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ensureBucketed(s: org.apache.spark.sql.SparkSession, d: String): String =
-    bucketedDbs.computeIfAbsent(d, _ => {
-      val db = s"graft_bkt_${Catalog.pathTag(d)}"
-      val loc = Artifacts.newDir("graft_bkt")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
+    Artifacts.warehouse(s, "graft_bkt", d) { (db, loc) =>
       t(s, d, "lineitem")
         .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$loc/li_bucketed").saveAsTable(s"$db.li_bucketed")
       t(s, d, "orders").withColumnRenamed("o_orderkey", "l_orderkey")
         .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$loc/ord_bucketed").saveAsTable(s"$db.ord_bucketed")
-      db
-    })
+    }
 }

@@ -108,18 +108,17 @@ object TemporalOps {
     */
   val DayUs = 86400000000L
 
-  /** Per-JVM, per-sfDir materialization of the subplan r04 and r10 SHARE:
+  /** The [[Artifacts.shared]] materialization of the subplan r04 and r10 SHARE:
     * the per-user daily purchase grid — `idx` (the dense min..max day grid
     * left-joined to observations, with the prefix-summed observation index)
     * and `ranked` (each observation's rank among its user's observations).
     * Both queries regularize the same series; building the grid + two
     * two-phase prefix sums once and reading the parquet back saves each a
-    * full pass (the trainedCentroids/ensureBucketed convention — at scale
-    * the regularized grid IS the artifact a pipeline materializes once).
+    * full pass (at scale the regularized grid IS the artifact a pipeline
+    * materializes once).
     */
-  private val dayGridDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ensureDayGrid(s: org.apache.spark.sql.SparkSession, d: String): String =
-    dayGridDirs.computeIfAbsent(d, _ => Artifacts.build("graft_daygrid") { dir =>
+    Artifacts.shared("graft_daygrid", d) { dir =>
       val obs = t(s, d, "events").where(col("event_type") === "purchase")
         .select(col("user_id"), expr(s"unix_micros(ts) div $DayUs").as("day"), col("value"))
         .groupBy("user_id", "day").agg(dsum(col("value")).as("obs_val"))
@@ -139,7 +138,7 @@ object TemporalOps {
         .select(col("user_id"), col("day"), col("obs_val"),
           col("obs_idx").as("rk"))
         .write.mode("overwrite").parquet(s"$dir/ranked")
-    })
+    }
 
   /** Per-shard OHLC bar PARTIALS for (event_type, bucket): open/close as
     * min/max over the TOTAL (us, event_id, value) struct order —
@@ -597,7 +596,7 @@ object TemporalOps {
     Q("r10_linear_interp",
       (s, d) => {
         // Shared-artifact build — see r04: idx and ranked are the
-        // memoized per-(JVM, sfDir) materialization of the common grid.
+        // the shared ensureDayGrid materialization of the common grid.
         // ONE ranked-observation pass serves both brackets: prev = rank
         // obs_idx, next = rank obs_idx + 1 − is_obs (an observed row IS
         // its own next bracket; the grid ends on an observation, so the

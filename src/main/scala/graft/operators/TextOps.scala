@@ -99,11 +99,12 @@ object TextOps {
     * (count desc, pair asc — deterministic), and a map-only symbol-string
     * rewrite. Returns the learned merge table — the trained artifact,
     * driver-sized by construction like [[SimilarityOps.trainedCentroids]],
-    * and memoized the same way (t25 trains it, t26 applies it).
+    * and trained once per (sfDir, iters) the same way (t25 trains it, t26
+    * applies it).
     */
   def bpeTrainedMerges(s: SparkSession, d: String,
       iters: Int): Seq[(Int, String, String, String, Long)] =
-    bpeCache.computeIfAbsent((d, iters), _ => {
+    Artifacts.memo("graft_bpe", (d, iters)) {
       var words = bpeWords(s, d).localCheckpoint()
       val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
       for (i <- 1 to iters) {
@@ -121,9 +122,7 @@ object TextOps {
           replace(col("sym"), lit(BM + l + BM + BM + r + BM), lit(BM + l + r + BM)))
       }
       merges.toSeq
-    })
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), Seq[(Int, String, String, String, Long)]]()
+    }
 
   def bpeMerges(s: SparkSession, d: String, iters: Int): DataFrame = {
     import s.implicits._
@@ -228,16 +227,15 @@ object TextOps {
     bg.join(counts, Seq("w1", "w2"))
   }
 
-  /** The corpus bigram table (doc_id, w1, w2), memoized per (JVM, sfDir)
-    * — the ensureDayGrid convention. t30 (fluency) and t38 (surprisal)
-    * derive ALL their statistics from this one positional-bigram explode,
+  /** The corpus bigram table (doc_id, w1, w2), an [[Artifacts.shared]]
+    * dir. t30 (fluency) and t38 (surprisal) derive ALL their statistics
+    * from this one positional-bigram explode,
     * and each previously replanned the tokenize + lambda explode in three
     * plan branches (bg, c2, c1). One narrow parquet write; both queries'
     * count tables and per-doc joins read it back.
     */
-  private val bigramDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def bigramsShared(s: SparkSession, d: String): DataFrame =
-    Catalog.parquet(s, bigramDirs.computeIfAbsent(d, _ => Artifacts.build("graft_bigrams") { dir =>
+    Catalog.parquet(s, Artifacts.shared("graft_bigrams", d) { dir =>
       val dt = t(s, d, "documents")
         .select(col("doc_id"),
           filter(tokens(col("text")), x => length(x) > 0).as("toks"))
@@ -248,7 +246,7 @@ object TextOps {
               element_at(col("toks"), i + 2).as("w2")))).as("p"))
         .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
         .write.mode("overwrite").parquet(dir)
-    }))
+    })
 
   val all: Seq[Q] = Seq(
     // Token counting: whitespace tokens + a BPE-ish regex token count.

@@ -154,7 +154,13 @@ class CatalogParquetSpec extends SparkSpec {
   test("no main source reads a fixture table or a memoized artifact outside Catalog") {
     // a plain read of either brings the per-read schema-inference job back
     val fixtureRead = raw"""read\.parquet\(s"\$$[^"]*/\w+\.parquet"\)""".r
-    val memoRead = raw"""read\.parquet\(\w+\.computeIfAbsent\(""".r
+    // an Artifacts.shared dir, or an ensure* one (ensureDayGrid, …), read
+    // directly or through an interpolated subdir
+    val memoRead = raw"""read\.parquet\((?:s"\$$\{)?(?:Artifacts\.shared|ensure\w+)\(""".r
+    Seq("""s.read.parquet(Artifacts.shared("graft_x", d) { dir =>""",
+        """s.read.parquet(ensureProbePairs(s, d))""",
+        """s.read.parquet(s"${ensureDayGrid(s, d)}/idx")""")
+      .foreach(shape => assert(memoRead.findFirstIn(shape).isDefined, shape))
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: $root not found")
     val walk = Files.walk(root)
