@@ -33,7 +33,8 @@ object Verify {
 
   /** Materialize the deterministic synthetic chain (seed 42, the connector's
     * default) as parquet, WITHOUT going through the DSv2 read path: rows come
-    * straight from SyntheticRpc's pure functions on the driver, so the dump
+    * straight from SyntheticRpc's pure functions (over a plain range, not a
+    * `graft-eth` scan), so the dump
     * is an independent ground truth for the connector's scan machinery
     * (chunked partitions, pushdown, bisection). totalDifficulty is decoded
     * with BigInteger — independent of the HexToDecimal kernel too.
@@ -49,8 +50,11 @@ object Verify {
   def dumpSyntheticChain(spark: SparkSession): Unit = {
     import spark.implicits._
     val rpc = new graft.sources.SyntheticRpc(42L, 10000L)
-    val logs = (0L to 2999L).flatMap(b => (0 until rpc.logsInBlock(b)).map(i => rpc.logAt(b, i)))
-    logs.toDF().coalesce(1).write.mode("overwrite").parquet(s"$ChainDumpDir/logs.parquet")
+    // the ~10k logs are generated inside the one write task (a driver-side
+    // Seq would ship them in that task's closure, ~6 MB)
+    spark.range(0L, 3000L, 1L, 1).as[Long]
+      .flatMap(b => (0 until rpc.logsInBlock(b)).map(i => rpc.logAt(b, i)))
+      .toDF().write.mode("overwrite").parquet(s"$ChainDumpDir/logs.parquet")
     // the delivered event stream of the reorg-mode chain (appends +
     // removed=true retractions + replacements), straight from SyntheticRpc's
     // pure functions on the driver — ground truth for x16's streamed path

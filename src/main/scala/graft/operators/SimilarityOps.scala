@@ -49,26 +49,170 @@ object SimilarityOps {
 
   val sqlNorm2 =
     "CAST(list_sum(list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e15) AS BIGINT))) AS BIGINT)"
-  val sqlDot = // a, b list columns
-    "CAST(list_sum(list_transform(a.embedding, (x, i) -> CAST(FLOOR(CAST(x AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE) * 1e15) AS BIGINT))) AS BIGINT)"
 
-  /** Brute-force cosine pairs of probe vectors (vec_id < nProbes) × corpus.
-    * The probe side is tiny → Spark broadcasts it; the corpus side streams:
-    * no shuffle, scales linearly with corpus size across executors.
+  /** [[scaledDot]]'s oracle mirror over the `embedding` lists of two
+    * aliased rows.
     */
-  def probePairs(s: SparkSession, d: String, nProbes: Int): DataFrame = {
-    val corpus = withNorm(s, d)
-    val probes = corpus.where(col("vec_id") < nProbes)
+  def sqlDotOf(a: String, b: String): String =
+    s"CAST(list_sum(list_transform($a.embedding, (x, i) -> CAST(FLOOR(CAST(x AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE) * 1e15) AS BIGINT))) AS BIGINT)"
+
+  // ——— The search-and-recall kit ———
+  //
+  // Every sim query ranks, scores and grades through these pieces, one set
+  // per engine. The Spark side and the DuckDB side share no code, so each
+  // oracle stays an independent statement of the same conventions:
+  //   rank order  — per probe (`qid`), higher cos_sim first, ties to the
+  //                 lower vec_id (distances: lower first, same tie-break);
+  //   exact score — floor-scaled integer dot, cosine over the two norms;
+  //   truth       — the exact top-k over the probe×corpus pairs;
+  //   recall      — an answer row is a hit iff the truth holds its
+  //                 (qid, vec_id) pair.
+
+  /** Probe rows of a (vec_id, embedding, norm2) frame: vec_id < nProbes as
+    * (qid, qvec, qnorm2).
+    */
+  def probesOf(corpus: DataFrame, nProbes: Int): DataFrame =
+    corpus.where(col("vec_id") < nProbes)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("norm2").as("qnorm2"))
-    corpus.join(broadcast(probes), col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim", cosine(scaledDot(col("qvec"), col("embedding")), col("qnorm2"), col("norm2")))
+
+  /** The exact score: `cos_sim` of each row's probe (qvec, qnorm2) against
+    * its candidate (embedding, norm2).
+    */
+  def withCos(pairs: DataFrame): DataFrame =
+    pairs.withColumn("cos_sim",
+      cosine(scaledDot(col("qvec"), col("embedding")), col("qnorm2"), col("norm2")))
+
+  /** Exact-cosine scoring of (qid, vec_id) candidates: each candidate's
+    * vector from `corpus`, its probe from the bounded, broadcast `probes`
+    * block ([[probesOf]]).
+    */
+  def rerank(candidates: DataFrame, corpus: DataFrame, probes: DataFrame): DataFrame =
+    withCos(candidates.join(corpus, "vec_id").join(broadcast(probes), "qid"))
+
+  /** Every probe of `corpus` against every other vector, scored. The probe
+    * side is tiny → Spark broadcasts it; the corpus side streams: no
+    * shuffle, scales linearly with corpus size across executors.
+    */
+  def pairsOf(corpus: DataFrame, nProbes: Int): DataFrame =
+    withCos(corpus.join(broadcast(probesOf(corpus, nProbes)), col("vec_id") =!= col("qid")))
+
+  /** Per-probe top-`k` of scored (qid, vec_id, `score`) rows — the
+    * two-phase [[StockOps.perKeyTopK]] — ranked by `score` (higher first,
+    * or lower first if `ascending`), ties to the lower vec_id; projected to
+    * (qid, vec_id, score, `rank`).
+    */
+  def topK(scored: DataFrame, k: Int, score: String = "cos_sim",
+      ascending: Boolean = false, rank: String = "rk"): DataFrame =
+    StockOps.perKeyTopK(scored, Seq("qid"),
+        Seq(if (ascending) col(score) else desc(score), col("vec_id")), k, rank)
+      .select("qid", "vec_id", score, rank)
+
+  /** The exact brute-force truth: each of the first `nProbes` probes' top-`k`
+    * (qid, vec_id) by cosine over the whole corpus.
+    */
+  def bruteTruth(s: SparkSession, d: String, nProbes: Int, k: Int): DataFrame =
+    topK(probePairsShared(s, d, nProbes), k).select("qid", "vec_id")
+
+  /** The grader of answer sets against one truth, both (qid, vec_id): it
+    * counts the truth once, then gives each answer set its (n_truth, n_hit,
+    * recall), where n_hit counts the answer rows the truth holds (a
+    * `left_semi` join) and recall = n_hit / n_truth.
+    */
+  def recallOf(truth: DataFrame): DataFrame => (Long, Long, Double) = {
+    val total = truth.count()
+    ann => {
+      val hits = ann.select("qid", "vec_id").join(truth, Seq("qid", "vec_id"), "left_semi").count()
+      (total, hits, hits.toDouble / total)
+    }
   }
+
+  /** One (`label`, n_truth, n_hit, recall) row per labelled [[recallOf]],
+    * ordered by the label.
+    */
+  def recallRows[L: scala.reflect.runtime.universe.TypeTag](s: SparkSession, label: String,
+      rows: Seq[(L, (Long, Long, Double))]): DataFrame = {
+    import s.implicits._
+    rows.map { case (l, (total, hits, recall)) => (l, total, hits, recall) }
+      .toDF(label, "n_truth", "n_hit", "recall").orderBy(label)
+  }
+
+  /** Per-probe recall of an answer set against a `k`-per-probe truth, both
+    * (qid, vec_id): (qid, n_hit, recall = n_hit / k), one row per truth
+    * probe — a probe with no hit reads 0.
+    */
+  def recallByQid(truth: DataFrame, ann: DataFrame, k: Int): DataFrame =
+    truth.join(ann.select(col("qid"), col("vec_id"), lit(1).as("hit")), Seq("qid", "vec_id"), "left")
+      .groupBy("qid")
+      .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
+      .withColumn("recall", col("n_hit").cast(DoubleType) / k)
+      .orderBy("qid")
+
+  /** Oracle mirror of [[cosine]] over two aliased (embedding, norm2) rows. */
+  def sqlCos(a: String = "a", b: String = "b"): String =
+    s"${sqlDotOf(a, b)} / SQRT(CAST($a.norm2 AS DOUBLE) * CAST($b.norm2 AS DOUBLE))"
+
+  /** Oracle mirror of [[pairsOf]] over a (vec_id, embedding, norm2)
+    * relation; `where` may filter the pairs.
+    */
+  def sqlProbeCos(nProbes: Int, from: String = "nv", where: String = ""): String =
+    s"""SELECT a.vec_id AS qid, b.vec_id AS vec_id, ${sqlCos()} AS cos_sim
+        FROM $from a JOIN $from b ON a.vec_id < $nProbes AND a.vec_id <> b.vec_id $where"""
 
   def sqlProbePairs(nProbes: Int): String =
     s"""WITH nv AS (SELECT vec_id, embedding, $sqlNorm2 AS norm2 FROM embeddings)
-        SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-               $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-        FROM nv a JOIN nv b ON a.vec_id < $nProbes AND a.vec_id <> b.vec_id"""
+        ${sqlProbeCos(nProbes)}"""
+
+  /** Oracle top-k: the rows of `from` numbered (`rk`) per `partition` in
+    * `order`, the first `k` kept, projected to `cols` (which may read
+    * `rk`). `from` is any relation, with the alias, join or WHERE it needs.
+    */
+  def sqlTopK(from: String, k: Int, order: String = "cos_sim DESC, vec_id",
+      partition: String = "qid", cols: String = "qid, vec_id"): String =
+    s"""SELECT $cols FROM (
+          SELECT *, ROW_NUMBER() OVER (PARTITION BY $partition ORDER BY $order) AS rk
+          FROM $from) WHERE rk <= $k"""
+
+  /** A ranked cosine answer: [[sqlTopK]] as (qid, vec_id, cos_sim, rk),
+    * ordered.
+    */
+  def sqlRanked(from: String, k: Int): String =
+    s"${sqlTopK(from, k, cols = "qid, vec_id, cos_sim, CAST(rk AS INT) AS rk")} ORDER BY qid, rk"
+
+  /** A ranked distance answer (lower first): (qid, rk, vec_id, `dist`),
+    * ordered.
+    */
+  def sqlRankedBy(from: String, k: Int, dist: String): String =
+    s"""${sqlTopK(from, k, s"$dist, vec_id", cols = s"qid, CAST(rk AS INT) AS rk, vec_id, $dist")}
+        ORDER BY qid, rk"""
+
+  /** Oracle mirror of [[bruteTruth]] over `nv`, as two MATERIALIZED CTEs:
+    * `<prefix>bpairs` (the scored pairs, `where` may filter them) and
+    * `<prefix>brute_top` (their top-`k`).
+    */
+  def sqlBruteTruthCtes(nProbes: Int, k: Int, prefix: String = "", where: String = ""): String =
+    s"""${prefix}bpairs AS MATERIALIZED (${sqlProbeCos(nProbes, where = where)}),
+        ${prefix}brute_top AS MATERIALIZED (${sqlTopK(s"${prefix}bpairs", k)})"""
+
+  /** Oracle mirror of [[recallRows]]: one (`label`, n_truth, n_hit, recall)
+    * row per (label value, answer relation, truth relation), ordered.
+    */
+  def sqlRecallRows(label: String, rows: Seq[(String, String, String)]): String =
+    rows.map { case (l, ann, truth) =>
+      s"""SELECT $l AS $label, (SELECT COUNT(*) FROM $truth) AS n_truth,
+                 (SELECT COUNT(*) FROM $ann JOIN $truth USING (qid, vec_id)) AS n_hit"""
+    }.mkString("SELECT *, CAST(n_hit AS DOUBLE) / n_truth AS recall FROM (\n",
+      "\nUNION ALL\n", s") ORDER BY $label")
+
+  /** Oracle mirror of [[recallByQid]] against the `truth` relation. */
+  def sqlRecallByQid(ann: String, k: Int, truth: String = "truth"): String =
+    s"""SELECT t.qid, CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
+               CAST(COUNT(a.vec_id) AS DOUBLE) / $k AS recall
+        FROM $truth t LEFT JOIN $ann a ON a.qid = t.qid AND a.vec_id = t.vec_id
+        GROUP BY t.qid ORDER BY t.qid"""
+
+  /** Brute-force cosine pairs of probe vectors (vec_id < nProbes) × corpus. */
+  def probePairs(s: SparkSession, d: String, nProbes: Int): DataFrame =
+    pairsOf(withNorm(s, d), nProbes)
 
   /** The catalog's maximum brute-force probe block: every [[probePairs]]
     * caller uses nProbes ≤ this, so one scored table at this block subsumes
@@ -207,7 +351,8 @@ object SimilarityOps {
       .agg(count(lit(1)).as("n_members"),
         sum(floor(col("x").cast(DoubleType) * SCALE).cast(DecimalType(38, 0))).as("ssum"))
 
-  /** `iters` Lloyd refinements of the seed centroids. Each iteration is ONE
+  /** `iters` Lloyd refinements of the seed centroids (fewer if the fixpoint
+    * comes first, with the same result). Each iteration is ONE
     * distributed aggregate whose `IvfCells`×dim result (1024 rows here) is
     * collected and re-broadcast as the next kernel's reference object — the
     * standard distributed-kmeans driver loop; the corpus is only ever
@@ -224,11 +369,7 @@ object SimilarityOps {
     // from the same training: train once per (sfDir, iters), not once per
     // query (centroids depend only on the data)
     Artifacts.memo("graft_kmeans", (d, iters)) {
-      val corpus = withNorm(s, d)
-      var cents = ivfCentroids(corpus)
-      for (_ <- 1 to iters)
-        cents = centroidsFrom(lloydSums(corpus, cents).collect())
-      cents
+      lloyd(withNorm(s, d), iters)._1
     }
 
   /** Lloyd to the assignment FIXPOINT: iterate until the per-(cell, dim)
@@ -242,7 +383,21 @@ object SimilarityOps {
     */
   def trainedCentroidsConverged(s: SparkSession, d: String,
       maxIters: Int): (Array[(Array[Double], Long)], Int) = {
-    val corpus = withNorm(s, d)
+    val (cents, it, fixed) = lloyd(withNorm(s, d), maxIters)
+    if (!fixed) throw new IllegalStateException(
+      s"k-means assignment did not reach a fixpoint within $maxIters Lloyd iterations")
+    (cents, it)
+  }
+
+  /** The Lloyd loop both trainers share: up to `maxIters` steps from the
+    * seed centroids, each collecting one [[lloydSums]] aggregate and
+    * rebuilding the centroids from it. A step whose sums equal the previous
+    * step's is the fixpoint certificate: rebuilding would give the same
+    * centroids, so the loop stops there. Returns (centroids, rebuilds,
+    * certified).
+    */
+  private def lloyd(corpus: DataFrame,
+      maxIters: Int): (Array[(Array[Double], Long)], Int, Boolean) = {
     var cents = ivfCentroids(corpus)
     var prev: Map[(Int, Int), (Long, java.math.BigDecimal)] = Map.empty
     var it = 0
@@ -250,26 +405,26 @@ object SimilarityOps {
       val rows = lloydSums(corpus, cents).collect()
       val cur = rows.iterator
         .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getDecimal(3))).toMap
-      if (cur == prev) return (cents, it)
-      cents = centroidsFrom(rows)
+      if (cur == prev) return (cents, it, true)
       prev = cur
+      cents = centroidsFrom(rows)
       it += 1
     }
-    throw new IllegalStateException(
-      s"k-means assignment did not reach a fixpoint within $maxIters Lloyd iterations")
+    (cents, it, false)
   }
 
   /** Rebuild the centroid reference objects from one collected Lloyd
-    * aggregate: mean = exact-integer sum / (n·SCALE) in IEEE double,
-    * norm2 = Σ floor(c²·SCALE) — the engine-exact convention the SQL
-    * oracles mirror. Rejects emptied cells (cells are data-seeded so none
-    * empties at catalog scale; production re-seeds).
+    * aggregate over `cells` cells: mean = exact-integer sum / (n·SCALE) in
+    * IEEE double, norm2 = Σ floor(c²·SCALE) — the engine-exact convention
+    * the SQL oracles mirror. Rejects emptied cells (cells are data-seeded
+    * so none empties at catalog scale; production re-seeds).
     */
-  private[operators] def centroidsFrom(rows: Array[org.apache.spark.sql.Row]): Array[(Array[Double], Long)] = {
-    require(rows.iterator.map(_.getInt(0)).toSet.size == IvfCells,
+  private[operators] def centroidsFrom(rows: Array[org.apache.spark.sql.Row],
+      cells: Int = IvfCells): Array[(Array[Double], Long)] = {
+    require(rows.iterator.map(_.getInt(0)).toSet.size == cells,
       s"k-means cell emptied during training (have ${rows.length} (cell,dim) rows); re-seed required")
     val dim = rows.iterator.map(_.getInt(1)).max + 1
-    val next = Array.fill(IvfCells)(new Array[Double](dim))
+    val next = Array.fill(cells)(new Array[Double](dim))
     rows.foreach { r =>
       next(r.getInt(0))(r.getInt(1)) =
         r.getDecimal(3).doubleValue() / (r.getLong(2) * SCALE)
@@ -335,12 +490,7 @@ object SimilarityOps {
     val scanPlan = idx.queryExecution.executedPlan.toString
     require(raw"PartitionFilters: \[[^\]]*cell".r.findFirstIn(scanPlan).isDefined,
       s"indexed IVF scan lost its static cell partition pruning:\n${scanPlan.take(2000)}")
-    val scored = idx.join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        cosine(scaledDot(col("qvec"), col("embedding")), col("qnorm2"), col("norm2")))
-    StockOps.perKeyTopK(scored, Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-      .select("qid", "vec_id", "cos_sim", "rk")
+    topK(withCos(idx.join(broadcast(probes), Seq("cell")).where(col("vec_id") =!= col("qid"))), 3)
       .orderBy("qid", "rk")
   }
 
@@ -360,14 +510,25 @@ object SimilarityOps {
   lazy val sqlIvfAssignCtes: String =
     s"""nv AS MATERIALIZED (SELECT vec_id, embedding, $sqlNorm2 AS norm2 FROM embeddings),
           cscores AS MATERIALIZED (
-            SELECT a.vec_id, b.cell, $sqlDot / SQRT(CAST(b.norm2 AS DOUBLE)) AS score
+            SELECT a.vec_id, b.cell, ${sqlDotOf("a", "b")} / SQRT(CAST(b.norm2 AS DOUBLE)) AS score
             FROM nv a CROSS JOIN
               (SELECT vec_id AS cell, embedding, norm2 FROM nv WHERE vec_id < $IvfCells) b),
           assigned AS MATERIALIZED (
-            SELECT vec_id, cell FROM (
-              SELECT vec_id, cell,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) AS rn
-              FROM cscores) WHERE rn = 1)"""
+            ${sqlTopK("cscores", 1, "score DESC, cell", "vec_id", "vec_id, cell")})"""
+
+  /** [[ivfSearch]]'s oracle CTEs over [[sqlIvfAssignCtes]], suffixed
+    * `sfx`: the 10 probes' best `probe` seed cells (`pcells`), their
+    * cell-mates (`icand`) and exact cosines (`iscored`).
+    */
+  def sqlSeedSearchCtes(probe: Int = IvfProbe, sfx: String = ""): String =
+    s"""pcells$sfx AS (${sqlTopK("cscores WHERE vec_id < 10", probe, "score DESC, cell", "vec_id",
+          "vec_id AS qid, cell")}),
+        icand$sfx AS (
+          SELECT p.qid, s.vec_id FROM pcells$sfx p JOIN assigned s ON s.cell = p.cell
+          WHERE s.vec_id <> p.qid),
+        iscored$sfx AS (
+          SELECT c.qid, c.vec_id, ${sqlCos()} AS cos_sim
+          FROM icand$sfx c JOIN nv a ON a.vec_id = c.qid JOIN nv b ON b.vec_id = c.vec_id)"""
 
   /** The 15 per-table 4-bit keys of a sign word, as (tbl, key) structs. */
   def lshTableKeys(b: Column): Column =
@@ -393,8 +554,7 @@ object SimilarityOps {
       probe: Int = IvfProbe): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wc = Window.partitionBy(col("qid")).orderBy(desc("cell_score"), col("cell"))
-    corpus.where(col("vec_id") < nProbes)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("norm2").as("qnorm2"))
+    probesOf(corpus, nProbes)
       .withColumn("__dots",
         graft.functions.GraftFunctions.centroid_scores(col("qvec"), cents.map(_._1), cents.map(_._2)))
       .select(col("*"), posexplode(col("__dots")).as(Seq("cell", "cell_score")))
@@ -409,12 +569,8 @@ object SimilarityOps {
     val probes = probeCells(corpus, cents, nProbes, probe)
     // per-probe candidates grow with the corpus (cell members), so the
     // top-k is the two-phase perKeyTopK, never a per-qid window funnel
-    val scored = assignCells(corpus, cents).join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        cosine(scaledDot(col("qvec"), col("embedding")), col("qnorm2"), col("norm2")))
-    StockOps.perKeyTopK(scored, Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), k)
-      .select("qid", "vec_id", "cos_sim", "rk")
+    topK(withCos(assignCells(corpus, cents).join(broadcast(probes), Seq("cell"))
+        .where(col("vec_id") =!= col("qid"))), k)
       .orderBy("qid", "rk")
   }
 
@@ -447,11 +603,10 @@ object SimilarityOps {
           FROM nv e CROSS JOIN c$i c
           GROUP BY 1, 2),
         a$i AS MATERIALIZED (
-          SELECT vec_id, cell FROM (
-            SELECT s.vec_id, s.cell,
-                   ROW_NUMBER() OVER (PARTITION BY s.vec_id
-                     ORDER BY CAST(s.dot AS DOUBLE) / SQRT(CAST(n.norm2 AS DOUBLE)) DESC, s.cell) AS rn
-            FROM sc$i s JOIN cn$i n USING (cell)) WHERE rn = 1)"""
+          ${sqlTopK(s"sc$i s JOIN cn$i n USING (cell)", 1, sqlCellOrder, "s.vec_id", "vec_id, cell")})"""
+
+  /** The trained-cell argmax order over `sc_i s JOIN cn_i n`. */
+  private final val sqlCellOrder = "CAST(s.dot AS DOUBLE) / SQRT(CAST(n.norm2 AS DOUBLE)) DESC, s.cell"
 
   /** Raw embeddings → TRAINED (two Lloyd iterations) centroids and the
     * corpus assignment `a2` under them — the replayed training trajectory,
@@ -468,18 +623,13 @@ object SimilarityOps {
     */
   lazy val sqlTrainedSearchCtes: String =
     s"""$sqlTrainedAssignCtes,
-        pcells AS MATERIALIZED (
-          SELECT vec_id AS qid, cell FROM (
-            SELECT s.vec_id, s.cell,
-                   ROW_NUMBER() OVER (PARTITION BY s.vec_id
-                     ORDER BY CAST(s.dot AS DOUBLE) / SQRT(CAST(n.norm2 AS DOUBLE)) DESC, s.cell) AS rn
-            FROM sc2 s JOIN cn2 n USING (cell) WHERE s.vec_id < 10) WHERE rn <= $IvfProbe),
+        pcells AS MATERIALIZED (${sqlTopK("sc2 s JOIN cn2 n USING (cell) WHERE s.vec_id < 10",
+          IvfProbe, sqlCellOrder, "s.vec_id", "vec_id AS qid, cell")}),
         icand AS MATERIALIZED (
           SELECT p.qid, s.vec_id FROM pcells p JOIN a2 s ON s.cell = p.cell
           WHERE s.vec_id <> p.qid),
         iscored AS MATERIALIZED (
-          SELECT icand.qid, icand.vec_id,
-                 $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
+          SELECT icand.qid, icand.vec_id, ${sqlCos()} AS cos_sim
           FROM icand JOIN nv a ON a.vec_id = icand.qid
                      JOIN nv b ON b.vec_id = icand.vec_id)"""
 
@@ -495,7 +645,7 @@ object SimilarityOps {
           FROM a2 x JOIN a2 y ON x.cell = y.cell AND x.vec_id < y.vec_id
           JOIN nv a ON a.vec_id = x.vec_id
           JOIN nv b ON b.vec_id = y.vec_id
-          WHERE $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) >= 0.4),
+          WHERE ${sqlCos()} >= 0.4),
         sdup AS MATERIALIZED (SELECT DISTINCT v FROM spairs),
         skept AS MATERIALIZED (SELECT a2.vec_id, a2.cell FROM a2 ANTI JOIN sdup ON a2.vec_id = sdup.v)"""
 
@@ -503,12 +653,7 @@ object SimilarityOps {
     * persisted index must change WHERE bytes are read, never the answer).
     */
   lazy val sqlTrainedSearchSql: String =
-    s"""WITH $sqlTrainedSearchCtes
-        SELECT qid, vec_id, cos_sim, rk FROM (
-          SELECT qid, vec_id, cos_sim,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS INT) AS rk
-          FROM iscored)
-        WHERE rk <= 3 ORDER BY qid, rk"""
+    s"WITH $sqlTrainedSearchCtes ${sqlRanked("iscored", 3)}"
 
   // ——— Product quantization (sim15 encode / sim16 ADC search / sim17 recall) ———
 
@@ -742,10 +887,24 @@ object SimilarityOps {
       val pairs = emb.join(broadcast(probes), col("vec_id") =!= col("qid"))
         .withColumn("l2", scaledL2(col("qvec"), col("embedding")))
         .select("qid", "vec_id", "l2")
-      StockOps.perKeyTopK(pairs, Seq("qid"), Seq(col("l2"), col("vec_id")), 3)
-        .select("qid", "vec_id")
+      topK(pairs, 3, "l2", ascending = true).select("qid", "vec_id")
         .write.mode("overwrite").parquet(dir)
     })
+
+  /** PQ serving's two stages: each probe's ADC top-20 shortlist
+    * ([[pqAdcScores]]), re-ranked by exact full-vector scaled L2 — the
+    * top-3 (qid, vec_id, l2, rk) shared by sim19 and sim28's rerank row.
+    */
+  def pqAdcRerank(s: SparkSession, d: String): DataFrame = {
+    val cand = topK(pqAdcScores(s, d), 20, "adc_dist", ascending = true).select("qid", "vec_id")
+    val emb = t(s, d, "embeddings")
+    val probes = emb.where(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val rr = cand.join(emb, "vec_id").join(broadcast(probes), "qid")
+      .withColumn("l2", scaledL2(col("qvec"), col("embedding")))
+      .select("qid", "vec_id", "l2")
+    topK(rr, 3, "l2", ascending = true)
+  }
 
   /** Oracle CTEs for the PQ family: codebook (`cb`), subvectors (`sub`),
     * all (vector, subspace, codeword) distances (`scored`), and the argmin
@@ -763,11 +922,7 @@ object SimilarityOps {
           SELECT s.vec_id, s.subspace, c.code,
                  ${sqlScaledL2("s.svec", "c.cvec", PqDim)} AS dist
           FROM sub s JOIN cb c USING (subspace)),
-        codes AS (
-          SELECT vec_id, subspace, code, dist FROM (
-            SELECT vec_id, subspace, code, dist,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id, subspace ORDER BY dist, code) AS rn
-            FROM scored) WHERE rn = 1)"""
+        codes AS (${sqlTopK("scored", 1, "dist, code", "vec_id, subspace", "vec_id, subspace, code, dist")})"""
 
   /** The probe ADC lookup tables as oracle CTEs (`qsub`, `lut`) — the
     * [[pqAdcLut]] mirror, shared by the full-corpus `adc` below and
@@ -790,6 +945,19 @@ object SimilarityOps {
           SELECT l.qid, k.vec_id, CAST(SUM(l.pdist) AS BIGINT) AS adc_dist
           FROM codes k JOIN lut l ON l.subspace = k.subspace AND l.code = k.code
           WHERE k.vec_id <> l.qid
+          GROUP BY 1, 2)"""
+
+  /** sim20's oracle: the seed-IVF candidates ([[sqlSeedSearchCtes]]) and
+    * their ADC sums under the probe LUTs (`adci`) — shared by sim20/sim21.
+    */
+  lazy val sqlIvfPqCtes: String =
+    s"""$sqlIvfAssignCtes, ${sqlSeedSearchCtes()},
+        $sqlPqLutCtes,
+        adci AS (
+          SELECT c.qid, c.vec_id, CAST(SUM(l.pdist) AS BIGINT) AS adc_dist
+          FROM icand c JOIN codes k ON k.vec_id = c.vec_id
+                       JOIN lut l ON l.qid = c.qid AND l.subspace = k.subspace
+                                 AND l.code = k.code
           GROUP BY 1, 2)"""
 
   /** Residual-IVFPQ oracle chain — composes AFTER [[sqlTrainedSearchCtes]]
@@ -822,11 +990,7 @@ object SimilarityOps {
                  ${sqlScaledL2("s.svec", "c.cvec", PqDim)} AS dist
           FROM rsub s JOIN rcb c USING (subspace)),
         rcodes AS MATERIALIZED (
-          SELECT vec_id, subspace, code FROM (
-            SELECT vec_id, subspace, code,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id, subspace
-                                      ORDER BY dist, code) AS rn
-            FROM rscored) WHERE rn = 1),
+          ${sqlTopK("rscored", 1, "dist, code", "vec_id, subspace", "vec_id, subspace, code")}),
         qrv AS MATERIALIZED (
           SELECT p.qid, p.cell,
                  list_transform(range(1, ${dims + 1}), i ->
@@ -850,6 +1014,18 @@ object SimilarityOps {
           GROUP BY 1, 2)"""
   }
 
+  /** [[pqAdcRerank]]'s oracle over [[sqlPqAdcCtes]]: the shortlist
+    * (`rrcand`), its exact L2 (`rr`) and the re-ranked top-3 (`rr_top`).
+    */
+  lazy val sqlPqRerankCtes: String =
+    s"""rrcand AS (${sqlTopK("adc", 20, "adc_dist, vec_id")}),
+        rr AS (
+          SELECT c.qid, c.vec_id,
+                 ${sqlScaledL2("a.embedding", "b.embedding", PqSub * PqDim)} AS l2
+          FROM rrcand c JOIN embeddings a ON a.vec_id = c.qid
+                        JOIN embeddings b ON b.vec_id = c.vec_id),
+        rr_top AS (${sqlTopK("rr", 3, "l2, vec_id")})"""
+
   /** Exact full-vector L2 truth top-3 per probe — shared by sim17/sim19. */
   lazy val sqlPqTruthCtes: String =
     s"""bl2 AS (
@@ -857,11 +1033,7 @@ object SimilarityOps {
                  ${sqlScaledL2("a.embedding", "b.embedding", PqSub * PqDim)} AS l2
           FROM embeddings a JOIN embeddings b
             ON a.vec_id < 10 AND b.vec_id <> a.vec_id),
-        truth AS (
-          SELECT qid, vec_id FROM (
-            SELECT qid, vec_id,
-                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY l2, vec_id) AS rk
-            FROM bl2) WHERE rk <= 3)"""
+        truth AS (${sqlTopK("bl2", 3, "l2, vec_id")})"""
 
   // ——— Scalar-quantization serving (sim26 search / sim27 recall) ———
 
@@ -995,11 +1167,8 @@ object SimilarityOps {
                           * 1e15) AS BIGINT)) AS BIGINT) AS dist
           FROM sub s JOIN cbl$i c USING (subspace)
           GROUP BY 1, 2, 3),
-        codest$i AS (
-          SELECT vec_id, subspace, code, dist FROM (
-            SELECT vec_id, subspace, code, dist,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id, subspace ORDER BY dist, code) AS rn
-            FROM scoredt$i) WHERE rn = 1)"""
+        codest$i AS (${sqlTopK(s"scoredt$i", 1, "dist, code", "vec_id, subspace",
+          "vec_id, subspace, code, dist")})"""
   }
 
   /** Raw seed codebook → TRAINED (two Lloyd iterations) codes `codest2` —
@@ -1014,18 +1183,37 @@ object SimilarityOps {
         ${sqlPqIter(1)},
         ${sqlPqIter(2)}"""
 
+  /** sim24's greedy MMR step: the best remaining `cand` by 2·cos − the
+    * redundancy `red`, excluding the `selected` picks.
+    */
+  private def sqlMmrStep(red: String, selected: String): String =
+    sqlTopK(s"""(SELECT c.qid, c.vec_id, c.cos_sim, 2 * c.cos_sim - r.red AS mmr
+                 FROM cand c JOIN $red r ON r.qid = c.qid AND r.vec_id = c.vec_id
+                 WHERE NOT EXISTS (SELECT 1 FROM $selected s
+                                   WHERE s.qid = c.qid AND s.vec_id = c.vec_id))""",
+      1, "mmr DESC, vec_id", cols = "qid, vec_id, cos_sim, mmr")
+
+  /** sim02's oracle candidates over `nv`: the PureSig bucket dump's 15
+    * table keys per vector (`tkeys`), each of the 50 probes' distinct
+    * key-sharing candidates (`lcand`) and their exact cosines (`lscored`).
+    */
+  private def sqlLshSearchCtes: String =
+    s"""bkt AS (SELECT vec_id, bucket FROM '${graft.Verify.SigDumpDir}/emb_buckets.parquet/*.parquet'),
+        tkeys AS (SELECT vec_id, t,
+                         (bucket >> CAST(t*$LshBits AS INT)) & ${(1 << LshBits) - 1} AS key
+                  FROM bkt, LATERAL (SELECT UNNEST(range(0, $LshTables)) AS t)),
+        lcand AS (SELECT DISTINCT q.vec_id AS qid, c.vec_id AS cid
+                  FROM tkeys q JOIN tkeys c ON q.t = c.t AND q.key = c.key
+                  WHERE q.vec_id < 50 AND c.vec_id <> q.vec_id),
+        lscored AS (SELECT lcand.qid, lcand.cid AS vec_id, ${sqlCos()} AS cos_sim
+                    FROM lcand JOIN nv a ON a.vec_id = lcand.qid
+                               JOIN nv b ON b.vec_id = lcand.cid)"""
+
   val all: Seq[Q] = Seq(
     // Brute-force cosine top-k per probe (the exact ANN baseline).
     Q("sim01_topk_cosine",
-      (s, d) => StockOps.perKeyTopK(probePairsShared(s, d, 10),
-          Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 5)
-        .select("qid", "vec_id", "cos_sim", "rk")
-        .orderBy("qid", "rk"),
-      Some(s"""SELECT qid, vec_id, cos_sim, rk FROM (
-                 SELECT qid, vec_id, cos_sim,
-                        CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS INT) AS rk
-                 FROM (${sqlProbePairs(10)}))
-               WHERE rk <= 5 ORDER BY qid, rk""")),
+      (s, d) => topK(probePairsShared(s, d, 10), 5).orderBy("qid", "rk"),
+      Some(sqlRanked(s"(${sqlProbePairs(10)})", 5))),
 
     // IVF ANN — the second scale path: coarse-quantize the corpus into
     // `IvfCells` centroid cells (centroids = deterministic corpus sample,
@@ -1046,25 +1234,7 @@ object SimilarityOps {
       // argmax (ties to the lowest cell — mirrored by ORDER BY score DESC,
       // cell with cell = centroid vec_id), so DuckDB reproduces it directly
       // from the embeddings table: no engine-internal state involved.
-      Some(s"""WITH $sqlIvfAssignCtes,
-                 pcells AS (
-                   SELECT vec_id AS qid, cell FROM (
-                     SELECT vec_id, cell,
-                            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) AS rn
-                     FROM cscores WHERE vec_id < 10) WHERE rn <= $IvfProbe),
-                 icand AS (
-                   SELECT p.qid, s.vec_id FROM pcells p JOIN assigned s ON s.cell = p.cell
-                   WHERE s.vec_id <> p.qid),
-                 iscored AS (
-                   SELECT icand.qid, icand.vec_id,
-                          $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                   FROM icand JOIN nv a ON a.vec_id = icand.qid
-                              JOIN nv b ON b.vec_id = icand.vec_id)
-               SELECT qid, vec_id, cos_sim, rk FROM (
-                 SELECT qid, vec_id, cos_sim,
-                        CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS INT) AS rk
-                 FROM iscored)
-               WHERE rk <= 3 ORDER BY qid, rk""")),
+      Some(s"WITH $sqlIvfAssignCtes, ${sqlSeedSearchCtes()} ${sqlRanked("iscored", 3)}")),
 
     // One LLOYD (k-means) TRAINING step for the IVF coarse quantizer — the
     // piece that turns sim03's deterministic seed centroids into trained
@@ -1155,37 +1325,12 @@ object SimilarityOps {
     // embeddings AND the trained search from the replayed training CTEs,
     // so the recall NUMBER itself is cross-engine-verified.
     Q("sim09_recall_trained",
-      (s, d) => {
-        val truth = StockOps.perKeyTopK(probePairsShared(s, d, 10),
-            Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id")
-        val ann = byNameLocal("sim08_ann_ivf_trained").build(s, d)
-        val hits = ann.select("qid", "vec_id").join(truth, Seq("qid", "vec_id"), "left_semi").count()
-        val total = truth.count()
-        import s.implicits._
-        Seq(("ivf_trained", total, hits, hits.toDouble / total))
-          .toDF("method", "n_truth", "n_hit", "recall")
-      },
+      (s, d) => recallRows(s, "method", Seq("ivf_trained" ->
+        recallOf(bruteTruth(s, d, 10, 3))(byNameLocal("sim08_ann_ivf_trained").build(s, d)))),
       Some(s"""WITH $sqlTrainedSearchCtes,
-                 ivf_top AS (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                     FROM iscored) WHERE rk <= 3),
-                 bpairs AS MATERIALIZED (
-                   SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-                          $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                   FROM nv a JOIN nv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-                 brute_top AS MATERIALIZED (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                     FROM bpairs) WHERE rk <= 3),
-                 hits AS (SELECT COUNT(*) AS n_hit FROM ivf_top i JOIN brute_top b USING (qid, vec_id)),
-                 tot AS (SELECT COUNT(*) AS n_truth FROM brute_top)
-               SELECT 'ivf_trained' AS method, n_truth, n_hit,
-                      CAST(n_hit AS DOUBLE) / n_truth AS recall
-               FROM tot, hits"""),
+                 ivf_top AS (${sqlTopK("iscored", 3)}),
+                 ${sqlBruteTruthCtes(10, 3)}
+               ${sqlRecallRows("method", Seq(("'ivf_trained'", "ivf_top", "brute_top")))}"""),
       bench = false),
 
     // SEMANTIC DEDUP (SemDeDup, Abbas et al. 2023): coarse-cluster the
@@ -1235,41 +1380,17 @@ object SimilarityOps {
         val corpusKeys = corpus
           .select(col("vec_id"), explode(lshTableKeys(lshBucket(col("embedding")))).as("tk"))
           .select(col("vec_id"), col("tk.tbl").as("tbl"), col("tk.key").as("key"))
-        val probes = corpus.where(col("vec_id") < 50)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("norm2").as("qnorm2"))
         val probeKeys = corpus.where(col("vec_id") < 50)
           .select(col("vec_id").as("qid"), explode(lshTableKeys(lshBucket(col("embedding")))).as("tk"))
           .select(col("qid"), col("tk.tbl").as("tbl"), col("tk.key").as("key"))
         val cand = corpusKeys.join(broadcast(probeKeys), Seq("tbl", "key"))
           .where(col("vec_id") =!= col("qid"))
           .select("qid", "vec_id").distinct()
-        val scored = cand.join(corpus, "vec_id").join(broadcast(probes), "qid")
-          .withColumn("cos_sim",
-            cosine(scaledDot(col("qvec"), col("embedding")), col("qnorm2"), col("norm2")))
-        StockOps.perKeyTopK(scored, Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id", "cos_sim", "rk")
-          .orderBy("qid", "rk")
+        topK(rerank(cand, corpus, probesOf(corpus, 50)), 3).orderBy("qid", "rk")
       },
-      Some {
-        val dump = s"'${graft.Verify.SigDumpDir}/emb_buckets.parquet/*.parquet'"
-        s"""WITH nv AS (SELECT vec_id, embedding, $sqlNorm2 AS norm2 FROM embeddings),
-              bkt AS (SELECT vec_id, bucket FROM $dump),
-              tkeys AS (SELECT vec_id, t,
-                               (bucket >> CAST(t*$LshBits AS INT)) & ${(1 << LshBits) - 1} AS key
-                        FROM bkt, LATERAL (SELECT UNNEST(range(0, $LshTables)) AS t)),
-              lcand AS (SELECT DISTINCT q.vec_id AS qid, c.vec_id AS cid
-                        FROM tkeys q JOIN tkeys c ON q.t = c.t AND q.key = c.key
-                        WHERE q.vec_id < 50 AND c.vec_id <> q.vec_id),
-              scored AS (SELECT lcand.qid, lcand.cid AS vec_id,
-                                $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                         FROM lcand JOIN nv a ON a.vec_id = lcand.qid
-                                    JOIN nv b ON b.vec_id = lcand.cid)
-            SELECT qid, vec_id, cos_sim, rk FROM (
-              SELECT qid, vec_id, cos_sim,
-                     CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS INT) AS rk
-              FROM scored)
-            WHERE rk <= 3 ORDER BY qid, rk"""
-      }),
+      Some(s"""WITH nv AS (SELECT vec_id, embedding, $sqlNorm2 AS norm2 FROM embeddings),
+                 $sqlLshSearchCtes
+               ${sqlRanked("lscored", 3)}""")),
 
     // HARD-NEGATIVE mining for contrastive training — per probe, the top-5
     // most-similar corpus vectors inside a mid-similarity band
@@ -1281,16 +1402,9 @@ object SimilarityOps {
     // rides either brute-force (bounded probe block, this baseline) or
     // the sim02 LSH path.
     Q("sim06_hard_negatives",
-      (s, d) => StockOps.perKeyTopK(
-          probePairsShared(s, d, 10).where(col("cos_sim").between(0.05, 0.25)),
-          Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 5)
-        .select("qid", "vec_id", "cos_sim", "rk")
+      (s, d) => topK(probePairsShared(s, d, 10).where(col("cos_sim").between(0.05, 0.25)), 5)
         .orderBy("qid", "rk"),
-      Some(s"""SELECT qid, vec_id, cos_sim, rk FROM (
-                 SELECT qid, vec_id, cos_sim,
-                        CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS INT) AS rk
-                 FROM (${sqlProbePairs(10)}) WHERE cos_sim BETWEEN 0.05 AND 0.25)
-               WHERE rk <= 5 ORDER BY qid, rk"""),
+      Some(sqlRanked(s"(${sqlProbePairs(10)}) WHERE cos_sim BETWEEN 0.05 AND 0.25", 5)),
       bench = false),
 
     // ANN quality as a NUMBER: recall@3 of the LSH and IVF paths against
@@ -1301,77 +1415,19 @@ object SimilarityOps {
     // DuckDB reproduces the recall NUMBERS themselves.
     Q("sim04_ann_recall",
       (s, d) => {
-        val brute = StockOps.perKeyTopK(probePairsShared(s, d, 50),
-            Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id")
-        def recallOf(method: String, ann: DataFrame, nProbes: Int) = {
-          val truth = brute.where(col("qid") < nProbes)
-          val hits = ann.select("qid", "vec_id").join(truth, Seq("qid", "vec_id"), "left_semi").count()
-          val total = truth.count()
-          (method, total, hits, hits.toDouble / total)
-        }
-        val rows = Seq(
-          recallOf("ivf", byNameLocal("sim03_ann_ivf").build(s, d), 10),
-          recallOf("lsh", byNameLocal("sim02_ann_lsh").build(s, d), 50))
-        import s.implicits._
-        rows.toDF("method", "n_truth", "n_hit", "recall").orderBy("method")
+        val brute = bruteTruth(s, d, 50, 3)
+        recallRows(s, "method", Seq(
+          "ivf" -> recallOf(brute.where(col("qid") < 10))(byNameLocal("sim03_ann_ivf").build(s, d)),
+          "lsh" -> recallOf(brute)(byNameLocal("sim02_ann_lsh").build(s, d))))
       },
-      Some {
-        val dump = s"'${graft.Verify.SigDumpDir}/emb_buckets.parquet/*.parquet'"
-        s"""WITH $sqlIvfAssignCtes,
-              pcells AS (
-                SELECT vec_id AS qid, cell FROM (
-                  SELECT vec_id, cell,
-                         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) AS rn
-                  FROM cscores WHERE vec_id < 10) WHERE rn <= $IvfProbe),
-              icand AS (
-                SELECT p.qid, s.vec_id FROM pcells p JOIN assigned s ON s.cell = p.cell
-                WHERE s.vec_id <> p.qid),
-              iscored AS (
-                SELECT icand.qid, icand.vec_id,
-                       $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                FROM icand JOIN nv a ON a.vec_id = icand.qid
-                           JOIN nv b ON b.vec_id = icand.vec_id),
-              ivf_top AS (
-                SELECT qid, vec_id FROM (
-                  SELECT qid, vec_id,
-                         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                  FROM iscored) WHERE rk <= 3),
-              bkt AS (SELECT vec_id, bucket FROM $dump),
-              tkeys AS (SELECT vec_id, t,
-                               (bucket >> CAST(t*$LshBits AS INT)) & ${(1 << LshBits) - 1} AS key
-                        FROM bkt, LATERAL (SELECT UNNEST(range(0, $LshTables)) AS t)),
-              lcand AS (SELECT DISTINCT q.vec_id AS qid, c.vec_id AS cid
-                        FROM tkeys q JOIN tkeys c ON q.t = c.t AND q.key = c.key
-                        WHERE q.vec_id < 50 AND c.vec_id <> q.vec_id),
-              lscored AS (SELECT lcand.qid, lcand.cid AS vec_id,
-                                 $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                          FROM lcand JOIN nv a ON a.vec_id = lcand.qid
-                                     JOIN nv b ON b.vec_id = lcand.cid),
-              lsh_top AS (
-                SELECT qid, vec_id FROM (
-                  SELECT qid, vec_id,
-                         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                  FROM lscored) WHERE rk <= 3),
-              bpairs AS MATERIALIZED (
-                SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-                       $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                FROM nv a JOIN nv b ON a.vec_id < 50 AND a.vec_id <> b.vec_id),
-              brute_top AS MATERIALIZED (
-                SELECT qid, vec_id FROM (
-                  SELECT qid, vec_id,
-                         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                  FROM bpairs) WHERE rk <= 3)
-            SELECT method, n_truth, n_hit, CAST(n_hit AS DOUBLE) / n_truth AS recall FROM (
-              SELECT 'ivf' AS method,
-                     (SELECT COUNT(*) FROM brute_top WHERE qid < 10) AS n_truth,
-                     (SELECT COUNT(*) FROM ivf_top i JOIN brute_top b USING (qid, vec_id)) AS n_hit
-              UNION ALL
-              SELECT 'lsh',
-                     (SELECT COUNT(*) FROM brute_top),
-                     (SELECT COUNT(*) FROM lsh_top l JOIN brute_top b USING (qid, vec_id))
-            ) ORDER BY method"""
-      },
+      Some(s"""WITH $sqlIvfAssignCtes, ${sqlSeedSearchCtes()},
+                 ivf_top AS (${sqlTopK("iscored", 3)}),
+                 $sqlLshSearchCtes,
+                 lsh_top AS (${sqlTopK("lscored", 3)}),
+                 ${sqlBruteTruthCtes(50, 3)}
+               ${sqlRecallRows("method", Seq(
+                 ("'ivf'", "ivf_top", "(SELECT * FROM brute_top WHERE qid < 10)"),
+                 ("'lsh'", "lsh_top", "brute_top")))}"""),
       bench = false),
 
     // LABEL-AFFINITY MATRIX — the domain-similarity report of data-mixing
@@ -1443,13 +1499,9 @@ object SimilarityOps {
           .orderBy("cell", "rk")
       },
       Some(s"""WITH $sqlTrainedAssignCtes
-               SELECT CAST(cell AS INT) AS cell, CAST(rk AS INT) AS rk, vec_id, skey FROM (
-                 SELECT cell, vec_id,
-                        ${Catalog.sqlDocHash("vec_id", 1000000007L)} AS skey,
-                        ROW_NUMBER() OVER (PARTITION BY cell
-                          ORDER BY ${Catalog.sqlDocHash("vec_id", 1000000007L)}, vec_id) AS rk
-                 FROM a2)
-               WHERE rk <= 4 ORDER BY cell, rk"""),
+               ${sqlTopK(s"(SELECT cell, vec_id, ${Catalog.sqlDocHash("vec_id", 1000000007L)} AS skey FROM a2)",
+                 4, "skey, vec_id", "cell", "CAST(cell AS INT) AS cell, CAST(rk AS INT) AS rk, vec_id, skey")}
+               ORDER BY cell, rk"""),
       bench = false),
 
     // SCALAR QUANTIZATION — the vector-compression move of 100 TB ANN
@@ -1532,16 +1584,10 @@ object SimilarityOps {
     // window funnel sim13 eliminated). Every distance is floor-scaled
     // integer math, so ADC scores are engine-exact.
     Q("sim16_pq_adc_search",
-      (s, d) => StockOps.perKeyTopK(pqAdcScores(s, d),
-          Seq("qid"), Seq(col("adc_dist"), col("vec_id")), 3)
+      (s, d) => topK(pqAdcScores(s, d), 3, "adc_dist", ascending = true)
         .select("qid", "rk", "vec_id", "adc_dist")
         .orderBy("qid", "rk"),
-      Some(s"""WITH $sqlPqAdcCtes
-              SELECT qid, CAST(rk AS INT) AS rk, vec_id, adc_dist FROM (
-                SELECT qid, vec_id, adc_dist,
-                       ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-                FROM adc) WHERE rk <= 3
-              ORDER BY qid, rk""")),
+      Some(s"WITH $sqlPqAdcCtes ${sqlRankedBy("adc", 3, "adc_dist")}")),
 
     // PQ RECALL — the number that says whether 4-byte codes are safe to
     // serve: recall@3 of sim16's ADC top-3 against the EXACT floor-scaled
@@ -1555,27 +1601,11 @@ object SimilarityOps {
     // sim07 Lloyd machinery per subspace, exactly what sim09 demonstrates
     // for the coarse quantizer. The query exists to surface that number.
     Q("sim17_pq_recall",
-      (s, d) => {
-        val adcTop = byNameLocal("sim16_pq_adc_search").build(s, d)
-          .select(col("qid"), col("vec_id"), lit(1).as("hit"))
-        pqL2Truth(s, d).join(adcTop, Seq("qid", "vec_id"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-          .withColumn("recall", col("n_hit").cast(DoubleType) / 3)
-          .orderBy("qid")
-      },
+      (s, d) => recallByQid(pqL2Truth(s, d), byNameLocal("sim16_pq_adc_search").build(s, d), 3),
       Some(s"""WITH $sqlPqAdcCtes,
-                 adc_top AS (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-                     FROM adc) WHERE rk <= 3),
+                 adc_top AS (${sqlTopK("adc", 3, "adc_dist, vec_id")}),
                  $sqlPqTruthCtes
-              SELECT t.qid, CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
-                     CAST(COUNT(a.vec_id) AS DOUBLE) / 3 AS recall
-              FROM truth t LEFT JOIN adc_top a
-                ON a.qid = t.qid AND a.vec_id = t.vec_id
-              GROUP BY t.qid ORDER BY t.qid"""),
+              ${sqlRecallByQid("adc_top", 3)}"""),
       bench = false),
 
     // PQ TRAINING — sim18 closes the quantizer-quality loop the way sim09
@@ -1629,46 +1659,11 @@ object SimilarityOps {
     // reads of brute force. Candidate and final top-k are both two-phase
     // perKeyTopK.
     Q("sim19_pq_adc_rerank",
-      (s, d) => {
-        val cand = StockOps.perKeyTopK(pqAdcScores(s, d),
-            Seq("qid"), Seq(col("adc_dist"), col("vec_id")), 20)
-          .select("qid", "vec_id")
-        val emb = t(s, d, "embeddings")
-        val probes = emb.where(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val rr = cand.join(emb, "vec_id").join(broadcast(probes), "qid")
-          .withColumn("l2", scaledL2(col("qvec"), col("embedding")))
-          .select("qid", "vec_id", "l2")
-        val top = StockOps.perKeyTopK(rr, Seq("qid"), Seq(col("l2"), col("vec_id")), 3)
-          .select(col("qid"), col("vec_id"), lit(1).as("hit"))
-        pqL2Truth(s, d).join(top, Seq("qid", "vec_id"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-          .withColumn("recall", col("n_hit").cast(DoubleType) / 3)
-          .orderBy("qid")
-      },
+      (s, d) => recallByQid(pqL2Truth(s, d), pqAdcRerank(s, d), 3),
       Some(s"""WITH $sqlPqAdcCtes,
-                 cand AS (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-                     FROM adc) WHERE rk <= 20),
-                 rr AS (
-                   SELECT c.qid, c.vec_id,
-                          ${sqlScaledL2("a.embedding", "b.embedding", PqSub * PqDim)} AS l2
-                   FROM cand c JOIN embeddings a ON a.vec_id = c.qid
-                               JOIN embeddings b ON b.vec_id = c.vec_id),
-                 rr_top AS (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY l2, vec_id) AS rk
-                     FROM rr) WHERE rk <= 3),
+                 $sqlPqRerankCtes,
                  $sqlPqTruthCtes
-              SELECT t.qid, CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
-                     CAST(COUNT(a.vec_id) AS DOUBLE) / 3 AS recall
-              FROM truth t LEFT JOIN rr_top a
-                ON a.qid = t.qid AND a.vec_id = t.vec_id
-              GROUP BY t.qid ORDER BY t.qid"""),
+              ${sqlRecallByQid("rr_top", 3)}"""),
       bench = false),
 
     // IVF-PQ — the two quantizers COMPOSED, the architecture a 100 TB ANN
@@ -1697,73 +1692,22 @@ object SimilarityOps {
           .join(broadcast(pqAdcLut(s, d)), Seq("qid", "subspace", "code"))
           .groupBy("qid", "vec_id")
           .agg(sum(col("pdist")).as("adc_dist"))
-        StockOps.perKeyTopK(adc, Seq("qid"), Seq(col("adc_dist"), col("vec_id")), 3)
+        topK(adc, 3, "adc_dist", ascending = true)
           .select("qid", "rk", "vec_id", "adc_dist")
           .orderBy("qid", "rk")
       },
-      Some(s"""WITH $sqlIvfAssignCtes,
-                 pcells AS (
-                   SELECT vec_id AS qid, cell FROM (
-                     SELECT vec_id, cell,
-                            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) AS rn
-                     FROM cscores WHERE vec_id < 10) WHERE rn <= $IvfProbe),
-                 icand AS (
-                   SELECT p.qid, s.vec_id FROM pcells p JOIN assigned s ON s.cell = p.cell
-                   WHERE s.vec_id <> p.qid),
-                 $sqlPqLutCtes,
-                 adci AS (
-                   SELECT c.qid, c.vec_id, CAST(SUM(l.pdist) AS BIGINT) AS adc_dist
-                   FROM icand c JOIN codes k ON k.vec_id = c.vec_id
-                                JOIN lut l ON l.qid = c.qid AND l.subspace = k.subspace
-                                          AND l.code = k.code
-                   GROUP BY 1, 2)
-              SELECT qid, CAST(rk AS INT) AS rk, vec_id, adc_dist FROM (
-                SELECT qid, vec_id, adc_dist,
-                       ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-                FROM adci) WHERE rk <= 3
-              ORDER BY qid, rk""")),
+      Some(s"WITH $sqlIvfPqCtes ${sqlRankedBy("adci", 3, "adc_dist")}")),
 
     // IVF-PQ recall@3 vs the exact full-vector L2 truth — the number that
     // prices the COMPOSED approximation (cell pruning losses stack on code
     // quantization losses; sim17 prices ADC alone). Per probe, so the
     // oracle reproduces every value, not one average.
     Q("sim21_ivfpq_recall",
-      (s, d) => {
-        val top = byNameLocal("sim20_ivfpq_search").build(s, d)
-          .select(col("qid"), col("vec_id"), lit(1).as("hit"))
-        pqL2Truth(s, d).join(top, Seq("qid", "vec_id"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-          .withColumn("recall", col("n_hit").cast(DoubleType) / 3)
-          .orderBy("qid")
-      },
-      Some(s"""WITH $sqlIvfAssignCtes,
-                 pcells AS (
-                   SELECT vec_id AS qid, cell FROM (
-                     SELECT vec_id, cell,
-                            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) AS rn
-                     FROM cscores WHERE vec_id < 10) WHERE rn <= $IvfProbe),
-                 icand AS (
-                   SELECT p.qid, s.vec_id FROM pcells p JOIN assigned s ON s.cell = p.cell
-                   WHERE s.vec_id <> p.qid),
-                 $sqlPqLutCtes,
-                 adci AS (
-                   SELECT c.qid, c.vec_id, CAST(SUM(l.pdist) AS BIGINT) AS adc_dist
-                   FROM icand c JOIN codes k ON k.vec_id = c.vec_id
-                                JOIN lut l ON l.qid = c.qid AND l.subspace = k.subspace
-                                          AND l.code = k.code
-                   GROUP BY 1, 2),
-                 iv_top AS (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-                     FROM adci) WHERE rk <= 3),
+      (s, d) => recallByQid(pqL2Truth(s, d), byNameLocal("sim20_ivfpq_search").build(s, d), 3),
+      Some(s"""WITH $sqlIvfPqCtes,
+                 iv_top AS (${sqlTopK("adci", 3, "adc_dist, vec_id")}),
                  $sqlPqTruthCtes
-              SELECT t.qid, CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
-                     CAST(COUNT(a.vec_id) AS DOUBLE) / 3 AS recall
-              FROM truth t LEFT JOIN iv_top a
-                ON a.qid = t.qid AND a.vec_id = t.vec_id
-              GROUP BY t.qid ORDER BY t.qid"""),
+              ${sqlRecallByQid("iv_top", 3)}"""),
       bench = false),
 
     // FILTERED ANN — the metadata-constrained search every production
@@ -1785,20 +1729,11 @@ object SimilarityOps {
         val qlabels = corpus.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("label").as("qlabel"))
         val probes = probeCells(corpus, cents, 10).join(qlabels, "qid")
-        val scored = assignCells(corpus, cents).join(broadcast(probes), Seq("cell"))
-          .where(col("vec_id") =!= col("qid") && col("label") === col("qlabel"))
-          .withColumn("cos_sim",
-            cosine(scaledDot(col("qvec"), col("embedding")), col("qnorm2"), col("norm2")))
-        StockOps.perKeyTopK(scored, Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id", "cos_sim", "rk")
+        topK(withCos(assignCells(corpus, cents).join(broadcast(probes), Seq("cell"))
+            .where(col("vec_id") =!= col("qid") && col("label") === col("qlabel"))), 3)
           .orderBy("qid", "rk")
       },
-      Some(s"""WITH $sqlIvfAssignCtes,
-                 pcells AS (
-                   SELECT vec_id AS qid, cell FROM (
-                     SELECT vec_id, cell,
-                            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) AS rn
-                     FROM cscores WHERE vec_id < 10) WHERE rn <= $IvfProbe),
+      Some(s"""WITH $sqlIvfAssignCtes, ${sqlSeedSearchCtes()},
                  fcand AS (
                    SELECT p.qid, s.vec_id
                    FROM pcells p JOIN assigned s ON s.cell = p.cell
@@ -1806,15 +1741,10 @@ object SimilarityOps {
                    JOIN embeddings ec ON ec.vec_id = s.vec_id
                    WHERE s.vec_id <> p.qid AND ec.label = eq.label),
                  fscored AS (
-                   SELECT fcand.qid, fcand.vec_id,
-                          $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
+                   SELECT fcand.qid, fcand.vec_id, ${sqlCos()} AS cos_sim
                    FROM fcand JOIN nv a ON a.vec_id = fcand.qid
                               JOIN nv b ON b.vec_id = fcand.vec_id)
-               SELECT qid, vec_id, cos_sim, rk FROM (
-                 SELECT qid, vec_id, cos_sim,
-                        CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS INT) AS rk
-                 FROM fscored)
-               WHERE rk <= 3 ORDER BY qid, rk""")),
+               ${sqlRanked("fscored", 3)}""")),
 
     // kNN LABEL CLASSIFICATION — the auto-labeling/annotation pass a
     // curation pipeline runs over unlabeled data: each probe's label is
@@ -1830,9 +1760,7 @@ object SimilarityOps {
     // are the pruned serving path for bigger probe sets.
     Q("sim23_knn_classify",
       (s, d) => {
-        val pairs = probePairsShared(s, d, 16).select("qid", "vec_id", "cos_sim")
-        val top = StockOps.perKeyTopK(pairs,
-          Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 5)
+        val top = topK(probePairsShared(s, d, 16), 5)
         val lbl = t(s, d, "embeddings").select(col("vec_id"), col("label"))
         val votes = top.join(lbl, "vec_id")
           .groupBy("qid", "label").agg(count(lit(1)).as("n_votes"))
@@ -1846,20 +1774,11 @@ object SimilarityOps {
             (col("pred_label") === col("true_label")).as("correct"))
           .orderBy("vec_id")
       },
-      Some(s"""WITH top AS (
-                 SELECT qid, vec_id FROM (
-                   SELECT qid, vec_id,
-                          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                   FROM (${sqlProbePairs(16)}))
-                 WHERE rk <= 5),
+      Some(s"""WITH top AS (${sqlTopK(s"(${sqlProbePairs(16)})", 5)}),
                  votes AS (SELECT t.qid, e.label, COUNT(*) AS n_votes
                            FROM top t JOIN embeddings e ON e.vec_id = t.vec_id
                            GROUP BY t.qid, e.label),
-                 pred AS (SELECT qid, label AS pred_label, n_votes FROM (
-                            SELECT qid, label, n_votes,
-                                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY n_votes DESC, label) AS rn
-                            FROM votes)
-                          WHERE rn = 1)
+                 pred AS (${sqlTopK("votes", 1, "n_votes DESC, label", cols = "qid, label AS pred_label, n_votes")})
                SELECT p.qid AS vec_id, q.label AS true_label, p.pred_label,
                       CAST(p.n_votes AS BIGINT) AS n_votes,
                       (p.pred_label = q.label) AS correct
@@ -1887,10 +1806,7 @@ object SimilarityOps {
         // brute-force probe scan and the candidate pair join (the p05
         // shared-subplan lesson; measured 3.8 s steady-state before, the
         // candidate set is K·probes rows so the checkpoint is tiny)
-        val cand = StockOps.perKeyTopK(
-          probePairsShared(s, d, 16).select("qid", "vec_id", "cos_sim"),
-          Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), K).drop("rk")
-          .localCheckpoint()
+        val cand = topK(probePairsShared(s, d, 16), K).drop("rk").localCheckpoint()
         val nv = withNorm(s, d).select(col("vec_id"), col("embedding"), col("norm2"))
         val ce = cand.join(nv, "vec_id")
         val p = ce.select(col("qid"), col("vec_id").as("i"),
@@ -1927,43 +1843,20 @@ object SimilarityOps {
           .select(col("qid"), col("rk"), col("vec_id"), col("cos_sim"), col("mmr"))
           .orderBy("qid", "rk")
       },
-      Some(s"""WITH cand AS (
-                 SELECT qid, vec_id, cos_sim FROM (
-                   SELECT qid, vec_id, cos_sim,
-                          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rn
-                   FROM (${sqlProbePairs(16)}))
-                 WHERE rn <= 8),
+      Some(s"""WITH cand AS (${sqlTopK(s"(${sqlProbePairs(16)})", 8, cols = "qid, vec_id, cos_sim")}),
                ce AS (SELECT c.qid, c.vec_id, c.cos_sim, n.embedding, n.norm2
                       FROM cand c JOIN (SELECT vec_id, embedding, $sqlNorm2 AS norm2
                                         FROM embeddings) n USING (vec_id)),
-               p AS (SELECT a.qid, a.vec_id AS i, b.vec_id AS j,
-                            $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS sim
+               p AS (SELECT a.qid, a.vec_id AS i, b.vec_id AS j, ${sqlCos()} AS sim
                      FROM ce a JOIN ce b ON a.qid = b.qid AND a.vec_id <> b.vec_id),
-               s1 AS (SELECT qid, vec_id, cos_sim, 2 * cos_sim AS mmr FROM (
-                        SELECT qid, vec_id, cos_sim,
-                               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rn
-                        FROM cand) WHERE rn = 1),
+               s1 AS (${sqlTopK("cand", 1, cols = "qid, vec_id, cos_sim, 2 * cos_sim AS mmr")}),
                r2 AS (SELECT p.qid, p.i AS vec_id, MAX(p.sim) AS red
                       FROM p JOIN s1 ON s1.qid = p.qid AND s1.vec_id = p.j GROUP BY 1, 2),
-               s2 AS (SELECT qid, vec_id, cos_sim, mmr FROM (
-                        SELECT c.qid, c.vec_id, c.cos_sim, 2 * c.cos_sim - r.red AS mmr,
-                               ROW_NUMBER() OVER (PARTITION BY c.qid
-                                 ORDER BY 2 * c.cos_sim - r.red DESC, c.vec_id) AS rn
-                        FROM cand c JOIN r2 r ON r.qid = c.qid AND r.vec_id = c.vec_id
-                        WHERE NOT EXISTS (SELECT 1 FROM s1 s
-                                          WHERE s.qid = c.qid AND s.vec_id = c.vec_id))
-                      WHERE rn = 1),
+               s2 AS (${sqlMmrStep("r2", "s1")}),
                s12 AS (SELECT qid, vec_id FROM s1 UNION ALL SELECT qid, vec_id FROM s2),
                r3 AS (SELECT p.qid, p.i AS vec_id, MAX(p.sim) AS red
                       FROM p JOIN s12 s ON s.qid = p.qid AND s.vec_id = p.j GROUP BY 1, 2),
-               s3 AS (SELECT qid, vec_id, cos_sim, mmr FROM (
-                        SELECT c.qid, c.vec_id, c.cos_sim, 2 * c.cos_sim - r.red AS mmr,
-                               ROW_NUMBER() OVER (PARTITION BY c.qid
-                                 ORDER BY 2 * c.cos_sim - r.red DESC, c.vec_id) AS rn
-                        FROM cand c JOIN r3 r ON r.qid = c.qid AND r.vec_id = c.vec_id
-                        WHERE NOT EXISTS (SELECT 1 FROM s12 s
-                                          WHERE s.qid = c.qid AND s.vec_id = c.vec_id))
-                      WHERE rn = 1)
+               s3 AS (${sqlMmrStep("r3", "s12")})
                SELECT qid, rk, vec_id, cos_sim, mmr FROM (
                  SELECT qid, 1 AS rk, vec_id, cos_sim, mmr FROM s1
                  UNION ALL SELECT qid, 2, vec_id, cos_sim, mmr FROM s2
@@ -1983,19 +1876,8 @@ object SimilarityOps {
         val nProbes = 10
         val truncCorpus = withNormOf(t(s, d, "embeddings")
           .select(col("vec_id"), slice(col("embedding"), 1, MrlDims).as("embedding")))
-        val tprobes = truncCorpus.where(col("vec_id") < nProbes)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-            col("norm2").as("qnorm2"))
-        val tpairs = truncCorpus.join(broadcast(tprobes), col("vec_id") =!= col("qid"))
-          .withColumn("cos_sim",
-            cosine(scaledDot(col("qvec"), col("embedding")), col("qnorm2"), col("norm2")))
-        val truncTop = StockOps.perKeyTopK(tpairs,
-            Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id")
-        val truth = StockOps.perKeyTopK(probePairsShared(s, d, nProbes),
-            Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id")
-        truth.join(truncTop.withColumn("hit", lit(1L)), Seq("qid", "vec_id"), "left")
+        val truncTop = topK(pairsOf(truncCorpus, nProbes), 3).select("qid", "vec_id")
+        bruteTruth(s, d, nProbes, 3).join(truncTop.withColumn("hit", lit(1L)), Seq("qid", "vec_id"), "left")
           .groupBy("qid")
           .agg(count(lit(1)).as("n_truth"),
             sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
@@ -2005,20 +1887,10 @@ object SimilarityOps {
       Some(s"""WITH nv AS (SELECT vec_id, embedding, $sqlNorm2 AS norm2 FROM embeddings),
                  tv0 AS (SELECT vec_id, embedding[1:$MrlDims] AS embedding FROM embeddings),
                  tn AS (SELECT vec_id, embedding, $sqlNorm2 AS norm2 FROM tv0),
-                 tp AS (SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-                               $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                        FROM tn a JOIN tn b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-                 ttop AS (SELECT qid, vec_id FROM (
-                            SELECT qid, vec_id,
-                                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                            FROM tp) WHERE rk <= 3),
-                 fp AS (SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-                               $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                        FROM nv a JOIN nv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-                 ftop AS (SELECT qid, vec_id FROM (
-                            SELECT qid, vec_id,
-                                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                            FROM fp) WHERE rk <= 3)
+                 tp AS (${sqlProbeCos(10, "tn")}),
+                 ttop AS (${sqlTopK("tp", 3)}),
+                 fp AS (${sqlProbeCos(10)}),
+                 ftop AS (${sqlTopK("fp", 3)})
                SELECT f.qid, COUNT(*) AS n_truth,
                       CAST(COUNT(t.vec_id) AS BIGINT) AS n_hit,
                       CAST(COUNT(t.vec_id) AS DOUBLE) / COUNT(*) AS recall
@@ -2044,16 +1916,11 @@ object SimilarityOps {
         val scored = recon.join(broadcast(probes), col("vec_id") =!= col("qid"))
           .withColumn("sq_dist", scaledL2(col("qvec"), col("recon")))
           .select("qid", "vec_id", "sq_dist")
-        StockOps.perKeyTopK(scored, Seq("qid"), Seq(col("sq_dist"), col("vec_id")), 3)
+        topK(scored, 3, "sq_dist", ascending = true)
           .select("qid", "rk", "vec_id", "sq_dist")
           .orderBy("qid", "rk")
       },
-      Some(s"""WITH $sqlSqAdcCtes
-              SELECT qid, CAST(rk AS INT) AS rk, vec_id, sq_dist FROM (
-                SELECT qid, vec_id, sq_dist,
-                       ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sq_dist, vec_id) AS rk
-                FROM adcsq) WHERE rk <= 3
-              ORDER BY qid, rk""")),
+      Some(s"WITH $sqlSqAdcCtes ${sqlRankedBy("adcsq", 3, "sq_dist")}")),
 
     // SQ RECALL — the safety number for int8 serving: recall@3 of sim26
     // against the exact full-precision L2 truth (the same truth sim17/19
@@ -2062,27 +1929,11 @@ object SimilarityOps {
     // recall where seed-codebook PQ lands ~0.1–0.2 — the compression ↔
     // recall trade made measurable).
     Q("sim27_sq_recall",
-      (s, d) => {
-        val top = byNameLocal("sim26_sq_adc_search").build(s, d)
-          .select(col("qid"), col("vec_id"), lit(1).as("hit"))
-        pqL2Truth(s, d).join(top, Seq("qid", "vec_id"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-          .withColumn("recall", col("n_hit").cast(DoubleType) / 3)
-          .orderBy("qid")
-      },
+      (s, d) => recallByQid(pqL2Truth(s, d), byNameLocal("sim26_sq_adc_search").build(s, d), 3),
       Some(s"""WITH $sqlSqAdcCtes,
-                 sq_top AS (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sq_dist, vec_id) AS rk
-                     FROM adcsq) WHERE rk <= 3),
+                 sq_top AS (${sqlTopK("adcsq", 3, "sq_dist, vec_id")}),
                  $sqlPqTruthCtes
-              SELECT t.qid, CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
-                     CAST(COUNT(a.vec_id) AS DOUBLE) / 3 AS recall
-              FROM truth t LEFT JOIN sq_top a
-                ON a.qid = t.qid AND a.vec_id = t.vec_id
-              GROUP BY t.qid ORDER BY t.qid"""),
+              ${sqlRecallByQid("sq_top", 3)}"""),
       bench = false),
 
     // QUANTIZATION PARETO — the serving decision in one table: mean
@@ -2105,22 +1956,9 @@ object SimilarityOps {
             .select(lit(method).as("method"), lit(bytes).as("bytes_per_vec"),
               col("mean_recall"))
         val adcTop = byNameLocal("sim16_pq_adc_search").build(s, d).select("qid", "vec_id")
-        val emb = t(s, d, "embeddings")
-        val probes = emb.where(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val rrTop = StockOps.perKeyTopK(
-            StockOps.perKeyTopK(pqAdcScores(s, d),
-                Seq("qid"), Seq(col("adc_dist"), col("vec_id")), 20)
-              .select("qid", "vec_id")
-              .join(emb, "vec_id").join(broadcast(probes), "qid")
-              .withColumn("l2", scaledL2(col("qvec"), col("embedding")))
-              .select("qid", "vec_id", "l2"),
-            Seq("qid"), Seq(col("l2"), col("vec_id")), 3)
-          .select("qid", "vec_id")
+        val rrTop = pqAdcRerank(s, d).select("qid", "vec_id")
         val sqTop = byNameLocal("sim26_sq_adc_search").build(s, d).select("qid", "vec_id")
-        val binTop = StockOps.perKeyTopK(binHamScores(s, d),
-            Seq("qid"), Seq(col("hamming"), col("vec_id")), 3)
-          .select("qid", "vec_id")
+        val binTop = topK(binHamScores(s, d), 3, "hamming", ascending = true).select("qid", "vec_id")
         row("pq_adc", 4, adcTop)
           .union(row("pq_adc_rerank", 4, rrTop))
           .union(row("binary_hamming", 8, binTop))
@@ -2132,37 +1970,17 @@ object SimilarityOps {
                  $sqlSqAdcCtes,
                  $sqlBinHamCtes,
                  $sqlPqTruthCtes,
-                 bintop AS (SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY hamming, vec_id) AS rk
-                     FROM bham) WHERE rk <= 3),
-                 adctop AS (SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-                     FROM adc) WHERE rk <= 3),
-                 rrcand AS (SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-                     FROM adc) WHERE rk <= 20),
-                 rr AS (SELECT c.qid, c.vec_id,
-                               ${sqlScaledL2("a.embedding", "b.embedding", PqSub * PqDim)} AS l2
-                        FROM rrcand c JOIN embeddings a ON a.vec_id = c.qid
-                                      JOIN embeddings b ON b.vec_id = c.vec_id),
-                 rrtop AS (SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY l2, vec_id) AS rk
-                     FROM rr) WHERE rk <= 3),
-                 sqtop AS (SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sq_dist, vec_id) AS rk
-                     FROM adcsq) WHERE rk <= 3)
+                 bintop AS (${sqlTopK("bham", 3, "hamming, vec_id")}),
+                 adctop AS (${sqlTopK("adc", 3, "adc_dist, vec_id")}),
+                 $sqlPqRerankCtes,
+                 sqtop AS (${sqlTopK("adcsq", 3, "sq_dist, vec_id")})
               SELECT method, bytes_per_vec, mean_recall FROM (
                 SELECT 'pq_adc' AS method, 4 AS bytes_per_vec,
                        CAST(COUNT(a.vec_id) AS DOUBLE) / 30 AS mean_recall
                 FROM truth t LEFT JOIN adctop a ON a.qid = t.qid AND a.vec_id = t.vec_id
                 UNION ALL
                 SELECT 'pq_adc_rerank', 4, CAST(COUNT(a.vec_id) AS DOUBLE) / 30
-                FROM truth t LEFT JOIN rrtop a ON a.qid = t.qid AND a.vec_id = t.vec_id
+                FROM truth t LEFT JOIN rr_top a ON a.qid = t.qid AND a.vec_id = t.vec_id
                 UNION ALL
                 SELECT 'binary_hamming', 8, CAST(COUNT(a.vec_id) AS DOUBLE) / 30
                 FROM truth t LEFT JOIN bintop a ON a.qid = t.qid AND a.vec_id = t.vec_id
@@ -2182,16 +2000,10 @@ object SimilarityOps {
     // scan side bands the word into 16-bit equi-join keys (the d08
     // move). Recall joins the sim28 pareto as the 8-byte row.
     Q("sim29_binary_search",
-      (s, d) => StockOps.perKeyTopK(binHamScores(s, d),
-          Seq("qid"), Seq(col("hamming"), col("vec_id")), 3)
+      (s, d) => topK(binHamScores(s, d), 3, "hamming", ascending = true)
         .select("qid", "rk", "vec_id", "hamming")
         .orderBy("qid", "rk"),
-      Some(s"""WITH $sqlBinHamCtes
-              SELECT qid, CAST(rk AS INT) AS rk, vec_id, hamming FROM (
-                SELECT qid, vec_id, hamming,
-                       ROW_NUMBER() OVER (PARTITION BY qid ORDER BY hamming, vec_id) AS rk
-                FROM bham) WHERE rk <= 3
-              ORDER BY qid, rk""")),
+      Some(s"WITH $sqlBinHamCtes ${sqlRankedBy("bham", 3, "hamming")}")),
 
     // RANGE (radius) SEARCH — the similarity query top-k cannot answer:
     // ALL corpus vectors within a fixed cosine radius of each probe
@@ -2232,62 +2044,16 @@ object SimilarityOps {
     Q("sim31_nprobe_sweep",
       (s, d) => {
         val cents = ivfCentroids(withNorm(s, d))
-        val truth = StockOps.perKeyTopK(probePairsShared(s, d, 10),
-            Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id")
-          .localCheckpoint()
-        val total = truth.count()
-        val rows = Seq(1, 2, 4, 8).map { p =>
-          val hits = ivfSearch(s, d, cents, nProbes = 10, k = 3, probe = p)
-            .select("qid", "vec_id")
-            .join(truth, Seq("qid", "vec_id"), "left_semi").count()
-          (p, total, hits, hits.toDouble / total.toDouble)
-        }
-        import s.implicits._
-        rows.toDF("nprobe", "n_truth", "n_hit", "recall").orderBy("nprobe")
+        val grade = recallOf(bruteTruth(s, d, 10, 3).localCheckpoint())
+        recallRows(s, "nprobe", Seq(1, 2, 4, 8).map(p =>
+          p -> grade(ivfSearch(s, d, cents, nProbes = 10, k = 3, probe = p))))
       },
       Some {
-        val sweep = Seq(1, 2, 4, 8).map { p =>
-          s"""pcells_$p AS (
-                SELECT vec_id AS qid, cell FROM (
-                  SELECT vec_id, cell,
-                         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) AS rn
-                  FROM cscores WHERE vec_id < 10) WHERE rn <= $p),
-              icand_$p AS (
-                SELECT p.qid, s.vec_id FROM pcells_$p p JOIN assigned s ON s.cell = p.cell
-                WHERE s.vec_id <> p.qid),
-              iscored_$p AS (
-                SELECT ic.qid, ic.vec_id,
-                       $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                FROM icand_$p ic JOIN nv a ON a.vec_id = ic.qid
-                                 JOIN nv b ON b.vec_id = ic.vec_id),
-              top_$p AS (
-                SELECT qid, vec_id FROM (
-                  SELECT qid, vec_id,
-                         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                  FROM iscored_$p) WHERE rk <= 3),
-              rec_$p AS (
-                SELECT $p AS nprobe,
-                       (SELECT COUNT(*) FROM brute_top) AS n_truth,
-                       COUNT(*) AS n_hit
-                FROM top_$p i JOIN brute_top b USING (qid, vec_id))"""
-        }.mkString(",\n")
-        s"""WITH $sqlIvfAssignCtes,
-              bpairs AS MATERIALIZED (
-                SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-                       $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                FROM nv a JOIN nv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-              brute_top AS MATERIALIZED (
-                SELECT qid, vec_id FROM (
-                  SELECT qid, vec_id,
-                         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                  FROM bpairs) WHERE rk <= 3),
-              $sweep
-           SELECT nprobe, n_truth, n_hit,
-                  CAST(n_hit AS DOUBLE) / n_truth AS recall
-           FROM (SELECT * FROM rec_1 UNION ALL SELECT * FROM rec_2
-                 UNION ALL SELECT * FROM rec_4 UNION ALL SELECT * FROM rec_8)
-           ORDER BY nprobe"""
+        val sweep = Seq(1, 2, 4, 8).map(p =>
+          s"${sqlSeedSearchCtes(p, s"_$p")}, top_$p AS (${sqlTopK(s"iscored_$p", 3)})")
+        s"""WITH $sqlIvfAssignCtes, ${sqlBruteTruthCtes(10, 3)},
+              ${sweep.mkString(",\n")}
+           ${sqlRecallRows("nprobe", Seq(1, 2, 4, 8).map(p => (s"$p", s"top_$p", "brute_top")))}"""
       },
       bench = false),
 
@@ -2359,20 +2125,24 @@ object SimilarityOps {
     // probe vector 0, the sim01 broadcast-probe shape), fused by
     // Reciprocal Rank Fusion. RRF is rank-only — which is exactly why it
     // is engine-exact here: each contribution is the INTEGER
-    // floor(1e9/(60+rank)), so no float score mixing can diverge. Both
-    // top-20 lists come from perKeyTopK under a constant query key (the
-    // distributed top-k shape); the fusion is a full-outer join of two
-    // ≤20-row lists. Note the designed asymmetry: the probe document
+    // floor(1e9/(60+rank)), so no float score mixing can diverge. The
+    // dense top-20 is the kit's per-probe topK; the one query's lexical
+    // top-20 is a sort-limit ranked on the driver; the fusion is a
+    // full-outer join of two ≤20-row lists. Note the designed asymmetry: the probe document
     // itself can surface lexically but never as its own dense neighbor.
     Q("sim34_hybrid_rrf",
       (s, d) => {
         val kwScores = TextOps.keywordTfWeights(s, d, TextOps.KeywordTerms)
           .groupBy("doc_id").agg(sum(col("tf") * col("weight")).as("kw_score"))
-        val kwRank = StockOps.perKeyTopK(kwScores.withColumn("qid", lit(0)),
-            Seq("qid"), Seq(desc("kw_score"), col("doc_id")), HybridK, "kw_rank")
-          .select(col("doc_id"), col("kw_rank"))
-        val vecRank = StockOps.perKeyTopK(probePairsShared(s, d, 1),
-            Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), HybridK, "vec_rank")
+        // the one query's lexical top-HybridK is ranked on the driver: a
+        // bounded sort-limit and a ≤ HybridK-row collect, not a window over
+        // one constant key (which Catalyst plans without a partition)
+        val kwTop = kwScores.orderBy(desc("kw_score"), col("doc_id")).limit(HybridK)
+          .select("doc_id").collect().map(_.getLong(0))
+        import s.implicits._
+        val kwRank = kwTop.toSeq.zipWithIndex.map { case (id, i) => (id, i + 1) }
+          .toDF("doc_id", "kw_rank")
+        val vecRank = topK(probePairsShared(s, d, 1), HybridK, rank = "vec_rank")
           .select(col("vec_id").as("doc_id"), col("vec_rank"))
         kwRank.join(vecRank, Seq("doc_id"), "full_outer")
           .withColumn("rrf",
@@ -2432,19 +2202,10 @@ object SimilarityOps {
         require(seedRows.length == 2, s"hot cell $hotCell has < 2 members")
         val seeds = seedRows.map(r =>
           (r.getSeq[Float](1).toArray.map(_.toDouble), r.getLong(2)))
-        val s0 = assignCells(members, seeds)
-        val sums = s0.select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "x")))
-          .groupBy("cell", "dim")
-          .agg(count(lit(1)).as("n_members"),
-            sum(floor(col("x").cast(DoubleType) * SCALE).cast(DecimalType(38, 0))).as("ssum"))
-          .collect()
+        val sums = lloydSums(members, seeds).collect()
         require(sums.iterator.map(_.getInt(0)).toSet.size == 2,
           "a sub-cell emptied at the seed stage — re-seed required")
-        val dims = sums.iterator.map(_.getInt(1)).max + 1
-        val cents = Array.fill(2)(new Array[Double](dims))
-        sums.foreach(r => cents(r.getInt(0))(r.getInt(1)) =
-          r.getDecimal(3).doubleValue() / (r.getLong(2) * SCALE))
-        val refined = cents.map(c => (c, c.map(x => math.floor(x * x * SCALE).toLong).sum))
+        val refined = centroidsFrom(sums, cells = 2)
         assignCells(members, refined)
           .groupBy("cell").agg(count(lit(1)).as("n_vecs"))
           .select(lit(hotCell).as("parent_cell"), lit(hotN).as("parent_n"),
@@ -2461,16 +2222,9 @@ object SimilarityOps {
                                   CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS sc
                            FROM (SELECT * FROM mem ORDER BY vec_id LIMIT 2)),
                  subss AS (
-                   SELECT m.vec_id, s.sc,
-                          CAST(list_sum(list_transform(m.embedding,
-                                 (x, i) -> CAST(FLOOR(CAST(x AS DOUBLE) * CAST(s.embedding[i] AS DOUBLE) * 1e15) AS BIGINT))) AS BIGINT)
-                            / SQRT(CAST(s.norm2 AS DOUBLE)) AS score
+                   SELECT m.vec_id, s.sc, ${sqlDotOf("m", "s")} / SQRT(CAST(s.norm2 AS DOUBLE)) AS score
                    FROM mem m CROSS JOIN sseed s),
-                 suba0 AS (SELECT vec_id, sc FROM (
-                             SELECT vec_id, sc,
-                                    ROW_NUMBER() OVER (PARTITION BY vec_id
-                                      ORDER BY score DESC, sc) AS rn
-                             FROM subss) WHERE rn = 1),
+                 suba0 AS (${sqlTopK("subss", 1, "score DESC, sc", "vec_id", "vec_id, sc")}),
                  subsum AS (
                    SELECT a.sc, i.dim, COUNT(*) AS n_members,
                           SUM(CAST(FLOOR(CAST(m.embedding[CAST(i.dim + 1 AS INT)] AS DOUBLE) * 1e15) AS BIGINT)) AS ssum
@@ -2485,11 +2239,8 @@ object SimilarityOps {
                    SELECT m.vec_id, c.sc,
                           CAST(SUM(CAST(FLOOR(CAST(m.embedding[CAST(c.dim + 1 AS INT)] AS DOUBLE) * c.cval * 1e15) AS BIGINT)) AS BIGINT) AS dot
                    FROM mem m CROSS JOIN subc c GROUP BY 1, 2),
-                 suba1 AS (SELECT vec_id, sc FROM (
-                             SELECT s.vec_id, s.sc,
-                                    ROW_NUMBER() OVER (PARTITION BY s.vec_id
-                                      ORDER BY CAST(s.dot AS DOUBLE) / SQRT(CAST(n.norm2 AS DOUBLE)) DESC, s.sc) AS rn
-                             FROM subsc s JOIN subcn n USING (sc)) WHERE rn = 1)
+                 suba1 AS (${sqlTopK("subsc s JOIN subcn n USING (sc)", 1,
+                   "CAST(s.dot AS DOUBLE) / SQRT(CAST(n.norm2 AS DOUBLE)) DESC, s.sc", "s.vec_id", "vec_id, sc")})
                SELECT CAST((SELECT cell FROM hot) AS INT) AS parent_cell,
                       (SELECT n FROM hot) AS parent_n,
                       CAST(sc AS INT) AS subcell, COUNT(*) AS n_vecs
@@ -2576,17 +2327,12 @@ object SimilarityOps {
     // every hop.
     Q("sim38_graph_ann_walk",
       (s, d) => {
-        val frontier = walkFrontiers(s, d).last._2
-        StockOps.perKeyTopK(frontier, Seq("qid"),
-            Seq(desc("cos_sim"), col("vec_id")), 3, outCol = "rank")
+        topK(walkFrontiers(s, d).last._2, 3, rank = "rank")
           .select(col("qid"), col("rank"), col("vec_id"), col("cos_sim"))
           .orderBy("qid", "rank")
       },
       Some(s"""WITH RECURSIVE $sqlWalkCtes
-               SELECT qid, CAST(rk AS INT) AS rank, vec_id, cos_sim FROM (
-                 SELECT qid, vec_id, cos_sim,
-                        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                 FROM wf$WalkHops) WHERE rk <= 3 ORDER BY qid, rank"""),
+               ${sqlTopK(s"wf$WalkHops", 3, cols = sqlWalkRanked)} ORDER BY qid, rank"""),
       bench = false),
 
     // Recall@3 of the GRAPH WALK vs exact brute force — sim09's pricing
@@ -2598,39 +2344,12 @@ object SimilarityOps {
     // oracle: DuckDB recomputes brute-force truth AND replays the full
     // walk, so the recall NUMBER itself is cross-engine-verified.
     Q("sim39_walk_recall",
-      (s, d) => {
-        val truth = StockOps.perKeyTopK(probePairsShared(s, d, 10),
-            Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id")
-        val walk = byNameLocal("sim38_graph_ann_walk").build(s, d)
-        val hits = walk.select("qid", "vec_id")
-          .join(truth, Seq("qid", "vec_id"), "left_semi").count()
-        val total = truth.count()
-        import s.implicits._
-        Seq(("graph_walk", total, hits, hits.toDouble / total))
-          .toDF("method", "n_truth", "n_hit", "recall")
-      },
+      (s, d) => recallRows(s, "method", Seq("graph_walk" ->
+        recallOf(bruteTruth(s, d, 10, 3))(byNameLocal("sim38_graph_ann_walk").build(s, d)))),
       Some(s"""WITH RECURSIVE $sqlWalkCtes,
-                 walk_top AS (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                     FROM wf$WalkHops) WHERE rk <= 3),
-                 bpairs AS MATERIALIZED (
-                   SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-                          $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                   FROM nv a JOIN nv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-                 brute_top AS MATERIALIZED (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                     FROM bpairs) WHERE rk <= 3),
-                 hits AS (SELECT COUNT(*) AS n_hit
-                          FROM walk_top w JOIN brute_top b USING (qid, vec_id)),
-                 tot AS (SELECT COUNT(*) AS n_truth FROM brute_top)
-               SELECT 'graph_walk' AS method, n_truth, n_hit,
-                      CAST(n_hit AS DOUBLE) / n_truth AS recall
-               FROM tot, hits"""),
+                 walk_top AS (${sqlTopK(s"wf$WalkHops", 3)}),
+                 ${sqlBruteTruthCtes(10, 3)}
+               ${sqlRecallRows("method", Seq(("'graph_walk'", "walk_top", "brute_top")))}"""),
       bench = false),
 
     // Hop-count SWEEP — sim31's knob-pricing convention applied to the
@@ -2644,46 +2363,14 @@ object SimilarityOps {
     // a production cell count makes the curve informative.)
     Q("sim40_walk_hop_sweep",
       (s, d) => {
-        val truth = StockOps.perKeyTopK(probePairsShared(s, d, 10),
-            Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id").localCheckpoint()
-        val total = truth.count()
-        val rows = walkFrontiers(s, d).map { case (h, frontier) =>
-          val top3 = StockOps.perKeyTopK(frontier, Seq("qid"),
-            Seq(desc("cos_sim"), col("vec_id")), 3)
-          val hits = top3.select("qid", "vec_id")
-            .join(truth, Seq("qid", "vec_id"), "left_semi").count()
-          (h, total, hits, hits.toDouble / total)
-        }
-        import s.implicits._
-        rows.toDF("hops", "n_truth", "n_hit", "recall").orderBy("hops")
+        val grade = recallOf(bruteTruth(s, d, 10, 3).localCheckpoint())
+        recallRows(s, "hops", walkFrontiers(s, d).map { case (h, frontier) =>
+          h -> grade(topK(frontier, 3)) })
       },
       Some(s"""WITH RECURSIVE $sqlWalkCtes,
-                 bpairs AS MATERIALIZED (
-                   SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-                          $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                   FROM nv a JOIN nv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-                 brute_top AS MATERIALIZED (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                     FROM bpairs) WHERE rk <= 3),
-                 tot AS (SELECT COUNT(*) AS n_truth FROM brute_top),
-                 ${(1 to WalkHops).map(h =>
-                   s"""wtop$h AS (SELECT qid, vec_id FROM (
-                         SELECT qid, vec_id,
-                                ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                         FROM wf$h) WHERE rk <= 3),
-                       whit$h AS (SELECT COUNT(*) AS n_hit
-                                  FROM wtop$h w JOIN brute_top b USING (qid, vec_id))""")
-                   .mkString(",\n                 ")}
-               SELECT * FROM (
-                 ${(1 to WalkHops).map(h =>
-                   s"""SELECT CAST($h AS INT) AS hops, (SELECT n_truth FROM tot) AS n_truth,
-                              (SELECT n_hit FROM whit$h) AS n_hit,
-                              CAST((SELECT n_hit FROM whit$h) AS DOUBLE) / (SELECT n_truth FROM tot) AS recall""")
-                   .mkString("\n                 UNION ALL\n                 ")})
-               ORDER BY hops"""),
+                 ${sqlBruteTruthCtes(10, 3)},
+                 ${(1 to WalkHops).map(h => s"wtop$h AS (${sqlTopK(s"wf$h", 3)})").mkString(",\n")}
+               ${sqlRecallRows("hops", (1 to WalkHops).map(h => (s"$h", s"wtop$h", "brute_top")))}"""),
       bench = false),
 
     // SERVING UNDER DELETION — the ANN half of the p12 deletion-propagation
@@ -2726,11 +2413,7 @@ object SimilarityOps {
                  ilive AS (SELECT qid, vec_id, cos_sim FROM iscored
                            WHERE qid NOT IN (SELECT vec_id FROM sdel)
                              AND vec_id NOT IN (SELECT vec_id FROM sdel))
-               SELECT qid, vec_id, cos_sim, rk FROM (
-                 SELECT qid, vec_id, cos_sim,
-                        CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS INT) AS rk
-                 FROM ilive)
-               WHERE rk <= 3 ORDER BY qid, rk"""),
+               ${sqlRanked("ilive", 3)}"""),
       bench = false),
 
     // INDEX COMPACTION — the deletion lifecycle's last step: sim41 serves
@@ -2767,13 +2450,8 @@ object SimilarityOps {
         val candPlan = cand.queryExecution.executedPlan.toString
         require(raw"PartitionFilters: \[[^\]]*cell".r.findFirstIn(candPlan).isDefined,
           s"compacted index scan lost its static cell partition pruning:\n${candPlan.take(2000)}")
-        val scored = cand.join(broadcast(probes), Seq("cell"))
-          .where(col("vec_id") =!= col("qid"))
-          .withColumn("cos_sim",
-            cosine(scaledDot(col("qvec"), col("embedding")), col("qnorm2"), col("norm2")))
-        val served = StockOps.perKeyTopK(scored, Seq("qid"),
-            Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id", "cos_sim", "rk")
+        val served = topK(withCos(cand.join(broadcast(probes), Seq("cell"))
+          .where(col("vec_id") =!= col("qid"))), 3)
         val tomb = serveIvfIndexed(s, d, withNorm(s, d), nProbes = 10,
           tombstones = Some(dels)).select("qid", "vec_id", "cos_sim", "rk")
         require(served.exceptAll(tomb).isEmpty && tomb.exceptAll(served).isEmpty,
@@ -2811,42 +2489,18 @@ object SimilarityOps {
         val live = probePairsShared(s, d, 10)
           .join(broadcast(dels.select(col("vec_id").as("qid"))), Seq("qid"), "left_anti")
           .join(broadcast(dels), Seq("vec_id"), "left_anti")
-        val truth = StockOps.perKeyTopK(live, Seq("qid"),
-            Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id")
-        val ann = byNameLocal("sim41_ivf_delete_serve").build(s, d)
-        val hits = ann.select("qid", "vec_id")
-          .join(truth, Seq("qid", "vec_id"), "left_semi").count()
-        val total = truth.count()
-        import s.implicits._
-        Seq(("ivf_tombstoned", total, hits, hits.toDouble / total))
-          .toDF("method", "n_truth", "n_hit", "recall")
+        recallRows(s, "method", Seq("ivf_tombstoned" -> recallOf(
+          topK(live, 3).select("qid", "vec_id"))(byNameLocal("sim41_ivf_delete_serve").build(s, d))))
       },
       Some(s"""WITH $sqlTrainedSearchCtes,
                  rdel AS (SELECT vec_id FROM nv WHERE ${sqlDocHash("vec_id", 20)} = 0),
                  rlive AS (SELECT qid, vec_id, cos_sim FROM iscored
                            WHERE qid NOT IN (SELECT vec_id FROM rdel)
                              AND vec_id NOT IN (SELECT vec_id FROM rdel)),
-                 ann_top AS (SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                     FROM rlive) WHERE rk <= 3),
-                 rbpairs AS MATERIALIZED (
-                   SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-                          $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                   FROM nv a JOIN nv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id
-                   WHERE a.vec_id NOT IN (SELECT vec_id FROM rdel)
-                     AND b.vec_id NOT IN (SELECT vec_id FROM rdel)),
-                 rbrute_top AS MATERIALIZED (SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                     FROM rbpairs) WHERE rk <= 3),
-                 rhits AS (SELECT COUNT(*) AS n_hit
-                           FROM ann_top a JOIN rbrute_top b USING (qid, vec_id)),
-                 rtot AS (SELECT COUNT(*) AS n_truth FROM rbrute_top)
-               SELECT 'ivf_tombstoned' AS method, n_truth, n_hit,
-                      CAST(n_hit AS DOUBLE) / n_truth AS recall
-               FROM rtot, rhits"""),
+                 ann_top AS (${sqlTopK("rlive", 3)}),
+                 ${sqlBruteTruthCtes(10, 3, "r",
+                   "WHERE a.vec_id NOT IN (SELECT vec_id FROM rdel) AND b.vec_id NOT IN (SELECT vec_id FROM rdel)")}
+               ${sqlRecallRows("method", Seq(("'ivf_tombstoned'", "ann_top", "rbrute_top")))}"""),
       bench = false),
 
     // NEIGHBOR DIVERSIFICATION (the HNSW select-neighbors heuristic /
@@ -2874,8 +2528,7 @@ object SimilarityOps {
                  kedg AS MATERIALIZED (SELECT u, CAST(rk AS INT) AS rk, v, cos_sim
                           FROM ktop WHERE rk <= $KnnK),
                  npair AS MATERIALIZED (
-                   SELECT w.u, w.v AS w_id, e.rk AS rv, e.v AS v_id,
-                          $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_wv
+                   SELECT w.u, w.v AS w_id, e.rk AS rv, e.v AS v_id, ${sqlCos()} AS cos_wv
                    FROM kedg w JOIN kedg e ON w.u = e.u AND w.rk < e.rk
                         JOIN nv a ON a.vec_id = w.v
                         JOIN nv b ON b.vec_id = e.v),
@@ -2915,17 +2568,13 @@ object SimilarityOps {
           .join(broadcast(residualLut(s, cents, pc, rcb)),
             Seq("qid", "cell", "subspace", "code"))
           .groupBy("qid", "vec_id").agg(sum(col("pdist")).as("adc_dist"))
-        StockOps.perKeyTopK(adc, Seq("qid"), Seq(col("adc_dist"), col("vec_id")), 3)
+        topK(adc, 3, "adc_dist", ascending = true)
           .select("qid", "rk", "vec_id", "adc_dist")
           .orderBy("qid", "rk")
       },
       Some(s"""WITH $sqlTrainedSearchCtes,
                  $sqlResidualAdcCtes
-               SELECT qid, CAST(rk AS INT) AS rk, vec_id, adc_dist FROM (
-                 SELECT qid, vec_id, adc_dist,
-                        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-                 FROM radc) WHERE rk <= 3
-               ORDER BY qid, rk"""),
+               ${sqlRankedBy("radc", 3, "adc_dist")}"""),
       bench = false),
 
     // Residual-IVFPQ recall@3 vs the exact full-vector L2 truth — prices
@@ -2939,28 +2588,12 @@ object SimilarityOps {
     // production gap opens. Per probe (the sim17 convention), both sides
     // replayed in SQL.
     Q("sim47_residual_pq_recall",
-      (s, d) => {
-        val adcTop = byNameLocal("sim46_residual_pq_search").build(s, d)
-          .select(col("qid"), col("vec_id"), lit(1).as("hit"))
-        pqL2Truth(s, d).join(adcTop, Seq("qid", "vec_id"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-          .withColumn("recall", col("n_hit").cast(DoubleType) / 3)
-          .orderBy("qid")
-      },
+      (s, d) => recallByQid(pqL2Truth(s, d), byNameLocal("sim46_residual_pq_search").build(s, d), 3),
       Some(s"""WITH $sqlTrainedSearchCtes,
                  $sqlResidualAdcCtes,
-                 radc_top AS (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-                     FROM radc) WHERE rk <= 3),
+                 radc_top AS (${sqlTopK("radc", 3, "adc_dist, vec_id")}),
                  $sqlPqTruthCtes
-               SELECT t.qid, CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
-                      CAST(COUNT(a.vec_id) AS DOUBLE) / 3 AS recall
-               FROM truth t LEFT JOIN radc_top a
-                 ON a.qid = t.qid AND a.vec_id = t.vec_id
-               GROUP BY t.qid ORDER BY t.qid"""),
+               ${sqlRecallByQid("radc_top", 3)}"""),
       bench = false),
 
     // WALK OVER THE PRUNED GRAPH — sim39's pricing convention applied to
@@ -2980,25 +2613,17 @@ object SimilarityOps {
         val (edges, kept) = rngKeptEdges(s, d)
         val nEdges = edges.count()
         val nKept = kept.count()
-        val truth = StockOps.perKeyTopK(probePairsShared(s, d, 10),
-            Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id").localCheckpoint()
-        val frontier = walkFrontiersOver(s, d, kept).last._2
-        val top3 = StockOps.perKeyTopK(frontier, Seq("qid"),
-          Seq(desc("cos_sim"), col("vec_id")), 3)
-        val hits = top3.select("qid", "vec_id")
-          .join(truth, Seq("qid", "vec_id"), "left_semi").count()
-        val total = truth.count()
+        val grade = recallOf(bruteTruth(s, d, 10, 3).localCheckpoint())
+        val (total, hits, recall) = grade(topK(walkFrontiersOver(s, d, kept).last._2, 3))
         import s.implicits._
-        Seq(("pruned_walk", nEdges, nKept, total, hits, hits.toDouble / total))
+        Seq(("pruned_walk", nEdges, nKept, total, hits, recall))
           .toDF("method", "n_edges", "n_kept", "n_truth", "n_hit", "recall")
       },
       Some(s"""WITH RECURSIVE $sqlTrainedAssignCtes, $sqlKnnCtes,
                  kedg AS MATERIALIZED (SELECT u, CAST(rk AS INT) AS rk, v, cos_sim
                           FROM ktop WHERE rk <= $KnnK),
                  npair AS MATERIALIZED (
-                   SELECT w.u, w.v AS w_id, e.rk AS rv, e.v AS v_id,
-                          $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_wv
+                   SELECT w.u, w.v AS w_id, e.rk AS rv, e.v AS v_id, ${sqlCos()} AS cos_wv
                    FROM kedg w JOIN kedg e ON w.u = e.u AND w.rk < e.rk
                         JOIN nv a ON a.vec_id = w.v
                         JOIN nv b ON b.vec_id = e.v),
@@ -3007,29 +2632,11 @@ object SimilarityOps {
                      SELECT u, v FROM kept$KnnK
                      UNION ALL SELECT v, u FROM kept$KnnK)),
                  ${sqlWalkChainOver("pkedges")},
-                 walk_top AS (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                     FROM wf$WalkHops) WHERE rk <= 3),
-                 bpairs AS MATERIALIZED (
-                   SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-                          $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                   FROM nv a JOIN nv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-                 brute_top AS MATERIALIZED (
-                   SELECT qid, vec_id FROM (
-                     SELECT qid, vec_id,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                     FROM bpairs) WHERE rk <= 3),
-                 hits AS (SELECT COUNT(*) AS n_hit
-                          FROM walk_top w JOIN brute_top b USING (qid, vec_id)),
-                 tot_cnt AS (SELECT COUNT(*) AS n_truth FROM brute_top)
-               SELECT 'pruned_walk' AS method,
-                      (SELECT COUNT(*) FROM kedg) AS n_edges,
-                      (SELECT COUNT(*) FROM kept$KnnK) AS n_kept,
-                      tc.n_truth, h.n_hit,
-                      CAST(h.n_hit AS DOUBLE) / tc.n_truth AS recall
-               FROM tot_cnt tc, hits h"""),
+                 walk_top AS (${sqlTopK(s"wf$WalkHops", 3)}),
+                 ${sqlBruteTruthCtes(10, 3)}
+               SELECT method, (SELECT COUNT(*) FROM kedg) AS n_edges,
+                      (SELECT COUNT(*) FROM kept$KnnK) AS n_kept, n_truth, n_hit, recall
+               FROM (${sqlRecallRows("method", Seq(("'pruned_walk'", "walk_top", "brute_top")))})"""),
       bench = false),
 
     // HIERARCHICAL (two-layer) GRAPH WALK — the last piece of the HNSW
@@ -3056,47 +2663,12 @@ object SimilarityOps {
         val bSym = bEdges.union(bEdges.select(col("v").as("u"), col("u").as("v")))
           .distinct().localCheckpoint()
         val lWalk = walkHopsFrom(s, d, bSym, uWalk).last._2
-        StockOps.perKeyTopK(lWalk, Seq("qid"),
-            Seq(desc("cos_sim"), col("vec_id")), 3, outCol = "rank")
+        topK(lWalk, 3, rank = "rank")
           .select("qid", "rank", "vec_id", "cos_sim")
           .orderBy("qid", "rank")
       },
-      Some {
-        val upperHops = (1 to WalkHops).map(i =>
-          sqlNamedHop(if (i == 1) "hfu0" else s"hfu${i - 1}", s"u$i", "ukedges"))
-        val baseHops = (1 to WalkHops).map(i =>
-          sqlNamedHop(if (i == 1) s"hfu$WalkHops" else s"hfl${i - 1}", s"l$i", "kedges"))
-        s"""WITH RECURSIVE $sqlTrainedAssignCtes, $sqlKnnCtes,
-               ukcand AS MATERIALIZED (
-                 SELECT a.vec_id AS u, b.vec_id AS v,
-                        $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                 FROM a2 pa JOIN a2 pb ON pa.cell = pb.cell AND pa.vec_id <> pb.vec_id
-                      JOIN nv a ON a.vec_id = pa.vec_id
-                      JOIN nv b ON b.vec_id = pb.vec_id
-                 WHERE pa.vec_id % $LayerMod = 0 AND pb.vec_id % $LayerMod = 0),
-               uktop AS MATERIALIZED (
-                 SELECT u, v,
-                        ROW_NUMBER() OVER (PARTITION BY u ORDER BY cos_sim DESC, v) AS rk
-                 FROM ukcand),
-               ukedges AS MATERIALIZED (SELECT DISTINCT u, v FROM (
-                   SELECT u, v FROM uktop WHERE rk <= $LayerK
-                   UNION ALL SELECT v, u FROM uktop WHERE rk <= $LayerK)),
-               ukreach(id, r) AS (
-                 SELECT u, u FROM ukedges
-                 UNION
-                 SELECT e.u, rr.r FROM ukedges e JOIN ukreach rr ON e.v = rr.id),
-               ukcomp AS (SELECT id, MIN(r) AS label FROM ukreach GROUP BY id),
-               ukentries AS (SELECT DISTINCT label FROM ukcomp),
-               hfu0 AS (SELECT p.vec_id AS qid, e.label AS vec_id
-                        FROM nv p, ukentries e WHERE p.vec_id < 10),
-               ${upperHops.mkString(",\n               ")},
-               ${baseHops.mkString(",\n               ")}
-             SELECT qid, CAST(rk AS INT) AS rank, vec_id, cos_sim FROM (
-               SELECT qid, vec_id, cos_sim,
-                      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-               FROM hfl$WalkHops) WHERE rk <= 3
-             ORDER BY qid, rank"""
-      },
+      Some(s"""WITH RECURSIVE $sqlLayeredWalkCtes
+               ${sqlTopK(s"hfl$WalkHops", 3, cols = sqlWalkRanked)} ORDER BY qid, rank"""),
       bench = false),
 
     // Recall@3 of the LAYERED walk vs exact brute force — the sim39
@@ -3111,69 +2683,12 @@ object SimilarityOps {
     // layered descend's navigation cost stays fixed. Both the walk and
     // the truth are replayed in SQL, so the number is cross-engine.
     Q("sim49_layered_walk_recall",
-      (s, d) => {
-        val truth = StockOps.perKeyTopK(probePairsShared(s, d, 10),
-            Seq("qid"), Seq(desc("cos_sim"), col("vec_id")), 3)
-          .select("qid", "vec_id")
-        val walk = byNameLocal("sim48_layered_walk").build(s, d)
-        val hits = walk.select("qid", "vec_id")
-          .join(truth, Seq("qid", "vec_id"), "left_semi").count()
-        val total = truth.count()
-        import s.implicits._
-        Seq(("layered_walk", total, hits, hits.toDouble / total))
-          .toDF("method", "n_truth", "n_hit", "recall")
-      },
-      Some {
-        val upperHops = (1 to WalkHops).map(i =>
-          sqlNamedHop(if (i == 1) "hfu0" else s"hfu${i - 1}", s"u$i", "ukedges"))
-        val baseHops = (1 to WalkHops).map(i =>
-          sqlNamedHop(if (i == 1) s"hfu$WalkHops" else s"hfl${i - 1}", s"l$i", "kedges"))
-        s"""WITH RECURSIVE $sqlTrainedAssignCtes, $sqlKnnCtes,
-               ukcand AS MATERIALIZED (
-                 SELECT a.vec_id AS u, b.vec_id AS v,
-                        $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                 FROM a2 pa JOIN a2 pb ON pa.cell = pb.cell AND pa.vec_id <> pb.vec_id
-                      JOIN nv a ON a.vec_id = pa.vec_id
-                      JOIN nv b ON b.vec_id = pb.vec_id
-                 WHERE pa.vec_id % $LayerMod = 0 AND pb.vec_id % $LayerMod = 0),
-               uktop AS MATERIALIZED (
-                 SELECT u, v,
-                        ROW_NUMBER() OVER (PARTITION BY u ORDER BY cos_sim DESC, v) AS rk
-                 FROM ukcand),
-               ukedges AS MATERIALIZED (SELECT DISTINCT u, v FROM (
-                   SELECT u, v FROM uktop WHERE rk <= $LayerK
-                   UNION ALL SELECT v, u FROM uktop WHERE rk <= $LayerK)),
-               ukreach(id, r) AS (
-                 SELECT u, u FROM ukedges
-                 UNION
-                 SELECT e.u, rr.r FROM ukedges e JOIN ukreach rr ON e.v = rr.id),
-               ukcomp AS (SELECT id, MIN(r) AS label FROM ukreach GROUP BY id),
-               ukentries AS (SELECT DISTINCT label FROM ukcomp),
-               hfu0 AS (SELECT p.vec_id AS qid, e.label AS vec_id
-                        FROM nv p, ukentries e WHERE p.vec_id < 10),
-               ${upperHops.mkString(",\n               ")},
-               ${baseHops.mkString(",\n               ")},
-               lwalk_top AS (
-                 SELECT qid, vec_id FROM (
-                   SELECT qid, vec_id,
-                          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                   FROM hfl$WalkHops) WHERE rk <= 3),
-               lbpairs AS MATERIALIZED (
-                 SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-                        $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
-                 FROM nv a JOIN nv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-               lbrute_top AS MATERIALIZED (
-                 SELECT qid, vec_id FROM (
-                   SELECT qid, vec_id,
-                          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                   FROM lbpairs) WHERE rk <= 3),
-               lhits AS (SELECT COUNT(*) AS n_hit
-                         FROM lwalk_top w JOIN lbrute_top b USING (qid, vec_id)),
-               ltot AS (SELECT COUNT(*) AS n_truth FROM lbrute_top)
-             SELECT 'layered_walk' AS method, n_truth, n_hit,
-                    CAST(n_hit AS DOUBLE) / n_truth AS recall
-             FROM ltot, lhits"""
-      },
+      (s, d) => recallRows(s, "method", Seq("layered_walk" ->
+        recallOf(bruteTruth(s, d, 10, 3))(byNameLocal("sim48_layered_walk").build(s, d)))),
+      Some(s"""WITH RECURSIVE $sqlLayeredWalkCtes,
+               lwalk_top AS (${sqlTopK(s"hfl$WalkHops", 3)}),
+               ${sqlBruteTruthCtes(10, 3, "l")}
+             ${sqlRecallRows("method", Seq(("'layered_walk'", "lwalk_top", "lbrute_top")))}"""),
       bench = false)
   )
 
@@ -3226,15 +2741,46 @@ object SimilarityOps {
                      SELECT qid, vec_id FROM $prev
                      UNION ALL
                      SELECT f.qid, e.v AS vec_id FROM $prev f JOIN $edgeCte e ON e.u = f.vec_id)),
-        hs$tag AS (SELECT c.qid, c.vec_id,
-                          $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
+        hs$tag AS (SELECT c.qid, c.vec_id, ${sqlCos()} AS cos_sim
                    FROM hc$tag c JOIN nv a ON a.vec_id = c.qid
                                  JOIN nv b ON b.vec_id = c.vec_id
                    WHERE c.vec_id <> c.qid),
-        hf$tag AS (SELECT qid, vec_id, cos_sim FROM (
-                     SELECT qid, vec_id, cos_sim,
-                            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                     FROM hs$tag) WHERE rk <= $WalkBeam)"""
+        hf$tag AS (${sqlTopK(s"hs$tag", WalkBeam, cols = "qid, vec_id, cos_sim")})"""
+
+  /** sim48's oracle walk, inside a `WITH RECURSIVE`: the training
+    * trajectory and k-NN edges, the sparse upper layer's edges (`ukedges`)
+    * and component entries (`hfu0`), its hops `hfu1..`, then the base
+    * hops `hfl1..` seeded by the last upper frontier. Shared by sim48/49.
+    */
+  private lazy val sqlLayeredWalkCtes: String = {
+    val upperHops = (1 to WalkHops).map(i =>
+      sqlNamedHop(if (i == 1) "hfu0" else s"hfu${i - 1}", s"u$i", "ukedges"))
+    val baseHops = (1 to WalkHops).map(i =>
+      sqlNamedHop(if (i == 1) s"hfu$WalkHops" else s"hfl${i - 1}", s"l$i", "kedges"))
+    s"""$sqlTrainedAssignCtes, $sqlKnnCtes,
+        ukcand AS MATERIALIZED (
+          SELECT a.vec_id AS u, b.vec_id AS v, ${sqlCos()} AS cos_sim
+          FROM a2 pa JOIN a2 pb ON pa.cell = pb.cell AND pa.vec_id <> pb.vec_id
+               JOIN nv a ON a.vec_id = pa.vec_id
+               JOIN nv b ON b.vec_id = pb.vec_id
+          WHERE pa.vec_id % $LayerMod = 0 AND pb.vec_id % $LayerMod = 0),
+        uktop AS MATERIALIZED (${sqlTopK("ukcand", LayerK, "cos_sim DESC, v", "u", "u, v, rk")}),
+        ukedges AS MATERIALIZED (SELECT DISTINCT u, v FROM (
+            SELECT u, v FROM uktop WHERE rk <= $LayerK
+            UNION ALL SELECT v, u FROM uktop WHERE rk <= $LayerK)),
+        ukreach(id, r) AS (
+          SELECT u, u FROM ukedges
+          UNION
+          SELECT e.u, rr.r FROM ukedges e JOIN ukreach rr ON e.v = rr.id),
+        ukcomp AS (SELECT id, MIN(r) AS label FROM ukreach GROUP BY id),
+        ukentries AS (SELECT DISTINCT label FROM ukcomp),
+        hfu0 AS (SELECT p.vec_id AS qid, e.label AS vec_id
+                 FROM nv p, ukentries e WHERE p.vec_id < 10),
+        ${(upperHops ++ baseHops).mkString(",\n        ")}"""
+  }
+
+  /** The walk answers' oracle projection (sim38/sim48). */
+  private final val sqlWalkRanked = "qid, CAST(rk AS INT) AS rank, vec_id, cos_sim"
 
   /** Oracle-side kept-so-far chain for sim44: `kept1` = every rank-1 edge;
     * `kept{r}` = `kept{r-1}` plus the rank-r edges with NO kept
@@ -3295,15 +2841,11 @@ object SimilarityOps {
     */
   lazy val sqlKnnCtes: String =
     s"""kcand AS MATERIALIZED (
-          SELECT a.vec_id AS u, b.vec_id AS v,
-                 $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
+          SELECT a.vec_id AS u, b.vec_id AS v, ${sqlCos()} AS cos_sim
           FROM a2 pa JOIN a2 pb ON pa.cell = pb.cell AND pa.vec_id <> pb.vec_id
                JOIN nv a ON a.vec_id = pa.vec_id
                JOIN nv b ON b.vec_id = pb.vec_id),
-        ktop AS MATERIALIZED (
-          SELECT u, v, cos_sim,
-                 ROW_NUMBER() OVER (PARTITION BY u ORDER BY cos_sim DESC, v) AS rk
-          FROM kcand),
+        ktop AS MATERIALIZED (${sqlTopK("kcand", KnnK, "cos_sim DESC, v", "u", "u, v, cos_sim, rk")}),
         kedges AS MATERIALIZED (SELECT DISTINCT u, v FROM (
                      SELECT u, v FROM ktop WHERE rk <= $KnnK
                      UNION ALL SELECT v, u FROM ktop WHERE rk <= $KnnK))"""
@@ -3359,9 +2901,7 @@ object SimilarityOps {
   private def walkHopsFrom(s: SparkSession, d: String, sym: DataFrame,
       frontier0: DataFrame): Seq[(Int, DataFrame)] = {
     val corpus = withNorm(s, d)
-    val probes = corpus.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-        col("norm2").as("qnorm2"))
+    val probes = probesOf(corpus, 10)
     var frontier = frontier0
     (1 to WalkHops).map { h =>
       val nbrs = frontier.select("qid", "vec_id")
@@ -3369,13 +2909,8 @@ object SimilarityOps {
         .select(col("qid"), col("v").as("vec_id"))
       val cand = frontier.select("qid", "vec_id").union(nbrs).distinct()
         .where(col("vec_id") =!= col("qid"))
-      val scored = cand.join(corpus, "vec_id").join(broadcast(probes), "qid")
-        .select(col("qid"), col("vec_id"),
-          cosine(scaledDot(col("qvec"), col("embedding")),
-            col("qnorm2"), col("norm2")).as("cos_sim"))
-      frontier = StockOps.perKeyTopK(scored, Seq("qid"),
-        Seq(desc("cos_sim"), col("vec_id")), WalkBeam)
-        .select("qid", "vec_id", "cos_sim").localCheckpoint()
+      val scored = rerank(cand, corpus, probes).select("qid", "vec_id", "cos_sim")
+      frontier = topK(scored, WalkBeam).select("qid", "vec_id", "cos_sim").localCheckpoint()
       (h, frontier)
     }
   }
@@ -3417,14 +2952,10 @@ object SimilarityOps {
                    SELECT qid, vec_id FROM $prev
                    UNION ALL
                    SELECT f.qid, e.v AS vec_id FROM $prev f JOIN $edgeCte e ON e.u = f.vec_id)),
-        ws$i AS MATERIALIZED (SELECT c.qid, c.vec_id,
-                        $sqlDot / SQRT(CAST(a.norm2 AS DOUBLE) * CAST(b.norm2 AS DOUBLE)) AS cos_sim
+        ws$i AS MATERIALIZED (SELECT c.qid, c.vec_id, ${sqlCos()} AS cos_sim
                  FROM wc$i c JOIN nv a ON a.vec_id = c.qid
                              JOIN nv b ON b.vec_id = c.vec_id
                  WHERE c.vec_id <> c.qid),
-        wf$i AS MATERIALIZED (SELECT qid, vec_id, cos_sim FROM (
-                   SELECT qid, vec_id, cos_sim,
-                          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rk
-                   FROM ws$i) WHERE rk <= $beam)"""
+        wf$i AS MATERIALIZED (${sqlTopK(s"ws$i", beam, cols = "qid, vec_id, cos_sim")})"""
   }
 }

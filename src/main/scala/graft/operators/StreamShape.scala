@@ -49,6 +49,15 @@ object StreamShape {
   /** x46's watermark delay (ms) — mirrored in the oracle's wm arithmetic. */
   private val SnapDelayMs = 1000L
 
+  /** x41's oracle serve after a tombstone set `del`: the trained-IVF top-3
+    * over `iscored` (from [[SimilarityOps.sqlTrainedSearchCtes]]) with
+    * deleted probes and candidates dropped.
+    */
+  private def tombstoneServe(del: String): String =
+    SimilarityOps.sqlTopK(
+      s"iscored WHERE qid NOT IN (SELECT vec_id FROM $del) AND vec_id NOT IN (SELECT vec_id FROM $del)",
+      3, cols = "qid, vec_id, cos_sim, CAST(rk AS INT) AS rk")
+
   val all: Seq[Q] = Seq(
     // Tumbling 1-hour event-time window (streaming: groupBy(window($"ts","1 hour"))).
     Q("x01_tumbling_window",
@@ -1754,22 +1763,14 @@ object StreamShape {
       },
       Some(s"""WITH ${SimilarityOps.sqlTrainedSearchCtes},
                  tdel0 AS (SELECT vec_id FROM nv WHERE ${Catalog.sqlDocHash("vec_id", 40)} = 0),
-                 tph0 AS (SELECT qid, vec_id, cos_sim,
-                                 CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS INT) AS rk
-                          FROM iscored
-                          WHERE qid NOT IN (SELECT vec_id FROM tdel0)
-                            AND vec_id NOT IN (SELECT vec_id FROM tdel0)),
+                 tph0 AS (${tombstoneServe("tdel0")}),
                  tpick AS (SELECT vec_id FROM tph0
                            WHERE rk = 1 AND qid = (SELECT MIN(qid) FROM tph0)),
                  tdel1 AS (SELECT vec_id FROM tdel0 UNION SELECT vec_id FROM tpick),
-                 tph1 AS (SELECT qid, vec_id, cos_sim,
-                                 CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS INT) AS rk
-                          FROM iscored
-                          WHERE qid NOT IN (SELECT vec_id FROM tdel1)
-                            AND vec_id NOT IN (SELECT vec_id FROM tdel1))
-               SELECT 0 AS phase, qid, vec_id, cos_sim, rk FROM tph0 WHERE rk <= 3
+                 tph1 AS (${tombstoneServe("tdel1")})
+               SELECT 0 AS phase, qid, vec_id, cos_sim, rk FROM tph0
                UNION ALL
-               SELECT 1, qid, vec_id, cos_sim, rk FROM tph1 WHERE rk <= 3
+               SELECT 1, qid, vec_id, cos_sim, rk FROM tph1
                ORDER BY phase, qid, rk"""),
       bench = false),
 

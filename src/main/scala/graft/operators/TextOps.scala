@@ -1436,11 +1436,11 @@ object TextOps {
     // quotas sum to the budget EXACTLY (floor everyone, then +1 to the
     // largest remainders — deterministic tie-break on source). All
     // arithmetic is integer cross-multiplication; the allocation table is
-    // ≤ |sources| rows, so its ranking window and 1-row totals are
-    // bounded by construction (allowlisted — the c16 pattern).
+    // ≤ |sources| rows, so its 1-row total is bounded by construction
+    // (allowlisted — the c16 pattern) and the remainder ranking is a
+    // ≤ |sources|-row collect, not a window without a partition.
     Q("t32_token_budget",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val B = 100000L
         val tk = t(s, d, "documents")
           .select(col("source"),
@@ -1450,11 +1450,12 @@ object TextOps {
         val base = tk.crossJoin(broadcast(tot))
           .withColumn("fl", expr(s"$B * w div __W"))
           .withColumn("rem", expr(s"($B * w) % __W"))
-        val extra = base.agg((lit(B) - sum("fl")).as("__extra"))
-        base.crossJoin(broadcast(extra))
-          .withColumn("rnk", row_number().over(Window.orderBy(desc("rem"), col("source"))))
+        val byRem = base.orderBy(desc("rem"), col("source")).select("source", "fl").collect()
+        val extra = B - byRem.map(_.getLong(1)).sum
+        val winners = byRem.take(extra.toInt).map(_.getString(0))
+        base
           .withColumn("quota",
-            col("fl") + when(col("rnk") <= col("__extra"), 1L).otherwise(0L))
+            col("fl") + when(col("source").isin(winners: _*), 1L).otherwise(0L))
           .select(col("source"), col("w").as("n_tokens"), col("quota"))
           .orderBy("source")
       },

@@ -142,9 +142,6 @@ class PlanAuditSpec extends SparkSpec {
     // degree/sxy stores (the per-batch maintenance work is partitioned;
     // only the final scalar assembly is single-row)
     "x49_stream_assortativity" -> Set("SinglePartition"),
-    // hybrid fusion: t22's 1-row doc-count normalizer (crossJoin back) +
-    // sim01's bounded broadcast probe (≠ predicate forces BNLJ)
-    "sim34_hybrid_rrf" -> Set("SinglePartition", "BroadcastNestedLoopJoin"),
     // connectivity report: the answer IS one row (component-count agg) and
     // its crossJoin-back of the 1-row corpus total is the c16 pattern
     "sim37_knn_connectivity" -> Set("SinglePartition", "BroadcastNestedLoopJoin"),
@@ -271,7 +268,7 @@ class PlanAuditSpec extends SparkSpec {
     "c40_tpch_q3" -> 2, // broadcast dims; one fact-fact shuffle pair + agg split; top-10 is TakeOrdered
     "c41_tpch_q5" -> 3, // broadcast region/nation/supplier; order-key shuffle pair + grouped agg
     "c42_tpch_q1" -> 2, // one map-side-combined agg on the 6-value key + final sort
-    "t32_token_budget" -> 4, // per-source token agg + bounded allocation-table window + final sort
+    "t32_token_budget" -> 4, // per-source token agg + 1-row total + final sort; remainder ranking is a driver collect
     "sim25_matryoshka_recall" -> 8, // two broadcast-probe scans + 2×perKeyTopK + recall join + sort
     "c43_tpch_q18" -> 2, // per-order rollup; survivors broadcast; top-10 is TakeOrdered
     "g06_community_sizes" -> 6, // star-CC fixpoint (lineage truncated per round) + two histogram aggs
@@ -326,7 +323,7 @@ class PlanAuditSpec extends SparkSpec {
     "g10_personalized_pagerank" -> 7, // 3 iterations x (edge join + dst agg collapse) + final sort
     "p11_quarantine" -> 0, // map-only check battery + one global 1-row report agg
     "e14_block_cadence" -> 4, // shifted self-join pair + epoch agg split
-    "sim34_hybrid_rrf" -> 9, // keyword tf/df aggs + 2x perKeyTopK + full-outer fuse + top-10
+    "sim34_hybrid_rrf" -> 9, // dense perKeyTopK + full-outer fuse with the collected lexical top-20 + top-10
     "e15_ticket_roundtrip" -> 1, // topic set pushed as scan options; final sort only (top-2 agg runs on build)
     "c58_nullsafe_join" -> 2, // broadcast dim + label agg split
     "c59_lateral_topn" -> 4, // distinct types + decorrelated join + rank window + final sort
@@ -435,7 +432,7 @@ class PlanAuditSpec extends SparkSpec {
     "r03_interval_overlap" -> "groupedRunningTotal offsets window: <= parts rows per event_type by phase-1 aggregation",
     "c50_robust_stats" -> "groupedRunningTotal offsets windows (median + MAD passes): <= parts rows per event_type by phase-1 aggregation",
     "r08_period_delta" -> "lag window runs POST-aggregation: <= #days rows per event_type regardless of event volume",
-    "sim34_hybrid_rrf" -> "perKeyTopK phase 2 (both rankings): <= k*parts rows per qid",
+    "sim34_hybrid_rrf" -> "perKeyTopK phase 2 (the dense ranking): <= k*parts rows per qid",
     "c59_lateral_topn" -> "stock LATERAL-decorrelation semantics are the subject (Catalyst plans the rank window); the scale path is StockOps.perKeyTopK",
     "t36_vocab_growth" -> "groupedRunningTotal offsets windows (both cumulative sums): <= parts rows per source by phase-1 aggregation")
 

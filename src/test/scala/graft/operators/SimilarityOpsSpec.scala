@@ -627,4 +627,64 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(rec.getAs[Long]("n_hit") <= 30)
     assert(rec.getAs[Double]("recall") == rec.getAs[Long]("n_hit").toDouble / 30)
   }
+
+  // ——— the search-and-recall kit ———
+
+  test("topK ranks per probe by score, ties to the lower vec_id") {
+    import spark.implicits._
+    val scored = Seq((0L, 5L, 0.5), (0L, 3L, 0.5), (0L, 9L, 0.9), (0L, 1L, 0.1),
+      (1L, 7L, 0.2), (1L, 2L, 0.2)).toDF("qid", "vec_id", "cos_sim")
+    val top = SimilarityOps.topK(scored, 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    assert(top === Set((0L, 9L, 0.9, 1), (0L, 3L, 0.5, 2), (1L, 2L, 0.2, 1), (1L, 7L, 0.2, 2)))
+    // a distance ranks lower-first, with the same tie-break and its own name
+    val dist = scored.withColumnRenamed("cos_sim", "l2")
+    val near = SimilarityOps.topK(dist, 1, "l2", ascending = true, rank = "r")
+    assert(near.columns.toSeq === Seq("qid", "vec_id", "l2", "r"))
+    assert(near.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((0L, 1L), (1L, 2L)))
+  }
+
+  test("recall helpers count hits by hand on tiny frames, a zero-hit probe included") {
+    import spark.implicits._
+    // truth: 2 per probe; probe 0 answers one truth pair, probe 1 none
+    val truth = Seq((0L, 1L), (0L, 2L), (1L, 3L), (1L, 4L)).toDF("qid", "vec_id")
+    val ann = Seq((0L, 1L, 0.9), (0L, 8L, 0.8), (1L, 5L, 0.7), (1L, 6L, 0.6))
+      .toDF("qid", "vec_id", "cos_sim")
+    val grade = SimilarityOps.recallOf(truth)
+    assert(grade(ann) === ((4L, 1L, 0.25)))
+    val byQid = SimilarityOps.recallByQid(truth, ann, 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(byQid === Seq((0L, 1L, 0.5), (1L, 0L, 0.0)))
+    val rows = SimilarityOps.recallRows(spark, "method", Seq(
+      "b" -> grade(ann.where($"qid" === 1)),
+      "a" -> SimilarityOps.recallOf(truth.where($"qid" === 0))(ann)))
+    assert(rows.columns.toSeq === Seq("method", "n_truth", "n_hit", "recall"))
+    assert(rows.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq ===
+      Seq(("a", 2L, 1L, 0.5), ("b", 4L, 0L, 0.0)))
+  }
+
+  test("rank order, cosine rerank and recall count are written once: no copies in the operators") {
+    import java.nio.file.{Files, Path, Paths}
+    val root = Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(root), s"run from the repo root: $root not found")
+    val walk = Files.walk(root)
+    val srcs = try walk.toArray.map(_.asInstanceOf[Path]).filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toMap
+    finally walk.close()
+    // the kit spells its default order through `score`/`order` parameters,
+    // so neither shape appears anywhere, the kit included
+    val copies = for {
+      (file, src) <- srcs.toSeq
+      shape <- Seq("""Seq(desc("cos_sim"), col("vec_id"))""", "ORDER BY cos_sim DESC, vec_id) AS rk")
+      if src.contains(shape)
+    } yield s"$file: $shape"
+    assert(copies.isEmpty, s"rank through SimilarityOps.topK / sqlTopK: $copies")
+    // the kit's own definitions are the one place each convention is spelled
+    val sim = srcs("SimilarityOps.scala")
+    Seq("""cosine(scaledDot(col("qvec"), col("embedding"))""",
+      """.join(truth, Seq("qid", "vec_id"), "left_semi")""",
+      "ROW_NUMBER() OVER (PARTITION BY", "/ SQRT(CAST($a.norm2 AS DOUBLE) * CAST($b.norm2")
+      .foreach(shape => assert(sim.split(java.util.regex.Pattern.quote(shape), -1).length === 2,
+        s"SimilarityOps spells `$shape` more than once"))
+  }
 }
