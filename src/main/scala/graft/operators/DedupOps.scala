@@ -71,7 +71,7 @@ object DedupOps {
   val sqlPairGraphCtes: String =
     s"""sh AS (
           SELECT doc_id, lang, $sqlShingles3 AS sh
-          FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)),
+          FROM ${TextOps.sqlDocToks}),
         ex AS (SELECT doc_id, lang, len(sh) AS sz, UNNEST(sh) AS shingle FROM sh),
         hot AS (SELECT lang, shingle FROM ex GROUP BY lang, shingle
                 HAVING COUNT(*) > $HotShingleDfCap),
@@ -141,7 +141,7 @@ object DedupOps {
           SELECT DISTINCT a.doc_id AS da, c.doc_id AS db
           FROM sgb a JOIN sgb c ON a.b = c.b AND a.bk = c.bk AND a.doc_id < c.doc_id),
         csh AS (SELECT doc_id, $sqlShingles3 AS sh
-                FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)),
+                FROM ${TextOps.sqlDocToks}),
         lshj AS (
           SELECT scand.da, scand.db,
                  CAST(len(list_intersect(sa.sh, sb.sh)) AS BIGINT) AS inter,
@@ -477,7 +477,7 @@ object DedupOps {
     * pipeline; CTE names are 8-suffixed to compose with sqlClusterCtes).
     */
   val sqlDecontCtes: String =
-    s"""tt8 AS (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
+    s"""tt8 AS ${TextOps.sqlDocToks},
         sh8 AS (SELECT doc_id, source,
                        list_distinct(CASE WHEN len($sqlToksNE) >= 8
                          THEN list_transform(range(1, len($sqlToksNE) - 6),

@@ -5,11 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Catalog._
 
-/** Event-time window semantics (SURVEY §2c streaming gap: tumbling /
-  * sliding / session windows). These batch queries pin the *semantics*
-  * against the DuckDB oracle; the same plans run as Structured Streaming
-  * with watermarks in `graft.streaming` (spec-tested — a streaming query
-  * can't be oracle-dumped).
+/** The streaming catalog: event-time windows (tumbling, sliding and
+  * session), watermarked joins and aggregates, stateful processors and the
+  * streaming twins of batch queries (x08 curation, x39 packing, x43 data
+  * card). x01–x03 pin window semantics as batch queries; every other
+  * x-query runs a Structured Streaming query, drains it through [[Drain]],
+  * and its drained result is oracle-checked against DuckDB like any batch
+  * query.
   */
 object StreamShape {
 
@@ -202,9 +204,9 @@ object StreamShape {
                GROUP BY address ORDER BY address"""),
       bench = false),
 
-    // CURATION AS A STREAM: the t06 quality filter (codegen'd kernels
-    // included — word_set_counts runs inside the streaming micro-batch)
-    // applied to a document stream, with a complete-mode per-lang count —
+    // CURATION AS A STREAM: t06's quality filter (TextOps' qualitySignals
+    // and qualityOk, codegen'd kernels included — word_set_counts runs
+    // inside the streaming micro-batch) applied to a document stream, with a complete-mode per-lang count —
     // the shape of a continuously-ingesting training-data pipeline (the
     // filter is stateless/map-only, so the streaming plan is the batch
     // plan per micro-batch; only the final count carries state). Oracle:
@@ -212,25 +214,13 @@ object StreamShape {
     Q("x08_stream_curation",
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val toks = split(trim(col("text")), "\\s+")
-        val counts = Drain.copies(s, "x08", s"$d/documents.parquet")
-          .withColumn("n_tokens", size(toks))
-          .withColumn("n_stop", TextOps.countIn(col("text"), TextOps.stopwords))
-          .withColumn("avg_token_len",
-            length(regexp_replace(col("text"), "\\s+", "")).cast(DoubleType) / col("n_tokens"))
-          .withColumn("stop_ratio", col("n_stop").cast(DoubleType) / col("n_tokens"))
-          .where(col("n_tokens").between(10, 500) &&
-            col("avg_token_len").between(2.0, 12.0) &&
-            col("stop_ratio") <= 0.6)
+        val counts = TextOps.qualitySignals(Drain.copies(s, "x08", s"$d/documents.parquet"))
+          .where(TextOps.qualityOk)
           .groupBy("lang").agg(count(lit(1)).as("n_docs"))
         Drain.memory("x08", counts, "complete").orderBy("lang")
       },
-      Some(s"""SELECT lang, COUNT(*) AS n_docs
-               FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)
-               WHERE len(toks) BETWEEN 10 AND 500
-                 AND CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks) BETWEEN 2.0 AND 12.0
-                 AND CAST(${TextOps.sqlCountIn(TextOps.stopwords)} AS DOUBLE) / len(toks) <= 0.6
-               GROUP BY lang ORDER BY lang"""),
+      Some(s"""SELECT lang, COUNT(*) AS n_docs FROM ${TextOps.sqlDocToks}
+               WHERE ${TextOps.sqlQualityOk} GROUP BY lang ORDER BY lang"""),
       bench = false),
 
     // The SAME per-address state machine as x07, through the Spark 4

@@ -28,7 +28,9 @@ object TextOps {
     * fusion), so the two rankings cannot drift apart. The token scan
     * filters to the query terms first (the posting-list read); the weight
     * table is |terms| rows and broadcasts; the 1-row corpus-count
-    * normalizer is the allowlisted c16 crossJoin pattern.
+    * normalizer is the allowlisted c16 crossJoin pattern. The term filter
+    * already excludes the empty token, so the scan skips [[tokenRows]]'
+    * empty-token predicate.
     */
   def keywordTfWeights(s: SparkSession, d: String, qTerms: Seq[String]): DataFrame = {
     val toks = t(s, d, "documents")
@@ -63,6 +65,102 @@ object TextOps {
   private[operators] def sqlCountIn(words: Seq[String]): String =
     s"CAST(len(list_filter(toks, w -> list_contains([${words.map(w => s"'$w'").mkString(",")}], w))) AS INT)"
 
+  // ——— the curation kit: tokenize, score and dedup, once per engine ———
+  // Every curation query and oracle goes through these. The engine side
+  // (Spark columns and frames) and the oracle side (DuckDB strings) share
+  // no code, so the oracle stays an independent check.
+
+  /** t06's per-document quality signals over `text`: `n_tokens` (INT),
+    * `n_stop`, `avg_token_len` (non-whitespace chars per token) and
+    * `stop_ratio`. t02 reports them; the quality filters keep the rows
+    * where [[qualityOk]] holds.
+    */
+  def qualitySignals(docs: DataFrame): DataFrame = docs
+    .withColumn("n_tokens", size(tokens(col("text"))))
+    .withColumn("n_stop", countIn(col("text"), stopwords))
+    .withColumn("avg_token_len",
+      length(regexp_replace(col("text"), "\\s+", "")).cast(DoubleType) / col("n_tokens"))
+    .withColumn("stop_ratio", col("n_stop").cast(DoubleType) / col("n_tokens"))
+
+  /** The quality envelope over [[qualitySignals]]: 10 to 500 tokens, a
+    * mean token length of 2 to 12 chars and at most 60% stopwords.
+    */
+  val qualityOk: Column = col("n_tokens").between(10, 500) &&
+    col("avg_token_len").between(2.0, 12.0) && col("stop_ratio") <= 0.6
+
+  /** One row per non-empty whitespace token of `text` (`tok`) beside the
+    * `keep` columns. A whitespace-only text splits to one empty token,
+    * which is dropped.
+    */
+  def tokenRows(docs: DataFrame, keep: String*): DataFrame =
+    docs.select(keep.map(col) :+ explode(tokens(col("text"))).as("tok"): _*)
+      .where(length(col("tok")) > 0)
+
+  /** The exact-dedup keep-list: the lowest `doc_id` of each distinct text. */
+  def dedupKeep(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text").cast(BinaryType)).as("dg"))
+      .agg(min("doc_id").as("doc_id")).select("doc_id")
+
+  /** The first 60 bits of `c`'s md5 as a decimal string: the per-row term
+    * of the order-free content checksums (p07, p10, p12).
+    */
+  private def md5Sig60(c: Column): Column = conv(substring(md5(c.cast(BinaryType)), 1, 15), 16, 10)
+
+  /** `toks` and `lines`, the 10-token lines of the pages t24 and t27
+    * synthesize from each document.
+    */
+  private def pageLines(docs: DataFrame): DataFrame = docs
+    .withColumn("toks", tokens(col("text")))
+    .withColumn("lines", expr(
+      "transform(sequence(0, (size(toks)+9) div 10 - 1), i -> array_join(slice(toks, i*10+1, 10), ' '))"))
+
+  /** The RAG chunk windows (t35, p12) of an `n`-token document: window
+    * `chunk_id` holds the 64 tokens from token `ChunkStride`·`chunk_id`.
+    */
+  private val ChunkStride = 48
+  private val chunkIds: Column = explode(expr(s"sequence(0, (n - 1) div $ChunkStride)")).as("chunk_id")
+
+  /** Oracle: the documents with their whitespace tokens as `toks` (a
+    * constant, so DedupOps' CTE vals can use it without initializing
+    * TextOps).
+    */
+  final val sqlDocToks = "(SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)"
+
+  /** Oracle: t02's mean token length and stopword ratio over `toks`. */
+  private val sqlAvgTokenLen = "CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks)"
+  private val sqlStopRatio = s"CAST(${sqlCountIn(stopwords)} AS DOUBLE) / len(toks)"
+
+  /** Oracle: t06's quality envelope over `toks` and `text`. */
+  val sqlQualityOk =
+    s"len(toks) BETWEEN 10 AND 500 AND $sqlAvgTokenLen BETWEEN 2.0 AND 12.0 AND $sqlStopRatio <= 0.6"
+
+  /** Oracle: one `tok` row per non-empty whitespace token, beside `cols`. */
+  private def sqlTokenRows(cols: String*): String = {
+    val tok = "UNNEST(list_filter(string_split_regex(trim(text), '\\s+'), t -> length(t) > 0)) AS tok"
+    s"(SELECT ${(cols :+ tok).mkString(", ")} FROM documents)"
+  }
+
+  /** Oracle: the exact-dedup keep-list of `from`. */
+  private def sqlDedupKeep(from: String): String =
+    s"(SELECT MIN(doc_id) AS doc_id FROM $from GROUP BY md5(text))"
+
+  /** Oracle: the 60-bit md5 prefix of the string `x` as a BIGINT. */
+  private def sqlMd5Sig60(x: String): String = s"CAST('0x' || substr(md5($x), 1, 15) AS BIGINT)"
+
+  /** Oracle: the `dt(doc_id, toks)` and `ln(doc_id, lines)` CTEs of the
+    * synthesized pages' 10-token lines.
+    */
+  private val sqlPageLineCtes =
+    s"""dt AS $sqlDocToks,
+        ln AS (SELECT doc_id, list_transform(range(0, (len(toks)+9)//10), i ->
+                 array_to_string(toks[CAST(i*10+1 AS INT):CAST(i*10+10 AS INT)], ' ')) AS lines
+               FROM dt)"""
+
+  /** Oracle: the chunk window ids `w.i` of an `n`-token document, to
+    * join laterally.
+    */
+  private def sqlChunkIds(n: String): String = s"LATERAL (SELECT UNNEST(range(0, ($n - 1) // 48 + 1)) AS i) w"
+
   // ——— BPE vocabulary training (t25) ———
 
   /** Marker char (U+0001) bracketing each BPE symbol in the working
@@ -79,16 +177,20 @@ object TextOps {
   private val BM = "\u0001"
   val BpeIters = 6
 
+  /** The tokens BPE trains on (t25) and applies to (t26): [[tokenRows]]
+    * without a marker-bearing token. The guard is defensive (such a token
+    * would corrupt the representation) and a no-op on the ASCII fixture;
+    * mirrored in the oracle.
+    */
+  private def bpeTokens(docs: DataFrame, keep: String*): DataFrame =
+    tokenRows(docs, keep: _*).where(!col("tok").contains(BM))
+
   /** The (count, bracketed-symbol-string) vocabulary BPE trains on: ONE
     * corpus scan → distinct whitespace tokens with frequencies, each
-    * seeded as its character symbols. The marker-char guard is defensive
-    * (a marker-bearing token would corrupt the representation) and a
-    * no-op on the ASCII fixture; mirrored in the oracle.
+    * seeded as its character symbols.
     */
   def bpeWords(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(explode(tokens(col("text"))).as("tok"))
-      .where(length(col("tok")) > 0 && !col("tok").contains(BM))
+    bpeTokens(t(s, d, "documents"))
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
       .withColumn("sym", regexp_replace(col("tok"), "(.)", s"$BM$$1$BM"))
       .select("cnt", "sym")
@@ -157,11 +259,8 @@ object TextOps {
     */
   def sqlBpeCtes(iters: Int): String =
     s"""w0 AS (
-          SELECT tok, COUNT(*) AS cnt FROM (
-            SELECT UNNEST(list_filter(string_split_regex(trim(text), '\\s+'),
-                     t -> length(t) > 0 AND NOT contains(t, chr(1)))) AS tok
-            FROM documents)
-          GROUP BY tok),
+          SELECT tok, COUNT(*) AS cnt FROM ${sqlTokenRows()}
+          WHERE NOT contains(tok, chr(1)) GROUP BY tok),
         words0 AS (
           SELECT cnt, regexp_replace(tok, '(.)', chr(1) || '\\1' || chr(1), 'g') AS sym
           FROM w0),
@@ -177,18 +276,13 @@ object TextOps {
                replace(pair, ' ', '') AS merged, n
         FROM allbest ORDER BY iter"""
 
-  /** p04's per-document quality envelope (`n_toks` + `q_ok`) — ONE
-    * definition shared by the batch data card and its streaming
-    * maintenance (x43), so the two surfaces cannot drift.
+  /** p04's per-document flags: the [[qualitySignals]] plus `n_toks`
+    * (BIGINT) and the envelope verdict `q_ok` — shared by the batch data
+    * card and its streaming maintenance (x43), so the two cannot drift.
     */
-  def dataCardDocFlags(docs: DataFrame): DataFrame = docs
-    .withColumn("n_toks", size(tokens(col("text"))).cast(LongType))
-    .withColumn("n_stop", countIn(col("text"), stopwords))
-    .withColumn("avg_token_len",
-      length(regexp_replace(col("text"), "\\s+", "")).cast(DoubleType) / col("n_toks"))
-    .withColumn("q_ok", col("n_toks").between(10, 500) &&
-      col("avg_token_len").between(2.0, 12.0) &&
-      (col("n_stop").cast(DoubleType) / col("n_toks")) <= 0.6)
+  def dataCardDocFlags(docs: DataFrame): DataFrame = qualitySignals(docs)
+    .withColumn("n_toks", col("n_tokens").cast(LongType))
+    .withColumn("q_ok", qualityOk)
 
   /** The data-card oracle — p04's gate SQL, also pinning x43's drained
     * read-out (declared before `val all`: both interpolate it at init).
@@ -200,9 +294,7 @@ object TextOps {
                    CAST(len(b.toks) AS BIGINT) AS n_toks,
                    (COUNT(*) OVER (PARTITION BY b.text) > 1) AS is_dup,
                    (c.doc_id IS NOT NULL) AS is_cont,
-                   (len(b.toks) BETWEEN 10 AND 500
-                    AND CAST(length(regexp_replace(b.text, '\\s+', '', 'g')) AS DOUBLE) / len(b.toks) BETWEEN 2.0 AND 12.0
-                    AND CAST(len(list_filter(b.toks, w -> list_contains([${stopwords.map(w => s"'$w'").mkString(",")}], w))) AS DOUBLE) / len(b.toks) <= 0.6) AS q_ok
+                   ($sqlQualityOk) AS q_ok
             FROM tt8 b LEFT JOIN cont c ON c.doc_id = b.doc_id)
         SELECT source, COUNT(*) AS n_docs,
                CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
@@ -264,26 +356,17 @@ object TextOps {
 
     // Quality scoring: length / punctuation / stopword-ratio heuristics.
     Q("t02_quality_score",
-      (s, d) => {
-        val toks = tokens(col("text"))
-        t(s, d, "documents")
-          .withColumn("n_tokens", size(toks))
-          .withColumn("n_punct", size(regexp_extract_all(col("text"), lit("[^a-z0-9\\s]"), lit(0))))
-          .withColumn("n_stop", countIn(col("text"), stopwords))
-          .withColumn("avg_token_len",
-            length(regexp_replace(col("text"), "\\s+", "")).cast(DoubleType) / col("n_tokens"))
-          .withColumn("stop_ratio", col("n_stop").cast(DoubleType) / col("n_tokens"))
-          .select("doc_id", "n_tokens", "n_punct", "n_stop", "avg_token_len", "stop_ratio")
-          .orderBy("doc_id")
-      },
+      (s, d) => qualitySignals(t(s, d, "documents"))
+        .withColumn("n_punct", size(regexp_extract_all(col("text"), lit("[^a-z0-9\\s]"), lit(0))))
+        .select("doc_id", "n_tokens", "n_punct", "n_stop", "avg_token_len", "stop_ratio")
+        .orderBy("doc_id"),
       Some(s"""SELECT doc_id,
                       CAST(len(toks) AS INT) AS n_tokens,
                       CAST(len(regexp_extract_all(text, '[^a-z0-9\\s]')) AS INT) AS n_punct,
                       ${sqlCountIn(stopwords)} AS n_stop,
-                      CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks) AS avg_token_len,
-                      CAST(${sqlCountIn(stopwords)} AS DOUBLE) / len(toks) AS stop_ratio
-               FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)
-               ORDER BY doc_id"""),
+                      $sqlAvgTokenLen AS avg_token_len,
+                      $sqlStopRatio AS stop_ratio
+               FROM $sqlDocToks ORDER BY doc_id"""),
       bench = true),
 
     // Language-ID heuristic: per-language signature-word hit counts, argmax
@@ -319,7 +402,7 @@ object TextOps {
         s"""SELECT doc_id, s_en, s_es, s_de, s_fr,
                    CASE $caseExpr ELSE 'unknown' END AS pred_lang
             FROM (SELECT doc_id, $scores
-                  FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents))
+                  FROM $sqlDocToks)
             ORDER BY doc_id"""
       }),
 
@@ -328,17 +411,11 @@ object TextOps {
     // heavy hitters — handled by map-side combine). Top-20 tokens with a
     // deterministic tie-break.
     Q("t05_corpus_stats",
-      (s, d) => {
-        val toks = t(s, d, "documents")
-          .select(explode(tokens(col("text"))).as("tok"))
-          .where(length(col("tok")) > 0)
-        toks.groupBy("tok").agg(count(lit(1)).as("n"))
-          .orderBy(desc("n"), col("tok"))
-          .limit(20)
-      },
-      Some("""SELECT tok, COUNT(*) AS n
-              FROM (SELECT UNNEST(string_split_regex(trim(text), '\s+')) AS tok FROM documents)
-              WHERE length(tok) > 0
+      (s, d) => tokenRows(t(s, d, "documents"))
+        .groupBy("tok").agg(count(lit(1)).as("n"))
+        .orderBy(desc("n"), col("tok"))
+        .limit(20),
+      Some(s"""SELECT tok, COUNT(*) AS n FROM ${sqlTokenRows()}
               GROUP BY tok ORDER BY n DESC, tok LIMIT 20""")),
 
     // Quality FILTER — the curation decision built on t02's signals: keep
@@ -346,27 +423,12 @@ object TextOps {
     // The filter composes into any downstream pipeline as a plain
     // predicate (pushdown-friendly, no shuffle).
     Q("t06_quality_filter",
-      (s, d) => {
-        val toks = tokens(col("text"))
-        t(s, d, "documents")
-          .withColumn("n_tokens", size(toks))
-          .withColumn("n_stop", countIn(col("text"), stopwords))
-          .withColumn("avg_token_len",
-            length(regexp_replace(col("text"), "\\s+", "")).cast(DoubleType) / col("n_tokens"))
-          .withColumn("stop_ratio", col("n_stop").cast(DoubleType) / col("n_tokens"))
-          .where(col("n_tokens").between(10, 500) &&
-            col("avg_token_len").between(2.0, 12.0) &&
-            col("stop_ratio") <= 0.6)
-          .select("doc_id", "n_tokens", "stop_ratio")
-          .orderBy("doc_id")
-      },
-      Some(s"""SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
-                      CAST(${sqlCountIn(stopwords)} AS DOUBLE) / len(toks) AS stop_ratio
-               FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)
-               WHERE len(toks) BETWEEN 10 AND 500
-                 AND CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks) BETWEEN 2.0 AND 12.0
-                 AND CAST(${sqlCountIn(stopwords)} AS DOUBLE) / len(toks) <= 0.6
-               ORDER BY doc_id""")),
+      (s, d) => qualitySignals(t(s, d, "documents"))
+        .where(qualityOk)
+        .select("doc_id", "n_tokens", "stop_ratio")
+        .orderBy("doc_id"),
+      Some(s"""SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens, $sqlStopRatio AS stop_ratio
+               FROM $sqlDocToks WHERE $sqlQualityOk ORDER BY doc_id""")),
 
     // PII-style redaction — the scrub step of a curation pipeline: regex
     // removal of email/phone-shaped substrings plus leak counts. The input
@@ -436,28 +498,15 @@ object TextOps {
     Q("p01_curation_pipeline",
       (s, d) => {
         val kept = Catalog.byName("d07b_dedup_apply_exact").build(s, d).select("doc_id")
-        val toks = tokens(col("text"))
-        t(s, d, "documents")
-          .join(kept, "doc_id")
-          .withColumn("n_tokens", size(toks))
-          .withColumn("n_stop", countIn(col("text"), stopwords))
-          .withColumn("avg_token_len",
-            length(regexp_replace(col("text"), "\\s+", "")).cast(DoubleType) / col("n_tokens"))
-          .withColumn("stop_ratio", col("n_stop").cast(DoubleType) / col("n_tokens"))
-          .where(col("n_tokens").between(10, 500) &&
-            col("avg_token_len").between(2.0, 12.0) &&
-            col("stop_ratio") <= 0.6)
+        qualitySignals(t(s, d, "documents").join(kept, "doc_id"))
+          .where(qualityOk)
           .groupBy("lang").agg(count(lit(1)).as("n_docs"))
           .orderBy("lang")
       },
       Some(s"""WITH RECURSIVE ${DedupOps.sqlClusterCtes},
-                 losers AS (SELECT doc_id FROM clusters WHERE doc_id <> cluster),
-                 tt AS (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)
-               SELECT lang, COUNT(*) AS n_docs FROM tt
-               WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-                 AND len(toks) BETWEEN 10 AND 500
-                 AND CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks) BETWEEN 2.0 AND 12.0
-                 AND CAST(${sqlCountIn(stopwords)} AS DOUBLE) / len(toks) <= 0.6
+                 losers AS (SELECT doc_id FROM clusters WHERE doc_id <> cluster)
+               SELECT lang, COUNT(*) AS n_docs FROM $sqlDocToks
+               WHERE doc_id NOT IN (SELECT doc_id FROM losers) AND $sqlQualityOk
                GROUP BY lang ORDER BY lang"""),
       bench = false),
 
@@ -472,10 +521,8 @@ object TextOps {
     // partitioned BY doc_id — no global window, no single-task sort.
     Q("t10_tfidf_keywords",
       (s, d) => {
-        val toksEx = t(s, d, "documents")
-          .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-          .where(length(col("tok")) > 0)
-        val tf = toksEx.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+        val tf = tokenRows(t(s, d, "documents"), "doc_id")
+          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
           // tf feeds both the df aggregate and the score join — checkpoint
           // so the tokenize + explode + first aggregate runs once
           .localCheckpoint()
@@ -489,8 +536,7 @@ object TextOps {
           .select("doc_id", "rk", "tok", "tf", "df", "score")
           .orderBy("doc_id", "rk")
       },
-      Some("""WITH tt AS (SELECT doc_id, UNNEST(string_split_regex(trim(text), '\s+')) AS tok FROM documents),
-                 tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tt WHERE length(tok) > 0 GROUP BY 1, 2),
+      Some(s"""WITH tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM ${sqlTokenRows("doc_id")} GROUP BY 1, 2),
                  df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
                  scored AS (SELECT doc_id, tok, tf.tf, df.df,
                                    CAST(tf.tf AS DOUBLE) / df.df AS score,
@@ -512,31 +558,19 @@ object TextOps {
       (s, d) => {
         val decon = Catalog.byName("d09_decontaminate").build(s, d).select("doc_id")
         val undup = Catalog.byName("d07b_dedup_apply_exact").build(s, d).select("doc_id")
-        val toks = tokens(col("text"))
-        t(s, d, "documents")
-          .join(decon, "doc_id").join(undup, "doc_id")
-          .withColumn("n_tokens", size(toks))
-          .withColumn("n_stop", countIn(col("text"), stopwords))
-          .withColumn("avg_token_len",
-            length(regexp_replace(col("text"), "\\s+", "")).cast(DoubleType) / col("n_tokens"))
-          .withColumn("stop_ratio", col("n_stop").cast(DoubleType) / col("n_tokens"))
-          .where(col("n_tokens").between(10, 500) &&
-            col("avg_token_len").between(2.0, 12.0) &&
-            col("stop_ratio") <= 0.6)
+        qualitySignals(t(s, d, "documents").join(decon, "doc_id").join(undup, "doc_id"))
+          .where(qualityOk)
           .groupBy("lang", "source").agg(count(lit(1)).as("n_docs"))
           .orderBy("lang", "source")
       },
       Some(s"""WITH RECURSIVE ${DedupOps.sqlClusterCtes},
                  losers AS (SELECT doc_id FROM clusters WHERE doc_id <> cluster),
-                 ${DedupOps.sqlDecontCtes},
-                 qt AS (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)
-               SELECT lang, source, COUNT(*) AS n_docs FROM qt
+                 ${DedupOps.sqlDecontCtes}
+               SELECT lang, source, COUNT(*) AS n_docs FROM $sqlDocToks
                WHERE source <> 'src0'
                  AND doc_id NOT IN (SELECT doc_id FROM cont)
                  AND doc_id NOT IN (SELECT doc_id FROM losers)
-                 AND len(toks) BETWEEN 10 AND 500
-                 AND CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks) BETWEEN 2.0 AND 12.0
-                 AND CAST(${sqlCountIn(stopwords)} AS DOUBLE) / len(toks) <= 0.6
+                 AND $sqlQualityOk
                GROUP BY lang, source ORDER BY lang, source"""),
       bench = false),
 
@@ -552,27 +586,16 @@ object TextOps {
       (s, d) => {
         val kept = Catalog.byName("sim10_semdedup").build(s, d)
           .select(col("vec_id").as("doc_id"))
-        val toks = tokens(col("text"))
-        t(s, d, "documents")
-          .join(kept, "doc_id")
-          .withColumn("n_tokens", size(toks))
-          .withColumn("n_stop", countIn(col("text"), stopwords))
-          .withColumn("avg_token_len",
-            length(regexp_replace(col("text"), "\\s+", "")).cast(DoubleType) / col("n_tokens"))
-          .withColumn("stop_ratio", col("n_stop").cast(DoubleType) / col("n_tokens"))
-          .where(col("n_tokens").between(10, 500) &&
-            col("avg_token_len").between(2.0, 12.0) &&
-            col("stop_ratio") <= 0.6)
+        qualitySignals(t(s, d, "documents").join(kept, "doc_id"))
+          .where(qualityOk)
           .groupBy("lang").agg(count(lit(1)).as("n_docs"))
           .orderBy("lang")
       },
       Some(s"""WITH ${SimilarityOps.sqlSemDedupCtes},
-                 qt AS (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)
+                 qt AS $sqlDocToks
                SELECT lang, COUNT(*) AS n_docs
                FROM qt JOIN skept k ON qt.doc_id = k.vec_id
-               WHERE len(toks) BETWEEN 10 AND 500
-                 AND CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks) BETWEEN 2.0 AND 12.0
-                 AND CAST(${sqlCountIn(stopwords)} AS DOUBLE) / len(toks) <= 0.6
+               WHERE $sqlQualityOk
                GROUP BY lang ORDER BY lang"""),
       bench = false),
 
@@ -606,9 +629,7 @@ object TextOps {
                       CASE WHEN len(toks) - 2 > 0
                            THEN 1.0 - CAST(len(g3) AS DOUBLE) / (len(toks) - 2)
                            ELSE 0.0 END AS dup_3g_frac
-               FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks,
-                            ${DedupOps.sqlShingles3} AS g3
-                     FROM documents)
+               FROM (SELECT *, ${DedupOps.sqlShingles3} AS g3 FROM $sqlDocToks)
                ORDER BY doc_id"""),
       bench = true),
 
@@ -643,9 +664,7 @@ object TextOps {
     // division of exact counts.
     Q("t13_oov_ratio",
       (s, d) => {
-        val toksEx = t(s, d, "documents")
-          .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-          .where(length(col("tok")) > 0)
+        val toksEx = tokenRows(t(s, d, "documents"), "doc_id")
         val vocab = toksEx.groupBy("tok").agg(count(lit(1)).as("n"))
           .orderBy(desc("n"), col("tok")).limit(1000).select("tok")
         val perDoc = toksEx.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))
@@ -657,8 +676,7 @@ object TextOps {
           .select("doc_id", "n_toks", "n_in", "oov_ratio")
           .orderBy("doc_id")
       },
-      Some("""WITH tt AS (SELECT doc_id, UNNEST(string_split_regex(trim(text), '\s+')) AS tok FROM documents),
-                 tf AS (SELECT doc_id, tok FROM tt WHERE length(tok) > 0),
+      Some(s"""WITH tf AS ${sqlTokenRows("doc_id")},
                  vocab AS (SELECT tok FROM (SELECT tok, COUNT(*) AS n FROM tf GROUP BY tok
                                             ORDER BY n DESC, tok LIMIT 1000)),
                  perdoc AS (SELECT doc_id, COUNT(*) AS n_toks FROM tf GROUP BY doc_id),
@@ -726,9 +744,7 @@ object TextOps {
     // any corpus size.
     Q("t15_unigram_score",
       (s, d) => {
-        val toks = t(s, d, "documents")
-          .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-          .where(length(col("tok")) > 0)
+        val toks = tokenRows(t(s, d, "documents"), "doc_id")
         val cnt = toks.groupBy("tok").agg(count(lit(1)).as("c"))
         val tot = cnt.agg(sum(col("c")).as("__n_corpus"))
         toks.join(cnt, "tok")
@@ -739,8 +755,7 @@ object TextOps {
           .select("doc_id", "n_tokens", "sum_tf", "mean_tf")
           .orderBy("doc_id")
       },
-      Some("""WITH tt AS (SELECT doc_id, UNNEST(string_split_regex(trim(text), '\s+')) AS tok FROM documents),
-                 tf AS (SELECT doc_id, tok FROM tt WHERE length(tok) > 0),
+      Some(s"""WITH tf AS ${sqlTokenRows("doc_id")},
                  cnt AS (SELECT tok, COUNT(*) AS c FROM tf GROUP BY tok),
                  tot AS (SELECT COUNT(*) AS n_corpus FROM tf),
                  per AS (SELECT t.doc_id, COUNT(*) AS n_tokens, CAST(SUM(c.c) AS BIGINT) AS sum_tf
@@ -815,8 +830,7 @@ object TextOps {
           .orderBy("doc_id")
       },
       Some(s"""WITH sh AS (
-                 SELECT doc_id, UNNEST(${DedupOps.sqlShingles3}) AS shingle
-                 FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)),
+                 SELECT doc_id, UNNEST(${DedupOps.sqlShingles3}) AS shingle FROM $sqlDocToks),
                dfreq AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle)
                SELECT doc_id, COUNT(*) AS n_3g,
                       CAST(COUNT(*) FILTER (df = 1) AS BIGINT) AS n_unique,
@@ -922,8 +936,7 @@ object TextOps {
         .agg(sum(col("tf") * col("weight")).as("score"),
           count(lit(1)).as("n_terms"))
         .orderBy(desc("score"), col("doc_id")).limit(10),
-      Some("""WITH tt AS (SELECT doc_id, UNNEST(string_split_regex(trim(text), '\s+')) AS tok FROM documents),
-                 qt AS (SELECT doc_id, tok FROM tt WHERE tok IN ('spark', 'join', 'stream')),
+      Some(s"""WITH qt AS (SELECT * FROM ${sqlTokenRows("doc_id")} WHERE tok IN ('spark', 'join', 'stream')),
                  tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM qt GROUP BY 1, 2),
                  w AS (SELECT tok, ((SELECT COUNT(*) FROM documents) * 1000000) // COUNT(*) AS weight
                        FROM tf GROUP BY tok)
@@ -960,8 +973,7 @@ object TextOps {
                         + 10 * CAST(len(toks) AS BIGINT) - n_chars AS score,
                       (50 * CAST(${sqlCountIn(stopwords)} AS BIGINT)
                         + 10 * CAST(len(toks) AS BIGINT) - n_chars) >= 600 AS kept
-               FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)
-               ORDER BY doc_id""")),
+               FROM $sqlDocToks ORDER BY doc_id""")),
 
     // DATA CARD — the per-source governance summary a curation run ships
     // with the dataset: document and token counts, exact-duplicate
@@ -1007,10 +1019,7 @@ object TextOps {
     // itself is map-only (one projection, no joins), so at 100 TB it
     // rides the scan.
     Q("t24_boilerplate_extract",
-      (s, d) => t(s, d, "documents")
-        .withColumn("toks", tokens(col("text")))
-        .withColumn("lines", expr(
-          "transform(sequence(0, (size(toks)+9) div 10 - 1), i -> array_join(slice(toks, i*10+1, 10), ' '))"))
+      (s, d) => pageLines(t(s, d, "documents"))
         .withColumn("wrapped", expr(
           """transform(lines, (l, j) -> CASE WHEN j % 3 = 0
              THEN concat('<div class="nav"><a href="#">', l, '</a></div>')
@@ -1030,11 +1039,7 @@ object TextOps {
           "array_join(transform(kept, l -> regexp_replace(l, '<[^>]*>', '')), ' ')"))
         .select("doc_id", "n_lines", "n_kept", "content")
         .orderBy("doc_id"),
-      Some(s"""WITH dt AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-                           FROM documents),
-                 ln AS (SELECT doc_id, list_transform(range(0, (len(toks)+9)//10), i ->
-                          array_to_string(toks[CAST(i*10+1 AS INT):CAST(i*10+10 AS INT)], ' ')) AS lines
-                        FROM dt),
+      Some(s"""WITH $sqlPageLineCtes,
                  wr AS (SELECT doc_id, list_transform(range(0, len(lines)), j ->
                           CASE WHEN j % 3 = 0
                           THEN '<div class="nav"><a href="#">' || lines[CAST(j+1 AS INT)] || '</a></div>'
@@ -1091,9 +1096,7 @@ object TextOps {
         val symN = bpeTrainedMerges(s, d, BpeIters).foldLeft(sym0) {
           case (c, (_, l, r, m, _)) => replace(c, lit(BM + l + BM + BM + r + BM), lit(BM + m + BM))
         }
-        t(s, d, "documents")
-          .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-          .where(length(col("tok")) > 0 && !col("tok").contains(BM))
+        bpeTokens(t(s, d, "documents"), "doc_id")
           .withColumn("sym", symN)
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_tokens"),
@@ -1116,10 +1119,7 @@ object TextOps {
         s"""WITH ${sqlBpeCtes(BpeIters)},
               dt0 AS (
                 SELECT doc_id, tok, regexp_replace(tok, '(.)', chr(1) || '\\1' || chr(1), 'g') AS sym
-                FROM (SELECT doc_id,
-                             UNNEST(list_filter(string_split_regex(trim(text), '\\s+'),
-                               t -> length(t) > 0 AND NOT contains(t, chr(1)))) AS tok
-                      FROM documents)),
+                FROM ${sqlTokenRows("doc_id")} WHERE NOT contains(tok, chr(1))),
               $rewrites
             SELECT doc_id,
                    COUNT(*) AS n_tokens,
@@ -1144,10 +1144,7 @@ object TextOps {
     // no floats anywhere — and the operator itself is map-only: at
     // 100 TB it rides the scan.
     Q("t27_c4_filters",
-      (s, d) => t(s, d, "documents")
-        .withColumn("toks", tokens(col("text")))
-        .withColumn("lines", expr(
-          "transform(sequence(0, (size(toks)+9) div 10 - 1), i -> array_join(slice(toks, i*10+1, 10), ' '))"))
+      (s, d) => pageLines(t(s, d, "documents"))
         .withColumn("lines", expr(
           "transform(lines, (l, j) -> CASE WHEN j % 2 = 0 THEN concat(l, '.') ELSE l END)"))
         .withColumn("lines", expr(
@@ -1166,11 +1163,7 @@ object TextOps {
         .withColumn("keep", col("n_kept") >= 3 && !col("has_brace") && !col("has_lorem"))
         .select("doc_id", "n_lines", "n_kept", "has_brace", "has_lorem", "keep")
         .orderBy("doc_id"),
-      Some(s"""WITH dt AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-                           FROM documents),
-                 ln AS (SELECT doc_id, list_transform(range(0, (len(toks)+9)//10), i ->
-                          array_to_string(toks[CAST(i*10+1 AS INT):CAST(i*10+10 AS INT)], ' ')) AS lines
-                        FROM dt),
+      Some(s"""WITH $sqlPageLineCtes,
                  p1 AS (SELECT doc_id, list_transform(range(0, len(lines)), j ->
                           CASE WHEN j % 2 = 0 THEN lines[CAST(j+1 AS INT)] || '.'
                           ELSE lines[CAST(j+1 AS INT)] END) AS lines FROM ln),
@@ -1218,7 +1211,7 @@ object TextOps {
       Some(s"""WITH scored AS (
                  SELECT doc_id,
                         CAST(${sqlCountIn(stopwords)} * 1000 + len(toks) AS BIGINT) AS score
-                 FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)),
+                 FROM $sqlDocToks),
                  rk AS (SELECT doc_id, score,
                                NTILE(4) OVER (ORDER BY score DESC, doc_id) AS nt
                         FROM scored)
@@ -1259,9 +1252,7 @@ object TextOps {
           .select("doc_id", "n_words", "sum_len", "n_alpha", "n_sym", "n_stop", "pass")
           .orderBy("doc_id")
       },
-      Some("""WITH dt AS (SELECT doc_id, text,
-                                 string_split_regex(trim(text), '\s+') AS toks
-                          FROM documents),
+      Some(s"""WITH dt AS $sqlDocToks,
                  sg AS (SELECT doc_id,
                                CAST(len(toks) AS BIGINT) AS n_words,
                                CAST(length(array_to_string(toks, '')) AS BIGINT) AS sum_len,
@@ -1331,9 +1322,7 @@ object TextOps {
     // majority-leaning resample rule.
     Q("t31_dsir_affinity",
       (s, d) => {
-        val toks = t(s, d, "documents")
-          .select(col("doc_id"), col("source"), explode(tokens(col("text"))).as("tok"))
-          .where(length(col("tok")) > 0)
+        val toks = tokenRows(t(s, d, "documents"), "doc_id", "source")
         // ONE vocab aggregate carries both frequencies (count_if replaces
         // the separate filtered agg), and the corpus totals roll up from
         // the vocab table (Σ fc ≡ corpus token count) — 2 passes over the
@@ -1353,10 +1342,7 @@ object TextOps {
           .select("doc_id", "n_tokens", "n_lean", "lean_ppm", "keep")
           .orderBy("doc_id")
       },
-      Some("""WITH tt AS (SELECT doc_id, source,
-                                 UNNEST(string_split_regex(trim(text), '\s+')) AS tok
-                          FROM documents),
-                 tf AS (SELECT * FROM tt WHERE length(tok) > 0),
+      Some(s"""WITH tf AS ${sqlTokenRows("doc_id", "source")},
                  fc AS (SELECT tok, COUNT(*) AS fc FROM tf GROUP BY tok),
                  ft AS (SELECT tok, COUNT(*) AS ft FROM tf WHERE source = 'src1' GROUP BY tok),
                  tot AS (SELECT COUNT(*) AS dc,
@@ -1389,19 +1375,10 @@ object TextOps {
           .select("doc_id").localCheckpoint()
         val keptIds = Catalog.byName("d07b_dedup_apply_exact").build(s, d)
           .select("doc_id").localCheckpoint()
-        val toks = tokens(col("text"))
         val base = t(s, d, "documents").where(col("source") =!= "src0")
         val s2 = base.join(deconIds, "doc_id")
         val s3 = s2.join(keptIds, "doc_id")
-        val s4 = s3
-          .withColumn("n_tokens", size(toks))
-          .withColumn("n_stop", countIn(col("text"), stopwords))
-          .withColumn("avg_token_len",
-            length(regexp_replace(col("text"), "\\s+", "")).cast(DoubleType) / col("n_tokens"))
-          .withColumn("stop_ratio", col("n_stop").cast(DoubleType) / col("n_tokens"))
-          .where(col("n_tokens").between(10, 500) &&
-            col("avg_token_len").between(2.0, 12.0) &&
-            col("stop_ratio") <= 0.6)
+        val s4 = qualitySignals(s3).where(qualityOk)
         def cnt(id: Int, nm: String, df: DataFrame) =
           df.agg(count(lit(1)).as("n_docs"))
             .select(lit(id).as("stage_id"), lit(nm).as("stage"), col("n_docs"))
@@ -1414,14 +1391,10 @@ object TextOps {
       Some(s"""WITH RECURSIVE ${DedupOps.sqlClusterCtes},
                  losers AS (SELECT doc_id FROM clusters WHERE doc_id <> cluster),
                  ${DedupOps.sqlDecontCtes},
-                 qt AS (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
-                 base AS (SELECT * FROM qt WHERE source <> 'src0'),
+                 base AS (SELECT * FROM $sqlDocToks WHERE source <> 'src0'),
                  st2 AS (SELECT * FROM base WHERE doc_id NOT IN (SELECT doc_id FROM cont)),
                  st3 AS (SELECT * FROM st2 WHERE doc_id NOT IN (SELECT doc_id FROM losers)),
-                 st4 AS (SELECT * FROM st3
-                         WHERE len(toks) BETWEEN 10 AND 500
-                           AND CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks) BETWEEN 2.0 AND 12.0
-                           AND CAST(${sqlCountIn(stopwords)} AS DOUBLE) / len(toks) <= 0.6)
+                 st4 AS (SELECT * FROM st3 WHERE $sqlQualityOk)
                SELECT * FROM (
                  SELECT 1 AS stage_id, 'ingested' AS stage, COUNT(*) AS n_docs FROM base
                  UNION ALL SELECT 2, 'decontaminated', COUNT(*) FROM st2
@@ -1551,8 +1524,7 @@ object TextOps {
             when(h < 800, "train").when(h < 900, "val").otherwise("test").as("split"),
             docHash(col("doc_id"), 8L).as("shard"),
             size(tokens(col("text"))).cast(LongType).as("n_toks"),
-            conv(substring(md5(col("text").cast(BinaryType)), 1, 15), 16, 10)
-              .cast(DecimalType(38, 0)).as("sig"))
+            md5Sig60(col("text")).cast(DecimalType(38, 0)).as("sig"))
           .groupBy("split", "shard")
           .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"),
             pmod(sum(col("sig")), lit(fold).cast(DecimalType(38, 0)))
@@ -1565,7 +1537,7 @@ object TextOps {
                              ELSE 'test' END AS split,
                         ${sqlDocHash("doc_id", 8L)} AS shard,
                         CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_toks,
-                        CAST(CAST('0x' || substr(md5(text), 1, 15) AS BIGINT) AS HUGEINT) AS sig
+                        CAST(${sqlMd5Sig60("text")} AS HUGEINT) AS sig
                  FROM documents)
               SELECT split, CAST(shard AS BIGINT) AS shard, COUNT(*) AS n_docs,
                      CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
@@ -1598,9 +1570,7 @@ object TextOps {
             expr("1000000 * cmax div n_tokens").as("top_share_ppm"))
           .orderBy("doc_id")
       },
-      Some("""WITH tok AS (SELECT doc_id, UNNEST(string_split_regex(trim(text), '\s+')) AS tok
-                           FROM documents),
-                 tc AS (SELECT doc_id, tok, COUNT(*) AS c FROM tok WHERE tok <> '' GROUP BY 1, 2),
+      Some(s"""WITH tc AS (SELECT doc_id, tok, COUNT(*) AS c FROM ${sqlTokenRows("doc_id")} GROUP BY 1, 2),
                  per AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
                                 COUNT(*) AS n_types,
                                 CAST(SUM(c * (c - 1)) AS BIGINT) AS rep2,
@@ -1614,7 +1584,7 @@ object TextOps {
 
     // CURATION DRIFT — does dedup silently change WHAT the corpus is made
     // of? Per-source composition before vs after first-occurrence exact
-    // dedup (d01's keep rule inlined), with shares and their shift in
+    // dedup ([[dedupKeep]], d01's keep rule), with shares and their shift in
     // exact ppm integers. Dedup removes duplicates unevenly across
     // sources — a crawl slice that syndicates heavily shrinks more — so a
     // recipe tuned on pre-dedup shares trains on a different mix than
@@ -1625,10 +1595,7 @@ object TextOps {
     Q("p08_curation_drift",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val keep = docs.groupBy(md5(col("text").cast(BinaryType)).as("dg"))
-          .agg(min("doc_id").as("doc_id"))
-          .select("doc_id")
-        val v2 = docs.join(keep, "doc_id")
+        val v2 = docs.join(dedupKeep(docs), "doc_id")
         val before = docs.groupBy("source").agg(count(lit(1)).as("n_before"))
         val after = v2.groupBy("source").agg(count(lit(1)).as("n_after"))
         val t1 = docs.agg(count(lit(1)).as("t1"))
@@ -1643,7 +1610,7 @@ object TextOps {
               expr("1000000 * n_before div t1")).as("drift_ppm"))
           .orderBy("source")
       },
-      Some("""WITH k AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+      Some(s"""WITH k AS ${sqlDedupKeep("documents")},
                  v2 AS (SELECT d.source FROM documents d JOIN k USING (doc_id)),
                  b AS (SELECT source, COUNT(*) AS n_before FROM documents GROUP BY 1),
                  a AS (SELECT source, COUNT(*) AS n_after FROM v2 GROUP BY 1),
@@ -1713,24 +1680,12 @@ object TextOps {
     Q("p10_repro_manifest",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val sig = docs.select(col("doc_id"),
-          conv(substring(md5(col("text").cast(BinaryType)), 1, 15), 16, 10)
-            .cast(LongType).as("sg"))
+        val sig = docs.select(col("doc_id"), md5Sig60(col("text")).cast(LongType).as("sg"))
           .localCheckpoint()
-        val keep = docs.groupBy(md5(col("text").cast(BinaryType)).as("dg"))
-          .agg(min("doc_id").as("doc_id")).select("doc_id")
+        val keep = dedupKeep(docs)
         val decont = keep.join(DedupOps.contaminatedIds(s, d), Seq("doc_id"), "left_anti")
           .localCheckpoint()
-        val toks = tokens(col("text"))
-        val quality = docs
-          .withColumn("n_tokens", size(toks))
-          .withColumn("n_stop", countIn(col("text"), stopwords))
-          .withColumn("avg_token_len",
-            length(regexp_replace(col("text"), "\\s+", "")).cast(DoubleType) / col("n_tokens"))
-          .where(col("n_tokens").between(10, 500) &&
-            col("avg_token_len").between(2.0, 12.0) &&
-            (col("n_stop").cast(DoubleType) / col("n_tokens")) <= 0.6)
-          .select("doc_id")
+        val quality = qualitySignals(docs).where(qualityOk).select("doc_id")
         def stage(ord: Int, name: String, ids: DataFrame) =
           ids.join(sig, "doc_id")
             .agg(count(lit(1)).as("n_docs"),
@@ -1745,18 +1700,12 @@ object TextOps {
           .unionByName(stage(4, "quality", decont.join(quality, "doc_id")))
           .orderBy("stage")
       },
-      Some(s"""WITH sig AS (SELECT doc_id,
-                                   CAST('0x' || substr(md5(text), 1, 15) AS BIGINT) AS sg
-                            FROM documents),
-                 keep AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+      Some(s"""WITH sig AS (SELECT doc_id, ${sqlMd5Sig60("text")} AS sg FROM documents),
+                 keep AS ${sqlDedupKeep("documents")},
                  ${DedupOps.sqlDecontCtes},
                  dc AS (SELECT doc_id FROM keep
                         WHERE doc_id NOT IN (SELECT doc_id FROM cont)),
-                 ql AS (SELECT doc_id
-                        FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS toks FROM documents)
-                        WHERE len(toks) BETWEEN 10 AND 500
-                          AND CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks) BETWEEN 2.0 AND 12.0
-                          AND CAST(${sqlCountIn(stopwords)} AS DOUBLE) / len(toks) <= 0.6),
+                 ql AS (SELECT doc_id FROM $sqlDocToks WHERE $sqlQualityOk),
                  m AS (
                    SELECT 1 AS stage, 'raw' AS stage_name, COUNT(*) AS n_docs, SUM(sg) AS checksum
                    FROM sig
@@ -1823,9 +1772,7 @@ object TextOps {
     // source-count constant, never corpus size; sizes broadcast back.
     Q("t34_source_vocab_overlap",
       (s, d) => {
-        val vt = t(s, d, "documents")
-          .select(col("source"), explode(tokens(col("text"))).as("tok"))
-          .where(length(col("tok")) > 0).distinct()
+        val vt = tokenRows(t(s, d, "documents"), "source").distinct()
         val sizes = vt.groupBy("source").agg(count(lit(1)).as("nv"))
         val inter = vt.select(col("source").as("sa"), col("tok"))
           .join(vt.select(col("source").as("sb"), col("tok")), "tok")
@@ -1838,10 +1785,7 @@ object TextOps {
             expr("inter * 1000000 div (na + nb - inter)").as("jaccard_ppm"))
           .orderBy("sa", "sb")
       },
-      Some("""WITH vt AS (SELECT DISTINCT source, tok FROM (
-                            SELECT source, UNNEST(string_split_regex(trim(text), '\s+')) AS tok
-                            FROM documents)
-                          WHERE length(tok) > 0),
+      Some(s"""WITH vt AS (SELECT DISTINCT source, tok FROM ${sqlTokenRows("source")}),
                  sz AS (SELECT source, COUNT(*) AS nv FROM vt GROUP BY 1),
                  iv AS (SELECT a.source AS sa, b.source AS sb, COUNT(*) AS inter
                         FROM vt a JOIN vt b ON a.tok = b.tok AND a.source < b.source
@@ -1867,19 +1811,16 @@ object TextOps {
       (s, d) => t(s, d, "documents")
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .withColumn("n", size(col("toks")))
-        .select(col("doc_id"), col("toks"),
-          explode(expr("sequence(0, (n - 1) div 48)")).as("chunk_id"))
-        .withColumn("start_tok", col("chunk_id") * 48)
+        .select(col("doc_id"), col("toks"), chunkIds)
+        .withColumn("start_tok", col("chunk_id") * ChunkStride)
         .withColumn("chunk", slice(col("toks"), col("start_tok") + 1, lit(64)))
         .select(col("doc_id"), col("chunk_id").cast(IntegerType).as("chunk_id"),
           col("start_tok").cast(IntegerType).as("start_tok"),
           size(col("chunk")).as("n_chunk_toks"),
           array_join(col("chunk"), " ").as("chunk_text"))
         .orderBy("doc_id", "chunk_id"),
-      Some("""WITH tk AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-                          FROM documents),
-                 ch AS (SELECT doc_id, toks, CAST(w.i AS INT) AS chunk_id
-                        FROM tk, LATERAL (SELECT UNNEST(range(0, (len(toks) - 1) // 48 + 1)) AS i) w),
+      Some(s"""WITH ch AS (SELECT doc_id, toks, CAST(w.i AS INT) AS chunk_id
+                        FROM $sqlDocToks, ${sqlChunkIds("len(toks)")}),
                  sl AS (SELECT doc_id, chunk_id, CAST(chunk_id * 48 AS INT) AS start_tok,
                                toks[chunk_id * 48 + 1 : chunk_id * 48 + 64] AS chunk
                         FROM ch)
@@ -1912,9 +1853,7 @@ object TextOps {
       (s, d) => {
         val docs = t(s, d, "documents")
         val delPred = docHash(col("doc_id"), 20) === 0
-        val sigOf = (k: Column) =>
-          conv(substring(md5(k.cast(StringType).cast(BinaryType)), 1, 15), 16, 10)
-            .cast(LongType)
+        val sigOf = (k: Column) => md5Sig60(k.cast(StringType)).cast(LongType)
         def report(ord: Int, name: String, before: DataFrame, after: DataFrame,
             key: Column, reelected: Long = 0L) = {
           val b = before.agg(count(lit(1)).as("n_before"))
@@ -1928,14 +1867,11 @@ object TextOps {
         val survivors = docs.where(!delPred)
         val chunkKeys = (df: DataFrame) => df
           .select(col("doc_id"), size(tokens(col("text"))).as("n"))
-          .select(col("doc_id"), explode(expr("sequence(0, (n - 1) div 48)")).as("chunk_id"))
+          .select(col("doc_id"), chunkIds)
           .select(concat_ws(":", col("doc_id"), col("chunk_id")).as("ck"))
         val embs = t(s, d, "embeddings")
-        val keepOf = (df: DataFrame) => df
-          .groupBy(md5(col("text").cast(BinaryType)).as("dg"))
-          .agg(min("doc_id").as("doc_id")).select("doc_id")
-        val keepBefore = keepOf(docs).localCheckpoint()
-        val keepAfter = keepOf(survivors).localCheckpoint()
+        val keepBefore = dedupKeep(docs).localCheckpoint()
+        val keepAfter = dedupKeep(survivors).localCheckpoint()
         // re-elections: clusters whose representative changed (new id
         // appears in the after-list only). A bounded count: ≤ |deletions|.
         val nReelected = keepAfter.join(keepBefore, Seq("doc_id"), "left_anti").count()
@@ -1964,22 +1900,20 @@ object TextOps {
           s"deletion propagation drift: derived=$got selector-side=$expect")
         out
       },
-      Some(s"""WITH dels AS (SELECT doc_id FROM documents
+      Some {
+        def chunkKeys(from: String) =
+          s"""(SELECT d.doc_id || ':' || w.i AS ck
+               FROM (SELECT doc_id, len(string_split_regex(trim(text), '\\s+')) AS n FROM $from) d,
+                    ${sqlChunkIds("n")})"""
+        def sig(x: String) = s"SUM(${sqlMd5Sig60(x)})"
+        s"""WITH dels AS (SELECT doc_id FROM documents
                              WHERE ${sqlDocHash("doc_id", 20)} = 0),
                  surv AS (SELECT * FROM documents
                           WHERE doc_id NOT IN (SELECT doc_id FROM dels)),
-                 cb AS (SELECT d.doc_id || ':' || w.i AS ck
-                        FROM (SELECT doc_id,
-                                     len(string_split_regex(trim(text), '\\s+')) AS n
-                              FROM documents) d,
-                             LATERAL (SELECT UNNEST(range(0, (n - 1) // 48 + 1)) AS i) w),
-                 ca AS (SELECT d.doc_id || ':' || w.i AS ck
-                        FROM (SELECT doc_id,
-                                     len(string_split_regex(trim(text), '\\s+')) AS n
-                              FROM surv) d,
-                             LATERAL (SELECT UNNEST(range(0, (n - 1) // 48 + 1)) AS i) w),
-                 kb AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-                 ka AS (SELECT MIN(doc_id) AS doc_id FROM surv GROUP BY md5(text)),
+                 cb AS ${chunkKeys("documents")},
+                 ca AS ${chunkKeys("surv")},
+                 kb AS ${sqlDedupKeep("documents")},
+                 ka AS ${sqlDedupKeep("surv")},
                  re AS (SELECT COUNT(*) AS n FROM ka
                         WHERE doc_id NOT IN (SELECT doc_id FROM kb)),
                  m AS (
@@ -1987,33 +1921,34 @@ object TextOps {
                           (SELECT COUNT(*) FROM documents) AS n_before,
                           (SELECT COUNT(*) FROM documents) - COUNT(*) AS n_deleted,
                           COUNT(*) AS n_after, 0 AS n_reelected,
-                          SUM(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)) AS checksum_after
+                          ${sig("CAST(doc_id AS VARCHAR)")} AS checksum_after
                    FROM surv
                    UNION ALL
                    SELECT 2, 'chunks',
                           (SELECT COUNT(*) FROM cb),
                           (SELECT COUNT(*) FROM cb) - COUNT(*),
                           COUNT(*), 0,
-                          SUM(CAST('0x' || substr(md5(ck), 1, 15) AS BIGINT))
+                          ${sig("ck")}
                    FROM ca
                    UNION ALL
                    SELECT 3, 'embeddings',
                           (SELECT COUNT(*) FROM embeddings),
                           (SELECT COUNT(*) FROM embeddings) - COUNT(*),
                           COUNT(*), 0,
-                          SUM(CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT))
+                          ${sig("CAST(vec_id AS VARCHAR)")}
                    FROM embeddings WHERE NOT ${sqlDocHash("vec_id", 20)} = 0
                    UNION ALL
                    SELECT 4, 'dedup_keep',
                           (SELECT COUNT(*) FROM kb),
                           (SELECT COUNT(*) FROM kb) - COUNT(*) + (SELECT n FROM re),
                           COUNT(*), (SELECT n FROM re),
-                          SUM(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT))
+                          ${sig("CAST(doc_id AS VARCHAR)")}
                    FROM ka)
               SELECT ord, artifact, n_before, n_deleted, n_after,
                      CAST(n_reelected AS BIGINT) AS n_reelected,
                      CAST(checksum_after AS VARCHAR) AS checksum_after
-              FROM m ORDER BY ord"""),
+              FROM m ORDER BY ord"""
+      },
       bench = false),
 
     // VOCABULARY GROWTH (Heaps' law) — per source, the cumulative
@@ -2043,10 +1978,7 @@ object TextOps {
         val withTypes = StockOps.groupedRunningTotal(withToks, "source", "doc_id", "n_new", "cum_types")
         withTypes.select("doc_id", "source", "cum_toks", "cum_types").orderBy("doc_id")
       },
-      Some("""WITH tok AS (SELECT doc_id, source,
-                                  UNNEST(string_split_regex(trim(text), '\s+')) AS tok
-                           FROM documents),
-                 tk AS (SELECT * FROM tok WHERE tok <> ''),
+      Some(s"""WITH tk AS ${sqlTokenRows("doc_id", "source")},
                  perdoc AS (SELECT doc_id, source, COUNT(*) AS n_toks FROM tk GROUP BY 1, 2),
                  firsts AS (SELECT source, tok, MIN(doc_id) AS doc_id FROM tk GROUP BY 1, 2),
                  newt AS (SELECT doc_id, source, COUNT(*) AS n_new FROM firsts GROUP BY 1, 2),
@@ -2077,10 +2009,8 @@ object TextOps {
     Q("t37_leakage_safe_split",
       (s, d) => {
         val docs = t(s, d, "documents").select("doc_id")
-        val clusters = DedupOps.all.find(_.name == "d06_dedup_clusters").get
-          .build(s, d).localCheckpoint()
-        val pairs = DedupOps.all.find(_.name == "d03_minhash_lsh").get
-          .build(s, d).select("da", "db").localCheckpoint()
+        val clusters = Catalog.byName("d06_dedup_clusters").build(s, d).localCheckpoint()
+        val pairs = Catalog.byName("d03_minhash_lsh").build(s, d).select("da", "db").localCheckpoint()
         val labeled = docs.join(clusters, Seq("doc_id"), "left")
           .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("label"))
           .localCheckpoint()

@@ -7,11 +7,18 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One closed block range = one Spark partition (reference chunk loop:
-  * LogsService.java:509-521, BlocksService.java:111-123 — but parallel
-  * across executors instead of sequential).
+/** One closed block range [start, end] = one Spark partition, the unit a
+  * reader fetches (reference chunk loop: LogsService.java:509-521,
+  * BlocksService.java:111-123 — but parallel across executors instead of
+  * sequential). [[EthReaderFactory]] reads both kinds.
   */
-final case class BlockRangePartition(start: Long, end: Long) extends InputPartition
+trait BlockRange extends InputPartition {
+  def start: Long
+  def end: Long
+}
+
+/** A block range of the `format("graft-eth")` batch and streaming scans. */
+final case class BlockRangePartition(start: Long, end: Long) extends BlockRange
 
 object BlockRanges {
   /** Split [start,end] into maxRange-sized closed intervals, in order.
@@ -68,7 +75,7 @@ final class EthReaderFactory(
     rpc: EthRpcSpec) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[BlockRangePartition]
+    val p = partition.asInstanceOf[BlockRange]
     // blocks a reader is ABOUT to fetch — runtime-pruning evidence for
     // specs (a JVM-wide gauge: exact at local[*], per-executor on a cluster)
     EthScan.FetchedBlocks.addAndGet(p.end - p.start + 1)
@@ -86,7 +93,7 @@ final class EthReaderFactory(
   */
 final class EthLogsReader(
     schema: StructType,
-    partition: BlockRangePartition,
+    partition: BlockRange,
     addresses: Seq[String],
     topics: Seq[String],
     rpc: EthRpc) extends PartitionReader[InternalRow] with Logging {
@@ -126,7 +133,7 @@ final class EthLogsReader(
   */
 final class EthBlocksReader(
     schema: StructType,
-    partition: BlockRangePartition,
+    partition: BlockRange,
     rpc: EthRpc) extends PartitionReader[InternalRow] {
 
   private val iter: Iterator[EthBlock] = rpc.getBlocks(partition.start, partition.end)

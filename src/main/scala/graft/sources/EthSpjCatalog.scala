@@ -24,7 +24,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `spark.sql.sources.v2.bucketing.enabled` is on. At 100 TB this is the
   * connector-side answer to the bucketed-warehouse join (c31): the
   * storage layout itself carries the distribution, and the join moves no
-  * data at all. The read path reuses the `format("graft-eth")` readers
+  * data at all. The read path is the `format("graft-eth")` reader factory
   * (bisection, synthetic RPC). Topic0/address pushdown arrives the same
   * way as on the TableProvider path — TopicPushdownRule rewrites the
   * relation's scan options (e21 pins it here, e04 there); aggregate
@@ -150,7 +150,7 @@ final class EthSpjTable(dataset: String, head: Long, chunkSize: Long, rpc: EthRp
   * partition key Spark groups on for the storage-partitioned join.
   */
 final case class KeyedBlockRange(start: Long, end: Long, chunkId: Long)
-    extends InputPartition with HasPartitionKey {
+    extends BlockRange with HasPartitionKey {
   override def partitionKey(): InternalRow = InternalRow(chunkId)
 }
 
@@ -177,22 +177,9 @@ final class EthSpjScan(dataset: String, blockCol: String, head: Long,
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new EthSpjReaderFactory(dataset, readSchema(), rpc, addresses, topics)
+    new EthReaderFactory(dataset, readSchema(), addresses, topics, rpc)
 
   override def description(): String =
     s"graft-eth-spj $dataset [0..$head] chunk=$chunkSize " +
       s"addrs=${addresses.size} topics=${topics.size}"
-}
-
-final class EthSpjReaderFactory(dataset: String, schema: StructType, rpc: EthRpcSpec,
-    addresses: Seq[String], topics: Seq[String])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val kp = p.asInstanceOf[KeyedBlockRange]
-    val br = BlockRangePartition(kp.start, kp.end)
-    dataset match {
-      case "logs" => new EthLogsReader(schema, br, addresses, topics, rpc.build())
-      case "blocks" => new EthBlocksReader(schema, br, rpc.build())
-    }
-  }
 }

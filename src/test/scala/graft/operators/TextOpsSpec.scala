@@ -543,4 +543,65 @@ class TextOpsSpec extends SparkSpec {
     // (21 takes over dup-text) — dropping whole clusters would read (5,3,3,0)
     assert(m("dedup_keep") == ((5L, 2L, 4L, 1L)), s"keep row: ${m("dedup_keep")}")
   }
+
+  test("qualitySignals / qualityOk hold the envelope's edges: 10..500 tokens, mean length 2..12, stopwords <= 0.6") {
+    graft.functions.GraftFunctions.register(spark)
+    def words(w: String, n: Int) = Seq.fill(n)(w).mkString(" ")
+    // doc_id -> (text, expected verdict); "abc" is no stopword, "the" is one
+    val cases = Seq(
+      1L -> (words("abc", 9), false),
+      2L -> (words("abc", 10), true),
+      3L -> (words("abc", 500), true),
+      4L -> (words("abc", 501), false),
+      5L -> (words("ab", 10), true), // mean token length exactly 2.0
+      6L -> (words("ab", 9) + " a", false), // 1.9
+      7L -> (words("abcdefghijkl", 10), true), // exactly 12.0
+      8L -> (words("abcdefghijkl", 9) + " abcdefghijklm", false), // 12.1
+      9L -> (words("the", 6) + " " + words("word", 4), true), // stopword ratio exactly 0.6
+      10L -> (words("the", 7) + " " + words("word", 3), false), // 0.7
+      11L -> ("   ", false)) // whitespace only: one empty token
+    val docs = cases.map { case (id, (text, _)) => (id, text) }.toDF("doc_id", "text")
+    val signals = TextOps.qualitySignals(docs)
+    assert(signals.schema("n_tokens").dataType === org.apache.spark.sql.types.IntegerType)
+    val got = signals.select($"doc_id", TextOps.qualityOk).collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(got === cases.map { case (id, (_, ok)) => id -> ok }.toMap)
+    val blank = signals.where($"doc_id" === 11L)
+      .select("n_tokens", "n_stop", "avg_token_len", "stop_ratio").head()
+    assert((blank.getInt(0), blank.getInt(1), blank.getDouble(2), blank.getDouble(3)) === ((1, 0, 0.0, 0.0)))
+    // the data card's flags are the same envelope, with a BIGINT token count
+    val flags = TextOps.dataCardDocFlags(docs)
+    assert(flags.schema("n_toks").dataType === org.apache.spark.sql.types.LongType)
+    assert(flags.select("doc_id", "q_ok").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap === got)
+  }
+
+  test("tokenRows drops the empty token a whitespace-led text splits to") {
+    val docs = Seq((1L, "   "), (2L, "a  b"), (3L, "\tc d")).toDF("doc_id", "text")
+    // SQL trim strips spaces only, so a tab-led text keeps a leading empty token
+    assert(docs.select(org.apache.spark.sql.functions.size(TextOps.tokens($"text"))).as[Int]
+      .collect().toSeq === Seq(1, 2, 3))
+    val rows = TextOps.tokenRows(docs, "doc_id").as[(Long, String)].collect().toSeq.sorted
+    assert(rows === Seq((2L, "a"), (2L, "b"), (3L, "c"), (3L, "d")))
+  }
+
+  test("dedupKeep keeps the lowest doc_id of each text") {
+    val docs = Seq((5L, "x"), (2L, "x"), (7L, "y"), (9L, "z"), (3L, "z"), (4L, "z")).toDF("doc_id", "text")
+    assert(TextOps.dedupKeep(docs).as[Long].collect().toSeq.sorted === Seq(2L, 3L, 7L))
+  }
+
+  test("the envelope and the keep-list are written once per engine; StreamShape does not tokenize by hand") {
+    import java.nio.file.{Files, Path, Paths}
+    val root = Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(root), s"run from the repo root: $root not found")
+    val walk = Files.walk(root)
+    val srcs = try walk.toArray.map(_.asInstanceOf[Path]).filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toMap
+    finally walk.close()
+    def count(shape: String) =
+      srcs.values.map(_.split(java.util.regex.Pattern.quote(shape), -1).length - 1).sum
+    Seq("between(10, 500)", "BETWEEN 10 AND 500", "GROUP BY md5(text)").foreach(shape =>
+      assert(count(shape) === 1, s"`$shape` should appear once, in TextOps' curation kit"))
+    assert(!srcs("StreamShape.scala").contains("split(trim("),
+      "StreamShape tokenizes through TextOps.tokens / qualitySignals")
+  }
 }
