@@ -121,10 +121,7 @@ object Bench {
       if (only.nonEmpty) None
       else try {
         val sq = Drain.run(spark, "benchlat", Artifacts.newDir("benchlat"),
-          spark.readStream.format("graft-eth").option("dataset", "logs")
-            .option("startBlock", "0").option("head", "1999")
-            .option("maxBlocksPerTrigger", "100")
-            .load()
+          graft.streaming.StreamOps.ethStream(spark, "logs", 100, head = 1999)
             .writeStream.format("noop"))
         val durs = sq.recentProgress.toSeq
           .filter(_.numInputRows > 0)

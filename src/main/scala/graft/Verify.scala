@@ -6,10 +6,11 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  /** Location of the synthetic-chain reference dump; the connector oracle
-    * SQL (EngineOps e01-e04) reads these files in DuckDB. The oracle
-    * strings and the dump are produced by the same JVM, so the env override
-    * stays consistent between them. The default is PID-NAMESPACED: two
+  /** Location of the synthetic-chain reference dump; the connector and
+    * stream oracle SQL reads its tables through [[chainTable]] in DuckDB.
+    * The oracle strings and the dump are produced by the same JVM, so the
+    * env override stays consistent between them. The default is
+    * PID-NAMESPACED: two
     * Verify JVMs (e.g. a targeted re-run while a full sweep's comparator is
     * still reading) must never clobber each other's dumps mid-compare —
     * the oracle_sql.json each emits embeds its own path, so the comparator
@@ -18,6 +19,13 @@ object Verify {
   val ChainDumpDir: String =
     sys.env.getOrElse("GRAFT_CHAIN_DUMP_DIR",
       s"/tmp/graft_synthetic_chain_${ProcessHandle.current().pid()}")
+
+  private def chainDir(name: String): String = s"$ChainDumpDir/$name.parquet"
+
+  /** A chain-dump table as a quoted DuckDB glob, for oracle SQL: the one
+    * place the dump's layout is spelled on the oracle side.
+    */
+  def chainTable(name: String): String = s"'${chainDir(name)}/*.parquet'"
 
   /** Location of the driver-computed signature dump (PureSig): ground truth
     * for the engine-hash dedup/ANN family (d03/d04/d06/d07/d08, sim02). The
@@ -54,20 +62,20 @@ object Verify {
     // Seq would ship them in that task's closure, ~6 MB)
     spark.range(0L, 3000L, 1L, 1).as[Long]
       .flatMap(b => (0 until rpc.logsInBlock(b)).map(i => rpc.logAt(b, i)))
-      .toDF().write.mode("overwrite").parquet(s"$ChainDumpDir/logs.parquet")
+      .toDF().write.mode("overwrite").parquet(chainDir("logs"))
     // the delivered event stream of the reorg-mode chain (appends +
     // removed=true retractions + replacements), straight from SyntheticRpc's
     // pure functions on the driver — ground truth for x16's streamed path
     val reorgRpc = new graft.sources.SyntheticRpc(42L, 10000L,
       reorgAt = ReorgAt, reorgDepth = ReorgDepth)
     (0L to ReorgHead).flatMap(reorgRpc.deliveredAt).toDF()
-      .coalesce(1).write.mode("overwrite").parquet(s"$ChainDumpDir/reorg_logs.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(chainDir("reorg_logs"))
     val blocks = (0L to 999L).flatMap(rpc.getBlock).map { b =>
       (b.number, new java.math.BigInteger(b.totalDifficulty.stripPrefix("0x"), 16).longValueExact(),
         b.gasUsed, b.transactions.size, b.timestamp)
     }
     blocks.toDF("number", "td_dec", "gasUsed", "n_tx", "timestamp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$ChainDumpDir/blocks.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(chainDir("blocks"))
   }
 
   /** MinHash/SimHash signatures and hyperplane buckets for the CURRENT

@@ -529,12 +529,6 @@ object DedupOps {
     (grams, grams.groupBy("gram").agg(count(lit(1)).as("df")))
   }
 
-  /** Local alias to avoid a Catalog init cycle (Catalog.byName forces
-    * Catalog.all which includes this module).
-    */
-  private def byNameLocal(name: String): Q =
-    all.find(_.name == name).getOrElse(throw new NoSuchElementException(name))
-
   val all: Seq[Q] = Seq(
     // Exact dedup: hash-groupBy on content, keep lowest doc_id as canonical.
     Q("d01_exact_dedup",
@@ -719,7 +713,7 @@ object DedupOps {
     // pipeline fully inside the hash-compare gate.
     Q("d07b_dedup_apply_exact",
       (s, d) => {
-        val clusters = byNameLocal("d06b_dedup_clusters_exact").build(s, d)
+        val clusters = Catalog.byName("d06b_dedup_clusters_exact").build(s, d)
         val losers = clusters.where(col("doc_id") =!= col("cluster")).select("doc_id")
         t(s, d, "documents")
           .join(losers, Seq("doc_id"), "left_anti")
@@ -1112,7 +1106,7 @@ object DedupOps {
     // effective (deduped) mass — the number a data card reports.
     Q("d19_soft_dedup_weights",
       (s, d) => {
-        val clusters = byNameLocal("d06b_dedup_clusters_exact").build(s, d)
+        val clusters = Catalog.byName("d06b_dedup_clusters_exact").build(s, d)
         val sizes = clusters.groupBy("cluster").agg(count(lit(1)).as("csize"))
         val weighted = t(s, d, "documents").select("doc_id", "source")
           .join(clusters, Seq("doc_id"), "left")

@@ -1,7 +1,8 @@
 package graft.operators
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
+import org.apache.spark.sql.functions.{lit, max, min, pmod}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.streaming.LocalCheckpointFileManager
@@ -14,7 +15,9 @@ import graft.streaming.LocalCheckpointFileManager
   * offset-, commit-log or state-store write forks no `chmod`/`readlink`
   * process (see [[run]]). `q` is the query's short id
   * (x04, d24, …): it prefixes those dirs and the fed-batch failure message.
-  * A [[batches]] body keeps its cross-batch state in a [[Store]].
+  * A feed is split with [[byKey]] or [[cuts]]; a [[batches]] body keeps its
+  * cross-batch state in a [[Store]], and [[partials]] is the body that
+  * keeps one partial per batch.
   */
 object Drain {
 
@@ -33,6 +36,27 @@ object Drain {
     parts.zipWithIndex.foreach { case (p, i) => p.coalesce(1).write.parquet(s"$dir/b$i") }
     (1 until parts.size).foreach(i => forceDeliveryOrder(s"$dir/b${i - 1}", s"$dir/b$i"))
     dir
+  }
+
+  /** The `n` parts `pmod(key, n) === r`, r = 0 until n: every row lands in
+    * exactly one part, negative keys included.
+    */
+  def byKey(df: DataFrame, key: Column, n: Int): Seq[DataFrame] =
+    (0 until n).map(r => df.where(pmod(key, lit(n)) === r))
+
+  /** The `n` equal-width parts of `c`'s range, cut at
+    * `lo + k * ((hi - lo) / n)` for k = 1 until n: every row lands in
+    * exactly one part, the max row in the last. `c` is a BIGINT column;
+    * its min and max are one driver-side aggregate.
+    */
+  def cuts(df: DataFrame, c: Column, n: Int): Seq[DataFrame] = {
+    val r = df.agg(min(c), max(c)).head()
+    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val at = (1 until n).map(k => lo + k * ((hi - lo) / n))
+    (0 until n).map { k =>
+      (at.lift(k - 1).map(c >= _).toSeq ++ at.lift(k).map(c < _))
+        .reduceOption(_ && _).fold(df)(cond => df.where(cond))
+    }
   }
 
   /** Stage fixture files copied as they are, and return the feed. The file
@@ -101,6 +125,17 @@ object Drain {
       df.writeStream.foreachBatch { (b: DataFrame, id: Long) => if (!b.isEmpty) f(b, id) },
       minFed, reason)
 
+  /** Drain `stream` through [[batches]], keep `f(batch)` as the batch's
+    * [[Store]] entry, and return every entry's rows. The caller merges
+    * them by its own law (a sum, a max, a union and re-take-k, …).
+    */
+  def partials(q: String, stream: DataFrame, minFed: Int, reason: String)(
+      f: DataFrame => DataFrame): DataFrame = {
+    val store = Store(s"${q}part")
+    batches(q, stream, minFed, reason)((b, id) => store.put(id, f(b)))
+    store.read(stream.sparkSession)
+  }
+
   /** The cross-batch state of a [[batches]] query: micro-batch `id`'s entry
     * is the dir `b<id>` under `root`. [[put]] replaces the entry, so a
     * retried batch overwrites its first attempt instead of adding to it
@@ -123,8 +158,19 @@ object Drain {
       dir.toString
     }
 
+    /** [[put]] `df` as batch `batchId`'s parquet entry. */
+    def put(batchId: Long, df: DataFrame): String = put(batchId)(df.write.parquet(_))
+
     /** The newest entry of a batch before `batchId`. */
     def latestBefore(batchId: Long): Option[String] = allBefore(batchId).lastOption
+
+    /** [[latestBefore]]'s rows, or no rows of DDL schema `empty` when no
+      * earlier batch wrote an entry.
+      */
+    def readLatestBefore(s: SparkSession, batchId: Long, empty: String): DataFrame =
+      latestBefore(batchId).fold(
+        s.createDataFrame(java.util.Collections.emptyList[Row](), StructType.fromDDL(empty)))(
+        s.read.parquet(_))
 
     /** Every entry of a batch before `batchId`, in batch order. */
     def allBefore(batchId: Long): Seq[String] =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Catalog._
 import graft.functions.GraftFunctions
+import graft.Verify.chainTable
 
 /** Engine-proper operators from SURVEY §2a exercised as verifiable queries:
   * hex-quantity decode (S18), scan range chunking (S5), and the multimodal
@@ -102,7 +103,7 @@ object EngineOps {
       Some(s"""SELECT CASE WHEN len(topics) > 0 THEN topics[1] ELSE 'none' END AS sig,
                       CAST(COUNT(*) AS BIGINT) AS n,
                       CAST(COUNT(DISTINCT address) AS BIGINT) AS n_addr
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber BETWEEN 500 AND 2499
                GROUP BY 1 ORDER BY n DESC, sig""")),
 
@@ -124,7 +125,7 @@ object EngineOps {
       Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_blocks,
                       CAST(SUM(n_tx) AS BIGINT) AS total_tx,
                       CAST(MAX(td_dec) AS VARCHAR) AS max_td
-               FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet'""")),
+               FROM ${chainTable("blocks")}""")),
 
     // S6: adaptive bisection under a node result cap — the capped connector
     // read must agree exactly with the uncapped ground-truth dump.
@@ -135,7 +136,7 @@ object EngineOps {
         .agg(count(lit(1)).as("n"), sum(col("blockNumber")).as("sum_bn")),
       Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n,
                       CAST(SUM(blockNumber) AS BIGINT) AS sum_bn
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= 999""")),
 
     // S10/§8.4: topic0 predicate reaching the NODE filter solely via the
@@ -160,7 +161,7 @@ object EngineOps {
       Some(s"""SELECT topics[1] AS topic0,
                       CAST(COUNT(*) AS BIGINT) AS n,
                       CAST(COUNT(DISTINCT address) AS BIGINT) AS n_addr
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE topics[1] IN (${topicPair.map(t => s"'$t'").mkString(",")})
                GROUP BY 1 ORDER BY topic0"""),
       bench = false),
@@ -192,7 +193,7 @@ object EngineOps {
       },
       Some(s"""SELECT number // 500 AS chunk, COUNT(*) AS n_blocks,
                       CAST(SUM(gasUsed) AS BIGINT) AS total_gas
-               FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet'
+               FROM ${chainTable("blocks")}
                WHERE gasUsed > 0
                GROUP BY 1 ORDER BY chunk"""),
       bench = false),
@@ -204,15 +205,12 @@ object EngineOps {
     // oracle over the direct chain dump.
     Q("e05_eth_stream_scan",
       (s, d) => {
-        val counts = s.readStream.format("graft-eth").option("dataset", "logs")
-          .option("startBlock", "0").option("head", "2999")
-          .option("maxBlocksPerTrigger", "1000")
-          .load()
+        val counts = graft.streaming.StreamOps.ethStream(s, "logs", 1000, head = 2999)
           .groupBy(col("address")).agg(count(lit(1)).as("n"))
         Drain.memory("e05", counts, "complete").orderBy("address")
       },
       Some(s"""SELECT address, CAST(COUNT(*) AS BIGINT) AS n
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= 2999
                GROUP BY address ORDER BY address"""),
       bench = false),
@@ -242,8 +240,8 @@ object EngineOps {
                       CAST(COUNT(*) AS BIGINT) AS n_logs,
                       CAST(SUM(b.gasUsed) AS BIGINT) AS total_gas,
                       CAST(SUM(b.n_tx) AS BIGINT) AS total_tx
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet' l
-               JOIN '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet' b
+               FROM ${chainTable("logs")} l
+               JOIN ${chainTable("blocks")} b
                  ON l.blockNumber = b.number
                WHERE l.blockNumber <= 999
                GROUP BY 1 ORDER BY 1""")),
@@ -305,7 +303,7 @@ object EngineOps {
                            ELSE '' END AS tail_join,
                       CASE WHEN len(topics) = 1 THEN NULL
                            ELSE array_to_string(topics, '|') END AS null_list_join
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= 499
                ORDER BY blockNumber, logIndex"""),
       bench = false),
@@ -355,7 +353,7 @@ object EngineOps {
                       '0x' || substring(topics[2], 27, 40) AS from_addr,
                       '0x' || substring(topics[3], 27, 40) AS to_addr,
                       CAST(CAST(data AS UBIGINT) AS VARCHAR) AS value
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE len(topics) = 3
                ORDER BY blockNumber, logIndex""")),
 
@@ -382,7 +380,7 @@ object EngineOps {
                       CAST(SUM(gasUsed) AS BIGINT) AS gas_total,
                       MAX(gasUsed) AS gas_max,
                       CAST(SUM(n_tx) AS BIGINT) AS tx_total
-               FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet'
+               FROM ${chainTable("blocks")}
                WHERE number <= 999
                GROUP BY 1 ORDER BY epoch""")),
 
@@ -413,7 +411,7 @@ object EngineOps {
                       '0x' || substring(topics[2], 27, 40) AS from_addr,
                       '0x' || substring(topics[3], 27, 40) AS to_addr,
                       CAST(CAST(topics[4] AS UBIGINT) AS BIGINT) AS token_id
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE len(topics) = 4
                ORDER BY blockNumber, logIndex""")),
 
@@ -440,7 +438,7 @@ object EngineOps {
                       MIN(blockNumber) AS first_block,
                       MAX(blockNumber) AS last_block,
                       COUNT(DISTINCT transactionHash) AS n_txs
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= 2999
                GROUP BY address ORDER BY address""")),
 
@@ -464,7 +462,7 @@ object EngineOps {
       Some(s"""SELECT COALESCE(topics[1], '(none)') AS topic0,
                       COUNT(*) AS n_logs,
                       COUNT(DISTINCT address) AS n_contracts
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= 2999
                GROUP BY 1 ORDER BY n_logs DESC, topic0""")),
 
@@ -497,7 +495,7 @@ object EngineOps {
           .orderBy("epoch")
       },
       Some(s"""WITH b AS (SELECT number, timestamp, n_tx
-                          FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet'
+                          FROM ${chainTable("blocks")}
                           WHERE number <= 999),
                  g AS (SELECT cur.number, cur.timestamp - prv.timestamp AS gap, cur.n_tx
                        FROM b cur JOIN b prv ON cur.number = prv.number + 1)
@@ -545,7 +543,7 @@ object EngineOps {
           .orderBy("blockNumber", "logIndex")
       },
       Some(s"""WITH rng AS (
-                 SELECT * FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+                 SELECT * FROM ${chainTable("logs")}
                  WHERE blockNumber BETWEEN 100 AND 499),
                  top2 AS (SELECT topics[1] AS t0 FROM rng
                           WHERE len(topics) >= 1
@@ -572,7 +570,7 @@ object EngineOps {
             size(col("transactions")).cast(LongType).as("n_tx"))
       },
       Some(s"""SELECT number, gasUsed, n_tx
-               FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet'
+               FROM ${chainTable("blocks")}
                WHERE number = 777""")),
 
     // CASE-INSENSITIVE ADDRESS FILTER VIA TICKET — the reference compares
@@ -604,7 +602,7 @@ object EngineOps {
           .orderBy("blockNumber", "logIndex")
       },
       Some(s"""WITH rng AS (
-                 SELECT * FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+                 SELECT * FROM ${chainTable("logs")}
                  WHERE blockNumber BETWEEN 500 AND 899),
                  top2 AS (SELECT address FROM rng
                           GROUP BY 1 ORDER BY COUNT(*) DESC, address LIMIT 2)
@@ -648,10 +646,10 @@ object EngineOps {
       // the connector serves, which Spark's re-applied limit passes through
       Some(s"""SELECT 'full' AS mode, CAST(COUNT(*) AS BIGINT) AS n_blocks,
                       MIN(number) AS min_block, MAX(number) AS max_block
-               FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet'
+               FROM ${chainTable("blocks")}
                UNION ALL
                SELECT 'limit5', CAST(COUNT(*) AS BIGINT), MIN(number), MAX(number)
-               FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet'
+               FROM ${chainTable("blocks")}
                WHERE number BETWEEN 0 AND 4
                ORDER BY mode"""))  ,
 
@@ -700,13 +698,13 @@ object EngineOps {
         joined.orderBy("number")
       },
       Some(s"""WITH lg AS (SELECT topics[1] AS sig, blockNumber
-                           FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+                           FROM ${chainTable("logs")}
                            WHERE len(topics) >= 1 AND blockNumber BETWEEN 0 AND 999),
                  hist AS (SELECT sig, COUNT(*) AS c FROM lg GROUP BY sig),
                  rare AS (SELECT sig FROM hist ORDER BY c, sig LIMIT 1),
                  dim AS (SELECT blockNumber FROM lg WHERE sig = (SELECT sig FROM rare))
                SELECT b.number, COUNT(*) AS n_rare_logs, MAX(b.gasUsed) AS gas_used
-               FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet' b
+               FROM ${chainTable("blocks")} b
                JOIN dim d ON b.number = d.blockNumber
                GROUP BY b.number ORDER BY b.number""")),
 
@@ -766,8 +764,8 @@ object EngineOps {
         }
       },
       Some(s"""SELECT l.blockNumber, l.logIndex, l.address, b.gasUsed
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet' l
-               JOIN '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet' b
+               FROM ${chainTable("logs")} l
+               JOIN ${chainTable("blocks")} b
                  ON l.blockNumber = b.number
                ORDER BY blockNumber, logIndex""")),
 
@@ -808,7 +806,7 @@ object EngineOps {
       Some(s"""SELECT topics[1] AS topic0,
                       CAST(COUNT(*) AS BIGINT) AS n,
                       CAST(COUNT(DISTINCT address) AS BIGINT) AS n_addr
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE topics[1] IN (${topicPair.map(t => s"'$t'").mkString(",")})
                GROUP BY 1 ORDER BY topic0"""),
       bench = false),
@@ -849,7 +847,7 @@ object EngineOps {
       },
       Some(s"""SELECT number // 500 AS chunk, COUNT(*) AS n_blocks,
                       CAST(SUM(gasUsed) AS BIGINT) AS total_gas
-               FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet'
+               FROM ${chainTable("blocks")}
                WHERE gasUsed > 0
                GROUP BY 1 ORDER BY chunk"""),
       bench = false),
@@ -886,7 +884,7 @@ object EngineOps {
       },
       Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_blocks,
                       MIN(number) AS min_block, MAX(number) AS max_block
-               FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet'"""),
+               FROM ${chainTable("blocks")}"""),
       bench = false)
   )
 }

@@ -131,6 +131,15 @@ object GraphOps {
         .write.mode("overwrite").parquet(dir)
     })
 
+  /** The undirected simple link graph: distinct (u, v) = (least, greatest)
+    * endpoint pairs of [[linkEdgesShared]], self-loops dropped: g03, g07
+    * and g11, and x48/x49, the streaming twins of g03 and g11.
+    */
+  def undirectedEdges(s: SparkSession, d: String): DataFrame =
+    linkEdgesShared(s, d).where(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
+      .distinct()
+
   /** g08's propagated labels (doc_id, label-or-NULL after [[LpRounds]]
     * min-label rounds from the every-[[LpSeedMod]]-th seeds) — shared by
     * g08 (the labels themselves) and g13 (modularity of the labeled
@@ -292,10 +301,7 @@ object GraphOps {
       (s, d) => {
         val n = nodeCount(s, d)
         val docs = t(s, d, "documents")
-        val und = linkEdgesShared(s, d).where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v"))
-          .distinct()
+        val und = undirectedEdges(s, d)
         val deg = und.select(col("u").as("node"))
           .unionAll(und.select(col("v").as("node")))
           .groupBy("node").agg(count(lit(1)).as("dg"))
@@ -494,9 +500,7 @@ object GraphOps {
       (s, d) => {
         val n = nodeCount(s, d)
         val docs = t(s, d, "documents")
-        val base = linkEdgesShared(s, d).where(col("src") =!= col("dst"))
-        val und = base.select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v")).distinct()
+        val und = undirectedEdges(s, d)
           // und feeds adj (twice), the non-edge anti-join, and through adj
           // the degree table — checkpoint so the four branches share one
           // distinct pass (measured: 26 scans in the g07 physical plan)
@@ -657,9 +661,7 @@ object GraphOps {
       (s, d) => {
         val n = nodeCount(s, d)
         val docs = t(s, d, "documents")
-        val base = linkEdgesShared(s, d).where(col("src") =!= col("dst"))
-        val und = base.select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v")).distinct()
+        val und = undirectedEdges(s, d)
         val adj = und.select(col("u").as("node"), col("v").as("nbr"))
           .union(und.select(col("v").as("node"), col("u").as("nbr")))
         val deg = adj.groupBy("node").agg(count(lit(1)).as("dg"))

@@ -1326,7 +1326,7 @@ object SimilarityOps {
     // so the recall NUMBER itself is cross-engine-verified.
     Q("sim09_recall_trained",
       (s, d) => recallRows(s, "method", Seq("ivf_trained" ->
-        recallOf(bruteTruth(s, d, 10, 3))(byNameLocal("sim08_ann_ivf_trained").build(s, d)))),
+        recallOf(bruteTruth(s, d, 10, 3))(Catalog.byName("sim08_ann_ivf_trained").build(s, d)))),
       Some(s"""WITH $sqlTrainedSearchCtes,
                  ivf_top AS (${sqlTopK("iscored", 3)}),
                  ${sqlBruteTruthCtes(10, 3)}
@@ -1417,8 +1417,8 @@ object SimilarityOps {
       (s, d) => {
         val brute = bruteTruth(s, d, 50, 3)
         recallRows(s, "method", Seq(
-          "ivf" -> recallOf(brute.where(col("qid") < 10))(byNameLocal("sim03_ann_ivf").build(s, d)),
-          "lsh" -> recallOf(brute)(byNameLocal("sim02_ann_lsh").build(s, d))))
+          "ivf" -> recallOf(brute.where(col("qid") < 10))(Catalog.byName("sim03_ann_ivf").build(s, d)),
+          "lsh" -> recallOf(brute)(Catalog.byName("sim02_ann_lsh").build(s, d))))
       },
       Some(s"""WITH $sqlIvfAssignCtes, ${sqlSeedSearchCtes()},
                  ivf_top AS (${sqlTopK("iscored", 3)}),
@@ -1601,7 +1601,7 @@ object SimilarityOps {
     // sim07 Lloyd machinery per subspace, exactly what sim09 demonstrates
     // for the coarse quantizer. The query exists to surface that number.
     Q("sim17_pq_recall",
-      (s, d) => recallByQid(pqL2Truth(s, d), byNameLocal("sim16_pq_adc_search").build(s, d), 3),
+      (s, d) => recallByQid(pqL2Truth(s, d), Catalog.byName("sim16_pq_adc_search").build(s, d), 3),
       Some(s"""WITH $sqlPqAdcCtes,
                  adc_top AS (${sqlTopK("adc", 3, "adc_dist, vec_id")}),
                  $sqlPqTruthCtes
@@ -1703,7 +1703,7 @@ object SimilarityOps {
     // quantization losses; sim17 prices ADC alone). Per probe, so the
     // oracle reproduces every value, not one average.
     Q("sim21_ivfpq_recall",
-      (s, d) => recallByQid(pqL2Truth(s, d), byNameLocal("sim20_ivfpq_search").build(s, d), 3),
+      (s, d) => recallByQid(pqL2Truth(s, d), Catalog.byName("sim20_ivfpq_search").build(s, d), 3),
       Some(s"""WITH $sqlIvfPqCtes,
                  iv_top AS (${sqlTopK("adci", 3, "adc_dist, vec_id")}),
                  $sqlPqTruthCtes
@@ -1929,7 +1929,7 @@ object SimilarityOps {
     // recall where seed-codebook PQ lands ~0.1–0.2 — the compression ↔
     // recall trade made measurable).
     Q("sim27_sq_recall",
-      (s, d) => recallByQid(pqL2Truth(s, d), byNameLocal("sim26_sq_adc_search").build(s, d), 3),
+      (s, d) => recallByQid(pqL2Truth(s, d), Catalog.byName("sim26_sq_adc_search").build(s, d), 3),
       Some(s"""WITH $sqlSqAdcCtes,
                  sq_top AS (${sqlTopK("adcsq", 3, "sq_dist, vec_id")}),
                  $sqlPqTruthCtes
@@ -1955,9 +1955,9 @@ object SimilarityOps {
             .agg((sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / 30).as("mean_recall"))
             .select(lit(method).as("method"), lit(bytes).as("bytes_per_vec"),
               col("mean_recall"))
-        val adcTop = byNameLocal("sim16_pq_adc_search").build(s, d).select("qid", "vec_id")
+        val adcTop = Catalog.byName("sim16_pq_adc_search").build(s, d).select("qid", "vec_id")
         val rrTop = pqAdcRerank(s, d).select("qid", "vec_id")
-        val sqTop = byNameLocal("sim26_sq_adc_search").build(s, d).select("qid", "vec_id")
+        val sqTop = Catalog.byName("sim26_sq_adc_search").build(s, d).select("qid", "vec_id")
         val binTop = topK(binHamScores(s, d), 3, "hamming", ascending = true).select("qid", "vec_id")
         row("pq_adc", 4, adcTop)
           .union(row("pq_adc_rerank", 4, rrTop))
@@ -2248,7 +2248,7 @@ object SimilarityOps {
       bench = false),
 
     // (knnTop builds the ranked edge table shared by sim36/sim37/sim38 —
-    // defined below `all`, next to byNameLocal.)
+    // defined below `all`.)
     //
     // k-NN GRAPH CONSTRUCTION — the precursor of every graph-ANN
     // (HNSW/NSW-class) serving structure: for each vector, its k=4 exact
@@ -2280,7 +2280,7 @@ object SimilarityOps {
     // recursive CTE.
     Q("sim37_knn_connectivity",
       (s, d) => {
-        val knn = byNameLocal("sim36_knn_graph").build(s, d)
+        val knn = Catalog.byName("sim36_knn_graph").build(s, d)
         val pairs = knn.select(least(col("vec_id"), col("nbr_id")).as("da"),
             greatest(col("vec_id"), col("nbr_id")).as("db")).distinct()
         val cc = DedupOps.connectedComponents(pairs, maxIter = 20)
@@ -2345,7 +2345,7 @@ object SimilarityOps {
     // walk, so the recall NUMBER itself is cross-engine-verified.
     Q("sim39_walk_recall",
       (s, d) => recallRows(s, "method", Seq("graph_walk" ->
-        recallOf(bruteTruth(s, d, 10, 3))(byNameLocal("sim38_graph_ann_walk").build(s, d)))),
+        recallOf(bruteTruth(s, d, 10, 3))(Catalog.byName("sim38_graph_ann_walk").build(s, d)))),
       Some(s"""WITH RECURSIVE $sqlWalkCtes,
                  walk_top AS (${sqlTopK(s"wf$WalkHops", 3)}),
                  ${sqlBruteTruthCtes(10, 3)}
@@ -2490,7 +2490,7 @@ object SimilarityOps {
           .join(broadcast(dels.select(col("vec_id").as("qid"))), Seq("qid"), "left_anti")
           .join(broadcast(dels), Seq("vec_id"), "left_anti")
         recallRows(s, "method", Seq("ivf_tombstoned" -> recallOf(
-          topK(live, 3).select("qid", "vec_id"))(byNameLocal("sim41_ivf_delete_serve").build(s, d))))
+          topK(live, 3).select("qid", "vec_id"))(Catalog.byName("sim41_ivf_delete_serve").build(s, d))))
       },
       Some(s"""WITH $sqlTrainedSearchCtes,
                  rdel AS (SELECT vec_id FROM nv WHERE ${sqlDocHash("vec_id", 20)} = 0),
@@ -2588,7 +2588,7 @@ object SimilarityOps {
     // production gap opens. Per probe (the sim17 convention), both sides
     // replayed in SQL.
     Q("sim47_residual_pq_recall",
-      (s, d) => recallByQid(pqL2Truth(s, d), byNameLocal("sim46_residual_pq_search").build(s, d), 3),
+      (s, d) => recallByQid(pqL2Truth(s, d), Catalog.byName("sim46_residual_pq_search").build(s, d), 3),
       Some(s"""WITH $sqlTrainedSearchCtes,
                  $sqlResidualAdcCtes,
                  radc_top AS (${sqlTopK("radc", 3, "adc_dist, vec_id")}),
@@ -2684,7 +2684,7 @@ object SimilarityOps {
     // the truth are replayed in SQL, so the number is cross-engine.
     Q("sim49_layered_walk_recall",
       (s, d) => recallRows(s, "method", Seq("layered_walk" ->
-        recallOf(bruteTruth(s, d, 10, 3))(byNameLocal("sim48_layered_walk").build(s, d)))),
+        recallOf(bruteTruth(s, d, 10, 3))(Catalog.byName("sim48_layered_walk").build(s, d)))),
       Some(s"""WITH RECURSIVE $sqlLayeredWalkCtes,
                lwalk_top AS (${sqlTopK(s"hfl$WalkHops", 3)}),
                ${sqlBruteTruthCtes(10, 3, "l")}
@@ -2804,10 +2804,6 @@ object SimilarityOps {
     }
     (first +: rest).mkString(",\n                 ")
   }
-
-  /** Local alias to avoid a Catalog init cycle. */
-  private def byNameLocal(name: String): Q =
-    all.find(_.name == name).getOrElse(throw new NoSuchElementException(name))
 
   /** Ranked k-NN edge table (u, rank, v, cos_sim): each vector's 4 exact
     * nearest within-trained-cell neighbors — sim36's output, sim37's edge

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Catalog._
+import graft.Verify.chainTable
+import graft.streaming.StreamOps
 
 /** The streaming catalog: event-time windows (tumbling, sliding and
   * session), watermarked joins and aggregates, stateful processors and the
@@ -59,6 +61,11 @@ object StreamShape {
     SimilarityOps.sqlTopK(
       s"iscored WHERE qid NOT IN (SELECT vec_id FROM $del) AND vec_id NOT IN (SELECT vec_id FROM $del)",
       3, cols = "qid, vec_id, cos_sim, CAST(rk AS INT) AS rk")
+
+  /** Both orientations (a, b) of an undirected (u, v) edge frame. */
+  private def sym(e: DataFrame): DataFrame =
+    e.select(col("u").as("a"), col("v").as("b"))
+      .unionByName(e.select(col("v").as("a"), col("u").as("b")))
 
   val all: Seq[Q] = Seq(
     // Tumbling 1-hour event-time window (streaming: groupBy(window($"ts","1 hour"))).
@@ -164,17 +171,14 @@ object StreamShape {
     // SyntheticRpc chain dump.
     Q("x06_stream_stream_join",
       (s, d) => {
-        def src(dataset: String) = s.readStream.format("graft-eth")
-          .option("dataset", dataset).option("startBlock", "0")
-          .option("head", "999").option("maxBlocksPerTrigger", "500").load()
-        val joined = graft.streaming.StreamOps
-          .logsWithBlocks(src("logs"), src("blocks"), "1000 hours")
+        def src(dataset: String) = StreamOps.ethStream(s, dataset, 500)
+        val joined = StreamOps.logsWithBlocks(src("logs"), src("blocks"), "1000 hours")
           .select(col("blockNumber"), col("logIndex"), col("address"), col("gasUsed"))
         Drain.memory("x06", joined, "append").orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT l.blockNumber, l.logIndex, l.address, b.gasUsed
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet' l
-               JOIN '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet' b
+               FROM ${chainTable("logs")} l
+               JOIN ${chainTable("blocks")} b
                  ON l.blockNumber = b.number
                ORDER BY blockNumber, logIndex"""),
       bench = false),
@@ -189,17 +193,14 @@ object StreamShape {
     // min/max/count over the direct chain dump.
     Q("x07_stateful_sessions",
       (s, d) => {
-        val logs = s.readStream.format("graft-eth").option("dataset", "logs")
-          .option("startBlock", "0").option("head", "999")
-          .option("maxBlocksPerTrigger", "1000").load()
-        Drain.memory("x07", graft.streaming.StreamOps.addressActivity(logs).toDF(), "update")
-          .orderBy("address")
+        val logs = StreamOps.ethStream(s, "logs", 1000)
+        Drain.memory("x07", StreamOps.addressActivity(logs).toDF(), "update").orderBy("address")
       },
       Some(s"""SELECT address,
                       MIN(blockNumber) AS firstBlock,
                       MAX(blockNumber) AS lastBlock,
                       CAST(COUNT(*) AS BIGINT) AS n
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= 999
                GROUP BY address ORDER BY address"""),
       bench = false),
@@ -236,10 +237,8 @@ object StreamShape {
         // constant, so engine and oracle cannot drift apart
         val head = X10Head
         val sink = onRocksDb(s) {
-          val logs = s.readStream.format("graft-eth").option("dataset", "logs")
-            .option("startBlock", "0").option("head", head.toString)
-            .option("maxBlocksPerTrigger", (head + 1).toString).load()
-          Drain.memory("x10", graft.streaming.StreamOps.addressActivityTws(logs).toDF(), "update")
+          val logs = StreamOps.ethStream(s, "logs", head + 1, head = head)
+          Drain.memory("x10", StreamOps.addressActivityTws(logs).toDF(), "update")
         }
         // the Update-mode memory sink APPENDS each batch's updated rows; if
         // the drain ever splits into >1 batch, keep only the LAST update per
@@ -256,7 +255,7 @@ object StreamShape {
                       MIN(blockNumber) AS firstBlock,
                       MAX(blockNumber) AS lastBlock,
                       CAST(COUNT(*) AS BIGINT) AS n
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= $X10Head
                GROUP BY address ORDER BY address"""),
       bench = false),
@@ -325,10 +324,7 @@ object StreamShape {
         val ckpt = Artifacts.newDir("x09ckpt")
         val out = Artifacts.newDir("x09out")
         def life(head: Long): Unit =
-          Drain.run(s, "x09", ckpt, s.readStream.format("graft-eth")
-            .option("dataset", "logs").option("startBlock", "0")
-            .option("head", head.toString).option("maxBlocksPerTrigger", "200")
-            .load()
+          Drain.run(s, "x09", ckpt, StreamOps.ethStream(s, "logs", 200, head = head)
             .select("blockNumber", "logIndex", "address")
             .writeStream.format("parquet")
             .option("path", out))
@@ -337,7 +333,7 @@ object StreamShape {
         s.read.parquet(out).orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT blockNumber, logIndex, address
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= 999
                ORDER BY blockNumber, logIndex"""),
       bench = false),
@@ -383,17 +379,13 @@ object StreamShape {
     // identical session set.
     Q("x14_stream_session_window",
       (s, d) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // stage the fixture as TWO files split by event_id parity (time-
         // interleaved), so with maxFilesPerTrigger=1 the drain takes two
         // micro-batches and batch 2's events must MERGE INTO (and fuse)
         // sessions opened by batch 1 inside the state store — the cross-
         // batch path this operator exists to pin; a single staged file
         // would build every session within one batch and never exercise it
-        val ev = Catalog.parquet(s, s"$d/events.parquet")
-        val sessions = Drain.feed(s, "x14",
-            ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-          .transform(normalizeEventTs)
+        val sessions = Drain.feed(s, "x14", Drain.byKey(t(s, d, "events"), col("event_id"), 2): _*)
           .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
           .select(col("user_id"),
@@ -437,10 +429,7 @@ object StreamShape {
         val schema = s.read.format("graft-eth").option("dataset", "logs")
           .option("startBlock", "0").option("endBlock", "0").load()
           .select("blockNumber", "logIndex", "address").schema
-        val logs = s.readStream.format("graft-eth").option("dataset", "logs")
-          .option("startBlock", "0").option("head", "999")
-          .option("maxBlocksPerTrigger", "250").load()
-          .select("blockNumber", "logIndex", "address")
+        val logs = StreamOps.ethStream(s, "logs", 250).select("blockNumber", "logIndex", "address")
         Drain.run(s, "x15", Artifacts.newDir("x15ckpt"),
           logs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
             ArrowEdge.writeIpc(batch, s"$outRoot/batch-$id", batchSize = 128)
@@ -455,7 +444,7 @@ object StreamShape {
           .orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT blockNumber, logIndex, address
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= 999
                ORDER BY blockNumber, logIndex"""),
       bench = false),
@@ -476,12 +465,9 @@ object StreamShape {
     // zero, replacements and everything else survive.
     Q("x16_reorg_removal",
       (s, d) => {
-        val logs = s.readStream.format("graft-eth").option("dataset", "logs")
-          .option("startBlock", "0").option("head", graft.Verify.ReorgHead.toString)
-          .option("reorgAt", graft.Verify.ReorgAt.toString)
-          .option("reorgDepth", graft.Verify.ReorgDepth.toString)
-          .option("maxBlocksPerTrigger", "25")
-          .load()
+        val logs = StreamOps.ethStream(s, "logs", 25, head = graft.Verify.ReorgHead,
+            options = Map("reorgAt" -> graft.Verify.ReorgAt.toString,
+              "reorgDepth" -> graft.Verify.ReorgDepth.toString))
           .select("blockNumber", "logIndex", "address", "data", "removed")
         val delivered = Drain.memory("x16", logs, "append", 3,
           "the cross-batch retraction was not exercised")
@@ -495,7 +481,7 @@ object StreamShape {
           .orderBy("blockNumber", "logIndex")
       },
       Some(s"""WITH raw AS (
-                 SELECT * FROM '${graft.Verify.ChainDumpDir}/reorg_logs.parquet/*.parquet'),
+                 SELECT * FROM ${chainTable("reorg_logs")}),
                resolved AS (
                  SELECT blockNumber, logIndex, address, data,
                         SUM(CASE WHEN removed THEN -1 ELSE 1 END) AS net
@@ -520,15 +506,12 @@ object StreamShape {
     // the query path.
     Q("x17_stream_ann_serve",
       (s, d) => {
-        val out = Drain.Store("x17out")
         SimilarityOps.ensureIvfIndex(s, d)
         val q = Catalog.parquet(s, s"$d/embeddings.parquet").where(col("vec_id") < 10)
         val feed = Drain.feed(s, "x17", q.where(col("vec_id") < 5), q.where(col("vec_id") >= 5))
-        Drain.batches("x17", feed, 2, "the per-batch serve path was not exercised") { (batch, id) =>
-          out.put(id)(SimilarityOps.serveIvfIndexed(s, d, SimilarityOps.withNormOf(batch),
-            nProbes = 10).write.parquet(_))
-        }
-        out.read(s).orderBy("qid", "rk")
+        Drain.partials("x17", feed, 2, "the per-batch serve path was not exercised") { batch =>
+          SimilarityOps.serveIvfIndexed(s, d, SimilarityOps.withNormOf(batch), nProbes = 10)
+        }.orderBy("qid", "rk")
       },
       Some(SimilarityOps.sqlTrainedSearchSql),
       bench = false),
@@ -557,17 +540,13 @@ object StreamShape {
     // and both watermarks carry random microseconds.
     Q("x18_stream_late_data",
       (s, d) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val ev = Catalog.parquet(s, s"$d/events.parquet")
-          .transform(normalizeEventTs)
+        val ev = t(s, d, "events")
         // the watermark carrier: THE row holding the global max ts
         // (min event_id on ties) — a 1-row bounded driver lookup
         val maxId = ev.orderBy(col("ts").desc, col("event_id")).limit(1)
           .head().getAs[Long]("event_id")
-        val windows = Drain.feed(s, "x18",
-            ev.where(col("event_id") % 2 === 0 && col("event_id") =!= maxId),
-            ev.where(col("event_id") === maxId),
-            ev.where(col("event_id") % 2 === 1 && col("event_id") =!= maxId))
+        val Seq(even, odd) = Drain.byKey(ev.where(col("event_id") =!= maxId), col("event_id"), 2)
+        val windows = Drain.feed(s, "x18", even, ev.where(col("event_id") === maxId), odd)
           .withWatermark("ts", "30 minutes")
           .groupBy(window(col("ts"), "1 hour"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
@@ -578,10 +557,8 @@ object StreamShape {
         // exact late-drop accounting: batch 3 filters against the PREVIOUS
         // trigger's watermark = (ms-truncated) max on-time ts − 30 min;
         // a late window GROUP is dropped iff its window end has passed it
-        val wm1Ms = ev.where(col("event_id") % 2 === 0 && col("event_id") =!= maxId)
-          .agg(max(unix_micros(col("ts")))).head().getLong(0) / 1000L - 1800000L
-        val expectedDrops = ev
-          .where(col("event_id") % 2 === 1 && col("event_id") =!= maxId)
+        val wm1Ms = even.agg(max(unix_micros(col("ts")))).head().getLong(0) / 1000L - 1800000L
+        val expectedDrops = odd
           .where(unix_micros(date_trunc("hour", col("ts"))) / 1000L + 3600000L <= wm1Ms)
           .select(date_trunc("hour", col("ts"))).distinct().count()
         val dropped = sq.recentProgress.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
@@ -621,17 +598,12 @@ object StreamShape {
     // associatively from any number of executors or days.
     Q("x19_stream_cms_merge",
       (s, d) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val store = Drain.Store("x19sketch")
-        val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "user_id")
-        val feed = Drain.feed(s, "x19",
-          ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-        Drain.batches("x19", feed, 2, "the sketch merge was not exercised") { (batch, id) =>
-          store.put(id)(StockOps.cmsSketch(batch.select("user_id")).write.parquet(_))
-        }
-        val merged = store.read(s)
+        val ev = t(s, d, "events").select("event_id", "user_id")
+        val feed = Drain.feed(s, "x19", Drain.byKey(ev, col("event_id"), 2): _*)
+        val merged = Drain.partials("x19", feed, 2, "the sketch merge was not exercised")(
+            b => StockOps.cmsSketch(b.select("user_id")))
           .groupBy("r", "bucket").agg(sum("cnt").as("cnt"))
-        StockOps.cmsCompare(Catalog.t(s, d, "events"), merged)
+        StockOps.cmsCompare(t(s, d, "events"), merged)
       },
       Some(StockOps.sqlCms),
       bench = false),
@@ -648,14 +620,11 @@ object StreamShape {
     // micro-batches; oracle = the same join over the chain dumps.
     Q("x20_stream_static_enrich",
       (s, d) => {
-        val out = Drain.Store("x20out")
         val dim = s.read.format("graft-eth").option("dataset", "blocks")
           .option("startBlock", "0").option("endBlock", "999").load()
           .select(col("number"), col("gasUsed"))
-        val logs = s.readStream.format("graft-eth").option("dataset", "logs")
-          .option("startBlock", "0").option("head", "999")
-          .option("maxBlocksPerTrigger", "500").load()
-        Drain.batches("x20", logs, 2, "per-batch enrichment was not exercised") { (batch, id) =>
+        Drain.partials("x20", StreamOps.ethStream(s, "logs", 500), 2,
+            "per-batch enrichment was not exercised") { batch =>
           val enriched = batch.join(broadcast(dim), batch("blockNumber") === dim("number"))
             .select(batch("blockNumber"), col("logIndex"), col("address"),
               expr("gasUsed div 4194304").as("gas_tier"))
@@ -664,14 +633,13 @@ object StreamShape {
             s"static dim was not broadcast in the micro-batch plan:\n$plan")
           require(!plan.contains("StateStore"),
             s"stream-static join must be stateless, found state operators:\n$plan")
-          out.put(id)(enriched.write.parquet(_))
-        }
-        out.read(s).orderBy("blockNumber", "logIndex")
+          enriched
+        }.orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT l.blockNumber, l.logIndex, l.address,
                       b.gasUsed // 4194304 AS gas_tier
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet' l
-               JOIN '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet' b
+               FROM ${chainTable("logs")} l
+               JOIN ${chainTable("blocks")} b
                  ON l.blockNumber = b.number
                ORDER BY blockNumber, logIndex"""),
       bench = false),
@@ -704,9 +672,7 @@ object StreamShape {
         // output instead.
         val Head = X21Head
         def drain(head: Long, minFed: Int): Unit = {
-          def src(dataset: String) = s.readStream.format("graft-eth")
-            .option("dataset", dataset).option("startBlock", "0")
-            .option("head", head.toString).option("maxBlocksPerTrigger", "500").load()
+          def src(dataset: String) = StreamOps.ethStream(s, dataset, 500, head = head)
           val b = src("blocks").select(col("number"), col("gasUsed"))
             .withColumn("b_time", to_timestamp(from_unixtime(col("number") * 12 + 1700000000L)))
             .withWatermark("b_time", "0 seconds")
@@ -738,8 +704,8 @@ object StreamShape {
         res.orderBy("number", "logIndex")
       },
       Some(s"""SELECT b.number, b.gasUsed, l.logIndex, l.address
-               FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet' b
-               LEFT JOIN '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet' l
+               FROM ${chainTable("blocks")} b
+               LEFT JOIN ${chainTable("logs")} l
                  ON l.blockNumber = b.number
                WHERE b.number < $X21Head
                ORDER BY number, logIndex"""),
@@ -755,17 +721,12 @@ object StreamShape {
     // reconciles overlapping partials.
     Q("x22_stream_kmv_merge",
       (s, d) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val store = Drain.Store("x22sketch")
-        val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "event_type", "user_id")
-        val feed = Drain.feed(s, "x22",
-          ev.where(col("user_id") % 2 === 0), ev.where(col("user_id") % 2 === 1))
-        Drain.batches("x22", feed, 2, "the sketch merge was not exercised") { (batch, id) =>
-          store.put(id)(StockOps.kmvPartial(batch).write.parquet(_))
-        }
-        val merged = StockOps.perKeyTopK(
-          store.read(s).distinct(),
-          Seq("event_type"), Seq(col("h")), StockOps.KmvK)
+        val ev = t(s, d, "events").select("event_id", "event_type", "user_id")
+        val feed = Drain.feed(s, "x22", Drain.byKey(ev, col("user_id"), 2): _*)
+        val parts = Drain.partials("x22", feed, 2, "the sketch merge was not exercised")(
+          StockOps.kmvPartial)
+        val merged = StockOps.perKeyTopK(parts.distinct(), Seq("event_type"), Seq(col("h")),
+          StockOps.KmvK)
         val tru = t(s, d, "events").groupBy("event_type")
           .agg(count_distinct(col("user_id")).as("true_distinct"))
         StockOps.kmvEstimate(merged).join(tru, "event_type")
@@ -789,7 +750,7 @@ object StreamShape {
         val out = Artifacts.newDir("x23out")
         val docs = Catalog.parquet(s, s"$d/documents.parquet")
         Drain.run(s, "x23", Artifacts.newDir("x23ckpt"),
-          Drain.feed(s, "x23", docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1))
+          Drain.feed(s, "x23", Drain.byKey(docs, col("doc_id"), 2): _*)
             .writeStream.format("parquet").partitionBy("lang").option("path", out).outputMode("append"),
           2, "the sink never appended across commits")
         val langDirs = new java.io.File(out).listFiles().toSeq
@@ -820,17 +781,12 @@ object StreamShape {
     // order, engine-exact.
     Q("x24_stream_topk",
       (s, d) => {
-        val store = Drain.Store("x24top")
-        val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "event_type", "value")
-        val feed = Drain.feed(s, "x24",
-          ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-        Drain.batches("x24", feed, 2, "the top-k merge was not exercised") { (batch, id) =>
-          store.put(id)(StockOps.perKeyTopK(batch, Seq("event_type"),
-              Seq(desc("value"), col("event_id")), 5)
-            .select("event_type", "event_id", "value").write.parquet(_))
-        }
-        StockOps.perKeyTopK(store.read(s).distinct(),
-            Seq("event_type"), Seq(desc("value"), col("event_id")), 5)
+        val ev = t(s, d, "events").select("event_id", "event_type", "value")
+        def top5(df: DataFrame) =
+          StockOps.perKeyTopK(df, Seq("event_type"), Seq(desc("value"), col("event_id")), 5)
+        val feed = Drain.feed(s, "x24", Drain.byKey(ev, col("event_id"), 2): _*)
+        top5(Drain.partials("x24", feed, 2, "the top-k merge was not exercised")(
+            top5(_).select("event_type", "event_id", "value")).distinct())
           .select("event_type", "rk", "event_id", "value")
           .orderBy("event_type", "rk")
       },
@@ -853,7 +809,6 @@ object StreamShape {
     // winners across batch boundaries, not within one.
     Q("x25_stream_cdc_upsert",
       (s, d) => {
-        val store = Drain.Store("x25snap")
         val ev = t(s, d, "events")
           .select(col("user_id"), col("event_id"), col("event_type"),
             unix_micros(col("ts")).as("us"))
@@ -862,12 +817,9 @@ object StreamShape {
             .agg(max(struct(col("us"), col("event_id"), col("event_type"))).as("m"))
             .select(col("user_id"), col("m.us").as("us"),
               col("m.event_id").as("event_id"), col("m.event_type").as("event_type"))
-        val feed = Drain.feed(s, "x25",
-          ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-        Drain.batches("x25", feed, 2, "the snapshot merge was not exercised") { (batch, id) =>
-          store.put(id)(reduceBatch(batch).write.parquet(_))
-        }
-        reduceBatch(store.read(s).distinct())
+        val feed = Drain.feed(s, "x25", Drain.byKey(ev, col("event_id"), 2): _*)
+        reduceBatch(Drain.partials("x25", feed, 2, "the snapshot merge was not exercised")(
+            reduceBatch).distinct())
           .select(col("user_id"), col("event_id").as("last_event_id"),
             col("event_type").as("state"))
           .orderBy("user_id")
@@ -896,17 +848,13 @@ object StreamShape {
     // boundaries.
     Q("x26_stream_ohlc",
       (s, d) => {
-        val store = Drain.Store("x26bars")
         val ev = t(s, d, "events")
           .select(col("event_type"), unix_micros(col("ts")).as("us"),
             col("event_id"), col("value"))
           .withColumn("bucket", expr(s"us div ${TemporalOps.OhlcHourUs}"))
-        val feed = Drain.feed(s, "x26",
-          ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-        Drain.batches("x26", feed, 2, "the bar merge was not exercised") { (batch, id) =>
-          store.put(id)(TemporalOps.ohlcPartials(batch).write.parquet(_))
-        }
-        TemporalOps.ohlcMerge(store.read(s))
+        val feed = Drain.feed(s, "x26", Drain.byKey(ev, col("event_id"), 2): _*)
+        TemporalOps.ohlcMerge(Drain.partials("x26", feed, 2, "the bar merge was not exercised")(
+            TemporalOps.ohlcPartials))
           .orderBy("event_type", "bucket")
       },
       Some(TemporalOps.sqlOhlc),
@@ -923,15 +871,11 @@ object StreamShape {
     // O(batch) partials, merge O(sketch domain), read-out O(sketch).
     Q("x27_stream_hist_merge",
       (s, d) => {
-        val store = Drain.Store("x27sketch")
         val ord = Catalog.parquet(s, s"$d/orders.parquet")
           .select("o_orderkey", "o_totalprice")
-        val feed = Drain.feed(s, "x27",
-          ord.where(col("o_orderkey") % 2 === 0), ord.where(col("o_orderkey") % 2 === 1))
-        Drain.batches("x27", feed, 2, "the sketch merge was not exercised") { (batch, id) =>
-          store.put(id)(StockOps.histPartial(batch).write.parquet(_))
-        }
-        val merged = store.read(s)
+        val feed = Drain.feed(s, "x27", Drain.byKey(ord, col("o_orderkey"), 2): _*)
+        val merged = Drain.partials("x27", feed, 2, "the sketch merge was not exercised")(
+            StockOps.histPartial)
           .groupBy("bucket").agg(sum("c").as("c"))
         StockOps.histQuantiles(s, merged)
       },
@@ -960,22 +904,20 @@ object StreamShape {
         val sigStore = Drain.Store("x28sigs")
         val pairStore = Drain.Store("x28pairs")
         val docs = Catalog.parquet(s, s"$d/documents.parquet").select("doc_id", "text")
-        val feed = Drain.feed(s, "x28",
-          docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1))
+        val feed = Drain.feed(s, "x28", Drain.byKey(docs, col("doc_id"), 2): _*)
         Drain.batches("x28", feed, 2, "incremental discovery was not exercised") { (batch, id) =>
           val bb = DedupOps.bandBuckets(batch)
-          sigStore.put(id)(bb.write.parquet(_))
+          sigStore.put(id, bb)
           // store-so-far INCLUDES this batch — within-batch pairs are
           // found here too; least/greatest canonicalizes direction
           val store = sigStore.read(s)
-          pairStore.put(id)(bb.select(col("doc_id").as("da"), col("band"), col("sig"))
+          pairStore.put(id, bb.select(col("doc_id").as("da"), col("band"), col("sig"))
             .join(store.select(col("doc_id").as("db"), col("band"), col("sig")),
               Seq("band", "sig"))
             .where(col("da") =!= col("db"))
             .select(least(col("da"), col("db")).as("da"),
               greatest(col("da"), col("db")).as("db"))
-            .distinct()
-            .write.parquet(_))
+            .distinct())
         }
         // explicit schema: a corpus with zero bucket collisions leaves the
         // pair store empty, which schema inference would reject
@@ -1010,10 +952,8 @@ object StreamShape {
           .option("startBlock", "0").option("endBlock", (boundary - 1).toString).load()
           .select("blockNumber", "logIndex", "address", "data")
           .write.mode("overwrite").parquet(s"$root/backfill")
-        Drain.run(s, "x29", Artifacts.newDir("x29ckpt"), s.readStream.format("graft-eth")
-            .option("dataset", "logs")
-            .option("startBlock", boundary.toString).option("head", "999")
-            .option("maxBlocksPerTrigger", "200").load()
+        Drain.run(s, "x29", Artifacts.newDir("x29ckpt"),
+          StreamOps.ethStream(s, "logs", 200, startBlock = boundary)
             .select("blockNumber", "logIndex", "address", "data")
             .writeStream.format("parquet").option("path", s"$root/live")
             .outputMode("append"),
@@ -1027,7 +967,7 @@ object StreamShape {
         back.unionByName(live).orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT blockNumber, logIndex, address, data
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= 999
                ORDER BY blockNumber, logIndex"""),
       bench = false),
@@ -1046,16 +986,12 @@ object StreamShape {
       (s, d) => {
         val partStore = Drain.Store("x30part")
         val txStore = Drain.Store("x30tx")
-        val logs = s.readStream.format("graft-eth").option("dataset", "logs")
-          .option("startBlock", "0").option("head", "999")
-          .option("maxBlocksPerTrigger", "250").load()
+        val logs = StreamOps.ethStream(s, "logs", 250)
           .select("address", "blockNumber", "transactionHash")
         Drain.batches("x30", logs, 3, "partial merging was not exercised") { (batch, id) =>
-          partStore.put(id)(batch.groupBy("address")
-            .agg(count(lit(1)).as("n"), min("blockNumber").as("fb"),
-              max("blockNumber").as("lb"))
-            .write.parquet(_))
-          txStore.put(id)(batch.select("address", "transactionHash").distinct().write.parquet(_))
+          partStore.put(id, batch.groupBy("address")
+            .agg(count(lit(1)).as("n"), min("blockNumber").as("fb"), max("blockNumber").as("lb")))
+          txStore.put(id, batch.select("address", "transactionHash").distinct())
         }
         val merged = partStore.read(s)
           .groupBy("address")
@@ -1071,7 +1007,7 @@ object StreamShape {
                       MIN(blockNumber) AS first_block,
                       MAX(blockNumber) AS last_block,
                       COUNT(DISTINCT transactionHash) AS n_txs
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber <= 999
                GROUP BY address ORDER BY address"""),
       bench = false),
@@ -1091,23 +1027,19 @@ object StreamShape {
         val base = t(s, d, "events")
           .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
             when(pmod(col("event_id"), lit(5L)) =!= 0L, col("value")).as("v"))
-        val Array(lo, hi) = base.agg(min("us"), max("us")).head() match {
-          case r => Array(r.getLong(0), r.getLong(1))
-        }
-        val mid = lo + (hi - lo) / 2
+        val halves = Drain.cuts(base, col("us"), 2)
         // delivery order is LOAD-BEARING here: the feed pins b1 strictly
         // after b0
         val sink = onRocksDb(s) {
           import s.implicits._
-          val in = Drain.feed(s, "x31", base.where(col("us") < mid), base.where(col("us") >= mid))
-            .as[graft.streaming.StreamOps.LocfEvent]
-          Drain.memory("x31", graft.streaming.StreamOps.locfStream(in).toDF(), "append", 2,
+          val in = Drain.feed(s, "x31", halves: _*).as[StreamOps.LocfEvent]
+          Drain.memory("x31", StreamOps.locfStream(in).toDF(), "append", 2,
             "the cross-batch fill was not exercised")
         }
         // cross-batch handoff is genuinely exercised: some user's first
         // batch-2 reading is NULL (its fill can only come from batch-1
         // state)
-        val firstB2 = base.where(col("us") >= mid)
+        val firstB2 = halves(1)
           .groupBy(col("user_id").as("u2"))
           .agg(min(struct(col("us"), col("event_id"))).as("f"))
         val nullFirst = base.join(firstB2,
@@ -1153,7 +1085,7 @@ object StreamShape {
           .orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT blockNumber, logIndex, address, data
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber BETWEEN 300 AND 999
                ORDER BY blockNumber, logIndex"""),
       bench = false),
@@ -1176,9 +1108,7 @@ object StreamShape {
         // a retry of batch N recomputes from the prior batch's unchanged
         // entry and replaces its own gap partials
         val lasts = Drain.Store("x33last")
-        val blocks = s.readStream.format("graft-eth").option("dataset", "blocks")
-          .option("startBlock", "0").option("head", "999")
-          .option("maxBlocksPerTrigger", "250").load()
+        val blocks = StreamOps.ethStream(s, "blocks", 250)
           .select(col("number"), col("timestamp"),
             size(col("transactions")).cast(LongType).as("n_tx"))
         Drain.batches("x33", blocks, 3, "the boundary stitch was not exercised") { (batch, batchId) =>
@@ -1196,9 +1126,8 @@ object StreamShape {
             .filter(last => last.getLong(0) + 1 == first.getLong(0))
             .map(last => (first.getLong(0), first.getLong(1) - last.getLong(1), first.getLong(2)))
           import batch.sparkSession.implicits._
-          gaps.put(batchId)(
-            within.unionByName(boundary.toDF("number", "gap", "n_tx")).write.parquet(_))
-          lasts.put(batchId)(cur.orderBy(desc("number")).limit(1).write.parquet(_))
+          gaps.put(batchId, within.unionByName(boundary.toDF("number", "gap", "n_tx")))
+          lasts.put(batchId, cur.orderBy(desc("number")).limit(1))
         }
         gaps.read(s)
           .select(expr("number div 100").as("epoch"), col("gap"), col("n_tx"))
@@ -1209,7 +1138,7 @@ object StreamShape {
           .orderBy("epoch")
       },
       Some(s"""WITH b AS (SELECT number, timestamp, n_tx
-                          FROM '${graft.Verify.ChainDumpDir}/blocks.parquet/*.parquet'
+                          FROM ${chainTable("blocks")}
                           WHERE number <= 999),
                  g AS (SELECT cur.number, cur.timestamp - prv.timestamp AS gap, cur.n_tx
                        FROM b cur JOIN b prv ON cur.number = prv.number + 1)
@@ -1257,7 +1186,7 @@ object StreamShape {
         out.orderBy("blockNumber", "logIndex")
       },
       Some(s"""SELECT blockNumber, logIndex, address, data
-               FROM '${graft.Verify.ChainDumpDir}/logs.parquet/*.parquet'
+               FROM ${chainTable("logs")}
                WHERE blockNumber > 500 AND blockNumber <= 999
                ORDER BY blockNumber, logIndex"""),
       bench = false),
@@ -1272,12 +1201,10 @@ object StreamShape {
     // counter row; nothing about the history is retained.
     Q("x35_stream_quarantine",
       (s, d) => {
-        val store = Drain.Store("x35ctr")
         val ev = t(s, d, "events").select("event_id", "ts", "value", "props")
-        val feed = Drain.feed(s, "x35",
-          ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-        Drain.batches("x35", feed, 2, "counter merging was not exercised") { (batch, id) =>
-          store.put(id)(batch
+        val feed = Drain.feed(s, "x35", Drain.byKey(ev, col("event_id"), 2): _*)
+        Drain.partials("x35", feed, 2, "counter merging was not exercised") { batch =>
+          batch
             .select(
               (col("value") > 150.0).as("r_cap"),
               (get_json_object(col("props"), "$.k").cast(LongType) > 90L).as("r_k"),
@@ -1291,9 +1218,7 @@ object StreamShape {
                 .as("n_quarantined"),
               sum(when(!(col("r_cap") || col("r_k") || col("r_ts")), 1L).otherwise(0L))
                 .as("n_passed"))
-            .write.parquet(_))
-        }
-        store.read(s).agg(
+        }.agg(
           sum("n_value_above_cap").as("n_value_above_cap"),
           sum("n_k_out_of_range").as("n_k_out_of_range"),
           sum("n_ts_out_of_window").as("n_ts_out_of_window"),
@@ -1330,17 +1255,14 @@ object StreamShape {
         val base = t(s, d, "events")
           .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
             col("event_type").as("state"))
-        val Array(lo, hi) = base.agg(min("us"), max("us")).head() match {
-          case r => Array(r.getLong(0), r.getLong(1))
-        }
-        val mid = lo + (hi - lo) / 2
+        val Seq(b1, b2) = Drain.cuts(base, col("us"), 2)
         // the boundary laws must be exercised, not just possible: per-user
         // last batch-1 state vs first batch-2 state
-        val lastB1 = base.where(col("us") < mid)
+        val lastB1 = b1
           .groupBy(col("user_id").as("u1"))
           .agg(max(struct(col("us"), col("event_id"), col("state"))).as("l"))
           .select(col("u1"), col("l.state").as("s1"))
-        val firstB2 = base.where(col("us") >= mid)
+        val firstB2 = b2
           .groupBy(col("user_id").as("u2"))
           .agg(min(struct(col("us"), col("event_id"), col("state"))).as("f"))
           .select(col("u2"), col("f.state").as("s2"))
@@ -1352,9 +1274,8 @@ object StreamShape {
         val sink = onRocksDb(s) {
           import s.implicits._
           // delivery order is load-bearing (the x31 lesson)
-          val in = Drain.feed(s, "x36", base.where(col("us") < mid), base.where(col("us") >= mid))
-            .as[graft.streaming.StreamOps.Scd2Event]
-          Drain.memory("x36", graft.streaming.StreamOps.scd2Stream(in).toDF(), "append", 2,
+          val in = Drain.feed(s, "x36", b1, b2).as[StreamOps.Scd2Event]
+          Drain.memory("x36", StreamOps.scd2Stream(in).toDF(), "append", 2,
             "cross-batch maintenance was not exercised")
         }
         // collapse (open, close) emissions: the close carries to_us
@@ -1398,14 +1319,14 @@ object StreamShape {
         val relabels = new java.util.concurrent.atomic.AtomicLong(0)
         val docs = Catalog.parquet(s, s"$d/documents.parquet").select("doc_id", "text")
         // canonical (min-id) members of multi-member clusters arrive LAST
-        val canon = DedupOps.all.find(_.name == "d06_dedup_clusters").get.build(s, d)
+        val canon = Catalog.byName("d06_dedup_clusters").build(s, d)
           .groupBy("cluster").agg(count(lit(1)).as("n")).where(col("n") >= 2)
           .select(col("cluster").as("doc_id"))
         val feed = Drain.feed(s, "d24",
           docs.join(canon, Seq("doc_id"), "left_anti"), docs.join(canon, Seq("doc_id"), "left_semi"))
         Drain.batches("d24", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
           val bb = DedupOps.bandBuckets(batch)
-          sigStore.put(batchId)(bb.write.parquet(_))
+          sigStore.put(batchId, bb)
           val store = sigStore.read(s)
           val cands = bb.select(col("doc_id").as("da"), col("band"), col("sig"))
             .join(store.select(col("doc_id").as("db"), col("band"), col("sig")),
@@ -1415,12 +1336,7 @@ object StreamShape {
               greatest(col("da"), col("db")).as("db"))
             .distinct()
           val verified = DedupOps.jaccardVerified(s, d, cands).select("da", "db")
-          val prevLabels = labels.latestBefore(batchId)
-            .map(p => s.read.parquet(p))
-            .getOrElse {
-              import s.implicits._
-              Seq.empty[(Long, Long)].toDF("doc_id", "label")
-            }
+          val prevLabels = labels.readLatestBefore(s, batchId, "doc_id BIGINT, label BIGINT")
           val nodes = verified.select(col("da").as("doc_id"))
             .union(verified.select(col("db").as("doc_id"))).distinct()
           val withLab = nodes.join(prevLabels, Seq("doc_id"), "left")
@@ -1440,9 +1356,8 @@ object StreamShape {
               Seq("old_label"), "left_semi").count())
           val allNodes = prevLabels.unionByName(
             withLab.join(prevLabels.select("doc_id"), Seq("doc_id"), "left_anti"))
-          labels.put(batchId)(allNodes.join(mapping, col("label") === col("old_label"), "left")
-            .select(col("doc_id"), coalesce(col("new_label"), col("label")).as("label"))
-            .write.parquet(_))
+          labels.put(batchId, allNodes.join(mapping, col("label") === col("old_label"), "left")
+            .select(col("doc_id"), coalesce(col("new_label"), col("label")).as("label")))
         }
         require(relabels.get() > 0,
           "no existing cluster was relabeled by a later batch — the mapping-update path was vacuous")
@@ -1465,15 +1380,10 @@ object StreamShape {
     // registers, not just concatenate.
     Q("x37_stream_hll_merge",
       (s, d) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val store = Drain.Store("x37sketch")
-        val ev = Catalog.parquet(s, s"$d/events.parquet").select("event_id", "event_type", "user_id")
-        val feed = Drain.feed(s, "x37",
-          ev.where(col("user_id") % 2 === 0), ev.where(col("user_id") % 2 === 1))
-        Drain.batches("x37", feed, 2, "the register merge was not exercised") { (batch, id) =>
-          store.put(id)(StockOps.hllPartial(batch).write.parquet(_))
-        }
-        val merged = store.read(s)
+        val ev = t(s, d, "events").select("event_id", "event_type", "user_id")
+        val feed = Drain.feed(s, "x37", Drain.byKey(ev, col("user_id"), 2): _*)
+        val merged = Drain.partials("x37", feed, 2, "the register merge was not exercised")(
+            StockOps.hllPartial)
           .groupBy("event_type", "reg").agg(max(col("mj")).as("mj"))
         val tru = t(s, d, "events").groupBy("event_type")
           .agg(count_distinct(col("user_id")).as("true_distinct"))
@@ -1503,13 +1413,12 @@ object StreamShape {
         val edges = Drain.Store("x38edges")
         val cents = SimilarityOps.trainedCentroids(s, d, iters = 2)
         val vecs = Catalog.parquet(s, s"$d/embeddings.parquet").select("vec_id", "embedding")
-        val feed = Drain.feed(s, "x38",
-          vecs.where(col("vec_id") % 2 === 0), vecs.where(col("vec_id") % 2 === 1))
+        val feed = Drain.feed(s, "x38", Drain.byKey(vecs, col("vec_id"), 2): _*)
         Drain.batches("x38", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
           val assigned = SimilarityOps.assignCells(
             SimilarityOps.withNormOf(batch), cents)
             .select("cell", "vec_id", "embedding", "norm2")
-          vecStore.put(batchId)(assigned.write.parquet(_))
+          vecStore.put(batchId, assigned)
           val store = vecStore.read(s)
           val a = assigned.select(col("cell"), col("vec_id").as("na"),
             col("embedding").as("ea"), col("norm2").as("nna"))
@@ -1523,16 +1432,10 @@ object StreamShape {
           val newEdges = scored.select(col("na").as("u"), col("nb").as("v"), col("cos_sim"))
             .unionByName(scored.select(col("nb").as("u"), col("na").as("v"), col("cos_sim")))
             .distinct()
-          val prev = edges.latestBefore(batchId)
-            .map(p => s.read.parquet(p))
-            .getOrElse {
-              import s.implicits._
-              Seq.empty[(Long, Long, Double)].toDF("u", "v", "cos_sim")
-            }
-          edges.put(batchId)(StockOps.perKeyTopK(prev.unionByName(newEdges).distinct(),
+          val prev = edges.readLatestBefore(s, batchId, "u BIGINT, v BIGINT, cos_sim DOUBLE")
+          edges.put(batchId, StockOps.perKeyTopK(prev.unionByName(newEdges).distinct(),
               Seq("u"), Seq(desc("cos_sim"), col("v")), SimilarityOps.KnnK)
-            .select("u", "v", "cos_sim")
-            .write.parquet(_))
+            .select("u", "v", "cos_sim"))
         }
         val entries = edges.allBefore(Long.MaxValue)
         val finalEdges = s.read.parquet(entries.last)
@@ -1569,21 +1472,18 @@ object StreamShape {
         val nt = t(s, d, "documents")
           .select(col("doc_id"), col("source"),
             size(TextOps.tokens(col("text"))).cast(LongType).as("n_toks"))
-        val mid = nt.agg(min("doc_id"), max("doc_id")).head() match {
-          case r => r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-        }
+        val halves = Drain.cuts(nt, col("doc_id"), 2)
         // the restart bug must be catchable: some source's batch-1 total
         // ends mid-chunk (continuation offset not a multiple of 128)
-        val midChunk = nt.where(col("doc_id") < mid)
+        val midChunk = halves.head
           .groupBy("source").agg(sum("n_toks").as("tot"))
           .where(pmod(col("tot"), lit(128L)) =!= 0L).count()
         require(midChunk > 0,
           "every source's batch-1 total is chunk-aligned — the carried-offset law is vacuous")
         val sink = onRocksDb(s) {
           import s.implicits._
-          val in = Drain.feed(s, "x39", nt.where(col("doc_id") < mid), nt.where(col("doc_id") >= mid))
-            .as[graft.streaming.StreamOps.PackDoc]
-          Drain.memory("x39", graft.streaming.StreamOps.packStream(in).toDF(), "append", 2,
+          val in = Drain.feed(s, "x39", halves: _*).as[StreamOps.PackDoc]
+          Drain.memory("x39", StreamOps.packStream(in).toDF(), "append", 2,
             "the carried offset was not exercised")
         }
         sink
@@ -1626,7 +1526,7 @@ object StreamShape {
     Q("x40_stream_deletions",
       (s, d) => {
         val store = Drain.Store("x40store")
-        val clusters = DedupOps.all.find(_.name == "d06_dedup_clusters").get.build(s, d)
+        val clusters = Catalog.byName("d06_dedup_clusters").build(s, d)
           .localCheckpoint() // (doc_id, cluster); every cluster has ≥ 2 members
         val sizes = clusters.groupBy("cluster")
           .agg(count(lit(1)).as("n_before")).localCheckpoint()
@@ -1645,14 +1545,9 @@ object StreamShape {
         Drain.batches("x40", feed, 3, "the two deletion waves were not separate") { (batch, batchId) =>
           val newMembers = batch.where(col("kind") === "add").select("doc_id", "cluster")
           val delIds = batch.where(col("kind") === "del").select("doc_id")
-          val prev = store.latestBefore(batchId)
-            .map(p => s.read.parquet(p))
-            .getOrElse {
-              import s.implicits._
-              Seq.empty[(Long, Long)].toDF("doc_id", "cluster")
-            }
-          store.put(batchId)(prev.unionByName(newMembers)
-            .join(broadcast(delIds), Seq("doc_id"), "left_anti").write.parquet(_))
+          val prev = store.readLatestBefore(s, batchId, "doc_id BIGINT, cluster BIGINT")
+          store.put(batchId,
+            prev.unionByName(newMembers).join(broadcast(delIds), Seq("doc_id"), "left_anti"))
         }
         // a wave's laws, read off the entries before and after it: a
         // cluster re-elected iff its min(doc_id) changed, died iff it
@@ -1730,18 +1625,12 @@ object StreamShape {
         val w1 = ph0.where(col("qid") === minQid && col("rk") === 1).select("vec_id")
         val feed = Drain.feed(s, "x41", w0, w1)
         Drain.batches("x41", feed, 2, "the cumulative tombstone store was not exercised") { (batch, batchId) =>
-          val prev = tombs.latestBefore(batchId)
-            .map(p => s.read.parquet(p))
-            .getOrElse {
-              import s.implicits._
-              Seq.empty[Long].toDF("vec_id")
-            }
-          val cum = s.read.parquet(tombs.put(batchId)(
-            prev.unionByName(batch.select("vec_id")).distinct().write.parquet(_)))
-          served.put(batchId)(SimilarityOps.serveIvfIndexed(s, d, corpus, nProbes = 10,
+          val prev = tombs.readLatestBefore(s, batchId, "vec_id BIGINT")
+          val cum = s.read.parquet(
+            tombs.put(batchId, prev.unionByName(batch.select("vec_id")).distinct()))
+          served.put(batchId, SimilarityOps.serveIvfIndexed(s, d, corpus, nProbes = 10,
               tombstones = Some(cum))
-            .withColumn("phase", lit(batchId).cast(IntegerType))
-            .write.parquet(_))
+            .withColumn("phase", lit(batchId).cast(IntegerType)))
         }
         val out = served.read(s)
         val p0 = out.where(col("phase") === 0).select("qid", "vec_id", "rk")
@@ -1779,15 +1668,8 @@ object StreamShape {
     // drained sink is exact — the oracle is the plain batch interval join.
     Q("x42_stream_interval_join",
       (s, d) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val ev = Catalog.parquet(s, s"$d/events.parquet").transform(normalizeEventTs)
-          .select("event_id", "ts", "user_id", "event_type")
-        val us = unix_micros(col("ts"))
-        val bounds = ev.agg(min(us).as("lo"), max(us).as("hi")).head()
-        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-        val feedDir = Drain.stage("x42", ev.where(us < t1), ev.where(us >= t1 && us < t2),
-          ev.where(us >= t2))
+        val ev = t(s, d, "events").select("event_id", "ts", "user_id", "event_type")
+        val feedDir = Drain.stage("x42", Drain.cuts(ev, unix_micros(col("ts")), 3): _*)
         def side(et: String, idAs: String, tsAs: String, uidAs: String) =
           Drain.read(s, feedDir, ev.schema)
             .where(col("event_type") === et)
@@ -1840,22 +1722,19 @@ object StreamShape {
         val scalarStore = Drain.Store("x43sc")
         val tkeyStore = Drain.Store("x43tk")
         val docs = Catalog.parquet(s, s"$d/documents.parquet")
-        val feed = Drain.feed(s, "x43",
-          (0 until 3).map(i => docs.where(pmod(col("doc_id"), lit(3L)) === i)): _*)
+        val feed = Drain.feed(s, "x43", Drain.byKey(docs, col("doc_id"), 3): _*)
         val cont = DedupOps.contaminatedIds(s, d)
           .withColumn("is_cont", lit(true)).localCheckpoint()
         Drain.batches("x43", feed, 3, "partial merging was not exercised") { (batch, batchId) =>
-          scalarStore.put(batchId)(TextOps.dataCardDocFlags(batch)
+          scalarStore.put(batchId, TextOps.dataCardDocFlags(batch)
             .join(broadcast(cont), Seq("doc_id"), "left")
             .groupBy("source")
             .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"),
               count_if(coalesce(col("is_cont"), lit(false))).as("n_contaminated"),
-              count_if(col("q_ok")).as("n_quality"))
-            .write.parquet(_))
-          tkeyStore.put(batchId)(batch.groupBy(col("source"), md5(col("text")).as("tkey"))
+              count_if(col("q_ok")).as("n_quality")))
+          tkeyStore.put(batchId, batch.groupBy(col("source"), md5(col("text")).as("tkey"))
             .agg(count(lit(1)).as("n"))
-            .withColumn("batch_id", lit(batchId))
-            .write.parquet(_))
+            .withColumn("batch_id", lit(batchId)))
         }
         val sc = scalarStore.read(s).groupBy("source")
           .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
@@ -1905,16 +1784,13 @@ object StreamShape {
         val base = t(s, d, "events").where(col("event_type") === "purchase")
           .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
             col("value")).localCheckpoint()
-        val bounds = base.agg(min("us"), max("us")).head()
-        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
+        val thirds = Drain.cuts(base, col("us"), 3)
         val sink = onRocksDb(s) {
           import s.implicits._
-          val in = Drain.feed(s, "x44", base.where(col("us") < t1),
-              base.where(col("us") >= t1 && col("us") < t2), base.where(col("us") >= t2))
+          val in = Drain.feed(s, "x44", thirds: _*)
             .select("user_id", "event_id", "value")
-            .as[graft.streaming.StreamOps.TopEvent]
-          Drain.memory("x44", graft.streaming.StreamOps.topKStream(in, 3).toDF(), "append", 3,
+            .as[StreamOps.TopEvent]
+          Drain.memory("x44", StreamOps.topKStream(in, 3).toDF(), "append", 3,
             "the cross-batch list merge was not exercised")
         }
         val latest = sink
@@ -1930,8 +1806,8 @@ object StreamShape {
         require(badCount == 0,
           s"$badCount user(s) whose ListState event counter diverged from the true count")
         // the carried list genuinely merged across batches
-        val seg = base.select(col("event_id"),
-          when(col("us") < t1, 0).when(col("us") < t2, 1).otherwise(2).as("seg"))
+        val seg = thirds.zipWithIndex
+          .map { case (p, i) => p.select(col("event_id"), lit(i).as("seg")) }.reduce(_ unionByName _)
         val spanning = latest.join(seg, "event_id")
           .groupBy("user_id").agg(countDistinct(col("seg")).as("nseg"))
           .where(col("nseg") >= 2).count()
@@ -1963,16 +1839,12 @@ object StreamShape {
         val base = t(s, d, "events")
           .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
           .localCheckpoint()
-        val bounds = base.agg(min("us"), max("us")).head()
-        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
         val sink = onRocksDb(s) {
           import s.implicits._
-          val in = Drain.feed(s, "x45", base.where(col("us") < t1),
-              base.where(col("us") >= t1 && col("us") < t2), base.where(col("us") >= t2))
+          val in = Drain.feed(s, "x45", Drain.cuts(base, col("us"), 3): _*)
             .select("user_id", "event_type")
-            .as[graft.streaming.StreamOps.TypedEvent]
-          Drain.memory("x45", graft.streaming.StreamOps.typeCountStream(in).toDF(), "append", 3,
+            .as[StreamOps.TypedEvent]
+          Drain.memory("x45", StreamOps.typeCountStream(in).toDF(), "append", 3,
             "cross-batch map accumulation was not exercised")
         }
         val accumulated = sink.groupBy("user_id", "event_type")
@@ -2011,18 +1883,14 @@ object StreamShape {
         val base = t(s, d, "events")
           .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
             col("ts")).localCheckpoint()
-        val bounds = base.agg(min("us"), max("us")).head()
-        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
         val sink = onRocksDb(s) {
           import s.implicits._
           // delivery order is load-bearing (watermark advancement feeds the
           // timers): the feed pins the thirds in order
-          val in = Drain.feed(s, "x46", base.where(col("us") < t1),
-              base.where(col("us") >= t1 && col("us") < t2), base.where(col("us") >= t2))
+          val in = Drain.feed(s, "x46", Drain.cuts(base, col("us"), 3): _*)
             .withWatermark("ts", "1 second")
-            .as[graft.streaming.StreamOps.SnapEvent]
-          Drain.memory("x46", graft.streaming.StreamOps.snapshotStream(in, SnapHorizonMs).toDF(),
+            .as[StreamOps.SnapEvent]
+          Drain.memory("x46", StreamOps.snapshotStream(in, SnapHorizonMs).toDF(),
             "append", 3, "the watermark never advanced mid-stream")
         }.localCheckpoint()
         require(sink.count() > 0, "no timer ever fired — the event-time timer path is vacuous")
@@ -2088,11 +1956,11 @@ object StreamShape {
         val properSubset = new java.util.concurrent.atomic.AtomicBoolean(false)
         val docs = Catalog.parquet(s, s"$d/documents.parquet").select("doc_id")
         val edges = GraphOps.linkEdgesShared(s, d)
-        val feed = Drain.feed(s, "x47", (0 to 2).map(r => edges.where(pmod(col("src"), lit(3)) === r)): _*)
+        val feed = Drain.feed(s, "x47", Drain.byKey(edges, col("src"), 3): _*)
         Drain.batches("x47", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
           val dE = batch.groupBy("src", "dst").agg(count(lit(1)).as("w"))
             .localCheckpoint()
-          edgeStore.put(batchId)(dE.write.parquet(_))
+          edgeStore.put(batchId, dE)
           val oldEdgeDirs = edgeStore.allBefore(batchId)
           val oldEdges =
             if (oldEdgeDirs.isEmpty) None else Some(s.read.parquet(oldEdgeDirs: _*))
@@ -2195,18 +2063,11 @@ object StreamShape {
         val parts = Drain.Store("x48parts")
         val oneNew = new java.util.concurrent.atomic.AtomicLong(0)
         val multiNew = new java.util.concurrent.atomic.AtomicLong(0)
-        val und = GraphOps.linkEdgesShared(s, d).where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v"))
-          .distinct()
         val feed = Drain.feed(s, "x48",
-          (0 to 2).map(r => und.where(pmod(col("u") + col("v"), lit(3)) === r)): _*)
-        def sym(e: DataFrame): DataFrame =
-          e.select(col("u").as("a"), col("v").as("b"))
-            .unionByName(e.select(col("v").as("a"), col("u").as("b")))
+          Drain.byKey(GraphOps.undirectedEdges(s, d), col("u") + col("v"), 3): _*)
         Drain.batches("x48", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
           val dE = batch.localCheckpoint() // canonical u < v
-          edgeStore.put(batchId)(dE.write.parquet(_))
+          edgeStore.put(batchId, dE)
           val oldDirs = edgeStore.allBefore(batchId)
           val old = if (oldDirs.isEmpty) None else Some(s.read.parquet(oldDirs: _*))
           val dSym = sym(dE)
@@ -2236,10 +2097,9 @@ object StreamShape {
             .reduce(_ unionByName _).localCheckpoint()
           oneNew.addAndGet(t1.map(_.count()).getOrElse(0L))
           multiNew.addAndGet(t2.map(_.count()).getOrElse(0L) + t3.count())
-          parts.put(batchId)(newTris
+          parts.put(batchId, newTris
             .select(explode(array(col("u"), col("v"), col("w"))).as("doc_id"))
-            .groupBy("doc_id").agg(count(lit(1)).as("c"))
-            .write.parquet(_))
+            .groupBy("doc_id").agg(count(lit(1)).as("c")))
         }
         require(oneNew.get() > 0,
           "no triangle was ever closed through the edge store — the T1 probe path was vacuous")
@@ -2287,23 +2147,14 @@ object StreamShape {
         val degs = Drain.Store("x49deg")
         val sxys = Drain.Store("x49sxy")
         val corrections = new java.util.concurrent.atomic.AtomicLong(0)
-        val und = GraphOps.linkEdgesShared(s, d).where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v"))
-          .distinct()
         val feed = Drain.feed(s, "x49",
-          (0 to 2).map(r => und.where(pmod(col("u") + col("v"), lit(3)) === r)): _*)
-        def sym(e: DataFrame): DataFrame =
-          e.select(col("u").as("a"), col("v").as("b"))
-            .unionByName(e.select(col("v").as("a"), col("u").as("b")))
+          Drain.byKey(GraphOps.undirectedEdges(s, d), col("u") + col("v"), 3): _*)
         Drain.batches("x49", feed, 2, "incremental maintenance was not exercised") { (batch, batchId) =>
           import s.implicits._
           val dE = batch.localCheckpoint()
-          edgeStore.put(batchId)(dE.write.parquet(_))
+          edgeStore.put(batchId, dE)
           val oldDirs = edgeStore.allBefore(batchId)
-          val oldDeg = degs.latestBefore(batchId)
-            .map(p => s.read.parquet(p))
-            .getOrElse(Seq.empty[(Long, Long)].toDF("node", "dg"))
+          val oldDeg = degs.readLatestBefore(s, batchId, "node BIGINT, dg BIGINT")
           val prevSxy = sxys.latestBefore(batchId)
             .map(p => s.read.parquet(p).head().getLong(0)).getOrElse(0L)
           // degree delta of this batch's vertices, merged degree table
@@ -2312,7 +2163,7 @@ object StreamShape {
           val newDeg = oldDeg.join(dd, Seq("node"), "full_outer")
             .select(col("node"),
               (coalesce(col("dg"), lit(0L)) + coalesce(col("delta"), lit(0L))).as("dg"))
-          val ndg = s.read.parquet(degs.put(batchId)(newDeg.write.parquet(_)))
+          val ndg = s.read.parquet(degs.put(batchId, newDeg))
           // sxy correction on OLD edges: three inner joins vs Δd
           val corr: Long = if (oldDirs.isEmpty) 0L else {
             val oa = sym(s.read.parquet(oldDirs: _*))
@@ -2335,7 +2186,7 @@ object StreamShape {
             .join(ndg.select(col("node").as("a"), col("dg").as("da")), Seq("a"))
             .join(ndg.select(col("node").as("b"), col("dg").as("db")), Seq("b"))
             .agg(sum(col("da") * col("db"))).head().getLong(0)
-          sxys.put(batchId)(Seq(prevSxy + corr + add).toDF("sxy").coalesce(1).write.parquet(_))
+          sxys.put(batchId, Seq(prevSxy + corr + add).toDF("sxy").coalesce(1))
         }
         require(corrections.get() > 0,
           "no old edge was ever re-priced for a degree change — the correction path was vacuous")

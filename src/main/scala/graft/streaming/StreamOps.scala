@@ -13,18 +13,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps {
 
-  /** Unbounded logs stream, optionally starting in the past (backfill→live,
-    * reference trace B — the BACKFILLING state machine is subsumed by
-    * offset-contiguous micro-batches).
+  /** A `graft-eth` stream of `dataset` (logs or blocks) from `startBlock`
+    * to `head`, `maxBlocksPerTrigger` blocks a micro-batch, starting in the
+    * past when `startBlock` is (backfill→live, reference trace B — the
+    * BACKFILLING state machine is subsumed by offset-contiguous
+    * micro-batches). The defaults are the range of Verify's chain dump;
+    * `options` go to the source as they are (the node, reorg mode, …).
     */
-  def logsStream(
+  def ethStream(
       spark: SparkSession,
+      dataset: String,
+      maxBlocksPerTrigger: Long,
       startBlock: Long = 0L,
-      maxBlocksPerTrigger: Long = 5000L,
+      head: Long = 999L,
       options: Map[String, String] = Map.empty): DataFrame = {
     val base = spark.readStream.format("graft-eth")
-      .option("dataset", "logs")
+      .option("dataset", dataset)
       .option("startBlock", startBlock)
+      .option("head", head)
       .option("maxBlocksPerTrigger", maxBlocksPerTrigger)
     options.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
   }

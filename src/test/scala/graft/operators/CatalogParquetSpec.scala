@@ -70,6 +70,27 @@ class CatalogParquetSpec extends SparkSpec {
     }
   }
 
+  /** Write `rows` to a new single-file parquet table `file` of parquet
+    * `schema`; each row is the (field, value) pairs of one record.
+    */
+  private def writeParquet(file: String, schema: String, rows: Seq[Seq[(String, Any)]]): Unit = {
+    val ms = org.apache.parquet.schema.MessageTypeParser.parseMessageType(schema)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(file))
+      .withConf(spark.sparkContext.hadoopConfiguration).withType(ms).build()
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(ms)
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      r.foreach {
+        case (k, v: Long) => g.append(k, v)
+        case (k, v: Double) => g.append(k, v)
+        case (k, v: String) => g.append(k, v)
+        case (k, v) => throw new IllegalArgumentException(s"$k: $v")
+      }
+      w.write(g)
+    } finally w.close()
+  }
+
   test("a repeated Catalog.t of the same table launches no Spark job") {
     // a private copy, so no earlier read in this JVM has inferred it yet
     val dir = Artifacts.newDir("catalogparquetspec")
@@ -102,14 +123,8 @@ class CatalogParquetSpec extends SparkSpec {
     // nanosAsLong reads it as a long, without it Spark rejects the type
     val dir = Artifacts.newDir("catalogparquetspec")
     val file = s"$dir/nanos.parquet"
-    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file))
-      .withConf(spark.sparkContext.hadoopConfiguration).withType(schema).build()
-    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
-      .newGroup().append("ts", 1700000000123456789L))
-    finally w.close()
+    writeParquet(file, "message m { required int64 ts (TIMESTAMP(NANOS,true)); }",
+      Seq(Seq("ts" -> 1700000000123456789L)))
     val nanos = "spark.sql.legacy.parquet.nanosAsLong"
     withConf(nanos, "true") {
       assert(Catalog.parquet(spark, file).schema("ts").dataType === LongType)
@@ -127,6 +142,31 @@ class CatalogParquetSpec extends SparkSpec {
       .foreach { case (v, want) =>
         withConf(ntz, v)(assert(Catalog.parquet(spark, events).schema("ts").dataType === want, v))
       }
+  }
+
+  test("x24 reads a TIMESTAMP(NANOS) events table in a session that never set nanosAsLong") {
+    // the events encoding of older fixtures, read through Catalog.t, which
+    // sets the conf itself before it infers the schema
+    val dir = Artifacts.newDir("catalogparquetspec")
+    val events = (0 until 16).map { i =>
+      (i.toLong, if (i % 4 < 2) "view" else "purchase", ((i * 7) % 11).toDouble)
+    }
+    writeParquet(s"$dir/events.parquet",
+      """message m { required int64 event_id; required binary event_type (UTF8);
+        |required int64 ts (TIMESTAMP(NANOS,true)); required double value; }""".stripMargin,
+      events.map { case (id, et, v) =>
+        Seq("event_id" -> id, "event_type" -> et, "ts" -> (1700000000000000000L + id * 1000L),
+          "value" -> v)
+      })
+    val fresh = spark.newSession()
+    assert(fresh.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ != "true"))
+    val got = Catalog.byName("x24_stream_topk").build(fresh, dir).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    val want = events.groupBy(_._2).toSeq.flatMap { case (et, es) =>
+      es.sortBy { case (id, _, v) => (-v, id) }.take(5).zipWithIndex
+        .map { case ((id, _, v), i) => (et, i + 1, id, v) }
+    }.sorted
+    assert(got === want)
   }
 
   test("an artifact read returns a plain read's rows, and a rewritten path re-infers") {

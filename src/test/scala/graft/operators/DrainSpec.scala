@@ -2,12 +2,16 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 /** The shared streaming drain: memory sinks leave no view behind, the
   * fed-batch check still fails a drain that is too short, a [[Drain.Store]]
-  * keeps one replaceable entry per batch, found by listing, and no staging
-  * dir or cross-batch store in the main or test sources bypasses them.
+  * keeps one replaceable entry per batch, found by listing, [[Drain.byKey]]
+  * and [[Drain.cuts]] put every row in exactly one part, and no staging
+  * dir, cross-batch store, feed split, chain stream or chain-dump path in
+  * the main or test sources bypasses them.
   */
 class DrainSpec extends SparkSpec {
 
@@ -49,6 +53,9 @@ class DrainSpec extends SparkSpec {
     put(2, 4) // batch 1 was empty and wrote no entry
     assert(store.latestBefore(2) === Some(entry(0)))
     assert(store.latestBefore(0) === None)
+    assert(rows(store.readLatestBefore(spark, 2, "x INT")) === Seq("3"))
+    val none = store.readLatestBefore(spark, 0, "x INT")
+    assert(none.columns.toSeq === Seq("x") && none.isEmpty)
     put(10, 5) // b10 sorts before b2 by name
     assert(store.allBefore(Long.MaxValue) === Seq(entry(0), entry(2), entry(10)))
     assert(store.allBefore(10) === Seq(entry(0), entry(2)))
@@ -57,6 +64,87 @@ class DrainSpec extends SparkSpec {
     val restarted = new Drain.Store(store.root)
     assert(restarted.allBefore(Long.MaxValue) === store.allBefore(Long.MaxValue))
     assert(rows(restarted.read(spark)) === Seq("3", "4", "5"))
+  }
+
+  private def longs(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.collect().map(_.getLong(0)).toSeq
+
+  test("byKey puts every row in exactly one part, negative keys included") {
+    val df = spark.range(-7, 8).toDF("k")
+    Seq(2, 3).foreach { n =>
+      val parts = Drain.byKey(df, col("k"), n).map(longs)
+      assert(parts.size === n)
+      assert(parts.flatten.sorted === (-7L to 7L), s"n = $n")
+      assert(parts.forall(_.nonEmpty), s"n = $n")
+    }
+  }
+
+  test("cuts puts every row in exactly one part, the max row in the last") {
+    // contiguous values, so every cut point is itself a row
+    val df = spark.range(-5, 32).toDF("c")
+    Seq(2, 3, 4).foreach { n =>
+      val parts = Drain.cuts(df, col("c"), n).map(longs)
+      assert(parts.size === n)
+      assert(parts.flatten.sorted === (-5L to 31L), s"n = $n")
+      assert(parts.last.contains(31L), s"n = $n")
+      assert(parts.forall(_.nonEmpty), s"n = $n")
+    }
+  }
+
+  test("partials replaces the entry an earlier attempt of a batch left behind") {
+    import spark.implicits._
+    // partials' store is a fresh `<q>part…` dir under the artifact root
+    val artifactRoot = Paths.get(Artifacts.newDir("drainspecprobe")).getParent
+    def stores(): Set[Path] = {
+      val st = Files.list(artifactRoot)
+      try st.toArray.map(_.asInstanceOf[Path])
+        .filter(_.getFileName.toString.startsWith("drainspecretrypart")).toSet
+      finally st.close()
+    }
+    val before = stores()
+    val feed = Drain.feed(spark, "drainspecretry", Seq(1L, 2L).toDF("x"), Seq(3L).toDF("x"))
+    val out = Drain.partials("drainspecretry", feed, 2, "two parts feed two batches") { b =>
+      // what a failed earlier life left: an entry for each batch id
+      val fresh = stores() -- before
+      assert(fresh.size === 1, s"expected one new store dir, found $fresh")
+      Seq(0, 1).map(id => fresh.head.resolve(s"b$id")).filterNot(Files.exists(_))
+        .foreach(e => Seq(99L).toDF("x").write.parquet(e.toString))
+      b
+    }
+    assert(longs(out).sorted === Seq(1L, 2L, 3L), "a stale entry survived its batch's put")
+  }
+
+  /** The argument text of every `Drain.feed(` and `Drain.stage(` call. */
+  private def feedArgs(src: String): Seq[String] =
+    "Drain\\.(feed|stage)\\(".r.findAllMatchIn(src).map { m =>
+      var (depth, i) = (1, m.end)
+      while (depth > 0) {
+        src(i) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case _ =>
+        }
+        i += 1
+      }
+      src.substring(m.end, i - 1)
+    }.toSeq
+
+  test("StreamShape splits feeds and opens the chain through the streaming kit") {
+    val hand = Seq("% 2", "< mid")
+    def handSplits(src: String): Seq[String] = feedArgs(src).filter(a => hand.exists(a.contains))
+    assert(handSplits("""Drain.feed(s, "x", ev.where(col("id") % 2 === 0), ev.where(f(x)))""")
+      .size === 1)
+    assert(handSplits("""Drain.stage("x", b.where(col("us") < mid))""").size === 1)
+    val shape = Files.readString(Paths.get("src/main/scala/graft/operators/StreamShape.scala"))
+    assert(feedArgs(shape).size >= 20, "the call finder lost track of StreamShape's feeds")
+    assert(handSplits(shape).isEmpty, "split a feed with Drain.byKey or Drain.cuts")
+    assert(!shape.contains("readStream.format(\"graft-eth\")"),
+      "open a chain stream with StreamOps.ethStream")
+    // the chain dump's layout is spelled once, next to its writer
+    val dumpPaths = scalaSources("src/main/scala")
+      .filter(p => Files.readString(p).contains("ChainDumpDir}/"))
+      .map(_.getFileName.toString)
+    assert(dumpPaths.isEmpty, s"read the chain dump through Verify.chainTable: $dumpPaths")
   }
 
   private def scalaSources(dir: String): Seq[Path] = {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   */
 class StreamOpsSpec extends SparkSpec {
 
-  private val head = "1500"
+  private val head = 1500L
 
   private def batchLogs = spark.read.format("graft-eth")
     .option("dataset", "logs").option("startBlock", "0").option("endBlock", head)
@@ -22,7 +22,7 @@ class StreamOpsSpec extends SparkSpec {
   test("windowed signature counts: streaming == batch") {
     val streamed = Drain.memory("sig_counts_stream",
       StreamOps.signatureCountsPerWindow(
-        StreamOps.logsStream(spark, 0, 200, Map("head" -> head, "maxBlockRange" -> "100")),
+        StreamOps.ethStream(spark, "logs", 200, head = head, options = Map("maxBlockRange" -> "100")),
         "1 hour", "1 minute"),
       "append")
 
@@ -51,7 +51,7 @@ class StreamOpsSpec extends SparkSpec {
 
     val filtered = Drain.memory("client_filter_stream",
       StreamOps.clientFilter(
-        StreamOps.logsStream(spark, 0, 500, Map("head" -> head)),
+        StreamOps.ethStream(spark, "logs", 500, head = head),
         Seq(someAddr.toUpperCase), Seq(someTopic)),
       "append")
 
@@ -64,7 +64,7 @@ class StreamOpsSpec extends SparkSpec {
   test("streaming dedup passes each (block, logIndex) exactly once") {
     val deduped = Drain.memory("dedup_stream",
       StreamOps.dedupStream(
-        StreamOps.logsStream(spark, 0, 300, Map("head" -> "900")), "1 hour"),
+        StreamOps.ethStream(spark, "logs", 300, head = 900), "1 hour"),
       "append")
     val keys = deduped.select("blockNumber", "logIndex").collect()
       .map(r => (r.getLong(0), r.getInt(1)))
@@ -74,10 +74,8 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("stream-stream join enriches logs with block headers, both unbounded") {
-    val logs = StreamOps.logsStream(spark, 0, 300, Map("head" -> "600"))
-    val blocks = spark.readStream.format("graft-eth")
-      .option("dataset", "blocks").option("startBlock", "0")
-      .option("head", "600").option("maxBlocksPerTrigger", "300").load()
+    val logs = StreamOps.ethStream(spark, "logs", 300, head = 600)
+    val blocks = StreamOps.ethStream(spark, "blocks", 300, head = 600)
     val joined = Drain.memory("ss_join_stream",
       StreamOps.logsWithBlocks(logs, blocks, "1 hour"),
       "append")
@@ -91,7 +89,7 @@ class StreamOpsSpec extends SparkSpec {
   test("typed mapGroupsWithState address activity matches batch aggregate") {
     val sessions = Drain.memory("addr_activity_stream",
       StreamOps.addressActivity(
-        StreamOps.logsStream(spark, 0, 400, Map("head" -> "800")).toDF()).toDF(),
+        StreamOps.ethStream(spark, "logs", 400, head = 800).toDF()).toDF(),
       "update")
 
     // update-mode memory sink keeps every update; the last row per address
