@@ -12,7 +12,10 @@ comparison, so only a change of plan shape or expressions shows:
 - call sites keep the file name but lose the line (`SimilarityOps.scala:N`);
 - UUIDs, the digits in temp paths (`/tmp/graft_probepairs123…`,
   `graft_sig_dump_<pid>`) and the identity hashes of array literals
-  (`[D@6eaa5458`, a kernel's reference object) are masked.
+  (`[D@6eaa5458`, a kernel's reference object) are masked;
+- so are the identity hashes of objects named by class (a UDAF's
+  `SumOfSquaresLong$@30c562b6`) and a lambda's number and address
+  (`MultimodalOps$$$Lambda$6030/0x00007fc4e5622f40@5ca69552`).
 
 Prints one line per query (`same`, `DIFFERS`, `only in BEFORE`/`only in
 AFTER`) and a unified diff of each differing plan. Exits 1 if
@@ -25,6 +28,8 @@ import sys
 
 SECTION = re.compile(r"^## (\S+)\s*$")
 JARRAY = re.compile(r"(\[+(?:[ZBCSIJFD]|L[\w.$]+;))@[0-9a-f]+")
+LAMBDA = re.compile(r"\$\$Lambda\$\d+")
+OBJREF = re.compile(r"\b((?:[A-Za-z_][\w$]*\.)+[A-Za-z_][\w$]*)(?:/0x[0-9a-f]+)?@[0-9a-f]+\b")
 UUID = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
 PATH = re.compile(r"(?:file:)?/(?:tmp|var|private)/[^\s,\]\)]+")
 
@@ -36,6 +41,8 @@ def _mask_path(m):
 def normalize(line):
     line = UUID.sub("<uuid>", line)
     line = JARRAY.sub(r"\1@<ref>", line)
+    line = LAMBDA.sub("$$Lambda", line)
+    line = OBJREF.sub(r"\1@<ref>", line)
     line = PATH.sub(_mask_path, line)
     line = re.sub(r"#\d+", "#", line)
     line = re.sub(r"plan_id=\d+", "plan_id=", line)

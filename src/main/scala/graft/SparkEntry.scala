@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.GraftFunctions
 import graft.operators.Catalog
+import graft.streaming.LocalCheckpointFileManager
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -17,10 +19,28 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Catalog.byName("a07_group_count").build(spark, "/root/testdata/sf0.001")
 
+  /** Make `spark` ready for graft, once per query build ([[Q.build]]),
+    * local session ([[localSession]]) and subscription
+    * ([[graft.api.RequestRouter.route]]); no other code sets these up:
+    *  - the kernels ([[GraftFunctions.register]]), before a query body
+    *    runs, since a stream's session clone copies the function registry
+    *    when the stream starts;
+    *  - `nanosAsLong`, so an older fixture's TIMESTAMP(NANOS) `events.ts`
+    *    reads as a long ([[Catalog.normalizeEventTs]]);
+    *  - the fork-free [[LocalCheckpointFileManager]] for streaming
+    *    checkpoints, unless the session already names a manager.
+    * Each step is a no-op when done, so a second call changes nothing.
+    */
+  def install(spark: SparkSession): Unit = {
+    GraftFunctions.register(spark)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (spark.conf.getOption(LocalCheckpointFileManager.Key).isEmpty)
+      spark.conf.set(LocalCheckpointFileManager.Key, classOf[LocalCheckpointFileManager].getName)
+  }
+
   /** The local session Bench, Verify and DumpPlans run on: `local[cpus]`
-    * with `cpus` shuffle partitions, UTC, no UI, WARN logging and the
-    * fork-free [[graft.streaming.LocalCheckpointFileManager]].
-    * `SPARK_GRAFT_CPUS` overrides each main's `defaultCpus`.
+    * with `cpus` shuffle partitions, UTC, no UI, WARN logging, made ready
+    * by [[install]]. `SPARK_GRAFT_CPUS` overrides each main's `defaultCpus`.
     */
   def localSession(defaultCpus: Int): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
@@ -30,14 +50,14 @@ object SparkEntry {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    graft.streaming.LocalCheckpointFileManager.install(spark)
+    install(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Catalog.all.map(q => q.name -> q.build).toMap
+    Catalog.all.map(q => q.name -> (q.build _)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for ops whose semantics are not

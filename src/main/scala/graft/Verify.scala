@@ -286,10 +286,6 @@ object Verify {
         // conf, not the parent session's mutations
         sess.conf.set("spark.sql.shuffle.partitions", spark.conf.get("spark.sql.shuffle.partitions"))
         sess.conf.set("spark.sql.session.timeZone", "UTC")
-        // defensive: a fresh session has an empty graft function registry;
-        // queries register what they use, but any future query that forgets
-        // must not flake depending on which sibling ran first on this worker
-        graft.functions.GraftFunctions.register(sess)
         SparkSession.setActiveSession(sess)
         var next = queue.poll()
         while (next != null) {

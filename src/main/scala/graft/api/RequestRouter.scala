@@ -93,8 +93,8 @@ object RequestRouter {
       })
 
     if (streaming) {
-      // the subscription's checkpoint commits fork no processes
-      graft.streaming.LocalCheckpointFileManager.install(spark)
+      // kernels, confs and the fork-free checkpoint manager for the subscription
+      graft.SparkEntry.install(spark)
       val reader = spark.readStream.format("graft-eth")
       val withStart = req.startBlock match {
         case Some(s) => common + ("startBlock" -> s.toString)

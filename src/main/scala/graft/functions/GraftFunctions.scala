@@ -79,7 +79,7 @@ object GraftFunctions {
 
   /** Register every graft function the session lacks. A no-op on a session
     * that already has them (registered earlier, or injected by
-    * `GraftExtensions`), so callers may invoke it on every table read.
+    * `GraftExtensions`). graft calls it from `graft.SparkEntry.install` only.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

@@ -10,19 +10,27 @@ import org.apache.spark.sql.types._
   */
 final case class Q(
     name: String,
-    build: (SparkSession, String) => DataFrame,
+    body: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    bench: Boolean = true)
+    bench: Boolean = true) {
+
+  /** The query on `s` over the fixture dir `d`, with `s` made ready by
+    * [[graft.SparkEntry.install]] first: a body never sets up its session.
+    */
+  def build(s: SparkSession, d: String): DataFrame = {
+    graft.SparkEntry.install(s)
+    body(s, d)
+  }
+}
 
 object Catalog {
   /** Load one fixture parquet table through [[parquet]]: a
     * DataSource scan, so Catalyst pushes filters and pruning into parquet,
     * with the table's schema inferred on its first read only. `events`
-    * comes back with [[normalizeEventTs]] applied.
+    * comes back with [[normalizeEventTs]] applied. A NANOS `events.ts`
+    * needs the `nanosAsLong` conf that [[graft.SparkEntry.install]] sets.
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark) // idempotent
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
   }
@@ -35,7 +43,7 @@ object Catalog {
     * the same scan with no job. Files are still listed on every read. The
     * memo holds schemas only, keyed by the path, its modification time
     * and every conf that changes parquet schema inference, so a rewritten
-    * path or a flipped conf (`nanosAsLong`, which [[t]] sets) re-infers.
+    * path or a flipped conf (`nanosAsLong`) re-infers.
     * Dirs written and read back within one query run (stream sinks,
     * [[Drain.stage]] feeds, [[Drain.Store]] entries) keep a plain `read.parquet`.
     */

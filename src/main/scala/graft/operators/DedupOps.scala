@@ -24,7 +24,7 @@ object DedupOps {
     * tokens). Backed by the codegen'd `word_shingles` kernel — the
     * declarative transform/sequence/slice formulation runs interpreted at
     * ~1 ms/doc, two orders of magnitude too slow for a 100 TB dedup pass
-    * (requires GraftFunctions.register, done by Catalog.t).
+    * (registered on the session by graft.SparkEntry.install).
     */
   def shingles3(text: Column): Column =
     graft.functions.GraftFunctions.word_shingles(text, 3)

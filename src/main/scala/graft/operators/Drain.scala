@@ -5,15 +5,14 @@ import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSessi
 import org.apache.spark.sql.functions.{lit, max, min, pmod}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import graft.streaming.LocalCheckpointFileManager
 
 /** The bounded streaming drain every StreamShape query runs: stage a feed,
   * run the writer to completion under `Trigger.AvailableNow`, read the
   * result back. Feeds and checkpoints live in [[Artifacts.newDir]] dirs, so
   * the JVM's shutdown reaper deletes them. Checkpoints are committed
-  * through [[graft.streaming.LocalCheckpointFileManager]], so a local
-  * offset-, commit-log or state-store write forks no `chmod`/`readlink`
-  * process (see [[run]]). `q` is the query's short id
+  * through the session's checkpoint file manager, which
+  * [[graft.SparkEntry.install]] sets to the fork-free
+  * [[graft.streaming.LocalCheckpointFileManager]]. `q` is the query's short id
   * (x04, d24, …): it prefixes those dirs and the fed-batch failure message.
   * A feed is split with [[byKey]] or [[cuts]]; a [[batches]] body keeps its
   * cross-batch state in a [[Store]], and [[partials]] is the body that
@@ -79,13 +78,11 @@ object Drain {
 
   /** Run `w`, a writer of a stream in session `s`, to completion under
     * AvailableNow on checkpoint `ckpt`, and require at least `minFed`
-    * micro-batches that read input. The checkpoint (offset and commit logs,
-    * state-store files) is written through [[LocalCheckpointFileManager]]
-    * unless `s` already names a checkpoint file manager.
+    * micro-batches that read input. `s` is a session made ready by
+    * [[graft.SparkEntry.install]].
     */
   def run(s: SparkSession, q: String, ckpt: String, w: DataStreamWriter[_], minFed: Int,
       reason: String): StreamingQuery = {
-    LocalCheckpointFileManager.install(s)
     val sq = w.trigger(Trigger.AvailableNow()).option("checkpointLocation", ckpt).start()
     sq.awaitTermination()
     val fed = sq.recentProgress.count(_.numInputRows > 0)

@@ -60,14 +60,11 @@ object EngineOps {
     // S18: hex → int64 decode via the custom codegen'd Catalyst expression.
     // Round-trips engine-generated hex strings; the oracle is the identity.
     Q("s18_hex_decode",
-      (s, d) => {
-        GraftFunctions.register(s)
-        t(s, d, "events")
-          .select(col("event_id"),
-            GraftFunctions.hex_to_long(
-              concat(lit("0x"), lower(hex(col("event_id"))))).as("decoded"))
-          .orderBy("event_id")
-      },
+      (s, d) => t(s, d, "events")
+        .select(col("event_id"),
+          GraftFunctions.hex_to_long(
+            concat(lit("0x"), lower(hex(col("event_id"))))).as("decoded"))
+        .orderBy("event_id"),
       Some("""SELECT event_id, event_id AS decoded FROM events ORDER BY event_id""")),
 
     // S5: range chunking — split [0, max_id] into 500-sized closed intervals
@@ -112,16 +109,13 @@ object EngineOps {
     // compared as a string so the decimal survives both engines' pandas
     // conversion untouched.
     Q("e02_eth_blocks_scan",
-      (s, d) => {
-        GraftFunctions.register(s)
-        s.read.format("graft-eth").option("dataset", "blocks")
-          .option("startBlock", "0").option("endBlock", "999").load()
-          .select(col("number"),
-            GraftFunctions.hex_to_decimal(col("totalDifficulty")).as("td"),
-            col("gasUsed"), size(col("transactions")).as("n_tx"))
-          .agg(count(lit(1)).as("n_blocks"), sum(col("n_tx")).as("total_tx"),
-            max(col("td")).cast(StringType).as("max_td"))
-      },
+      (s, d) => s.read.format("graft-eth").option("dataset", "blocks")
+        .option("startBlock", "0").option("endBlock", "999").load()
+        .select(col("number"),
+          GraftFunctions.hex_to_decimal(col("totalDifficulty")).as("td"),
+          col("gasUsed"), size(col("transactions")).as("n_tx"))
+        .agg(count(lit(1)).as("n_blocks"), sum(col("n_tx")).as("total_tx"),
+          max(col("td")).cast(StringType).as("max_td")),
       Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_blocks,
                       CAST(SUM(n_tx) AS BIGINT) AS total_tx,
                       CAST(MAX(td_dec) AS VARCHAR) AS max_td
@@ -336,17 +330,14 @@ object EngineOps {
     // no shuffle at any scale; the one ORDER BY is the gate's
     // presentation sort.
     Q("e08_erc20_decode",
-      (s, d) => {
-        GraftFunctions.register(s)
-        s.read.format("graft-eth").option("dataset", "logs")
-          .option("startBlock", "0").option("endBlock", "2999").load()
-          .where(size(col("topics")) === 3)
-          .select(col("blockNumber"), col("logIndex"), col("address").as("token"),
-            concat(lit("0x"), substring(element_at(col("topics"), 2), 27, 40)).as("from_addr"),
-            concat(lit("0x"), substring(element_at(col("topics"), 3), 27, 40)).as("to_addr"),
-            GraftFunctions.hex_to_decimal(col("data")).cast(StringType).as("value"))
-          .orderBy("blockNumber", "logIndex")
-      },
+      (s, d) => s.read.format("graft-eth").option("dataset", "logs")
+        .option("startBlock", "0").option("endBlock", "2999").load()
+        .where(size(col("topics")) === 3)
+        .select(col("blockNumber"), col("logIndex"), col("address").as("token"),
+          concat(lit("0x"), substring(element_at(col("topics"), 2), 27, 40)).as("from_addr"),
+          concat(lit("0x"), substring(element_at(col("topics"), 3), 27, 40)).as("to_addr"),
+          GraftFunctions.hex_to_decimal(col("data")).cast(StringType).as("value"))
+        .orderBy("blockNumber", "logIndex"),
       // the synthetic chain's data words are 64-bit-valued (leading 48 hex
       // zeros by construction), so DuckDB's UBIGINT hex cast is exact here
       Some(s"""SELECT blockNumber, logIndex, address AS token,
@@ -393,18 +384,15 @@ object EngineOps {
     // map-only decode plan as e08 (codegen'd hex_to_decimal on the
     // pruned scan); oracle = the independent driver-side chain dump.
     Q("e11_erc721_decode",
-      (s, d) => {
-        GraftFunctions.register(s)
-        s.read.format("graft-eth").option("dataset", "logs")
-          .option("startBlock", "0").option("endBlock", "2999").load()
-          .where(size(col("topics")) === 4)
-          .select(col("blockNumber"), col("logIndex"), col("address").as("collection"),
-            concat(lit("0x"), substring(element_at(col("topics"), 2), 27, 40)).as("from_addr"),
-            concat(lit("0x"), substring(element_at(col("topics"), 3), 27, 40)).as("to_addr"),
-            GraftFunctions.hex_to_decimal(element_at(col("topics"), 4))
-              .cast(LongType).as("token_id"))
-          .orderBy("blockNumber", "logIndex")
-      },
+      (s, d) => s.read.format("graft-eth").option("dataset", "logs")
+        .option("startBlock", "0").option("endBlock", "2999").load()
+        .where(size(col("topics")) === 4)
+        .select(col("blockNumber"), col("logIndex"), col("address").as("collection"),
+          concat(lit("0x"), substring(element_at(col("topics"), 2), 27, 40)).as("from_addr"),
+          concat(lit("0x"), substring(element_at(col("topics"), 3), 27, 40)).as("to_addr"),
+          GraftFunctions.hex_to_decimal(element_at(col("topics"), 4))
+            .cast(LongType).as("token_id"))
+        .orderBy("blockNumber", "logIndex"),
       // topic words carry 16-bit values by construction (SyntheticRpc
       // masks with 0xffff), so the UBIGINT hex cast is exact here
       Some(s"""SELECT blockNumber, logIndex, address AS collection,

@@ -622,13 +622,10 @@ object StockOps {
 
     // Custom typed UDAF (Aggregator[IN,BUF,OUT]) — exact integer math.
     Q("c21_udaf_sum_squares",
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
-        t(s, d, "lineitem")
-          .groupBy("l_returnflag")
-          .agg(call_function("sum_of_squares", col("l_linenumber").cast(LongType)).as("sumsq"))
-          .orderBy("l_returnflag")
-      },
+      (s, d) => t(s, d, "lineitem")
+        .groupBy("l_returnflag")
+        .agg(call_function("sum_of_squares", col("l_linenumber").cast(LongType)).as("sumsq"))
+        .orderBy("l_returnflag"),
       Some("""SELECT l_returnflag,
                      CAST(SUM(CAST(l_linenumber AS BIGINT) * l_linenumber) AS BIGINT) AS sumsq
               FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")),

@@ -98,7 +98,6 @@ object StreamShape {
     // gate (same oracle as x01), not only in specs.
     Q("x04_stream_tumbling",
       (s, d) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val agg = Drain.copies(s, "x04", s"$d/events.parquet")
           .transform(normalizeEventTs)
           .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
@@ -148,7 +147,6 @@ object StreamShape {
     // bounded drain exact.
     Q("x05_stream_dedup",
       (s, d) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val deduped = Drain.copies(s, "x05", s"$d/events.parquet", s"$d/events.parquet")
           .transform(normalizeEventTs)
           .withWatermark("ts", "3650 days")
@@ -214,7 +212,6 @@ object StreamShape {
     // the identical filter+count over the batch table.
     Q("x08_stream_curation",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val counts = TextOps.qualitySignals(Drain.copies(s, "x08", s"$d/documents.parquet"))
           .where(TextOps.qualityOk)
           .groupBy("lang").agg(count(lit(1)).as("n_docs"))
@@ -349,7 +346,6 @@ object StreamShape {
     // the identical report.
     Q("x13_stream_decontaminate",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // static side: the frozen benchmark shingle set (batch read) —
         // the shared DedupOps definition
         val benchShingles = DedupOps.benchShingles8(s, d)
@@ -896,11 +892,6 @@ object StreamShape {
     // a corpus rescan.
     Q("x28_stream_lsh_neardup",
       (s, d) => {
-        // must pre-date stream start: the stream's session clone snapshots
-        // the function registry, and bandBuckets' minhash kernel resolves
-        // against that clone (caught by an isolated-session Verify worker —
-        // every other kernel-using stream already registered first)
-        graft.functions.GraftFunctions.register(s)
         val sigStore = Drain.Store("x28sigs")
         val pairStore = Drain.Store("x28pairs")
         val docs = Catalog.parquet(s, s"$d/documents.parquet").select("doc_id", "text")
@@ -1718,7 +1709,6 @@ object StreamShape {
     // entries, replaced on retry.
     Q("x43_stream_data_card",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val scalarStore = Drain.Store("x43sc")
         val tkeyStore = Drain.Store("x43tk")
         val docs = Catalog.parquet(s, s"$d/documents.parquet")

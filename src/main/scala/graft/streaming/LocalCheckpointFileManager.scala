@@ -6,7 +6,6 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, FSDataInputStream, Path, PathFilter, RawLocalFileSystem}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -34,7 +33,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * every POSIX local file system has.
   *
   * Any other scheme (hdfs, s3a, …) goes to the manager Spark would create
-  * without this class configured.
+  * without this class configured. [[graft.SparkEntry.install]] names this
+  * class under [[LocalCheckpointFileManager.Key]].
   */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends CheckpointFileManager {
@@ -97,13 +97,6 @@ object LocalCheckpointFileManager {
 
   /** Spark's conf for the class `CheckpointFileManager.create` instantiates. */
   val Key = "spark.sql.streaming.checkpointFileManagerClass"
-
-  /** Select this manager for `spark`'s streaming queries, unless the session
-    * already names one.
-    */
-  def install(spark: SparkSession): Unit =
-    if (spark.conf.getOption(Key).isEmpty)
-      spark.conf.set(Key, classOf[LocalCheckpointFileManager].getName)
 
   /** The checksummed local FS's name for its checksum files. */
   private def isChecksum(name: String): Boolean = name.startsWith(".") && name.endsWith(".crc")

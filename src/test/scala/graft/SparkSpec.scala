@@ -22,7 +22,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    graft.streaming.LocalCheckpointFileManager.install(s)
+    SparkEntry.install(s)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -55,7 +55,6 @@ class HexExpressionsSpec extends SparkSpec {
 
   test("codegen path matches interpreted path on a DataFrame") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq("0x1b4", "0x0", "ff", "0xzz", "", "0xde0b6b3a7640000")
       .toDF("h")
       .select(GraftFunctions.hex_to_long(col("h")).as("v"))
@@ -64,7 +63,6 @@ class HexExpressionsSpec extends SparkSpec {
   }
 
   test("hex_to_long survives whole-stage codegen over a real table") {
-    GraftFunctions.register(spark)
     val df = spark.range(1000).select(
       col("id"),
       GraftFunctions.hex_to_long(concat(lit("0x"), lower(hex(col("id"))))).as("decoded"))

@@ -21,7 +21,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("word_shingles == declarative transform/slice formulation on real docs") {
-    GraftFunctions.register(spark)
     val docs = graft.operators.Catalog.t(spark, sfDir, "documents")
     val both = docs.select(
       $"doc_id",
@@ -32,7 +31,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("word_shingles edge cases") {
-    GraftFunctions.register(spark)
     val df = Seq(
       ("a b c d", 1),          // 2 shingles
       ("a b", 2),              // < 3 tokens → empty
@@ -50,7 +48,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("word_ngrams == declarative transform/slice formulation, keeps multiplicity and order") {
-    GraftFunctions.register(spark)
     def declarativeNgrams2(text: org.apache.spark.sql.Column) = {
       val toks = split(trim(text), "\\s+")
       when(size(toks) >= 2,
@@ -73,7 +70,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("minhash_signature == explode + 64×min-aggregate dataflow on real docs") {
-    GraftFunctions.register(spark)
     val P = graft.operators.DedupOps.MinhashPrime
     val N = graft.operators.DedupOps.NumHashes
     val docs = graft.operators.Catalog.t(spark, sfDir, "documents")
@@ -95,7 +91,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("word_set_counts == size(filter(...)) formulation on real docs + edge cases") {
-    GraftFunctions.register(spark)
     val sets = graft.operators.TextOps.langSignatures.map(_._2)
     def declarative(text: org.apache.spark.sql.Column, words: Seq[String]) =
       size(filter(split(trim(text), "\\s+"), w => array_contains(lit(words.toArray), w)))
@@ -111,7 +106,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("token_fingerprint == transform+aggregate formulation on real docs + edge cases") {
-    GraftFunctions.register(spark)
     def declarative(text: org.apache.spark.sql.Column) = {
       val toks = split(trim(text), "\\s+")
       val weighted = transform(toks, (w, i) =>
@@ -129,7 +123,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("word_set_counts / token_fingerprint == declarative forms on RANDOM strings (property)") {
-    GraftFunctions.register(spark)
     import org.scalacheck.{Gen, Prop}
     import org.scalacheck.Test.{check, Parameters}
     val piece = Gen.oneOf("the", "and", "el", "de", "x", "zz9", "", " ", "  ", "\t", "\n", ".", "a-b")
@@ -161,7 +154,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("simhash64 == per-bit aggregate formulation on real docs") {
-    GraftFunctions.register(spark)
     val toks = split(trim($"text"), "\\s+")
     val hashes = transform(toks, w => xxhash64(w))
     val bits = (0 until 64).map { b =>
@@ -198,7 +190,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("doc_pairs rejects a posting list that may hold a NULL element at analysis") {
-    GraftFunctions.register(spark)
     val pair = spark.sql("""SELECT doc_pairs(array(named_struct('id', 1L, 'sz', 1),
                                                   named_struct('id', 2L, 'sz', 3))) AS p""")
       .head().getSeq[org.apache.spark.sql.Row](0)

@@ -145,8 +145,8 @@ class CatalogParquetSpec extends SparkSpec {
   }
 
   test("x24 reads a TIMESTAMP(NANOS) events table in a session that never set nanosAsLong") {
-    // the events encoding of older fixtures, read through Catalog.t, which
-    // sets the conf itself before it infers the schema
+    // the events encoding of older fixtures: Q.build installs the session,
+    // which sets the conf before Catalog.t infers the schema
     val dir = Artifacts.newDir("catalogparquetspec")
     val events = (0 until 16).map { i =>
       (i.toLong, if (i % 4 < 2) "view" else "purchase", ((i * 7) % 11).toDouble)

@@ -69,7 +69,6 @@ class SimilarityOpsSpec extends SparkSpec {
 
   test("scaled dot product is exact and order-independent") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val v = Seq((Seq(0.5f, -0.25f, 0.125f), Seq(0.25f, 0.5f, -1.0f))).toDF("a", "b")
     val dot = v.select(SimilarityOps.scaledDot(col("a"), col("b"))).head.getLong(0)
     val expected = Seq(0.5 * 0.25, -0.25 * 0.5, 0.125 * -1.0)
@@ -78,7 +77,6 @@ class SimilarityOpsSpec extends SparkSpec {
   }
 
   test("scaled_dot kernel == zip_with/aggregate dataflow on real embeddings") {
-    graft.functions.GraftFunctions.register(spark)
     val declarative = aggregate(
       zip_with(col("embedding"), col("e2"), (x, y) =>
         floor(x.cast("double") * y.cast("double") * lit(SimilarityOps.SCALE))),
@@ -94,7 +92,6 @@ class SimilarityOpsSpec extends SparkSpec {
   }
 
   test("scaled_l2 kernel == zip_with/aggregate dataflow, float×float AND float×double") {
-    graft.functions.GraftFunctions.register(spark)
     def declarative(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(
         zip_with(a, b, (x, y) =>

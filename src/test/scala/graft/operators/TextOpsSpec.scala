@@ -545,7 +545,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("qualitySignals / qualityOk hold the envelope's edges: 10..500 tokens, mean length 2..12, stopwords <= 0.6") {
-    graft.functions.GraftFunctions.register(spark)
     def words(w: String, n: Int) = Seq.fill(n)(w).mkString(" ")
     // doc_id -> (text, expected verdict); "abc" is no stopword, "the" is one
     val cases = Seq(

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.operators.{Artifacts, Drain}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -65,7 +65,7 @@ class CheckpointRecoverySpec extends SparkSpec {
     }
     spark.conf.unset(LocalCheckpointFileManager.Key)
     try runOnce(ckpt, out, head = 1000) // life 1 writes .crc files next to its logs
-    finally LocalCheckpointFileManager.install(spark)
+    finally SparkEntry.install(spark)
     val life1Crcs = crcs()
     assert(life1Crcs > 0, "Spark's default manager wrote no .crc")
     runOnce(ckpt, out, head = 2500) // life 2 reads them, writes none

@@ -7,7 +7,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.operators.Artifacts
 import jdk.jfr.consumer.RecordingStream
 import org.apache.hadoop.conf.Configuration
@@ -163,7 +163,7 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     val ours = forks(twentyTriggers())
     assert(ours.isEmpty, s"${ours.size} forks, e.g. ${ours.take(5)}")
     spark.conf.unset(Key)
-    val default = try forks(twentyTriggers()) finally LocalCheckpointFileManager.install(spark)
+    val default = try forks(twentyTriggers()) finally SparkEntry.install(spark)
     assert(default.nonEmpty, "Spark's default manager forked nothing: the check sees no forks")
   }
 }

@@ -14,7 +14,6 @@ import org.apache.spark.sql.types._
 class StreamShapeStreamingSpec extends SparkSpec {
 
   test("tumbling window over a file stream == x01 batch result") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // as-written schema (ts physical type varies by fixture generation —
     // Catalog.normalizeEventTs owns the mapping to TimestampType)
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema

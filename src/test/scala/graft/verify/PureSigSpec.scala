@@ -70,7 +70,6 @@ class PureSigSpec extends SparkSpec {
 
   test("signatures on real corpus docs match the kernels end-to-end") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val rows = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"),
         graft.functions.GraftFunctions.minhash_signature(col("text"), 3, 64).as("sig"),
